@@ -3,12 +3,13 @@
 Writes a TPC-H-shaped star source (region, nation, customer, supplier,
 part, orders, lineitem) as parquet, in the layout `graft.Tables` reads
 (`<dir>/<table>.parquet`, a file or a directory of part files), plus the
-perturbed dimension sources and the op sequence of the `dw_serve` loop.
+perturbed dimension sources and the serving ops.
 
-The corpus is `replicas` copies of one sf0.1-sized unit. Each replica
-offsets its keys by the unit size and draws its foreign keys inside its
-own key range, so every foreign key resolves. Order dates fall in
-1995-01-01..2001-12-31, the range `Star.dimTempo` generates.
+The corpus is `replicas` copies of one unit sized like the reference's
+AdventureWorks load. Each replica offsets its keys by the unit size and
+draws its foreign keys inside its own key range, so every foreign key
+resolves. Order dates fall in 1995-01-01..2001-12-31, the range
+`Star.dimTempo` generates.
 
 Everything is drawn from one `numpy.random.Generator` seeded by the
 caller: the same seed gives byte-identical files and op order, another
@@ -21,9 +22,11 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-# one sf0.1 unit (TESTDATA.md row counts)
-UNIT = {"customer": 15_000, "supplier": 1_000, "part": 20_000,
-        "orders": 150_000, "lineitem": 600_000}
+# one unit: the row counts of the reference's own AdventureWorks load
+# (BASELINE.md: 121,317 SalesOrderDetail lines, 19,820 customers, 504
+# products, 17 vendors; the extract's SalesOrderHeader has 31,465 orders)
+UNIT = {"customer": 19_820, "supplier": 17, "part": 504,
+        "orders": 31_465, "lineitem": 121_317}
 REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
 N_NATIONS = 25
 SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
@@ -40,13 +43,15 @@ DAY_US = 86_400_000_000
 # the scan splits across cores the same way at every scale
 ROWS_PER_FILE = 750_000
 
-# the KPI suite: scalar fact totals and grouped reports (joins + group-by)
-SCALAR_KPIS = ["kpi1", "kpi2", "kpi3", "kpi4", "kpi10"]
-GROUPED_KPIS = ["kpi5", "kpi6", "kpi7", "kpi7_pais", "kpi8", "kpi9",
-                "kpi8_pruned"]
-KPI_OPS = SCALAR_KPIS + GROUPED_KPIS
-REFRESH_DIMS = ["dim_produto", "dim_cliente", "dim_vendedor",
-                "dim_localidade", "dim_tempo"]
+# the 12 queries of StarBench.kpiSuite
+KPI_OPS = ["kpi1", "kpi2", "kpi3", "kpi4", "kpi5", "kpi6", "kpi7", "kpi7_pais",
+           "kpi8", "kpi9", "kpi10", "kpi8_pruned"]
+# the dimensions built from a source table; dim_tempo is a generated
+# calendar, so re-running it has nothing new to load
+REFRESH_DIMS = ["dim_produto", "dim_cliente", "dim_vendedor", "dim_localidade"]
+# reads of each KPI per measured block: 36 reads and 4 refreshes, so a
+# tenth of the ops are writes
+PASSES = 3
 YEARS = list(range(1995, 2002))
 
 
@@ -201,36 +206,38 @@ def _perturb(rng, customer, supplier, part):
     return customer, supplier, part
 
 
-def serve_ops(rng, n_blocks, grouped_reps):
-    """The serving op sequence, in blocks. A block reads each scalar KPI
-    once and each grouped report `grouped_reps` times, in a seeded order
-    (kpi8_pruned with a seeded year), and refreshes each of the 5
-    dimensions once, at seeded places; each refresh flips its dimension
-    between the A and B sources. Grouped reports are the dashboard's bulk
-    and the slower latency class, so the median read falls inside one
-    class instead of on the edge between two. Whole blocks keep the op
-    mix the same from seed to seed, so percentiles compare across
-    seeds."""
-    blocks = []
-    for _ in range(n_blocks):
-        mix = SCALAR_KPIS + GROUPED_KPIS * grouped_reps
-        reads = []
-        for i in rng.permutation(len(mix)):
-            q = mix[int(i)]
+def _block(rng, passes):
+    """Each KPI read `passes` times, each pass in a seeded order (kpi8_pruned
+    with a seeded year), and each of REFRESH_DIMS refreshed once at a
+    seeded place. Each refresh flips its dimension between the A and B
+    sources."""
+    reads = []
+    for _ in range(passes):
+        for i in rng.permutation(len(KPI_OPS)):
+            q = KPI_OPS[int(i)]
             reads.append(f"kpi {q} {YEARS[int(rng.integers(len(YEARS)))]}"
                          if q == "kpi8_pruned" else f"kpi {q}")
-        refreshes = [f"refresh {REFRESH_DIMS[int(i)]}"
-                     for i in rng.permutation(len(REFRESH_DIMS))]
-        n = len(reads) + len(refreshes)
-        at = set(int(i) for i in rng.choice(n, len(refreshes), replace=False))
-        r_it, q_it = iter(refreshes), iter(reads)
-        blocks.append([next(r_it) if i in at else next(q_it) for i in range(n)])
-    return blocks
+    refreshes = [f"refresh {REFRESH_DIMS[int(i)]}"
+                 for i in rng.permutation(len(REFRESH_DIMS))]
+    n = len(reads) + len(refreshes)
+    at = set(int(i) for i in rng.choice(n, len(refreshes), replace=False))
+    r_it, q_it = iter(refreshes), iter(reads)
+    return [next(r_it) if i in at else next(q_it) for i in range(n)]
 
 
-def generate(out_dir, seed, replicas, n_blocks, grouped_reps):
+def serve_ops(rng):
+    """The serving ops: the pass (each KPI once, as the reference's
+    KPIs.sql runs them, and each source-built dimension refreshed once,
+    the `AwRun --table` re-run shape), then the `dw_serve` block: every
+    query of the suite read PASSES times, with a tenth of the ops
+    refreshes. Whole blocks keep the op mix the same from seed to seed,
+    so percentiles compare across seeds."""
+    return [_block(rng, 1), _block(rng, PASSES)]
+
+
+def generate(out_dir, seed, replicas=1):
     """Write the corpus under `out_dir/src`, the perturbed dimension
-    sources under `out_dir/src_b` and the op blocks as `out_dir/ops.txt`
+    sources under `out_dir/src_b` and the serving ops as `out_dir/ops.txt`
     (one op a line, `block` between blocks). Returns the number of
     lineitem rows."""
     rng = np.random.default_rng(seed)
@@ -251,5 +258,5 @@ def generate(out_dir, seed, replicas, n_blocks, grouped_reps):
         _write(t, src_b, name)
     with open(os.path.join(out_dir, "ops.txt"), "w") as f:
         f.write("\nblock\n".join("\n".join(b) for b in
-                                   serve_ops(rng, n_blocks, grouped_reps)) + "\n")
+                                   serve_ops(rng)) + "\n")
     return lineitem.num_rows

@@ -77,15 +77,18 @@ final class Tracer(probe: Probe) {
     else {
       val id = spans.size
       spans += Span(id, name, stack.headOption.getOrElse(-1), 0L, 0L, Map.empty)
-      val c0 = probe.snap()
+      // the listener-bus drains fall inside the span's own interval, so
+      // a parent's children account for its wall time
       val t0 = System.nanoTime()
+      val c0 = probe.snap()
       stack = id :: stack
       try body
       finally {
         stack = stack.tail
+        val c1 = probe.snap()
         val t1 = System.nanoTime()
         spans(id) = Span(id, name, spans(id).parent, t0 - origin, t1 - origin,
-          Probe.delta(c0, probe.snap()))
+          Probe.delta(c0, c1))
       }
     }
 

@@ -64,7 +64,7 @@ class GeneratorTest(unittest.TestCase):
 
     def gen(self, name, seed, replicas=1):
         d = SCRATCH / name
-        n = gen.generate(str(d), seed, replicas, n_blocks=3, grouped_reps=2)
+        n = gen.generate(str(d), seed, replicas)
         return d, n
 
     def test_same_seed_same_bytes_and_ops(self):
@@ -103,16 +103,19 @@ class GeneratorTest(unittest.TestCase):
             self.assertEqual(b, col(t, k))
 
     def test_op_blocks_are_balanced(self):
+        """The pass reads each KPI once; the serving block reads each
+        PASSES times, with a tenth of its ops refreshes; both refresh
+        every sourced dimension once."""
         d, _ = self.gen("o", 5)
         blocks = (d / "ops.txt").read_text().strip().split("\nblock\n")
-        self.assertEqual(len(blocks), 3)
-        for b in blocks:
+        self.assertEqual(len(blocks), 2)
+        for b, passes in zip(blocks, (1, gen.PASSES)):
             ops = b.splitlines()
             reads = [o.split()[1] for o in ops if o.startswith("kpi ")]
             refreshes = sorted(o.split()[1] for o in ops if o.startswith("refresh "))
-            self.assertEqual(sorted(reads),
-                             sorted(gen.SCALAR_KPIS + gen.GROUPED_KPIS * 2))
+            self.assertEqual(sorted(reads), sorted(gen.KPI_OPS * passes))
             self.assertEqual(refreshes, sorted(gen.REFRESH_DIMS))
+        self.assertEqual(len(refreshes) / len(ops), 0.1)
 
 
 class OutputTest(unittest.TestCase):
@@ -179,7 +182,7 @@ class SpecTest(unittest.TestCase):
         src = (HERE / "scala" / "graft" / "perfbench" / "Main.scala").read_text()
         e2e = set(re.findall(r'metrics\("([^"$]+)"\)\s*=', src))
         layer = set(re.findall(r'layer\("([^"$]+)"\)\s*=', src)) | {"error_rate"}
-        layer |= {f"dims.{d}.s" for d in gen.REFRESH_DIMS}
+        layer |= {f"dims.{d}.s" for d in gen.REFRESH_DIMS + ["dim_tempo"]}
         layer |= {f"kpi.{q}.ms" for q in gen.KPI_OPS}
         self.assertEqual(e2e, {m["name"] for m in SPEC["end_to_end"]})
         self.assertEqual(layer, {m["name"] for m in SPEC["per_layer"]})
