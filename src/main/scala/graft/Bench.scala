@@ -89,8 +89,8 @@ object Bench {
     // vCPU was runnable but the host ran another tenant) is the direct
     // measurement: steal_s high across unrelated rows = host contention,
     // not code. USER_HZ is fixed at 100 for the /proc ABI. Returns -1
-    // where unreadable (non-Linux), rendering steal_s=-0.0… never 0-vs-
-    // missing ambiguity.
+    // where unreadable (non-Linux); a row any of whose snapshots failed
+    // renders steal_s=-1.0 — never 0-vs-missing ambiguity.
     def stealJiffies(): Long =
       try {
         val src = scala.io.Source.fromFile("/proc/stat")
@@ -99,6 +99,11 @@ object Bench {
           .filter(_.length > 8).map(_(8).toLong).getOrElse(-1L)
         finally src.close()
       } catch { case _: Throwable => -1L }
+    // jiffies of steal since snapshot `s0`, or -1 if either read failed
+    def stealSince(s0: Long): Long = {
+      val s1 = stealJiffies()
+      if (s0 < 0 || s1 < 0) -1L else s1 - s0
+    }
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(
           e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
@@ -115,15 +120,15 @@ object Bench {
     def storeMb(): Long =
       spark.sparkContext.getRDDStorageInfo
         .map(i => i.memSize + i.diskSize).sum >> 20
-    def recordHealth(name: String, gc0: Long, task0: Long,
-        steal0: Long = -1L): Unit = {
+    // `steal`: the row's steal jiffies, -1 when any snapshot failed
+    def recordHealth(name: String, gc0: Long, task0: Long, steal: Long): Unit = {
       val up = java.lang.management.ManagementFactory.getRuntimeMXBean.getUptime / 1000
       val taskS = (taskMsTotal.get() - task0) / 1000.0
       val stealS = // USER_HZ = 100 (fixed /proc ABI)
-        if (steal0 < 0) -1.0 else (stealJiffies() - steal0) / 100.0
+        if (steal < 0) -1.0 else steal / 100.0
       jvmHealth(name) = s"gc_ms=${gcMillis() - gc0} uptime_s=$up " +
         f"task_s=$taskS%.1f peak_mb=${peakTaskMem.get() >> 20} " +
-        s"store_mb=${storeMb()} steal_s=$stealS%.1f"
+        f"store_mb=${storeMb()} steal_s=$stealS%.1f"
     }
     def fingerprint(name: String, df: => org.apache.spark.sql.DataFrame): Unit =
       try {
@@ -166,7 +171,7 @@ object Bench {
         }
       }
       times(name) = if (runs.contains(-1.0)) -1.0 else runs.min
-      recordHealth(name, gc0, task0, steal0)
+      recordHealth(name, gc0, task0, stealSince(steal0))
       // first rep of the ETL phase is the COLD number BASELINE.md compares
       // against (later reps are JVM/page-cache warm); for the index
       // compaction only rep 1 performs the physical fold (later reps find
@@ -189,7 +194,7 @@ object Bench {
         times(name) = -1.0
       }
       finally Checkpoint.releaseAll() // between-rows hygiene (see time)
-      recordHealth(name, gc0, task0, steal0)
+      recordHealth(name, gc0, task0, stealSince(steal0))
     }
     // INTERLEAVED A/B reps (a, b, a, b, …) inside one phase, so slow
     // machine-load drift hits both sides alike and the recorded DIRECTION
@@ -219,23 +224,23 @@ object Bench {
         finally {
           addGc(gcMillis() - g0)
           addTk(taskMsTotal.get() - k0)
-          addSt(stealJiffies() - s0) // 0 when unreadable (-1 minus -1)
+          addSt(stealSince(s0))
           Checkpoint.releaseAll() // between-reps hygiene (see time)
         }
       }
+      // one failed steal snapshot poisons the side's sum to -1
+      def plus(acc: Long, d: Long): Long = if (acc < 0 || d < 0) -1L else acc + d
       val runs = (1 to reps).map(_ =>
-        (oneRep(a, gcA += _, tkA += _, stA += _),
-          oneRep(b, gcB += _, tkB += _, stB += _)))
+        (oneRep(a, gcA += _, tkA += _, d => stA = plus(stA, d)),
+          oneRep(b, gcB += _, tkB += _, d => stB = plus(stB, d))))
       def minOr(xs: Seq[Double]): Double =
         if (xs.contains(-1.0)) -1.0 else xs.min
       times(aName) = minOr(runs.map(_._1))
       times(bName) = minOr(runs.map(_._2))
       // baseline = current − side's accumulated delta, the same snapshot
-      // trick as gc/task; an unreadable counter (−1, stX 0) renders −1.0
-      recordHealth(aName, gcMillis() - gcA, taskMsTotal.get() - tkA,
-        stealJiffies() - stA)
-      recordHealth(bName, gcMillis() - gcB, taskMsTotal.get() - tkB,
-        stealJiffies() - stB)
+      // trick as gc/task; steal is passed as the side's own sum
+      recordHealth(aName, gcMillis() - gcA, taskMsTotal.get() - tkA, stA)
+      recordHealth(bName, gcMillis() - gcB, taskMsTotal.get() - tkB, stB)
     }
 
     val dw = s"/tmp/graft_bench_dw_${System.nanoTime()}"

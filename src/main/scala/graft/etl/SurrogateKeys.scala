@@ -36,18 +36,27 @@ object SurrogateKeys {
 
   /** Size-routed SK assignment — what the production dim builders call:
     * [[dense]] for dimension-sized inputs, [[denseDistributed]] once the
-    * optimizer's sizeInBytes ESTIMATE (no job runs to decide) crosses
+    * bytes the plan SCANS — the summed sizeInBytes of the optimized
+    * plan's leaf relations, an estimate no job runs to decide — cross
     * `graft.sk.windowMaxBytes` (default 64 MiB — far below what a single
-    * window reducer can absorb, far above every reference dim). Both
-    * routes produce identical values (EngineSpec), so the DuckDB oracle's
-    * row_number() validates either; the sk column is INT in both routes,
-    * matching the reference's SERIAL (create_dw_tables.sql:15) — a dim
-    * beyond 2³¹ contiguous keys would outgrow the reference's own schema.
+    * window reducer can absorb, far above every reference dim). Not the
+    * root's own estimate: without CBO a join's sizeInBytes is the PRODUCT
+    * of its children's (≈600 GB for a 20k-row dim over two left joins),
+    * and the distributed route runs eager jobs (sort sampling, barrier,
+    * partition counts) while the frame is only being built. The dim
+    * builders' lookups are many-to-one (keyed geo tables), so a dim holds
+    * at most one row per base row and the scanned bytes bound what the
+    * window sees. Both routes produce identical values (EngineSpec), so
+    * the DuckDB oracle's row_number() validates either; the sk column is
+    * INT in both routes, matching the reference's SERIAL
+    * (create_dw_tables.sql:15) — a dim beyond 2³¹ contiguous keys would
+    * outgrow the reference's own schema.
     */
   def auto(df: DataFrame, skName: String, orderBy: Seq[Column]): DataFrame = {
     val maxBytes = df.sparkSession.conf
       .getOption("graft.sk.windowMaxBytes").map(_.toLong).getOrElse(64L << 20)
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val est = df.queryExecution.optimizedPlan.collectLeaves()
+      .map(_.stats.sizeInBytes).sum
     if (est <= maxBytes) dense(df, skName, orderBy)
     else denseDistributed(df, skName, orderBy)
       // guard the Long→INT narrowing: with ANSI off a >2³¹-row dim would
