@@ -120,14 +120,16 @@ object Bench {
     def storeMb(): Long =
       spark.sparkContext.getRDDStorageInfo
         .map(i => i.memSize + i.diskSize).sum >> 20
-    // `steal`: the row's steal jiffies, -1 when any snapshot failed
-    def recordHealth(name: String, gc0: Long, task0: Long, steal: Long): Unit = {
+    // `steal`: the row's steal jiffies, -1 when any snapshot failed;
+    // `peak`: the row's peak task execution memory in bytes
+    def recordHealth(name: String, gc0: Long, task0: Long, steal: Long,
+        peak: Long): Unit = {
       val up = java.lang.management.ManagementFactory.getRuntimeMXBean.getUptime / 1000
       val taskS = (taskMsTotal.get() - task0) / 1000.0
       val stealS = // USER_HZ = 100 (fixed /proc ABI)
         if (steal < 0) -1.0 else steal / 100.0
       jvmHealth(name) = s"gc_ms=${gcMillis() - gc0} uptime_s=$up " +
-        f"task_s=$taskS%.1f peak_mb=${peakTaskMem.get() >> 20} " +
+        f"task_s=$taskS%.1f peak_mb=${peak >> 20} " +
         f"store_mb=${storeMb()} steal_s=$stealS%.1f"
     }
     def fingerprint(name: String, df: => org.apache.spark.sql.DataFrame): Unit =
@@ -171,7 +173,7 @@ object Bench {
         }
       }
       times(name) = if (runs.contains(-1.0)) -1.0 else runs.min
-      recordHealth(name, gc0, task0, stealSince(steal0))
+      recordHealth(name, gc0, task0, stealSince(steal0), peakTaskMem.get())
       // first rep of the ETL phase is the COLD number BASELINE.md compares
       // against (later reps are JVM/page-cache warm); for the index
       // compaction only rep 1 performs the physical fold (later reps find
@@ -194,27 +196,29 @@ object Bench {
         times(name) = -1.0
       }
       finally Checkpoint.releaseAll() // between-rows hygiene (see time)
-      recordHealth(name, gc0, task0, stealSince(steal0))
+      recordHealth(name, gc0, task0, stealSince(steal0), peakTaskMem.get())
     }
     // INTERLEAVED A/B reps (a, b, a, b, …) inside one phase, so slow
     // machine-load drift hits both sides alike and the recorded DIRECTION
     // is load-invariant; each side still reports its min across reps
     def interleaved(aName: String, bName: String)(a: => Unit)(b: => Unit): Unit = {
-      // GC accumulated PER SIDE (snapshot around each rep): the shared
-      // artifact gc_ms field must not double-count the pair's combined
-      // delta on both rows, or it can't adjudicate which side paid
+      // GC, task time, steal and peak memory kept PER SIDE (snapshot
+      // around each rep): a row must not report the pair's combined delta
+      // or max, or it can't adjudicate which side paid
       var gcA = 0L
       var gcB = 0L
       var tkA = 0L
       var tkB = 0L
       var stA = 0L
       var stB = 0L
-      peakTaskMem.set(0L) // shared across the pair: both rows report the pair's max
+      var pkA = 0L
+      var pkB = 0L
       def oneRep(f: => Unit, addGc: Long => Unit, addTk: Long => Unit,
-          addSt: Long => Unit): Double = {
+          addSt: Long => Unit, addPk: Long => Unit): Double = {
         val g0 = gcMillis()
         val k0 = taskMsTotal.get()
         val s0 = stealJiffies()
+        peakTaskMem.set(0L)
         val t0 = System.nanoTime()
         try { f; (System.nanoTime() - t0) / 1e9 }
         catch { case e: Throwable =>
@@ -225,22 +229,23 @@ object Bench {
           addGc(gcMillis() - g0)
           addTk(taskMsTotal.get() - k0)
           addSt(stealSince(s0))
+          addPk(peakTaskMem.get())
           Checkpoint.releaseAll() // between-reps hygiene (see time)
         }
       }
       // one failed steal snapshot poisons the side's sum to -1
       def plus(acc: Long, d: Long): Long = if (acc < 0 || d < 0) -1L else acc + d
       val runs = (1 to reps).map(_ =>
-        (oneRep(a, gcA += _, tkA += _, d => stA = plus(stA, d)),
-          oneRep(b, gcB += _, tkB += _, d => stB = plus(stB, d))))
+        (oneRep(a, gcA += _, tkA += _, d => stA = plus(stA, d), p => pkA = pkA max p),
+          oneRep(b, gcB += _, tkB += _, d => stB = plus(stB, d), p => pkB = pkB max p)))
       def minOr(xs: Seq[Double]): Double =
         if (xs.contains(-1.0)) -1.0 else xs.min
       times(aName) = minOr(runs.map(_._1))
       times(bName) = minOr(runs.map(_._2))
       // baseline = current − side's accumulated delta, the same snapshot
       // trick as gc/task; steal is passed as the side's own sum
-      recordHealth(aName, gcMillis() - gcA, taskMsTotal.get() - tkA, stA)
-      recordHealth(bName, gcMillis() - gcB, taskMsTotal.get() - tkB, stB)
+      recordHealth(aName, gcMillis() - gcA, taskMsTotal.get() - tkA, stA, pkA)
+      recordHealth(bName, gcMillis() - gcB, taskMsTotal.get() - tkB, stB, pkB)
     }
 
     val dw = s"/tmp/graft_bench_dw_${System.nanoTime()}"

@@ -10,10 +10,10 @@ import org.apache.spark.sql.SparkSession
   * Usage:
   *   runMain graft.PlanAudit [sfDir] [query ...]   — whole-lineage plans
   *   runMain graft.PlanAudit --dw [sfDir]          — the Bench phase-2
-  *     path: materialize the star to parquet, then explain AND time each
-  *     KPI against the parquet-backed DW (dims read back from disk, not
-  *     in-plan), which is where join-strategy choices differ from the
-  *     whole-lineage path.
+  *     path: build the star to parquet (StarBench.starBuildTo), then
+  *     explain AND time each StarBench.kpiSuite query against the
+  *     parquet-backed DW (dims read back from disk, not in-plan), which
+  *     is where join-strategy choices differ from the whole-lineage path.
   *   runMain graft.PlanAudit --ext [sfDir]         — ASSERTS the
   *     AutoBroadcastBoundedDims rule fires in a session configured like
   *     Bench's — which since r9 is ALSO the Verify gate's configuration
@@ -96,32 +96,15 @@ object PlanAudit {
     println("[ext-audit] PASS")
   }
 
-  /** Mirror of Bench phase 1+2: sink the star, read it back, explain+time. */
+  /** Bench phase 1+2 itself: build the star with StarBench.starBuildTo,
+    * then explain and time each query of StarBench.kpiSuite, i.e. the
+    * plans that serve.
+    */
   private def auditDw(spark: SparkSession, dir: String): Unit = {
-    import graft.etl.Star
-    import graft.kpi.Kpis
-    import org.apache.spark.sql.functions.col
     val dw = s"/tmp/graft_planaudit_dw_${System.nanoTime()}"
-    graft.sink.Sink.parquet(Star.dimProduto(spark, dir), s"$dw/dim_produto")
-    graft.sink.Sink.parquet(Star.dimCliente(spark, dir), s"$dw/dim_cliente")
-    graft.sink.Sink.parquet(Star.dimVendedor(spark, dir), s"$dw/dim_vendedor")
-    graft.sink.Sink.parquet(Star.dimLocalidade(spark, dir), s"$dw/dim_localidade")
-    graft.sink.Sink.parquet(Star.dimTempo(spark), s"$dw/dim_tempo")
-    val ano = (col("sk_tempo") / 10000).cast("int")
-    graft.sink.Sink.parquet(
-      Star.fatoVendas(spark, dir).withColumn("ano", ano),
-      s"$dw/fato_vendas", partitionBy = Seq("ano"))
-    def rd(t: String) = spark.read.parquet(s"$dw/$t")
-    val fato = rd("fato_vendas").drop("ano")
-    val kpis: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
-      "kpi1" -> Kpis.kpi1FaturamentoBruto(fato),
-      "kpi5" -> Kpis.kpi5TopProdutos(fato, rd("dim_produto")),
-      "kpi6" -> Kpis.kpi6VendasPorCategoria(fato, rd("dim_produto")),
-      "kpi7" -> Kpis.kpi7PorNacao(fato, rd("dim_cliente")),
-      "kpi7_pais" -> Kpis.kpi7PorPais(fato, rd("dim_localidade")),
-      "kpi8" -> Kpis.kpi8Sazonalidade(fato, rd("dim_tempo")),
-      "kpi9" -> Kpis.kpi9RankingVendedores(fato, rd("dim_vendedor")))
-    kpis.foreach { case (name, df) =>
+    StarBench.starBuildTo(spark, dir, dw)
+    StarBench.kpiSuite(spark, dw).foreach { case (name, q) =>
+      val df = q()
       println(s"\n========== DW $name ==========")
       df.explain("formatted")
       (1 to 3).foreach { rep =>

@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The reference's star-schema ETL (Cgmc18/ETL-AirFlow-AdventureWorks),
   * re-expressed Spark-first over the driver testdata tables.
@@ -153,6 +154,36 @@ object Star {
         quarter(col("data_completa")).as("trimestre"),
         when(month(col("data_completa")) <= 6, 1).otherwise(2).as("semestre"))
   }
+
+  // ------------------------------------------------------------------ DW
+
+  /** The six DW tables' schemas as a parquet read of what the builders
+    * above write returns them: every field nullable, and `fato_vendas`
+    * with its `ano` partition column last. Reading the DW with these skips
+    * the footer-inference job a schema-less parquet read runs; the drift
+    * test (DwReadSpec) pins them against the written tables.
+    */
+  private[graft] val DwSchemas: Map[String, StructType] = Map(
+    "dim_produto" -> ("sk_produto INT, id_produto_original BIGINT, " +
+      "nome_produto STRING, marca STRING, categoria STRING, tamanho INT"),
+    "dim_cliente" -> ("sk_cliente INT, id_cliente_original BIGINT, " +
+      "nome_cliente STRING, tipo_cliente STRING, nacao STRING, regiao STRING, " +
+      "segmento STRING"),
+    "dim_vendedor" -> ("sk_vendedor INT, id_vendedor_original BIGINT, " +
+      "nome_vendedor STRING, nacao STRING"),
+    "dim_localidade" -> ("sk_localidade INT, id_localidade_original BIGINT, " +
+      "pais STRING, regiao STRING"),
+    "dim_tempo" -> ("sk_tempo INT, data_completa DATE, ano INT, mes INT, " +
+      "nome_mes STRING, trimestre INT, semestre INT"),
+    "fato_vendas" -> ("id_pedido BIGINT, numero_linha INT, sk_produto INT, " +
+      "sk_cliente INT, sk_vendedor INT, sk_localidade INT, sk_tempo INT, " +
+      "qtd_vendida INT, valor_bruto DECIMAL(18,2), valor_desconto DECIMAL(18,2), " +
+      "valor_total DECIMAL(18,2), ano INT")
+  ).map { case (t, ddl) => t -> StructType.fromDDL(ddl) }
+
+  /** One DW table read back from `dwDir` with its declared schema. */
+  def readDw(spark: SparkSession, dwDir: String, table: String): DataFrame =
+    spark.read.schema(DwSchemas(table)).parquet(s"$dwDir/$table")
 
   // ---------------------------------------------------------------- fact
 

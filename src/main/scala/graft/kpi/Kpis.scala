@@ -1,6 +1,6 @@
 package graft.kpi
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.etl.Star
 
@@ -13,10 +13,28 @@ import graft.etl.Star
   *
   * Aggregation is done in exact decimal (sum order independence), cast to
   * double only at the end; every output is deterministically ordered.
+  *
+  * The grouped KPIs (6, 7, 8) group by a bounded domain (categoria, nação,
+  * país, ano/mês), so their results are a few dozen rows. They are ordered
+  * in one partition ([[orderedInOnePartition]]) instead of by a global
+  * `orderBy`, which would add a range-sampling job and a range exchange
+  * to every read. The partial aggregate over the fact stays fully
+  * parallel: `coalesce(1)` is narrow and stops at the aggregate's hash
+  * exchange, so only the final merge and the sort run in one task. The
+  * sort keys are unchanged and the single partition is sorted whole, so
+  * the rows come out in the same order as before. KPIs 5 and 9 keep
+  * `orderBy` + `limit`, which plans as TakeOrderedAndProject.
   */
 object Kpis {
 
   private def dec(c: String) = col(c).cast("decimal(18,4)")
+
+  /** `df` in one partition, sorted by `keys`: the total order of
+    * `orderBy(keys)` without its range-partitioning pass. Only for results
+    * whose row count is bounded by a small grouping domain.
+    */
+  private def orderedInOnePartition(df: DataFrame, keys: Column*): DataFrame =
+    df.coalesce(1).sortWithinPartitions(keys: _*)
 
   /** KPI 1 — gross revenue (KPIs.sql:4-6). */
   def kpi1FaturamentoBruto(fato: DataFrame): DataFrame =
@@ -47,11 +65,12 @@ object Kpis {
 
   /** KPI 6 — revenue + sale count by category (KPIs.sql:37-44). */
   def kpi6VendasPorCategoria(fato: DataFrame, dimProduto: DataFrame): DataFrame =
-    fato.join(broadcast(dimProduto), Seq("sk_produto"))
-      .groupBy("categoria")
-      .agg(sum(dec("valor_total")).cast("double").as("total_vendas"),
-        count(lit(1)).as("quantidade_vendas"))
-      .orderBy(desc("total_vendas"), asc("categoria"))
+    orderedInOnePartition(
+      fato.join(broadcast(dimProduto), Seq("sk_produto"))
+        .groupBy("categoria")
+        .agg(sum(dec("valor_total")).cast("double").as("total_vendas"),
+          count(lit(1)).as("quantidade_vendas")),
+      desc("total_vendas"), asc("categoria"))
 
   /** KPI 7, faithful form — revenue by ship-side country via the GEOGRAPHY
     * dimension (KPIs.sql:49-56 joins fato→dim_localidade on sk_localidade —
@@ -60,10 +79,11 @@ object Kpis {
     * the reference), so the planner/AQE must stay free to shuffle it.
     */
   def kpi7PorPais(fato: DataFrame, dimLocalidade: DataFrame): DataFrame =
-    fato.join(dimLocalidade, Seq("sk_localidade"))
-      .groupBy("pais")
-      .agg(sum(dec("valor_total")).cast("double").as("total_vendas"))
-      .orderBy(desc("total_vendas"), asc("pais"))
+    orderedInOnePartition(
+      fato.join(dimLocalidade, Seq("sk_localidade"))
+        .groupBy("pais")
+        .agg(sum(dec("valor_total")).cast("double").as("total_vendas")),
+      desc("total_vendas"), asc("pais"))
 
   /** KPI 7, customer-nation variant — the same rollup by the BUYER's
     * nation via dim_cliente (kept alongside the faithful ship-side form:
@@ -71,18 +91,20 @@ object Kpis {
     * also a corpus-sized dim — no broadcast hint (AQE decides).
     */
   def kpi7PorNacao(fato: DataFrame, dimCliente: DataFrame): DataFrame =
-    fato.join(dimCliente, Seq("sk_cliente"))
-      .groupBy("nacao")
-      .agg(sum(dec("valor_total")).cast("double").as("total_vendas"))
-      .orderBy(desc("total_vendas"), asc("nacao"))
+    orderedInOnePartition(
+      fato.join(dimCliente, Seq("sk_cliente"))
+        .groupBy("nacao")
+        .agg(sum(dec("valor_total")).cast("double").as("total_vendas")),
+      desc("total_vendas"), asc("nacao"))
 
   /** KPI 8 — monthly seasonality, 3 grouping keys (KPIs.sql:59-67). */
   def kpi8Sazonalidade(fato: DataFrame, dimTempo: DataFrame): DataFrame =
-    fato.join(broadcast(dimTempo.select("sk_tempo", "ano", "mes", "nome_mes")),
-        Seq("sk_tempo"))
-      .groupBy("ano", "mes", "nome_mes")
-      .agg(sum(dec("valor_total")).cast("double").as("total_vendas"))
-      .orderBy("ano", "mes")
+    orderedInOnePartition(
+      fato.join(broadcast(dimTempo.select("sk_tempo", "ano", "mes", "nome_mes")),
+          Seq("sk_tempo"))
+        .groupBy("ano", "mes", "nome_mes")
+        .agg(sum(dec("valor_total")).cast("double").as("total_vendas")),
+      col("ano"), col("mes"))
 
   /** KPI 9 — top-10 salespeople, null-filtered (KPIs.sql:69-78). */
   def kpi9RankingVendedores(fato: DataFrame, dimVendedor: DataFrame): DataFrame =

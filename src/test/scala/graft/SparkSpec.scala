@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,6 +24,21 @@ trait SparkSpec extends AnyFunSuite {
 
   val tiny = "/root/testdata/sf0.001"
   val awData = "/root/reference/dags/data"
+
+  /** `f`'s result and the number of Spark jobs started while it ran. */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = f
+      ListenerBusDrain(spark.sparkContext)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 
   /** Full post-AQE plan walk for API-level plan assertions: materialized
     * stages are childless QueryStageExec nodes, so a plain

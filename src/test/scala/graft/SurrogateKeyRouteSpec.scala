@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import graft.etl.Star
@@ -21,21 +18,6 @@ class SurrogateKeyRouteSpec extends SparkSpec {
   private val dims: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "dim_cliente" -> Star.dimCliente _,
     "dim_localidade" -> Star.dimLocalidade _)
-
-  /** `f`'s result and the number of Spark jobs started while it ran. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = f
-      ListenerBusDrain(spark.sparkContext)
-      (out, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   private def hasBarrier(df: DataFrame): Boolean =
     df.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r }.nonEmpty
