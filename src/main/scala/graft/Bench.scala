@@ -1,7 +1,7 @@
 package graft
 
 import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import graft.etl.Star
 import graft.kpi.Kpis
 
@@ -17,33 +17,13 @@ import graft.kpi.Kpis
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val wh = s"/tmp/graft_bench_wh_${System.nanoTime()}"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // stats-driven initial shuffle partitions (Tuning): derives the
-      // cores count at the gated sf0.1, grows with the staged bytes —
-      // SPARK_GRAFT_SHUFFLE_PARTITIONS overrides
-      .config("spark.sql.shuffle.partitions",
-        Tuning.sessionShufflePartitions(sfDir, cpus.toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the shipped optimizer rule (AutoBroadcastBoundedDims) runs in
-      // every measured plan, exactly as a deployment would install it —
-      // explicit broadcast() hints in Star still take precedence (the
-      // rule is hint-idempotent); the rule covers the unhinted derived
-      // lookups (see PlanAudit --ext for the plan-level assertion)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // bucketed tables (phase 4) go through saveAsTable: keep the
-      // warehouse unique and out of the repo — a reused location with a
-      // fresh in-memory catalog fails with LOCATION_ALREADY_EXISTS
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Tuning.applyProductionIo(spark) // no-op unless SPARK_GRAFT_PARQUET_CODEC set
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = GraftSession.cores
+    // the shipped optimizer rule (AutoBroadcastBoundedDims) runs in every
+    // measured plan, exactly as a deployment installs it (see PlanAudit
+    // --ext for the plan-level assertion)
+    val spark = GraftSession.open(sfDir)
+    // phase 4's bucketed tables land in the session's own warehouse
+    val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath
 
     // SPARK_GRAFT_BENCH_REPS > 1 repeats each query and reports the MIN —
     // run-to-run noise on this box is ±10%; min is the standard
@@ -497,8 +477,8 @@ object Bench {
       // heavy-form policy (r18 verdict #6): the EXHAUSTIVE side of the
       // expensive-scorer pair is gate-only — it exists purely as the
       // pruning crossover's baseline (~36 s/rep), and that crossover is
-      // measured on record by `graft.text.ZipfCrossover` + the BENCH.md
-      // table; the correctness gate (q_bm25_zipf_expensive) still runs
+      // on record in BENCH.md's expensive-scorer crossover table; the
+      // correctness gate (q_bm25_zipf_expensive) still runs
       // it per round. Only the shipped WAND form stays benched.
       time("q_bm25_zipf_expensive_wand_served") {
         graft.text.RetrievalOps.bm25ZipfExpensiveWandServed(spark, zdir)
@@ -772,14 +752,14 @@ object Bench {
       // inversion.
       import org.apache.spark.sql.functions.col
       Tables.orders(spark, sfDir)
-        .repartition(cpus.toInt, col("o_orderkey"))
+        .repartition(cpus, col("o_orderkey"))
         .write.mode("overwrite")
-        .bucketBy(cpus.toInt, "o_orderkey").sortBy("o_orderkey")
+        .bucketBy(cpus, "o_orderkey").sortBy("o_orderkey")
         .saveAsTable("orders_bkt")
       Tables.lineitem(spark, sfDir)
-        .repartition(cpus.toInt, col("l_orderkey"))
+        .repartition(cpus, col("l_orderkey"))
         .write.mode("overwrite")
-        .bucketBy(cpus.toInt, "l_orderkey").sortBy("l_orderkey")
+        .bucketBy(cpus, "l_orderkey").sortBy("l_orderkey")
         .saveAsTable("lineitem_bkt")
     }
     // timings must exist in the JSON even if the bucketed write failed —
@@ -883,7 +863,7 @@ object Bench {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         once("etl_bucket_tables_build_10x") {
-          StarBench.bucket10x(spark, sf1Dir, cpus.toInt)
+          StarBench.bucket10x(spark, sf1Dir, cpus)
         }
         if (spark.catalog.tableExists("orders_bkt10") &&
             spark.catalog.tableExists("lineitem_bkt10")) {

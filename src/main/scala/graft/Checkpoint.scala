@@ -41,6 +41,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   *   - operators whose helper barriers (edge projections, code tables)
   *     are consumed entirely before the returned frame is built call
   *     [[release]] on them at exit;
+  *   - builds that write a frame and never read it again release the
+  *     barriers its plan reads with [[releaseReadBy]] (the star build's
+  *     dimension sinks);
   *   - harnesses (Bench, Verify) call [[releaseAll]] between queries,
   *     after the previous query's action has fully materialized.
   *
@@ -92,12 +95,22 @@ object Checkpoint {
     * `df` has finished its actions — the blocks cannot be recomputed.
     * No-op for frames that are not tracked local barriers.
     */
-  def release(df: DataFrame): Unit =
-    rddOf(df).foreach { r =>
-      if (live.remove(r.id) != null) {
-        try r.unpersist(blocking = false)
-        catch { case _: Throwable => () } // context already stopped
-      }
+  def release(df: DataFrame): Unit = rddOf(df).foreach(drop)
+
+  /** Drop every tracked barrier `df`'s plan reads. Call ONLY once every
+    * plan built on those barriers has finished its actions — e.g. after
+    * `df` is written and nothing else holds them. Barriers `df` does not
+    * read stay live.
+    */
+  def releaseReadBy(df: DataFrame): Unit =
+    df.queryExecution.analyzed
+      .collectWithSubqueries { case l: LogicalRDD => l.rdd }
+      .foreach(drop)
+
+  private def drop(r: RDD[_]): Unit =
+    if (live.remove(r.id) != null) {
+      try r.unpersist(blocking = false)
+      catch { case _: Throwable => () } // context already stopped
     }
 
   /** Loop rotation: materialize the next round's barrier, then drop the

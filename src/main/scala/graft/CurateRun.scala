@@ -260,17 +260,7 @@ object CurateRun {
     val dir = if (rest.nonEmpty) rest(0) else "/root/testdata/sf0.01"
     val out = if (rest.length > 1) rest(1)
               else s"/tmp/graft_corpus_${System.nanoTime()}"
-    val spark = SparkSession.builder()
-      .master("local[*]")
-      .config("spark.sql.shuffle.partitions",
-        Tuning.sessionShufflePartitions(dir,
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.open(dir)
     val t0 = System.nanoTime()
     stage match {
       case Some(st) =>

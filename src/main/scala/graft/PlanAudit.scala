@@ -15,10 +15,9 @@ import org.apache.spark.sql.SparkSession
   *     parquet-backed DW (dims read back from disk, not in-plan), which
   *     is where join-strategy choices differ from the whole-lineage path.
   *   runMain graft.PlanAudit --ext [sfDir]         — ASSERTS the
-  *     AutoBroadcastBoundedDims rule fires in a session configured like
-  *     Bench's — which since r9 is ALSO the Verify gate's configuration
-  *     (both install graft.plans.GraftExtensions, so gated plans = bench
-  *     plans = deployed plans): a freshly derived bounded dim (no
+  *     AutoBroadcastBoundedDims rule fires in the GraftSession every main
+  *     opens (it installs graft.plans.GraftExtensions, so gated plans =
+  *     bench plans = deployed plans): a freshly derived bounded dim (no
   *     explicit hint) joined under autoBroadcastJoinThreshold=-1 must
   *     plan a BroadcastHashJoin via the rule, and a corpus-growing dim
   *     must NOT. Exits non-zero on failure.
@@ -29,16 +28,9 @@ object PlanAudit {
     val extMode = args.contains("--ext")
     val rest = args.filterNot(a => a == "--dw" || a == "--ext")
     val dir = if (rest.nonEmpty) rest(0) else "/root/testdata/sf0.01"
-    val builder = SparkSession.builder()
-      .master(s"local[${if (dwMode) 32 else 8}]")
-      .config("spark.sql.shuffle.partitions", if (dwMode) "32" else "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    if (extMode) builder.config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // every mode audits the shipped session (GraftSession), so the
+    // printed plans are the plans Verify, Bench and AwRun execute
+    val spark = GraftSession.open(dir)
     if (extMode) { auditExt(spark, dir); spark.stop(); return }
     if (dwMode) auditDw(spark, dir) else {
       val which: Seq[String] =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up probe: replicates the sf0.1 sales tables Nx (order keys
@@ -51,14 +51,7 @@ object ScaleProbe {
     val n = if (args.length > 0) args(0).toInt else 10
     val work = if (args.length > 1) args(1) else "/tmp/graft_scaleprobe"
     val src = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.open(src)
 
     def replicate(df: DataFrame, keyCols: Seq[String]): DataFrame = {
       val reps = spark.range(n).select(col("id").as("rep"))
@@ -149,15 +142,7 @@ object ScaleProbe {
     val n = if (rest.length > 0) rest(0).toInt else 10
     val work = if (rest.length > 1) rest(1) else "/tmp/graft_scaleprobe_events"
     val src = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.open(src)
 
     val reps = spark.range(n).select(col("id").as("rep"))
     Tables.events(spark, src).crossJoin(reps).selectExpr(
@@ -257,15 +242,7 @@ object ScaleProbe {
 
   private def stageReplicas(work: String, n: Int): Unit = {
     val src = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.open(src)
     val reps = spark.range(n).select(col("id").as("rep"))
     // replica 0 keeps the RAW text: fixed-vocabulary operators (the BM25
     // query terms, boilerplate thresholds) must still find their tokens
@@ -335,28 +312,18 @@ object ScaleProbe {
     // rows in one sort task). A deployment sets this from data volume;
     // the probe surfaces it as an env knob so the sf100 row documents
     // the setting it ran at.
-    // r19: the default is no longer a constant — it is derived from the
-    // staged tables' physical size ([[Tuning.shufflePartitions]]), so
-    // the sf100 run needs no hand-set knob; the env var remains as an
-    // explicit override
-    val shuffleParts = Tuning.sessionShufflePartitions(work, 32).toString
+    // r19: the default is no longer a constant — GraftSession derives
+    // it from the staged tables' physical size
+    // ([[Tuning.shufflePartitions]]), so the sf100 run needs no hand-set
+    // knob; the env var remains as an explicit override
     // the scan-side sibling of the shuffle lever: a 60M-row fact lands
     // in ~12 default (128 MB) splits — under-parallelized on 32 cores
     // and each split's partial-agg state oversized; smaller splits
     // trade task overhead for parallelism + bounded state
     val maxPart = sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES",
       "134217728")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.files.maxPartitionBytes", maxPart)
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.open(work)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", maxPart)
     graft.functions.GraftFunctions.register(spark)
 
     val times = scala.collection.mutable.LinkedHashMap[String, Double]()
@@ -447,14 +414,7 @@ object ScaleProbe {
     val n = if (rest.length > 0) rest(0).toInt else 10
     val work = if (rest.length > 1) rest(1) else "/tmp/graft_scaleprobe_fuzzy"
     val src = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.open(src)
 
     val reps = spark.range(n).select(col("id").as("rep"))
     Tables.customer(spark, src).crossJoin(reps).selectExpr(
@@ -510,14 +470,7 @@ object ScaleProbe {
     val n = if (rest.length > 0) rest(0).toInt else 10
     val work = if (rest.length > 1) rest(1) else "/tmp/graft_scaleprobe_dedup"
     val src = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.open(src)
 
     val reps = spark.range(n).select(col("id").as("rep"))
     Tables.documents(spark, src).crossJoin(reps).selectExpr(

@@ -4,17 +4,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.etl.Star
 import graft.kpi.Kpis
 
-/** The star build + KPI suite shared by [[Bench]] (per-round artifact)
-  * and [[ScaleRemeasure]] (the idle 10×-scale re-measure). Factored out
-  * so the re-measure prices the IDENTICAL code path the round artifact
-  * prices — a divergent copy would make the two numbers incomparable.
+/** The star build + KPI suite shared by [[Bench]] (per-round artifact),
+  * [[PlanAudit]] `--dw` and the DW benchmark under `perfbench/`. One
+  * copy, so every measurement prices the IDENTICAL code path — a
+  * divergent copy would make the numbers incomparable.
   */
 object StarBench {
 
   /** Build + sink the full star (reference: the six Airflow DAG tasks).
     * Dim sink jobs are submitted CONCURRENTLY so Spark's scheduler
     * overlaps the small dim builds instead of serializing five
-    * sub-second jobs' fixed overheads; the fact follows alone.
+    * sub-second jobs' fixed overheads; the fact follows alone. Once the
+    * dims are written, the checkpoint barriers their plans read (the
+    * distributed surrogate-key route's) are released: the fact reads
+    * the dims back from disk, so nothing needs those blocks again.
     */
   def starBuildTo(spark: SparkSession, srcDir: String, dwDir: String): Unit = {
     import scala.concurrent.{Await, Future}
@@ -26,9 +29,14 @@ object StarBench {
       "dim_vendedor" -> (() => Star.dimVendedor(spark, srcDir)),
       "dim_localidade" -> (() => Star.dimLocalidade(spark, srcDir)),
       "dim_tempo" -> (() => Star.dimTempo(spark)))
-    Await.result(Future.sequence(dims.map { case (name, build) =>
-      Future(graft.sink.Sink.parquet(build(), s"$dwDir/$name"))
+    val written = Await.result(Future.sequence(dims.map { case (name, build) =>
+      Future {
+        val dim = build()
+        graft.sink.Sink.parquet(dim, s"$dwDir/$name")
+        dim
+      }
     }), Duration.Inf)
+    written.foreach(Checkpoint.releaseReadBy)
     // note: NOT repartition(ano) before the write — the extra full-fact
     // shuffle buys nothing here because AQE already coalesces output to
     // ~2 files per year partition (measured: no improvement, within
@@ -94,7 +102,7 @@ object StarBench {
 
   /** Stage the 10× corpus: sf0.1's fact tables replicated 10× with
     * offset order keys (≈ sf1), dims copied unchanged — the ScaleProbe
-    * construction used by Bench phase 6 and the idle re-measure.
+    * construction used by Bench phase 6.
     */
   def stage10x(spark: SparkSession, sfDir: String, sf1Dir: String): Unit = {
     import org.apache.spark.sql.functions.col

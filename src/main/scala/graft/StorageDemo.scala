@@ -18,17 +18,9 @@ import org.apache.spark.sql.functions._
 object StorageDemo {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val wh = s"/tmp/graft_warehouse_${System.nanoTime()}"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ to show bucketing
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.open(dir)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ to show bucketing
+    val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath
 
     // --- 1. bucketed co-located join ---------------------------------
     Tables.orders(spark, dir).write.mode("overwrite")

@@ -23,12 +23,12 @@ object Tuning {
 
   val TargetParquetBytesPerPartition: Long = 28L << 20
 
-  /** The session-builder entry: every main that opens a SparkSession
-    * over a data dir sizes its initial shuffle partitions from that
-    * dir's physical stats (r19 verdict #3 — the stats-driven posture is
-    * the ENGINE's, not one probe's). `SPARK_GRAFT_SHUFFLE_PARTITIONS`
-    * stays as the explicit override. At the gated sf0.1 the derived
-    * value IS the cores count, so gated artifacts are unchanged.
+  /** The session's initial shuffle partitions: [[GraftSession.open]]
+    * sizes every main's session from its data dir's physical stats
+    * (r19 verdict #3 — the stats-driven posture is the ENGINE's, not
+    * one probe's). `SPARK_GRAFT_SHUFFLE_PARTITIONS` stays as the
+    * explicit override. At the gated sf0.1 the derived value IS the
+    * cores count, so gated artifacts are unchanged.
     */
   def sessionShufflePartitions(dir: String, cores: Int): Int =
     sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.trim)
@@ -41,7 +41,7 @@ object Tuning {
     * is a storage/IO decision, not a bench knob: deployments set
     * `SPARK_GRAFT_PARQUET_CODEC=zstd`; the gated bench leaves it UNSET
     * so every artifact stays byte- and band-comparable with prior
-    * rounds. Session builders apply it when present.
+    * rounds. [[GraftSession.open]] applies it when present.
     */
   def parquetCodec: Option[String] =
     sys.env.get("SPARK_GRAFT_PARQUET_CODEC").map(_.trim).filter(_.nonEmpty)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,22 +13,11 @@ object Verify {
       sys.env.get("SPARK_GRAFT_ONLY"))
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        Tuning.sessionShufflePartitions(sfDir, cpus.toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same extensions as Bench/PlanAudit/deployment, so the plans the
-      // correctness gate executes are the plans the engine actually ships
-      // (queries also self-register the native functions, so this only
-      // affects plan shape, never answers)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Tuning.applyProductionIo(spark) // no-op unless SPARK_GRAFT_PARQUET_CODEC set
-    spark.sparkContext.setLogLevel("WARN")
+    // the session Bench/PlanAudit/deployment open, so the plans the
+    // correctness gate executes are the plans the engine actually ships
+    // (queries also self-register the native functions, so the
+    // extensions only affect plan shape, never answers)
+    val spark = GraftSession.open(sfDir)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -1,6 +1,6 @@
 package graft.etl.aw
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sink.Sink
 
@@ -43,15 +43,7 @@ object AwRun {
     }
     val csvDir = if (positional.nonEmpty) positional(0) else "/root/reference/dags/data"
     val outDir = if (positional.length > 1) positional(1) else "/tmp/aw_dw"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("aw-dw-build")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.open(csvDir)
     import spark.implicits._
 
     def missing(name: String) = !new java.io.File(s"$csvDir/$name.csv").exists()

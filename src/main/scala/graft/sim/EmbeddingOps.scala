@@ -2340,8 +2340,8 @@ object EmbeddingOps {
     * partial+final merge), ties (sim DESC, dst ASC).
     */
   /** Adjacency degree at quantizer scale — the r19 2M finding: recall@5
-    * at 500 cells reads 0.875 FLAT in probe width (RoutedProbeSweep,
-    * p=8→64), i.e. the missing truth pairs are greedy-unreachable in
+    * at 500 cells reads 0.875 FLAT in probe width (p=8→64,
+    * SCALE_VERIFY_r19), i.e. the missing truth pairs are greedy-unreachable in
     * the fixed-R per-cell kNN adjacency, not routed into wrong cells.
     * A kNN digraph's greedy-reachable fraction falls as the corpus
     * grows around a fixed degree (HNSW grows M with corpus size for
@@ -2361,12 +2361,6 @@ object EmbeddingOps {
     * on both paths.
     */
   private[graft] def graphR(cells: Long): Int = GRAPH_R + cgraphSteps(cells)
-
-  /** Coarse shortlist width of the compressed-guided build, as a
-    * multiple of the final degree R (DiskANN builds prune from a
-    * candidate pool a small multiple of the target degree).
-    */
-  private[graft] val GRAPH_BUILD_POOL = 4
 
   /** The bounded top-k edge selection every adjacency build funnels
     * through: partial+final [[graft.functions.TopKByScore]] fold over
@@ -2462,132 +2456,39 @@ object EmbeddingOps {
       }
     }
 
-  /** Build-path selector. The r19 verdict suggested composing the
-    * serve's SQ8-guided scoring INSIDE the build's kNN ("cut the
-    * candidate stream's width"); implemented and MEASURED at 200k/50
-    * cells it is 1.31× SLOWER than the exact scan with pair-mirroring
-    * (148.8 vs 113.2 s build, recall 1.0 both): this corpus's
-    * embeddings are float32 and SQ8 codes int32 — the compressed
-    * stream is not actually narrower — and the ADC decode kernel does
-    * strictly more arithmetic per pair than the cosine it replaces,
-    * while mirroring halves the cosine count outright. The exact
-    * build is therefore the shipped default at every scale;
-    * `SPARK_GRAFT_GRAPH_BUILD=coarse` keeps the compressed-guided
-    * variant runnable for A/B. Never flip it between a store's build
-    * and its maintenance — the two paths select near-identical but
-    * not provably identical edges.
-    */
-  private def coarseBuild: Boolean =
-    sys.env.get("SPARK_GRAFT_GRAPH_BUILD").contains("coarse")
-
   private[graft] def graphEdgesOf(s: SparkSession, asg: DataFrame,
       cells: Long = KMEANS_K): DataFrame = {
     val r = graphR(cells)
     hashAggHeadroom(s, cells)
-    val edges =
-      if (cells <= KMEANS_K || !coarseBuild) {
-        // gated shape: exact cosine over the in-cell pairs. Each
-        // unordered pair is scored ONCE (src < dst) and mirrored —
-        // cosine(a,b) ≡ cosine(b,a) bit-exactly (the kernel's dot walks
-        // the same index order and IEEE-754 multiplication commutes),
-        // so the adjacency is identical to the both-directions scan at
-        // half the kernel evaluations
-        val a = asg.select(col("cell").as("a_cell"), col("vec_id").as("src"),
-          col("embedding").as("s_emb"))
-        val b = asg.select(col("cell").as("b_cell"), col("vec_id").as("dst"),
-          col("embedding").as("d_emb"))
-        val half = a.join(b, col("a_cell") === col("b_cell") &&
-            col("src") < col("dst"))
-          .select(col("src"),
-            graft.functions.GraftFunctions.cosine_sim(col("s_emb"), col("d_emb"))
-              .as("sim"),
-            col("dst"))
-        // both directions from ONE kernel evaluation: the pair row is
-        // exploded in-pipeline (a union of two projections over the join
-        // would re-execute the join + kernel subtree per branch — Spark
-        // reuses exchanges, not arbitrary identical subtrees)
-        val cand = half.select(explode(array(
-            struct(col("src"), col("sim"), col("dst")),
-            struct(col("dst").as("src"), col("sim"), col("src").as("dst"))))
-          .as("e"))
-          .select(col("e.src").as("src"), col("e.sim").as("sim"),
-            col("e.dst").as("dst"))
-        topEdges(s, cand, r)
-      } else {
-        // adaptiveK scale (no DuckDB oracle re-derives these builds):
-        // the serve side's DiskANN composition applied INSIDE the build
-        // (r19 verdict #2) — candidates coarse-score through the fused
-        // SQ8 kernel off each cell's OWN 4× codes, exact cosine touches
-        // only the top GRAPH_BUILD_POOL·R shortlist per source. The
-        // quantizer is CELL-LOCAL ([[cellMinMaxOf]]) on purpose: per-cell
-        // min/max is a pure function of cell membership, so a maintenance
-        // recompute over a touched cell's full post-mutation membership
-        // derives bit-identical coarse scores to a fresh rebuild's — the
-        // rebuilt-twin exactness MaintainAtScale gates survives the
-        // compressed path. Ties stay (sim DESC, dst ASC) at both stages:
-        // deterministic end to end.
-        coarseExactEdges(s, asg, r)
-      }
-    edges.join(asg.select(col("vec_id").as("src"), col("cell")), Seq("src"))
-  }
-
-  /** Dimension-agnostic cell-local SQ8 encode for the compressed-guided
-    * builds — same arithmetic as the oracle-paired [[sq8CodeX]] with the
-    * dimension read off the min/max row instead of the pinned corpus
-    * DIM (the build path also runs over spec geometries of other
-    * dimensionalities; [[graft.functions.Kernels.sq8Adist]] is already
-    * length-driven).
-    */
-  private def cellCodesDynOf(asg: DataFrame, mmCell: DataFrame): DataFrame =
-    asg.join(broadcast(mmCell), Seq("cell"))
-      .withColumn("codes", expr(
-        s"transform(sequence(1, size(mns)), i -> " +
-        s"CASE WHEN element_at(mxs, i) = element_at(mns, i) THEN 0 " +
-        s"ELSE CAST(least(CAST($SQ8_LEVELS AS DOUBLE), " +
-        s"greatest(CAST(0 AS DOUBLE), " +
-        s"floor((CAST(element_at(embedding, i) AS DOUBLE) - element_at(mns, i)) " +
-        s"/ (element_at(mxs, i) - element_at(mns, i)) * ${SQ8_LEVELS}.0))) " +
-        s"AS INT) END)"))
-      .select("vec_id", "cell", "codes")
-
-  /** The compressed-guided candidate selection + exact re-rank of the
-    * at-scale adjacency builds (own-cell candidate universe).
-    */
-  private def coarseExactEdges(s: SparkSession, asg: DataFrame,
-      r: Int): DataFrame = {
-    import s.implicits._
-    val mm = graft.Checkpoint.barrier(cellMinMaxOf(asg))
-    val a = asg.select(col("cell"), col("vec_id").as("src"),
+    // exact cosine over the in-cell pairs at every scale (an SQ8-guided
+    // build measured 1.31× slower, SCALE_VERIFY_r20). Each unordered
+    // pair is scored ONCE (src < dst) and mirrored — cosine(a,b) ≡
+    // cosine(b,a) bit-exactly (the kernel's dot walks the same index
+    // order and IEEE-754 multiplication commutes), so the adjacency is
+    // identical to the both-directions scan at half the kernel
+    // evaluations
+    val a = asg.select(col("cell").as("a_cell"), col("vec_id").as("src"),
       col("embedding").as("s_emb"))
-    val b = cellCodesDynOf(asg, mm).select(col("cell").as("b_cell"),
-      col("vec_id").as("dst"), col("codes"))
-    val pool = a.join(b, col("cell") === col("b_cell") &&
-        col("src") =!= col("dst"))
-      .join(broadcast(mm), Seq("cell"))
-      .select(col("src"),
-        (-graft.functions.GraftFunctions.sq8_adist(col("s_emb"),
-          col("codes"), col("mns"), col("mxs"), SQ8_LEVELS)).as("sim"),
-        col("dst"))
-    val agg = graft.functions.TopKByScore(GRAPH_BUILD_POOL * r).toColumn
-    // shortlist kept UNEXPLODED through the src-embedding join so the
-    // wide s_emb rides one row per source, not one per candidate
-    val short = pool.as[(Long, Double, Long)]
-      .groupByKey(_._1)
-      .mapValues { case (_, sim, id) => (sim, id) }
-      .agg(agg.name("top"))
-      .toDF("src", "top")
-      .join(asg.select(col("vec_id").as("src"),
-        col("embedding").as("s_emb")), Seq("src"))
-      .select(col("src"), col("s_emb"),
-        explode(expr("transform(top, p -> p._2)")).as("dst"))
-    val exact = short
-      .join(asg.select(col("vec_id").as("dst"),
-        col("embedding").as("d_emb")), Seq("dst"))
+    val b = asg.select(col("cell").as("b_cell"), col("vec_id").as("dst"),
+      col("embedding").as("d_emb"))
+    val half = a.join(b, col("a_cell") === col("b_cell") &&
+        col("src") < col("dst"))
       .select(col("src"),
         graft.functions.GraftFunctions.cosine_sim(col("s_emb"), col("d_emb"))
           .as("sim"),
         col("dst"))
-    topEdges(s, exact, r)
+    // both directions from ONE kernel evaluation: the pair row is
+    // exploded in-pipeline (a union of two projections over the join
+    // would re-execute the join + kernel subtree per branch — Spark
+    // reuses exchanges, not arbitrary identical subtrees)
+    val cand = half.select(explode(array(
+        struct(col("src"), col("sim"), col("dst")),
+        struct(col("dst").as("src"), col("sim"), col("src").as("dst"))))
+      .as("e"))
+      .select(col("e.src").as("src"), col("e.sim").as("sim"),
+        col("e.dst").as("dst"))
+    val edges = topEdges(s, cand, r)
+    edges.join(asg.select(col("vec_id").as("src"), col("cell")), Seq("src"))
   }
 
   /** One entry point per cell: the vector nearest its cell's centroid
@@ -2805,7 +2706,7 @@ object EmbeddingOps {
     * descent from well-separated entries is the standard answer to
     * local minima; this knob exists to MEASURE whether the 0.975
     * routed-recall ceiling is a walk artifact or corpus truth
-    * (XcellDiag's diagnosis: the missing truth pair is
+    * (the r18 diagnosis, BENCH.md: the missing truth pair is
     * greedy-unreachable from ANY entry — RecallBench's
     * `graph_routed_e*` rows price the confirmation). Driver-side
     * O(cells·E) over the collected centroid list — the same O(cells)
@@ -2961,73 +2862,34 @@ object EmbeddingOps {
       .distinct()
     val a = srcAsg.select(col("cell").as("a_cell"), col("vec_id").as("src"),
       col("embedding").as("s_emb"))
-    if (nCells <= KMEANS_K || !coarseBuild) {
-      // exact cosine over the own-plus-adjacent-cell candidate universe.
-      // `mirror` (build sites only, where srcAsg IS candAsg and the cell
-      // relation is symmetric+reflexive) scores each unordered pair once
-      // and explodes both directions from the one kernel evaluation —
-      // invalid on the maintenance paths, where srcAsg is a strict
-      // subset of candAsg and pair (cand, src) must NOT be emitted
-      val b = candAsg.select(col("cell").as("b_cell"), col("vec_id").as("dst"),
-        col("embedding").as("d_emb"))
-      val joined = a.join(broadcast(cpair), Seq("a_cell")).join(b, Seq("b_cell"))
-      val cand =
-        if (mirror) {
-          val half = joined.filter(col("src") < col("dst"))
-            .select(col("src"),
-              graft.functions.GraftFunctions.cosine_sim(col("s_emb"),
-                col("d_emb")).as("sim"),
-              col("dst"))
-          half.select(explode(array(
-              struct(col("src"), col("sim"), col("dst")),
-              struct(col("dst").as("src"), col("sim"),
-                col("src").as("dst")))).as("e"))
-            .select(col("e.src").as("src"), col("e.sim").as("sim"),
-              col("e.dst").as("dst"))
-        } else joined.filter(col("src") =!= col("dst"))
+    // exact cosine over the own-plus-adjacent-cell candidate universe.
+    // `mirror` (build sites only, where srcAsg IS candAsg and the cell
+    // relation is symmetric+reflexive) scores each unordered pair once
+    // and explodes both directions from the one kernel evaluation —
+    // invalid on the maintenance paths, where srcAsg is a strict
+    // subset of candAsg and pair (cand, src) must NOT be emitted
+    val b = candAsg.select(col("cell").as("b_cell"), col("vec_id").as("dst"),
+      col("embedding").as("d_emb"))
+    val joined = a.join(broadcast(cpair), Seq("a_cell")).join(b, Seq("b_cell"))
+    val cand =
+      if (mirror) {
+        val half = joined.filter(col("src") < col("dst"))
           .select(col("src"),
             graft.functions.GraftFunctions.cosine_sim(col("s_emb"),
               col("d_emb")).as("sim"),
             col("dst"))
-      topEdges(s, cand, r)
-    } else {
-      // the compressed-guided selection of [[coarseExactEdges]], over
-      // the xcell candidate universe. The coarse quantizer is cell-local
-      // and trained on candAsg — the maintenance relink passes the FULL
-      // current membership of every candidate cell, so the coarse scores
-      // (hence the forward lists) are bit-identical to a fresh rebuild's.
-      import s.implicits._
-      val mm = graft.Checkpoint.barrier(cellMinMaxOf(
-        candAsg.select("cell", "embedding")))
-      val b = cellCodesDynOf(candAsg, mm).select(col("cell").as("b_cell"),
-        col("vec_id").as("dst"), col("codes"))
-      val pool = a.join(broadcast(cpair), Seq("a_cell"))
-        .join(b, Seq("b_cell"))
-        .filter(col("src") =!= col("dst"))
-        .join(broadcast(mm.withColumnRenamed("cell", "b_cell")), Seq("b_cell"))
+        half.select(explode(array(
+            struct(col("src"), col("sim"), col("dst")),
+            struct(col("dst").as("src"), col("sim"),
+              col("src").as("dst")))).as("e"))
+          .select(col("e.src").as("src"), col("e.sim").as("sim"),
+            col("e.dst").as("dst"))
+      } else joined.filter(col("src") =!= col("dst"))
         .select(col("src"),
-          (-graft.functions.GraftFunctions.sq8_adist(col("s_emb"),
-            col("codes"), col("mns"), col("mxs"), SQ8_LEVELS)).as("sim"),
+          graft.functions.GraftFunctions.cosine_sim(col("s_emb"),
+            col("d_emb")).as("sim"),
           col("dst"))
-      val agg = graft.functions.TopKByScore(GRAPH_BUILD_POOL * r).toColumn
-      val short = pool.as[(Long, Double, Long)]
-        .groupByKey(_._1)
-        .mapValues { case (_, sim, id) => (sim, id) }
-        .agg(agg.name("top"))
-        .toDF("src", "top")
-        .join(srcAsg.select(col("vec_id").as("src"),
-          col("embedding").as("s_emb")), Seq("src"))
-        .select(col("src"), col("s_emb"),
-          explode(expr("transform(top, p -> p._2)")).as("dst"))
-      val exact = short
-        .join(candAsg.select(col("vec_id").as("dst"),
-          col("embedding").as("d_emb")), Seq("dst"))
-        .select(col("src"),
-          graft.functions.GraftFunctions.cosine_sim(col("s_emb"), col("d_emb"))
-            .as("sim"),
-          col("dst"))
-      topEdges(s, exact, r)
-    }
+    topEdges(s, cand, r)
   }
 
   private[graft] def symmetrized(knn: DataFrame): DataFrame =
@@ -3491,17 +3353,8 @@ object EmbeddingOps {
     */
   def annGraphRoutedIndexed(s: SparkSession, d: String,
       indexDir: String): DataFrame = {
-    val st = cgraphSteps(s.read.parquet(s"$indexDir/centroids").count())
-    annGraphRoutedIndexedAt(s, d, indexDir,
-      CGRAPH_P + st, CGRAPH_B + st, CGRAPH_H + st)
-  }
-
-  /** The routed serve at EXPLICIT knobs over an existing store — the
-    * sweep entry [[RoutedProbeSweep]] diagnoses recall residuals with.
-    */
-  private[graft] def annGraphRoutedIndexedAt(s: SparkSession, d: String,
-      indexDir: String, p: Int, b: Int, h: Int): DataFrame = {
     val cents = s.read.parquet(s"$indexDir/centroids")
+    val st = cgraphSteps(cents.count())
     val cedges = s.read.parquet(s"$indexDir/cedges")
     val entry = s.read.parquet(s"$indexDir/entrycell")
     val q = corpus(s, d).select("vec_id", "embedding")
@@ -3510,7 +3363,7 @@ object EmbeddingOps {
     // barriered: feeds the pruning cell-list AND the serve's seeds
     val probes = graft.Checkpoint.barrier(
       routeViaCentroidGraph(s, q, cents, entry, cedges,
-        p = p, b = b, h = h))
+        p = CGRAPH_P + st, b = CGRAPH_B + st, h = CGRAPH_H + st))
     val cells = probes.select("cell").distinct().collect()
       .map(_.getAs[Number]("cell").intValue())
     val (vecs, edges) = graphPrunedStore(s, indexDir, cells.toSeq)

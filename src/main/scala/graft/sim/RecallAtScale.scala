@@ -28,8 +28,6 @@ object RecallAtScale {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf10"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
     // The graph builds' kNN tails aggregate through bounded typed
     // states (TopKByScore); Spark's ObjectHashAggregate falls back to
     // SORT-BASED aggregation after 128 distinct groups per task, which
@@ -43,19 +41,9 @@ object RecallAtScale {
     // at a measured ~1.4× sf10 build cost. The knob prices the trade.
     val fallback = sys.env.getOrElse("SPARK_GRAFT_AGG_FALLBACK_THRESHOLD",
       "128")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        graft.Tuning.sessionShufflePartitions(sfDir, cpus.toInt).toString)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        fallback)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.open(sfDir)
+    spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+      fallback)
 
     val nVecs = graft.Tables.embeddings(spark, sfDir).count()
     val truth = EmbeddingOps.annBruteForce(spark, sfDir).cache()

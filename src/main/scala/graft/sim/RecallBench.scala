@@ -72,18 +72,7 @@ object RecallBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.open(sfDir)
 
     val base = graft.Tables.embeddings(spark, sfDir)
       .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
@@ -214,7 +203,8 @@ object RecallBench {
     // — if the 0.975 ceiling were a greedy-local-minimum artifact, a
     // restart from the far side of centroid space would break it; if it
     // holds at E=2..4 (with the extra cellevals priced beside it), the
-    // ceiling is corpus truth, as XcellDiag diagnosed.
+    // ceiling is corpus truth, as the r18 diagnosis found (BENCH.md,
+    // SCALE_VERIFY_r18 part 3).
     for ((e, p, b, h) <- Seq((2, 2, 2, 2), (2, 2, 4, 2), (4, 2, 4, 2))) {
       val (ranked, visited, routeCells) =
         EmbeddingOps.graphRoutedFrontierPoint(spark, sfDir, p, b, h, e)

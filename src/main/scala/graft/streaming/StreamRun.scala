@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** CLI demo of the streaming surface against real files: watches a
@@ -14,15 +13,7 @@ import org.apache.spark.sql.functions._
 object StreamRun {
   def main(args: Array[String]): Unit = {
     val watchDir = if (args.length > 0) args(0) else "/tmp/graft_stream_in"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-stream-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.open(watchDir)
 
     val dir = Paths.get(watchDir)
     if (Files.exists(dir))

@@ -656,17 +656,10 @@ object RetrievalOps {
     bm25WandFold(head, tail)
   }
 
-  /** The benched expensive pair off the SAME staged Zipf index — the
-    * priced form of the r17 "asserted, not measured" claim.
+  /** The benched expensive serve off the staged Zipf index — the
+    * priced form of the r17 "asserted, not measured" claim (its
+    * exhaustive twin is gate-only, BENCH.md's expensive-scorer table).
     */
-  private[graft] def bm25ZipfExpensiveServed(s: SparkSession,
-      dir: String): DataFrame = {
-    val (q, raw, stats, _) =
-      bucketPrunedInputs(s, dir, s.read.parquet(s"$dir/queries"))
-    bm25ServeWith(s, raw, stats, q,
-      expensiveScoreSpark("tf", "df", "len", "nd", "sumlen"))
-  }
-
   private[graft] def bm25ZipfExpensiveWandServed(s: SparkSession,
       dir: String): DataFrame = {
     val (q, raw, stats, meta) =

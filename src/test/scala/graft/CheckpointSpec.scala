@@ -1,6 +1,7 @@
 package graft
 
 import java.io.File
+import graft.etl.Star
 import graft.text.TextOps
 
 /** The graft.checkpoint.dir deployment switch: barriers default to local
@@ -99,5 +100,33 @@ class CheckpointSpec extends SparkSpec {
     assert(Checkpoint.liveCount === 0)
     assert(persistedIds === before,
       "releaseAll must return the persisted-RDD map to its prior state")
+  }
+
+  test("star build releases the barriers its dims read; other barriers stay; fact unchanged") {
+    def fact(dw: String) = Star.readDw(spark, dw, "fato_vendas")
+    def tmp() = java.nio.file.Files.createTempDirectory("graft_star_ckpt").toString
+    val viaWindow = tmp()
+    StarBench.starBuildTo(spark, tiny, viaWindow)
+    // a barrier the build did not create must survive it
+    val foreign = Checkpoint.barrier(spark.range(10).toDF("id"))
+    val live = Checkpoint.liveCount
+    val routed = tmp()
+    spark.conf.set("graft.sk.windowMaxBytes", "1") // every dim routes distributed
+    try {
+      // the route registers a barrier: the check below is not vacuous
+      val dim = Star.dimProduto(spark, tiny)
+      assert(Checkpoint.liveCount > live)
+      Checkpoint.releaseReadBy(dim)
+      assert(Checkpoint.liveCount === live)
+      StarBench.starBuildTo(spark, tiny, routed)
+    } finally spark.conf.unset("graft.sk.windowMaxBytes")
+    assert(Checkpoint.liveCount === live,
+      "the star build left its surrogate-key barriers live")
+    assert(foreign.count() === 10L)
+    assert(fact(routed).count() === fact(viaWindow).count())
+    assert(fact(routed).exceptAll(fact(viaWindow)).isEmpty)
+    Checkpoint.release(foreign)
+    Seq(viaWindow, routed).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new File(d)))
   }
 }

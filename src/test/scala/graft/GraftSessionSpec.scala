@@ -1,0 +1,97 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import scala.sys.process._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Every main opens its session through [[GraftSession]]. The session
+  * settings are checked in a child JVM, because a JVM holds one
+  * SparkContext and this suite's JVM already runs the shared test
+  * session: static settings such as `spark.sql.extensions` and the master
+  * only take effect in a JVM whose first session GraftSession opens —
+  * which is what a main started by spark-submit or tools/run.sh is.
+  */
+class GraftSessionSpec extends AnyFunSuite {
+
+  private val tiny = "/root/testdata/sf0.001"
+
+  /** `key=value` lines [[GraftSessionProbe]] prints in a fresh JVM started
+    * with the extra JVM options `jvmOpts` and SPARK_GRAFT_CPUS=2.
+    */
+  private def probe(jvmOpts: Seq[String]): Map[String, String] = {
+    val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
+    // --add-opens flags Spark needs on JDK 17, as this JVM was given them
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toSeq.filter(_.startsWith("--add-opens="))
+    val cmd = Seq(javaBin, "-Xmx1g") ++ opens ++ jvmOpts ++
+      Seq("-cp", sys.props("java.class.path"), "graft.GraftSessionProbe", tiny)
+    val out = new StringBuilder
+    val err = new StringBuilder
+    val code = Process(cmd, None, "SPARK_GRAFT_CPUS" -> "2")
+      .!(ProcessLogger(l => out.append(l).append('\n'),
+        l => err.append(l).append('\n')))
+    assert(code == 0, s"probe JVM exited $code:\n${err.takeRight(4000)}")
+    out.toString.linesIterator.collect {
+      case l if l.startsWith("probe:") =>
+        val Array(k, v) = l.stripPrefix("probe:").split("=", 2)
+        k -> v
+    }.toMap
+  }
+
+  private lazy val unsubmitted = probe(Nil)
+  // spark-submit hands its --master to the main as this system property
+  private lazy val submitted = probe(Seq("-Dspark.master=local[1]"))
+
+  test("SparkSession.builder only in GraftSession; its session carries UTC, AQE, nanosAsLong and GraftExtensions") {
+    val root = Paths.get(sys.props.getOrElse("user.dir", "."), "src/main/scala")
+    val builders = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => Files.readString(p).contains("SparkSession.builder"))
+      .map(p => root.relativize(p).toString).toSeq.sorted
+    assert(builders == Seq("graft/GraftSession.scala"),
+      "open the session with GraftSession.open instead of a builder")
+
+    val s = unsubmitted
+    assert(s("tz") == "UTC")
+    assert(s("aqe") == "true")
+    assert(s("nanosAsLong") == "true")
+    assert(s("extensions") == "graft.plans.GraftExtensions")
+    // the extensions' native functions resolve as builtins
+    assert(s("simhash64") == "ok")
+    assert(s("shufflePartitions") == "2")
+    assert(s("ui") == "false")
+    assert(s("warehouse").contains("/tmp/graft_wh_"))
+  }
+
+  test("a submitted master is kept; without one the session runs local[SPARK_GRAFT_CPUS]") {
+    assert(unsubmitted("master") == "local[2]")
+    assert(submitted("master") == "local[1]")
+    assert(submitted("tz") == "UTC")
+  }
+}
+
+/** Opens a [[GraftSession]] over `args(0)` and prints its settings as
+  * `probe:key=value` lines (run by [[GraftSessionSpec]] in its own JVM).
+  */
+object GraftSessionProbe {
+  def main(args: Array[String]): Unit = {
+    val spark = GraftSession.open(args(0))
+    def conf(k: String) = spark.conf.get(k)
+    val simhash =
+      try { spark.sql("SELECT simhash64(array('a', 'b'))").head(); "ok" }
+      catch { case e: Throwable => e.getClass.getSimpleName }
+    Seq(
+      "master" -> spark.sparkContext.master,
+      "tz" -> conf("spark.sql.session.timeZone"),
+      "aqe" -> conf("spark.sql.adaptive.enabled"),
+      "nanosAsLong" -> conf("spark.sql.legacy.parquet.nanosAsLong"),
+      "extensions" -> conf("spark.sql.extensions"),
+      "simhash64" -> simhash,
+      "shufflePartitions" -> conf("spark.sql.shuffle.partitions"),
+      "ui" -> spark.sparkContext.getConf.get("spark.ui.enabled"),
+      "warehouse" -> conf("spark.sql.warehouse.dir"))
+      .foreach { case (k, v) => println(s"probe:$k=$v") }
+    spark.stop()
+  }
+}
