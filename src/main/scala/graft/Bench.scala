@@ -231,13 +231,7 @@ object Bench {
     val dw = s"/tmp/graft_bench_dw_${System.nanoTime()}"
     // nanoTime-unique scratch dirs (DW sink, ANN indexes) are deleted
     // after their phases — they would otherwise accumulate per bench run
-    def rmTree(p: String): Unit = {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(new java.io.File(p))
-    }
+    import Scratch.rmTree
 
     // Phase 1 — ETL: build + sink the whole star (reference: 6 DAG tasks).
     // The fact is partitioned by year (derived from the smart date key) so

@@ -11,14 +11,7 @@ package graft
   * fail every future call.
   */
 object StorePublish {
-
-  private def rmTree(p: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val w = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-    try w.iterator().asScala.toSeq.reverse
-      .foreach(java.nio.file.Files.delete)
-    finally w.close()
-  }
+  import Scratch.rmTree
 
   def publishOnce(dir: String)(build: String => Unit): String = {
     val marker = new java.io.File(dir, "_built")
@@ -62,7 +55,7 @@ object StorePublish {
               case _: java.io.IOException =>
                 if (marker.exists()) rmTree(tmp) else throw e
             } finally {
-              if (java.nio.file.Files.exists(aside)) rmTree(aside.toString)
+              rmTree(aside.toString)
             }
           }
       }

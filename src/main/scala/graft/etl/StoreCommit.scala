@@ -83,19 +83,11 @@ object StoreCommit {
       Option(new java.io.File(stateDir).listFiles()).getOrElse(Array.empty)
         .filter(f => f.isDirectory && f.getName.startsWith(prefix) &&
           f.getName != keep)
-        .foreach(delete)
+        .foreach(f => graft.Scratch.rmTree(f.getPath))
     }
 
   /** Remove the whole store (fresh-init semantics: a lifecycle rerun at
     * a fixed path must not union a previous run's history dirs).
     */
-  def wipe(stateDir: String): Unit = {
-    val d = new java.io.File(stateDir)
-    if (d.exists()) delete(d)
-  }
-
-  private def delete(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(delete)
-    f.delete(): Unit
-  }
+  def wipe(stateDir: String): Unit = graft.Scratch.rmTree(stateDir)
 }

@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables.embeddings
@@ -701,7 +701,7 @@ object EmbeddingOps {
     lut.groupBy(col("query_id"), col("m"))
       .agg(array_sort(collect_list(struct(col("code"), col("part")))).as("cp"))
       .select(col("query_id"), col("m"),
-        // position == code is load-bearing for adcSum's 0-based lookups:
+        // position == code is load-bearing for adcSumM's 0-based lookups:
         // a training round that left a codebook cell empty would drop it
         // from the LUT and silently shift every higher code's position,
         // so non-density fails loudly here instead of misaligning
@@ -715,20 +715,17 @@ object EmbeddingOps {
           WHEN size(mr) = $m AND x.m = i THEN x.row
           ELSE raise_error('lutParts: non-dense subspace ids — m must be exactly 0..M-1') END)""").as("parts"))
 
-  /** The codebook size of a TRAINED codebook table (max code + 1) — the
-    * index-served paths derive K from the stored artifact, so one serve
-    * implementation works for every code budget; an empty codebook cell
-    * still trips [[lutParts]]' density guard (the cell is absent from
-    * the table, so max+1 exceeds the LUT's entry count).
+  /** (K, M) of a TRAINED codebook table — (max code + 1, max m + 1), one
+    * job. The index-served paths derive both from the stored artifact,
+    * so one serve implementation works for every code budget and
+    * subspace split; an empty codebook cell still trips [[lutParts]]'
+    * density guard (the cell is absent from the table, so max+1 exceeds
+    * the LUT's entry count).
     */
-  private def codebookK(pcents: DataFrame): Int =
-    pcents.agg(max(col("cell"))).head.getInt(0) + 1
-
-  /** The subspace count of a trained codebook table (max m + 1) — same
-    * derive-from-artifact contract as [[codebookK]].
-    */
-  private def codebookM(pcents: DataFrame): Int =
-    pcents.agg(max(col("m"))).head.getInt(0) + 1
+  private def codebookShape(pcents: DataFrame): (Int, Int) = {
+    val r = pcents.agg(max(col("cell")), max(col("m"))).head()
+    (r.getInt(0) + 1, r.getInt(1) + 1)
+  }
 
   /** Fixed left-to-right M-part ADC sum via the parts lookup — the same
     * addition order as the oracle's `part0 + part1 + … + part{M-1}`.
@@ -736,29 +733,40 @@ object EmbeddingOps {
   private def adcSumM(m: Int): String =
     (0 until m).map(i => s"parts[$i][c$i]").mkString(" + ")
 
-  private val adcSum = adcSumM(PQ_M)
+  /** The per-query ADC LUT ([[lutParts]]) from the queries' sub-vectors
+    * — (query id, m, sub) rows — against the codebooks: ONE copy for
+    * every PQ probe, raw or residual, self-contained or served.
+    */
+  private def adcLut(qSub: DataFrame, pcents: DataFrame, k: Int = PQ_K,
+      m: Int = PQ_M): DataFrame =
+    lutParts(qSub.toDF("query_id", "m", "q_sub")
+      .join(broadcast(pcents), Seq("m"))
+      .withColumn("part",
+        graft.functions.GraftFunctions.l2_sq(col("q_sub"), col("centroid")))
+      .select(col("query_id"), col("m"), col("cell").as("code"), col("part")),
+      k, m)
 
-  /** The ADC probe tail shared by the self-contained and index-backed
-    * forms: LUT from `cents`, candidates from `codes`, fixed-order 4-part
-    * sum, bounded top-k.
+  /** The ranking tail of every quantized probe: (query_id, sim = −distance,
+    * vec_id) candidates through the bounded top-k aggregator, surfaced as
+    * (query_id, vizinho, `name` = distance, rank). -(-x) is exact in
+    * IEEE, so the surfaced distance is bit-identical to the oracle's.
+    */
+  private def rankByDistance(s: SparkSession, sims: DataFrame,
+      name: String = "adist"): DataFrame =
+    rankViaTopK(s, sims)
+      .select(col("query_id"), col("vizinho"), (-col("sim")).as(name),
+        col("rank"))
+      .orderBy("query_id", "rank")
+
+  /** The ADC probe tail of the flat PQ index: LUT from `cents`,
+    * candidates from `codes`, fixed-order 4-part sum, bounded top-k.
     */
   private def pqProbe(s: SparkSession, d: String, cents: DataFrame,
       codes: DataFrame): DataFrame = {
-    val lut = pqSubCorpus(s, d).filter(col("vec_id") < N_QUERIES)
-      .toDF("query_id", "m", "q_sub")
-      .join(broadcast(cents), Seq("m"))
-      .withColumn("part", graft.functions.GraftFunctions.l2_sq(col("q_sub"), col("centroid")))
-      .select(col("query_id"), col("m"), col("cell").as("code"), col("part"))
-    val cands = codes.crossJoin(broadcast(lutParts(lut)))
-    val sims = cands.filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), (-expr(adcSum)).as("sim"), col("vec_id"))
-    // rank by approximate distance ASC == negated-distance DESC through
-    // the bounded top-k tail; -(-x) is exact in IEEE, so the surfaced
-    // distance is bit-identical to the oracle's sum
-    rankViaTopK(s, sims)
-      .select(col("query_id"), col("vizinho"), (-col("sim")).as("adist"),
-        col("rank"))
-      .orderBy("query_id", "rank")
+    val lut = adcLut(pqSubCorpus(s, d).filter(col("vec_id") < N_QUERIES), cents)
+    rankByDistance(s, codes.crossJoin(broadcast(lut))
+      .filter(col("query_id") =!= col("vec_id"))
+      .select(col("query_id"), (-expr(adcSumM(PQ_M))).as("sim"), col("vec_id")))
   }
 
   /** Persist the PQ index: the four codebooks (tiny) plus the 4-code
@@ -790,64 +798,125 @@ object EmbeddingOps {
   def annPqIndexedAuto(s: SparkSession, d: String): DataFrame =
     autoIndexed(d, "_pq", buildPqIndex(s, d, _), annPqIndexed(s, d, _))
 
-  /** IVF-PQ: the two trained stages composed, exactly the architecture a
-    * production vector index runs at corpus scale — the coarse k-means
-    * quantizer routes the query to its L2-nearest cell (search space drops
-    * to ~N/k candidates, partition-prunable), and WITHIN the cell
-    * candidates are ranked by ADC over the compressed codes (corpus floats
-    * never touched at query time). The oracle recomputes both trainings —
-    * full-vector Lloyd AND the four subspace codebooks — and the composed
-    * probe, all bit-exact.
-    */
-  def annIvfPq(s: SparkSession, d: String): DataFrame =
-    rankViaTopK(s, ivfPqAdcSims(s, d))
-      .select(col("query_id"), col("vizinho"), (-col("sim")).as("adist"),
-        col("rank"))
-      .orderBy("query_id", "rank")
+  // ------------------------------------------------------------ IVF-PQ
+  // The two trained stages composed, exactly the architecture a
+  // production vector index runs at corpus scale: the coarse k-means
+  // quantizer routes the query to its L2-nearest cell (search space
+  // drops to ~N/k candidates, partition-prunable), and WITHIN the cell
+  // candidates are ranked by ADC over the compressed codes (corpus
+  // floats never touched at query time).
+  //
+  // `residual` picks what the PQ stage encodes. Raw codes encode the
+  // vector itself. Residual codes follow classic IVF-PQ (Jégou, Douze,
+  // Schmid — "Product Quantization for Nearest Neighbor Search", TPAMI
+  // 2011) and encode vec − coarse_centroid(assigned cell): the residual
+  // distribution is centered and much lower-variance than the raw
+  // corpus (the coarse quantizer has already explained the between-cell
+  // structure), so the same codebook budget spends its entries on
+  // within-cell detail — where compressed-family recall comes from (r14:
+  // raw-trained codebooks reach 0.30@5 vs 0.975 for the uncompressed
+  // kmeans probe). Everything else — ADC, the code layout, the
+  // cell-partitioned store, append/delete/compact — is one code path;
+  // the encoder changes only (a) what the codebooks train on, (b) what
+  // the codes encode, (c) what the query LUT is built from (the query's
+  // residual against its ROUTED cell's centroid). Every form gates
+  // bit-exactly: the oracles re-derive both trainings (and the residual
+  // subtraction) and the composed probe.
 
-  /** The composed probe's ADC candidate scores — (query_id, sim = −adist,
-    * vec_id) for every candidate in the routed cell — shared by the
+  /** Each vector's residual against its assigned coarse centroid:
+    * (vec_id, cell, embedding = vec − centroid[cell]) with the residual
+    * in double (float→double widening is exact, so the subtraction is
+    * one exact IEEE op the oracle reproduces bit-identically). One
+    * broadcast assignment pass + one broadcast centroid join — no
+    * corpus shuffle.
+    */
+  private def residualsUnder(s: SparkSession, base: DataFrame,
+      cents: DataFrame): DataFrame =
+    assignCells(s, base, cents).select("vec_id", "embedding", "cell")
+      .join(broadcast(cents), Seq("cell"))
+      .selectExpr("vec_id", "cell",
+        "zip_with(embedding, centroid, (x, y) -> CAST(x AS DOUBLE) - y) AS embedding")
+
+  /** What the PQ stage encodes for `base` under the coarse centroids —
+    * (vec_id, embedding) — and each vector's (vec_id, cell). Raw: the
+    * float vectors themselves, cells from one assignment pass. Residual:
+    * vec − centroid[cell], materialized once because the residuals feed
+    * the encode and the cells alike.
+    */
+  private def pqInput(s: SparkSession, base: DataFrame, cents: DataFrame,
+      residual: Boolean): (DataFrame, DataFrame) =
+    if (residual) {
+      val res = graft.Checkpoint.barrier(residualsUnder(s, base, cents))
+      (res.select("vec_id", "embedding"), res.select("vec_id", "cell"))
+    } else (base, assignCells(s, base, cents).select("vec_id", "cell"))
+
+  /** The composed store's rows: the m codes of each encoded vector plus
+    * its coarse cell.
+    */
+  private def cellCodes(enc: DataFrame, cells: DataFrame, pcents: DataFrame,
+      m: Int): DataFrame =
+    pqCodesOfBase(pqSubOf(enc, m), pcents, m).join(cells, Seq("vec_id"))
+
+  /** ADC candidate scores — (query_id, sim = −adist, vec_id) for every
+    * code row in the query's routed cell, the fixed-order m-part sum off
+    * the query's broadcast LUT row.
+    */
+  private def adcSims(routed: DataFrame, codes: DataFrame, lut: DataFrame,
+      m: Int): DataFrame =
+    routed.join(codes, Seq("cell"))
+      .filter(col("query_id") =!= col("vec_id"))
+      .join(broadcast(lut), Seq("query_id"))
+      .select(col("query_id"), (-expr(adcSumM(m))).as("sim"), col("vec_id"))
+
+  /** The self-contained IVF-PQ probe: both trainings, the encode, and
+    * the composed ADC probe in one call. `k` codebook entries per
+    * subspace, `m` subspaces.
+    */
+  def annIvfPq(s: SparkSession, d: String, residual: Boolean = false,
+      k: Int = PQ_K, m: Int = PQ_M): DataFrame =
+    rankByDistance(s, ivfPqAdcSims(s, d, residual, k, m))
+
+  /** The self-contained probe's ADC candidate scores — shared by the
     * plain top-k gate and the refined (exact re-rank) gate so the two
     * probes rank the same candidate stream.
     */
-  private def ivfPqAdcSims(s: SparkSession, d: String): DataFrame = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
+  private def ivfPqAdcSims(s: SparkSession, d: String, residual: Boolean,
+      k: Int, m: Int): DataFrame = {
     val base = corpus(s, d).select("vec_id", "embedding")
-    // the two trainings are INDEPENDENT (full-vector Lloyd, per-subspace
-    // codebooks) and each is a chain of small barrier jobs that leaves
-    // most of the cluster idle — submit them concurrently so the
-    // training wall is max, not sum (Spark's scheduler interleaves the
-    // jobs; both are deterministic, so results are unchanged)
-    val fCents = Future(kmeansCentroids(s, d))
-    val fPcents = Future(pqCodebooks(s, d))
-    val cents = Await.result(fCents, Duration.Inf)
-    val pcents = Await.result(fPcents, Duration.Inf)
-    // ONE materialization job carries the whole serving index: the
-    // 4-code compression joined with the coarse cell per vector. It
-    // feeds the candidate set AND the query routing — a query vector's
-    // nProbe=1 route is, by definition, its own L2 assignment under the
-    // same (dist ASC, cell ASC) tie-break, so routing needs no separate
-    // crossJoin + window
-    val indexed = graft.Checkpoint.barrier(
-      pqCodesOf(s, d, pcents)
-        .join(assignCells(s, base, cents).select("vec_id", "cell"),
-          Seq("vec_id")))
+    // raw codes: the two trainings are INDEPENDENT (full-vector Lloyd,
+    // per-subspace codebooks) and each is a chain of small barrier jobs
+    // that leaves most of the cluster idle — submit them concurrently so
+    // the training wall is max, not sum (both are deterministic, so
+    // results are unchanged). Residual codebooks train on residuals
+    // under the centroids, so they wait for Lloyd.
+    val (cents, rawCodebooks) =
+      if (residual) (kmeansCentroids(s, d), None)
+      else {
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.duration.Duration
+        import scala.concurrent.ExecutionContext.Implicits.global
+        val fCents = Future(kmeansCentroids(s, d))
+        val fPcents = Future(pqCodebooksOf(pqSubOf(base, m), k))
+        (Await.result(fCents, Duration.Inf),
+          Some(Await.result(fPcents, Duration.Inf)))
+      }
+    val (enc, cells) = pqInput(s, base, cents, residual)
+    val pcents = rawCodebooks.getOrElse(pqCodebooksOf(pqSubOf(enc, m), k))
+    // ONE materialization job carries the whole serving index: the codes
+    // joined with the coarse cell per vector. It feeds the candidate set
+    // AND the query routing — a query vector's nProbe=1 route is, by
+    // definition, its own L2 assignment under the same (dist ASC,
+    // cell ASC) tie-break, so routing needs no separate crossJoin +
+    // window (and a residual query's routed residual is its own row)
+    val indexed = graft.Checkpoint.barrier(cellCodes(enc, cells, pcents, m))
     val routed = indexed.filter(col("vec_id") < N_QUERIES)
       .select(col("vec_id").as("query_id"), col("cell"))
-    val lut = pqSubCorpus(s, d).filter(col("vec_id") < N_QUERIES)
-      .toDF("query_id", "m", "q_sub")
-      .join(broadcast(pcents), Seq("m"))
-      .withColumn("part", graft.functions.GraftFunctions.l2_sq(col("q_sub"), col("centroid")))
-      .select(col("query_id"), col("m"), col("cell").as("code"), col("part"))
-    val cands = routed.join(indexed, Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .join(broadcast(lutParts(lut)), Seq("query_id"))
-    cands.select(col("query_id"), (-expr(adcSum)).as("sim"), col("vec_id"))
+    adcSims(routed, indexed,
+      adcLut(pqSubOf(enc.filter(col("vec_id") < N_QUERIES), m), pcents, k, m),
+      m)
   }
 
-  /** Re-rank candidate depth for the refined probe: the exact re-scoring
+  /** Re-rank candidate depth for the refined probe: the exact re-rank
     * reads 4 × TOP_K original vectors per query — a constant factor over
     * serving top-k, vanishing next to the corpus scan ADC avoided.
     */
@@ -855,35 +924,24 @@ object EmbeddingOps {
 
   /** The composed IVF-PQ probe WITH exact re-rank (refine) — the
     * standard recall repair for quantized serving: ADC distances off
-    * 4-byte codes are recall-bounded by quantization error, so the top
-    * REFINE_C ADC candidates are re-scored against their ORIGINAL
-    * vectors (ONE equi-join on vec_id — at scale, a point-lookup read of
+    * compressed codes are recall-bounded by quantization error, so the
+    * top `c` ADC candidates are re-scored against their ORIGINAL vectors
+    * (ONE equi-join on vec_id — at scale, a point-lookup read of
     * c·|queries| vectors from the primary store, never a corpus scan)
     * and the final top-k ranks by exact L2². The oracle recomputes both
     * trainings, the ADC shortlist, and the exact re-scoring — bit-exact.
+    *
+    * `c` is the knob that matters on a distance-concentrated corpus
+    * (unit vectors, top-5 vs 6th-neighbor gaps of ~0.003 on distances
+    * ~1.1, measured at sf0.1): no compressed-domain ranking can separate
+    * gaps that small at ANY code budget (the K=64 / M=16 recall rows
+    * prove it), so the production recall lever is ADC-as-shortlist +
+    * exact re-rank, and recall climbs with c toward the routing ceiling
+    * while the re-rank stays O(c·|queries|) point lookups.
     */
-  def annIvfPqRefined(s: SparkSession, d: String): DataFrame =
-    refineExact(s, d, ivfPqAdcSims(s, d))
-
-  /** The refined probe at an explicit shortlist depth — the knob that
-    * matters on a distance-concentrated corpus (unit vectors, top-5 vs
-    * 6th-neighbor gaps of ~0.003 on distances ~1.1, measured at sf0.1):
-    * no compressed-domain ranking can separate gaps that small at ANY
-    * code budget (the K=64 / M=16 recall rows prove it), so the
-    * production recall lever is ADC-as-shortlist + exact re-rank, and
-    * recall climbs with c toward the routing ceiling while the re-rank
-    * stays O(c·|queries|) point lookups — never a corpus scan.
-    */
-  def annIvfPqRefinedDeep(s: SparkSession, d: String, c: Int): DataFrame =
-    refineExact(s, d, ivfPqAdcSims(s, d), c)
-
-  /** Residual ADC shortlist + exact re-rank: the full production stack
-    * (coarse route → compressed candidate scoring → exact refine)
-    * composed over the residual encoder.
-    */
-  def annIvfPqResidualRefined(s: SparkSession, d: String, k: Int = PQ_K,
-      m: Int = PQ_M, c: Int = REFINE_C): DataFrame =
-    refineExact(s, d, ivfPqResidualAdcSims(s, d, k, m), c)
+  def annIvfPqRefined(s: SparkSession, d: String, residual: Boolean = false,
+      k: Int = PQ_K, m: Int = PQ_M, c: Int = REFINE_C): DataFrame =
+    refineExact(s, d, ivfPqAdcSims(s, d, residual, k, m), c)
 
   /** The exact re-rank tail over any (query_id, sim = −adist, vec_id)
     * ADC candidate stream — shared by the self-contained refined probe
@@ -911,72 +969,64 @@ object EmbeddingOps {
         (-graft.functions.GraftFunctions.l2_sq(col("q_emb"), col("embedding")))
           .as("sim"),
         col("vec_id"))
-    // -(-x) is exact in IEEE: the surfaced distance is the kernel's L2²
-    rankViaTopK(s, exact)
-      .select(col("query_id"), col("vizinho"), (-col("sim")).as("dist"),
-        col("rank"))
-      .orderBy("query_id", "rank")
+    rankByDistance(s, exact, "dist")
   }
 
-  /** Persist the COMPOSED IVF-PQ index — coarse centroids, the four PQ
-    * codebooks, and the code table carrying each vector's coarse cell,
-    * `partitionBy(cell)` so a routed probe's scan prunes to its cell's
-    * code partitions: both trainings run once at build time, the probe
-    * touches neither raw vectors nor training.
+  /** Persist the COMPOSED IVF-PQ index over the full corpus — coarse
+    * centroids, the PQ codebooks, and the code table carrying each
+    * vector's coarse cell, `partitionBy(cell)` so a routed probe's scan
+    * prunes to its cell's code partitions: both trainings run once at
+    * build time, the probe touches neither raw vectors nor training.
     *
     * `centroidsFrom`: an existing k-means index dir whose TRAINED coarse
     * centroids this build reuses instead of re-running Lloyd — the two
     * indexes share one quantizer training, which is both the cheaper and
     * the operationally correct lifecycle (one quantizer per corpus, many
-    * artifacts derived from it). Reuse is guarded by the dataset
-    * fingerprint stamped at km-build time; a mismatch (or absent stamp)
-    * falls back to training. Lloyd is deterministic here, so served
+    * artifacts derived from it). `codebooksFrom`: likewise a flat PQ
+    * index's codebooks — raw codes only, since residual codebooks train
+    * on residuals no flat index saw. Reuse is guarded by the dataset
+    * fingerprint stamped at build time; a mismatch (or absent stamp)
+    * falls back to training. Both trainings are deterministic, so served
     * probes are byte-identical either way.
     */
   def buildIvfPqIndex(s: SparkSession, d: String, indexDir: String,
       centroidsFrom: Option[String] = None,
-      codebooksFrom: Option[String] = None): Unit = {
-    val base = corpus(s, d).select("vec_id", "embedding")
+      codebooksFrom: Option[String] = None,
+      residual: Boolean = false): Unit = {
     // an artifact dir qualifies for reuse iff its training stamp matches
     // THIS dataset's fingerprint
-    def stamped(dir: String): Boolean = {
-      val fp = new java.io.File(dir, "_fingerprint")
-      fp.exists() &&
-        java.nio.file.Files.readString(fp.toPath).trim == datasetFingerprint(d)
-    }
-    val cents = centroidsFrom.filter(stamped)
-      .map(dir => s.read.parquet(s"$dir/centroids"))
-      .getOrElse(kmeansCentroids(s, d))
-    cents.write.mode("overwrite").parquet(s"$indexDir/centroids")
-    // the PQ codebooks are the SAME training the flat PQ index ran —
-    // reuse them too when a stamped PQ index exists (both trainings are
-    // deterministic, so the composed index is byte-identical either way)
-    val pcents = codebooksFrom.filter(stamped)
-      .map(dir => s.read.parquet(s"$dir/codebooks"))
-      .getOrElse(pqCodebooks(s, d))
-    pcents.write.mode("overwrite").parquet(s"$indexDir/codebooks")
-    pqCodesOf(s, d, pcents)
-      .join(assignCells(s, base, cents).select("vec_id", "cell"), Seq("vec_id"))
-      .withColumn("batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("cell", "batch")
-      .parquet(s"$indexDir/codes")
+    def reused(from: Option[String], table: String): Option[DataFrame] =
+      from.filter { dir =>
+        val fp = new java.io.File(dir, "_fingerprint")
+        fp.exists() &&
+          java.nio.file.Files.readString(fp.toPath).trim == datasetFingerprint(d)
+      }.map(dir => s.read.parquet(s"$dir/$table"))
+    val base = corpus(s, d).select("vec_id", "embedding")
+    buildIvfPqIndexOn(s, base, base, indexDir, residual,
+      centroids = reused(centroidsFrom, "centroids"),
+      codebooks = reused(codebooksFrom.filter(_ => !residual), "codebooks"))
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$indexDir/_fingerprint"), datasetFingerprint(d))
   }
 
   /** The composed IVF-PQ build over explicit bases: both trainings run
-    * on `trainBase` (the corpus as of build time), the code table
-    * encodes + coarse-assigns `assignBase`. [[buildIvfPqIndex]] passes
-    * the full corpus for both; the incremental lifecycle trains on the
-    * build slice and lets [[appendIvfPqIndex]] fold arrivals in.
+    * on `trainBase` (the corpus as of build time) unless already-trained
+    * `centroids`/`codebooks` are given, the code table encodes +
+    * coarse-assigns `assignBase`. [[buildIvfPqIndex]] passes the full
+    * corpus for both; the incremental lifecycle trains on the build
+    * slice and lets [[appendIvfPqIndex]] fold arrivals in.
     */
   private[graft] def buildIvfPqIndexOn(s: SparkSession, trainBase: DataFrame,
-      assignBase: DataFrame, indexDir: String, k: Int = PQ_K): Unit = {
-    val cents = kmeansCentroidsOf(trainBase)
+      assignBase: DataFrame, indexDir: String, residual: Boolean = false,
+      k: Int = PQ_K, m: Int = PQ_M, centroids: Option[DataFrame] = None,
+      codebooks: Option[DataFrame] = None): Unit = {
+    val cents = centroids.getOrElse(kmeansCentroidsOf(trainBase))
     cents.write.mode("overwrite").parquet(s"$indexDir/centroids")
-    val pcents = pqCodebooksOf(pqSubOf(trainBase), k)
+    val pcents = codebooks.getOrElse(pqCodebooksOf(
+      pqSubOf(pqInput(s, trainBase, cents, residual)._1, m), k))
     pcents.write.mode("overwrite").parquet(s"$indexDir/codebooks")
-    pqCodesOfBase(pqSubOf(assignBase), pcents)
-      .join(assignCells(s, assignBase, cents).select("vec_id", "cell"),
-        Seq("vec_id"))
+    val (enc, cells) = pqInput(s, assignBase, cents, residual)
+    cellCodes(enc, cells, pcents, m)
       .withColumn("batch", lit(-1L))
       .write.mode("overwrite").partitionBy("cell", "batch")
       .parquet(s"$indexDir/codes")
@@ -984,22 +1034,21 @@ object EmbeddingOps {
 
   /** Incremental maintenance for the COMPOSED index — the compressed
     * twin of [[appendIvfIndexKmeans]]: the arrival batch is encoded with
-    * the STORED codebooks (4 one-byte codes), coarse-assigned to the
-    * STORED centroids, and appended into the routed cell partitions.
-    * No training, no rescan of indexed codes — O(|batch|) work, and the
-    * appended index is bit-indistinguishable from one built with the
-    * arrivals present (same deterministic encoders), which
-    * q_ann_ivfpq_incr gates end to end.
+    * the STORED codebooks (raw or residual, as the index was built),
+    * coarse-assigned to the STORED centroids, and appended into the
+    * routed cell partitions. No training, no rescan of indexed codes —
+    * O(|batch|) work, and the appended index is bit-indistinguishable
+    * from one built with the arrivals present (same deterministic
+    * encoders), which q_ann_ivfpq{,_residual}_incr gate end to end.
     */
   private[graft] def appendIvfPqIndex(s: SparkSession, newRows: DataFrame,
-      indexDir: String, batchId: Long): Unit = {
+      indexDir: String, batchId: Long, residual: Boolean = false): Unit = {
     val cents = s.read.parquet(s"$indexDir/centroids")
     val pcents = s.read.parquet(s"$indexDir/codebooks")
+    val (enc, cells) = pqInput(s, newRows, cents, residual)
     // same exactly-once shape as appendIvfIndexKmeans: the batch owns its
     // (cell, batch) partitions, so a replay overwrites itself
-    pqCodesOfBase(pqSubOf(newRows), pcents)
-      .join(assignCells(s, newRows, cents).select("vec_id", "cell"),
-        Seq("vec_id"))
+    cellCodes(enc, cells, pcents, codebookShape(pcents)._2)
       .withColumn("batch", lit(batchId))
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("cell", "batch")
@@ -1015,7 +1064,7 @@ object EmbeddingOps {
     * (broadcast — deletes are a vanishing fraction of a 100 TB corpus),
     * so a delete is visible at the NEXT read; [[compactIvfPqIndex]]
     * folds accumulated tombstones into the code partitions when their
-    * count warrants paying the rewrite.
+    * count warrants paying the rewrite. The store is encoder-agnostic.
     */
   private[graft] def deleteIvfPq(s: SparkSession, ids: DataFrame,
       indexDir: String, batchId: Long): Unit =
@@ -1031,54 +1080,25 @@ object EmbeddingOps {
       Some(s.read.parquet(s"$indexDir/tombstones").select("vec_id").distinct())
     else None
 
-  /** Fold tombstones into the code store and clear them. Rewrites ONLY
-    * the (cell, batch) partitions that actually contain a tombstoned
-    * row — the dynamic-overwrite surgical write the append path already
-    * uses — with one extra obligation dynamic overwrite cannot express:
-    * a partition whose EVERY row was deleted produces no output rows, so
-    * it would survive untouched; those fully-dead partitions are removed
-    * explicitly (driver work O(#affected partitions), never row-scaled).
-    * After compaction a serve with no tombstones is byte-identical to
-    * the tombstone-masked serve — IvfIndexSpec pins it.
+  /** `rows` of an index store minus its tombstoned ids: a delete is
+    * visible at the next read as an O(|tombstones|) broadcast anti-join,
+    * without any store rewrite (no-op when no delete happened).
+    */
+  private def liveRows(s: SparkSession, indexDir: String,
+      rows: DataFrame): DataFrame =
+    tombstonesOf(s, indexDir).fold(rows)(t =>
+      rows.join(broadcast(t), Seq("vec_id"), "left_anti"))
+
+  /** Fold tombstones into the code store and clear them: the shared
+    * (cell, batch) partition fold rewrites ONLY the partitions that hold
+    * a tombstoned row ([[graft.Tombstones.fold]]). After compaction a
+    * serve with no tombstones is byte-identical to the tombstone-masked
+    * serve — IvfIndexSpec pins it.
     */
   private[graft] def compactIvfPqIndex(s: SparkSession, indexDir: String): Unit =
     tombstonesOf(s, indexDir).foreach { t =>
-      val codes = s.read.parquet(s"$indexDir/codes")
-      // partition-column values come back with INFERRED types (batch=-1
-      // reads as Int) — pin both before collecting
-      val affected = codes.join(broadcast(t), Seq("vec_id"), "left_semi")
-        .select(col("cell").cast("int"), col("batch").cast("long"))
-        .distinct().collect()
-        .map(r => (r.getInt(0), r.getLong(1)))
-      if (affected.nonEmpty) {
-        val cells = affected.map(_._1).distinct.toSeq
-        val kept = s.read.parquet(s"$indexDir/codes")
-          .filter(col("cell").isin(cells: _*))
-          .join(broadcast(t), Seq("vec_id"), "left_anti")
-        // which (cell, batch) partitions still have survivors MUST be
-        // computed from `kept` BEFORE the overwrite: a post-write store
-        // read would still see the fully-dead partitions (dynamic
-        // overwrite never touched them — they produce no output rows)
-        // and wrongly count them as surviving
-        val surviving = kept
-          .select(col("cell").cast("int"), col("batch").cast("long"))
-          .distinct().collect()
-          .map(r => (r.getInt(0), r.getLong(1))).toSet
-        kept.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("cell", "batch").parquet(s"$indexDir/codes")
-        (affected.toSet -- surviving).foreach { case (c, b) =>
-          val dir = java.nio.file.Paths.get(s"$indexDir/codes/cell=$c/batch=$b")
-          if (java.nio.file.Files.exists(dir)) {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.delete)
-          }
-        }
-      }
-      val tdir = java.nio.file.Paths.get(s"$indexDir/tombstones")
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tdir).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
+      graft.Tombstones.fold(s, s"$indexDir/codes", "vec_id", "cell", t): Unit
+      graft.Scratch.rmTree(s"$indexDir/tombstones")
     }
 
   /** The delete-set convention of the gated lifecycle: every 5th id
@@ -1090,54 +1110,57 @@ object EmbeddingOps {
   private[graft] val DeleteVictims =
     col("vec_id") % 5 === 4 && col("vec_id") >= N_QUERIES
 
-  /** build → append → delete, returning the index dir (per-dataset,
-    * per-tag tmp; every step is replay-idempotent).
+  /** The gated index lifecycle: build on 9/10 of the corpus, cell-append
+    * the arriving 1/10 under the stored trainings, and (`delete`)
+    * tombstone-delete every (mod-5) 5th id — returning the per-process
+    * `ivfpq[res]_<tag>` dir. Every step is replay-idempotent.
     */
-  /** Per-dataset, per-tag tmp dir for the rebuilt-per-call lifecycle
-    * gates (incr/delete constructions) — ONE copy of the md5 keying so
-    * the scheme can't silently diverge across families.
-    */
-  private def lifecycleDir(d: String, name: String): String = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    // keyed per PROCESS as well as per dataset: these dirs are rebuilt
-    // in place on every call (build → append → delete), so two
-    // concurrent JVMs running the same gate would interleave their
-    // mutations on a shared path — unlike the publishOnce stores, which
-    // are immutable-once-published and safely shared
-    val pid = java.lang.ProcessHandle.current().pid()
-    s"${System.getProperty("java.io.tmpdir")}/graft_${name}_${h}_p$pid"
-  }
-
-  private def ivfPqDeletedIndexDir(s: SparkSession, d: String,
-      tag: String): String = {
-    val dir = lifecycleDir(d, s"ivfpq_$tag")
+  private def ivfPqLifecycleDir(s: SparkSession, d: String, tag: String,
+      residual: Boolean, delete: Boolean): String = {
+    val dir = graft.Scratch.processDir(d,
+      s"${if (residual) "ivfpqres" else "ivfpq"}_$tag")
     val base = corpus(s, d).select("vec_id", "embedding")
-    buildIvfPqIndexOn(s, base.filter(!IncrArrival), base.filter(!IncrArrival), dir)
-    appendIvfPqIndex(s, base.filter(IncrArrival), dir, batchId = 0L)
-    deleteIvfPq(s, base.filter(DeleteVictims).select("vec_id"), dir, batchId = 1L)
+    buildIvfPqIndexOn(s, base.filter(!IncrArrival), base.filter(!IncrArrival),
+      dir, residual)
+    appendIvfPqIndex(s, base.filter(IncrArrival), dir, batchId = 0L, residual)
+    if (delete)
+      deleteIvfPq(s, base.filter(DeleteVictims).select("vec_id"), dir,
+        batchId = 1L)
     dir
   }
 
-  /** The full index lifecycle gated: build on 9/10, append the arriving
-    * 1/10, tombstone-delete every (mod-5) 5th id, serve. The oracle
-    * computes the one-shot probe over the SURVIVING candidate set (same
-    * trainings — a delete must not retrain), so a hash match proves
-    * tombstone masking is exactly set-minus, across built and appended
-    * partitions alike.
+  /** The incremental IVF-PQ lifecycle as a gated query (the composed
+    * sibling of [[annIvfKmeansIncr]]): build on 9/10, append the
+    * arriving 1/10, serve the standard ADC probe from the appended
+    * index. Oracle: both trainings over the build slice, encode +
+    * assignment over the FULL corpus, composed probe — bit-exact.
     */
-  def annIvfPqDeleted(s: SparkSession, d: String): DataFrame =
-    annIvfPqIndexed(s, d, ivfPqDeletedIndexDir(s, d, "del"))
+  def annIvfPqIncr(s: SparkSession, d: String,
+      residual: Boolean = false): DataFrame =
+    annIvfPqIndexed(s, d,
+      ivfPqLifecycleDir(s, d, "incr", residual, delete = false), residual)
+
+  /** The full index lifecycle gated: build, append, tombstone-delete,
+    * serve. The oracle computes the one-shot probe over the SURVIVING
+    * candidate set (same trainings — a delete must not retrain), so a
+    * hash match proves tombstone masking is exactly set-minus, across
+    * built and appended partitions alike.
+    */
+  def annIvfPqDeleted(s: SparkSession, d: String,
+      residual: Boolean = false): DataFrame =
+    annIvfPqIndexed(s, d,
+      ivfPqLifecycleDir(s, d, "del", residual, delete = true), residual)
 
   /** Same lifecycle + [[compactIvfPqIndex]] before the serve: the
     * physical fold of the tombstones must answer identically to the
     * logical mask (same oracle) — and after it the store carries no
     * tombstones at all.
     */
-  def annIvfPqDeletedCompacted(s: SparkSession, d: String): DataFrame = {
-    val dir = ivfPqDeletedIndexDir(s, d, "delc")
+  def annIvfPqDeletedCompacted(s: SparkSession, d: String,
+      residual: Boolean = false): DataFrame = {
+    val dir = ivfPqLifecycleDir(s, d, "delc", residual, delete = true)
     compactIvfPqIndex(s, dir)
-    annIvfPqIndexed(s, d, dir)
+    annIvfPqIndexed(s, d, dir, residual)
   }
 
   /** The refined (exact re-rank) probe over the deleted index: the
@@ -1146,72 +1169,49 @@ object EmbeddingOps {
     * refine compose with no extra machinery, which this gate pins.
     */
   def annIvfPqRefinedDeleted(s: SparkSession, d: String): DataFrame =
-    annIvfPqRefinedIndexed(s, d, ivfPqDeletedIndexDir(s, d, "del"))
+    annIvfPqRefinedIndexed(s, d,
+      ivfPqLifecycleDir(s, d, "del", residual = false, delete = true))
 
-  /** The incremental IVF-PQ lifecycle as a gated query (the composed
-    * sibling of [[annIvfKmeansIncr]]): build on 9/10 of the corpus,
-    * cell-append the arriving 1/10 under the stored quantizer +
-    * codebooks, serve the standard ADC probe from the appended index.
-    * Oracle: both trainings over the build slice, encode + assignment
-    * over the FULL corpus, composed probe — bit-exact.
+  /** [[annIvfPq]] served from the persisted composed index (built with
+    * the same `residual`): route on the stored coarse centroids
+    * (broadcast), scan ONLY the routed cells' code partitions (the
+    * collected cell-id set is O(queries) rows — the same
+    * PartitionFilters device as [[probeIndexedCells]]; tombstone-masked
+    * when a delete happened), rank by ADC against the stored codebooks.
+    * Bit-identical to the self-contained form — the routed cell's
+    * (dist ASC, cell ASC) window tie-break matches assignCells'
+    * struct-min exactly — so it gates against the same oracle.
     */
-  def annIvfPqIncr(s: SparkSession, d: String): DataFrame = {
-    val dir = lifecycleDir(d, "ivfpq_incr")
-    val base = corpus(s, d).select("vec_id", "embedding")
-    buildIvfPqIndexOn(s, base.filter(!IncrArrival), base.filter(!IncrArrival), dir)
-    appendIvfPqIndex(s, base.filter(IncrArrival), dir, batchId = 0L)
-    annIvfPqIndexed(s, d, dir)
-  }
-
-  /** [[annIvfPq]] served from the persisted composed index: route on the
-    * stored coarse centroids (broadcast), scan ONLY the routed cells'
-    * code partitions (the collected cell-id set is O(queries) rows — the
-    * same PartitionFilters device as [[probeIndexedCells]]), rank by ADC
-    * against the stored codebooks. Bit-identical to the self-contained
-    * form, so it gates against the same oracle.
-    */
-  def annIvfPqIndexed(s: SparkSession, d: String, indexDir: String): DataFrame = {
-    val sims = ivfPqIndexedAdcSims(s, d, indexDir)
-    rankViaTopK(s, sims)
-      .select(col("query_id"), col("vizinho"), (-col("sim")).as("adist"),
-        col("rank"))
-      .orderBy("query_id", "rank")
-  }
+  def annIvfPqIndexed(s: SparkSession, d: String, indexDir: String,
+      residual: Boolean = false): DataFrame =
+    rankByDistance(s, ivfPqIndexedAdcSims(s, d, indexDir, residual))
 
   /** The index-served ADC candidate scores — the stored-index twin of
     * [[ivfPqAdcSims]], shared by the plain indexed probe and the
     * refined (exact re-rank) indexed probe.
     */
   private def ivfPqIndexedAdcSims(s: SparkSession, d: String,
-      indexDir: String): DataFrame = {
+      indexDir: String, residual: Boolean): DataFrame = {
     val cents = s.read.parquet(s"$indexDir/centroids")
     val pcents = s.read.parquet(s"$indexDir/codebooks")
+    val (k, m) = codebookShape(pcents)
     val q = corpus(s, d).filter(col("vec_id") < N_QUERIES)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    val near = routeToCell(q, cents)
+    // the LUT is built from what the codes encode: the query's float
+    // vector, or its residual against the ROUTED cell's centroid
     val routed = graft.Checkpoint.barrier(
-      q.crossJoin(broadcast(cents))
-        .withColumn("dist", graft.functions.GraftFunctions.l2_sq(col("q_emb"), col("centroid")))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("query_id").orderBy(asc("dist"), asc("cell"))))
-        .filter(col("rn") === 1)
-        .select(col("query_id"), col("cell")))
+      if (residual)
+        near.join(broadcast(cents), Seq("cell")).selectExpr("query_id", "cell",
+          "zip_with(q_emb, centroid, (x, y) -> CAST(x AS DOUBLE) - y) AS q_vec")
+      else near.withColumnRenamed("q_emb", "q_vec"))
     val probedCells = routed.select("cell").distinct().collect().map(_.getInt(0))
-    // tombstone mask: deletes are visible at the next read without any
-    // store rewrite — an O(|tombstones|) broadcast anti-join on the
-    // already-pruned routed partitions (no-op when no delete happened)
-    val codesRaw = s.read.parquet(s"$indexDir/codes")
-      .filter(col("cell").isin(probedCells.toSeq: _*))
-    val codes = tombstonesOf(s, indexDir).fold(codesRaw)(t =>
-      codesRaw.join(broadcast(t), Seq("vec_id"), "left_anti"))
-    val lut = pqSubCorpus(s, d).filter(col("vec_id") < N_QUERIES)
-      .toDF("query_id", "m", "q_sub")
-      .join(broadcast(pcents), Seq("m"))
-      .withColumn("part", graft.functions.GraftFunctions.l2_sq(col("q_sub"), col("centroid")))
-      .select(col("query_id"), col("m"), col("cell").as("code"), col("part"))
-    val cands = routed.join(codes, Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .join(broadcast(lutParts(lut, codebookK(pcents))), Seq("query_id"))
-    cands.select(col("query_id"), (-expr(adcSum)).as("sim"), col("vec_id"))
+    val codes = liveRows(s, indexDir, s.read.parquet(s"$indexDir/codes")
+      .filter(col("cell").isin(probedCells.toSeq: _*)))
+    val qSub = pqSubOf(
+      routed.select(col("query_id").as("vec_id"), col("q_vec").as("embedding")), m)
+    adcSims(routed.select("query_id", "cell"), codes,
+      adcLut(qSub, pcents, k, m), m)
   }
 
   /** [[annIvfPqRefined]] served from the persisted composed index: the
@@ -1225,258 +1225,36 @@ object EmbeddingOps {
     */
   def annIvfPqRefinedIndexed(s: SparkSession, d: String,
       indexDir: String): DataFrame =
-    refineExact(s, d, ivfPqIndexedAdcSims(s, d, indexDir))
+    refineExact(s, d, ivfPqIndexedAdcSims(s, d, indexDir, residual = false))
 
-  /** Driver-contract wrapper (staleness-fingerprinted build-once). The
-    * composed build sources its coarse centroids from the auto k-means
-    * index when that is already built for this dataset — the gate order
-    * runs q_ann_ivf_kmeans_indexed first, so in practice the Lloyd
-    * training runs once per (dataset, JVM tmpdir) across both indexes.
-    */
-  def annIvfPqIndexedAuto(s: SparkSession, d: String): DataFrame = {
-    def built(suffix: String): Option[String] = {
-      val dir = defaultIndexDir(d) + suffix
-      if (new java.io.File(dir, "_built").exists()) Some(dir) else None
-    }
-    autoIndexed(d, "_ivfpq",
-      buildIvfPqIndex(s, d, _, built("_km"), built("_pq")),
-      annIvfPqIndexed(s, d, _))
-  }
+  /** Query-map wrapper (staleness-fingerprinted build-once). */
+  def annIvfPqIndexedAuto(s: SparkSession, d: String,
+      residual: Boolean = false): DataFrame =
+    annIvfPqIndexed(s, d, ivfPqAutoDir(s, d, residual), residual)
 
   /** Driver-contract wrapper for the index-served refined probe (shares
-    * the composed index with [[annIvfPqIndexedAuto]] — build once,
+    * the raw composed index with [[annIvfPqIndexedAuto]] — build once,
     * refine many).
     */
-  def annIvfPqRefinedIndexedAuto(s: SparkSession, d: String): DataFrame = {
+  def annIvfPqRefinedIndexedAuto(s: SparkSession, d: String): DataFrame =
+    annIvfPqRefinedIndexed(s, d, ivfPqAutoDir(s, d, residual = false))
+
+  /** The build-once composed index of the auto wrappers. The
+    * build sources its coarse centroids from the auto k-means index (and
+    * raw codes their codebooks from the auto PQ index) when that is
+    * already built for this dataset — the gate order runs
+    * q_ann_ivf_kmeans_indexed first, so in practice the Lloyd training
+    * runs once per (dataset, JVM tmpdir) across the indexes.
+    */
+  private def ivfPqAutoDir(s: SparkSession, d: String,
+      residual: Boolean): String = {
     def built(suffix: String): Option[String] = {
       val dir = defaultIndexDir(d) + suffix
       if (new java.io.File(dir, "_built").exists()) Some(dir) else None
     }
-    autoIndexed(d, "_ivfpq",
-      buildIvfPqIndex(s, d, _, built("_km"), built("_pq")),
-      annIvfPqRefinedIndexed(s, d, _))
-  }
-
-  // ------------------------------------- residual-encoded IVF-PQ
-  // Classic IVF-PQ (Jégou, Douze, Schmid — "Product Quantization for
-  // Nearest Neighbor Search", TPAMI 2011) does NOT quantize raw vectors:
-  // it quantizes RESIDUALS, vec − coarse_centroid(assigned cell). The
-  // residual distribution is centered and much lower-variance than the
-  // raw corpus (the coarse quantizer has already explained the
-  // between-cell structure), so the same codebook budget spends its
-  // entries on within-cell detail — which is where compressed-family
-  // recall comes from. The r14 measurement (raw-trained codebooks:
-  // 0.30@5 vs 0.975 for the uncompressed kmeans probe) is exactly the
-  // gap this closes. Everything else — ADC, the 4-code layout, the
-  // cell-partitioned store, append/delete/compact — is shared with the
-  // raw family; the only changes are (a) codebooks train on residual
-  // sub-vectors, (b) codes encode residuals, (c) the query LUT is built
-  // from the query's residual against its ROUTED cell's centroid.
-
-  /** Each vector's residual against its assigned coarse centroid:
-    * (vec_id, cell, embedding = vec − centroid[cell]) with the residual
-    * in double (float→double widening is exact, so the subtraction is
-    * one exact IEEE op the oracle reproduces bit-identically). One
-    * broadcast assignment pass + one broadcast centroid join — no
-    * corpus shuffle.
-    */
-  private def residualsUnder(s: SparkSession, base: DataFrame,
-      cents: DataFrame): DataFrame =
-    assignCells(s, base, cents).select("vec_id", "embedding", "cell")
-      .join(broadcast(cents), Seq("cell"))
-      .selectExpr("vec_id", "cell",
-        "zip_with(embedding, centroid, (x, y) -> CAST(x AS DOUBLE) - y) AS embedding")
-
-  /** The self-contained residual-encoded IVF-PQ probe: coarse Lloyd,
-    * residuals, residual-trained codebooks, residual codes, and the ADC
-    * probe whose per-query LUT is the query's OWN residual against the
-    * codebooks (at nProbe=1 the routed cell is by definition the
-    * query's coarse assignment, so its residual row is already in the
-    * residual base). Gated bit-exactly — the oracle re-derives both
-    * trainings AND the residual subtraction.
-    */
-  def annIvfPqResidual(s: SparkSession, d: String, k: Int = PQ_K,
-      m: Int = PQ_M): DataFrame =
-    rankViaTopK(s, ivfPqResidualAdcSims(s, d, k, m))
-      .select(col("query_id"), col("vizinho"), (-col("sim")).as("adist"),
-        col("rank"))
-      .orderBy("query_id", "rank")
-
-  private def ivfPqResidualAdcSims(s: SparkSession, d: String,
-      k: Int = PQ_K, m: Int = PQ_M): DataFrame = {
-    val base = corpus(s, d).select("vec_id", "embedding")
-    val cents = kmeansCentroids(s, d)
-    // the residual table feeds codebook training, encoding, AND the
-    // query LUT — materialize it once
-    val res = graft.Checkpoint.barrier(residualsUnder(s, base, cents))
-    val pcents = pqCodebooksOf(pqSubOf(res.select("vec_id", "embedding"), m), k)
-    val indexed = graft.Checkpoint.barrier(
-      pqCodesOfBase(pqSubOf(res.select("vec_id", "embedding"), m), pcents, m)
-        .join(res.select("vec_id", "cell"), Seq("vec_id")))
-    val routed = indexed.filter(col("vec_id") < N_QUERIES)
-      .select(col("vec_id").as("query_id"), col("cell"))
-    val lut = pqSubOf(res.filter(col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding"), m)
-      .toDF("query_id", "m", "q_sub")
-      .join(broadcast(pcents), Seq("m"))
-      .withColumn("part",
-        graft.functions.GraftFunctions.l2_sq(col("q_sub"), col("centroid")))
-      .select(col("query_id"), col("m"), col("cell").as("code"), col("part"))
-    routed.join(indexed, Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .join(broadcast(lutParts(lut, k, m)), Seq("query_id"))
-      .select(col("query_id"), (-expr(adcSumM(m))).as("sim"), col("vec_id"))
-  }
-
-  /** The residual index build over explicit bases: coarse Lloyd + the
-    * residual codebooks train on `trainBase`, the code table encodes
-    * `assignBase`'s residuals — same store layout as the raw composed
-    * index (centroids / codebooks / cell-partitioned codes), so the
-    * delete/compact machinery applies unchanged.
-    */
-  private[graft] def buildIvfPqResidualIndexOn(s: SparkSession,
-      trainBase: DataFrame, assignBase: DataFrame, indexDir: String,
-      k: Int = PQ_K, m: Int = PQ_M): Unit = {
-    val cents = kmeansCentroidsOf(trainBase)
-    cents.write.mode("overwrite").parquet(s"$indexDir/centroids")
-    val pcents = pqCodebooksOf(pqSubOf(
-      residualsUnder(s, trainBase, cents).select("vec_id", "embedding"), m), k)
-    pcents.write.mode("overwrite").parquet(s"$indexDir/codebooks")
-    val asgRes = graft.Checkpoint.barrier(residualsUnder(s, assignBase, cents))
-    pqCodesOfBase(pqSubOf(asgRes.select("vec_id", "embedding"), m), pcents, m)
-      .join(asgRes.select("vec_id", "cell"), Seq("vec_id"))
-      .withColumn("batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("cell", "batch")
-      .parquet(s"$indexDir/codes")
-  }
-
-  /** Full-corpus residual index build (the fresh-index form). */
-  def buildIvfPqResidualIndex(s: SparkSession, d: String,
-      indexDir: String): Unit = {
-    val b = corpus(s, d).select("vec_id", "embedding")
-    buildIvfPqResidualIndexOn(s, b, b, indexDir)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$indexDir/_fingerprint"), datasetFingerprint(d))
-  }
-
-  /** Incremental residual append: arrivals are residual-encoded under
-    * the STORED centroids + codebooks and land in their (cell, batch)
-    * partitions — O(|batch|), replay-idempotent, no retrain (same
-    * exactly-once shape as [[appendIvfPqIndex]]).
-    */
-  private[graft] def appendIvfPqResidualIndex(s: SparkSession,
-      newRows: DataFrame, indexDir: String, batchId: Long): Unit = {
-    val cents = s.read.parquet(s"$indexDir/centroids")
-    val pcents = s.read.parquet(s"$indexDir/codebooks")
-    val m = codebookM(pcents)
-    val asgRes = graft.Checkpoint.barrier(residualsUnder(s, newRows, cents))
-    pqCodesOfBase(pqSubOf(asgRes.select("vec_id", "embedding"), m), pcents, m)
-      .join(asgRes.select("vec_id", "cell"), Seq("vec_id"))
-      .withColumn("batch", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell", "batch")
-      .parquet(s"$indexDir/codes")
-  }
-
-  /** The residual probe served from a persisted residual index: route
-    * each query on the stored centroids (carrying the routed centroid),
-    * subtract to get the query residual, build the LUT from its slices
-    * against the stored codebooks, and ADC-rank the routed cell's code
-    * partitions (partition-pruned scan; tombstone-masked when a delete
-    * happened). Bit-identical to the self-contained form — the routed
-    * cell's (dist ASC, cell ASC) window tie-break matches assignCells'
-    * struct-min exactly.
-    */
-  def annIvfPqResidualIndexed(s: SparkSession, d: String,
-      indexDir: String): DataFrame = {
-    val cents = s.read.parquet(s"$indexDir/centroids")
-    val pcents = s.read.parquet(s"$indexDir/codebooks")
-    // (K, M) come off the stored artifact — one serve for every code
-    // budget and subspace split
-    val k = codebookK(pcents)
-    val m = codebookM(pcents)
-    val sub = DIM / m
-    val q = corpus(s, d).filter(col("vec_id") < N_QUERIES)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val routed = graft.Checkpoint.barrier(
-      q.crossJoin(broadcast(cents))
-        .withColumn("dist",
-          graft.functions.GraftFunctions.l2_sq(col("q_emb"), col("centroid")))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("query_id").orderBy(asc("dist"), asc("cell"))))
-        .filter(col("rn") === 1)
-        .selectExpr("query_id", "cell",
-          "zip_with(q_emb, centroid, (x, y) -> CAST(x AS DOUBLE) - y) AS q_res"))
-    val probedCells = routed.select("cell").distinct().collect().map(_.getInt(0))
-    val codesRaw = s.read.parquet(s"$indexDir/codes")
-      .filter(col("cell").isin(probedCells.toSeq: _*))
-    val codes = tombstonesOf(s, indexDir).fold(codesRaw)(t =>
-      codesRaw.join(broadcast(t), Seq("vec_id"), "left_anti"))
-    val lut = routed
-      .withColumn("m", explode(sequence(lit(0), lit(m - 1))))
-      .selectExpr("query_id", "m",
-        s"slice(q_res, m * $sub + 1, $sub) AS q_sub")
-      .join(broadcast(pcents), Seq("m"))
-      .withColumn("part",
-        graft.functions.GraftFunctions.l2_sq(col("q_sub"), col("centroid")))
-      .select(col("query_id"), col("m"), col("cell").as("code"), col("part"))
-    val cands = routed.select("query_id", "cell").join(codes, Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .join(broadcast(lutParts(lut, k, m)), Seq("query_id"))
-    rankViaTopK(s,
-      cands.select(col("query_id"), (-expr(adcSumM(m))).as("sim"), col("vec_id")))
-      .select(col("query_id"), col("vizinho"), (-col("sim")).as("adist"),
-        col("rank"))
-      .orderBy("query_id", "rank")
-  }
-
-  /** Driver-contract wrapper (staleness-fingerprinted build-once). */
-  def annIvfPqResidualIndexedAuto(s: SparkSession, d: String): DataFrame =
-    autoIndexed(d, "_ivfpqres", buildIvfPqResidualIndex(s, d, _),
-      annIvfPqResidualIndexed(s, d, _))
-
-  /** build(9/10) → append(1/10) → tombstone-delete, residual form —
-    * reuses [[deleteIvfPq]]/[[compactIvfPqIndex]] verbatim: the
-    * tombstone store is encoder-agnostic.
-    */
-  private def ivfPqResidualDeletedIndexDir(s: SparkSession, d: String,
-      tag: String): String = {
-    val dir = lifecycleDir(d, s"ivfpqres_$tag")
-    val base = corpus(s, d).select("vec_id", "embedding")
-    buildIvfPqResidualIndexOn(s, base.filter(!IncrArrival),
-      base.filter(!IncrArrival), dir)
-    appendIvfPqResidualIndex(s, base.filter(IncrArrival), dir, batchId = 0L)
-    deleteIvfPq(s, base.filter(DeleteVictims).select("vec_id"), dir,
-      batchId = 1L)
-    dir
-  }
-
-  /** Incremental residual lifecycle gated: build on 9/10, residual-append
-    * the arriving 1/10 under the stored trainings, serve. Oracle: both
-    * trainings over the build slice, residual encode + assignment over
-    * the full corpus — bit-exact.
-    */
-  def annIvfPqResidualIncr(s: SparkSession, d: String): DataFrame = {
-    val dir = lifecycleDir(d, "ivfpqres_incr")
-    val base = corpus(s, d).select("vec_id", "embedding")
-    buildIvfPqResidualIndexOn(s, base.filter(!IncrArrival),
-      base.filter(!IncrArrival), dir)
-    appendIvfPqResidualIndex(s, base.filter(IncrArrival), dir, batchId = 0L)
-    annIvfPqResidualIndexed(s, d, dir)
-  }
-
-  /** The residual delete lifecycle served tombstone-masked. */
-  def annIvfPqResidualDeleted(s: SparkSession, d: String): DataFrame =
-    annIvfPqResidualIndexed(s, d, ivfPqResidualDeletedIndexDir(s, d, "del"))
-
-  /** Same lifecycle + physical compaction before the serve — must answer
-    * identically to the masked serve (same oracle), and afterwards the
-    * store carries no tombstones.
-    */
-  def annIvfPqResidualDeletedCompacted(s: SparkSession, d: String): DataFrame = {
-    val dir = ivfPqResidualDeletedIndexDir(s, d, "delc")
-    compactIvfPqIndex(s, dir)
-    annIvfPqResidualIndexed(s, d, dir)
+    graft.StorePublish.publishOnce(
+      defaultIndexDir(d) + (if (residual) "_ivfpqres" else "_ivfpq"))(
+      buildIvfPqIndex(s, d, _, built("_km"), built("_pq"), residual))
   }
 
   /** Gated flat view of the trained centroids. */
@@ -1593,7 +1371,7 @@ object EmbeddingOps {
     * centroids — exactly what build+append must land on, bit-exactly.
     */
   def annIvfKmeansIncr(s: SparkSession, d: String): DataFrame = {
-    val dir = lifecycleDir(d, "ivf_incr")
+    val dir = graft.Scratch.processDir(d, "ivf_incr")
     val base = corpus(s, d).select("vec_id", "embedding")
     // the stamp records what the centroids were trained ON — here the
     // 9/10 build slice, NOT the full dataset — so it must never equal
@@ -1611,7 +1389,7 @@ object EmbeddingOps {
     * appended partitions), serve. Same survivors oracle discipline.
     */
   def annIvfKmeansDeleted(s: SparkSession, d: String): DataFrame = {
-    val dir = lifecycleDir(d, "ivf_del")
+    val dir = graft.Scratch.processDir(d, "ivf_del")
     val base = corpus(s, d).select("vec_id", "embedding")
     buildIvfIndexKmeansOn(s, base.filter(!IncrArrival), base.filter(!IncrArrival),
       dir, datasetFingerprint(d) + ":del")
@@ -1627,16 +1405,10 @@ object EmbeddingOps {
     * to the probed partitions, and ranking is the bounded aggregator tail.
     */
   def annIvfKmeansIndexed(s: SparkSession, d: String, indexDir: String): DataFrame = {
-    val cents = s.read.parquet(s"$indexDir/centroids")
     val q = corpus(s, d).filter(col("vec_id") < N_QUERIES)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val routed = q.crossJoin(broadcast(cents))
-      .withColumn("dist", graft.functions.GraftFunctions.l2_sq(col("q_emb"), col("centroid")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(asc("dist"), asc("cell"))))
-      .filter(col("rn") === 1)
-      .select(col("query_id"), col("q_emb"), col("cell"))
-    probeIndexedCells(s, indexDir, routed)
+    probeIndexedCells(s, indexDir,
+      routeToCell(q, s.read.parquet(s"$indexDir/centroids")))
   }
 
   /** Driver-contract wrapper for the k-means index (same staleness
@@ -1679,13 +1451,10 @@ object EmbeddingOps {
       routed0: DataFrame): DataFrame = {
     val routed = graft.Checkpoint.barrier(routed0)
     val probedCells = routed.select("cell").distinct().collect().map(_.getInt(0))
-    // tombstone mask (shared with the composed store, see deleteIvfPq):
-    // a delete is visible at the next probe as an O(|tombstones|)
-    // broadcast anti-join on the already-pruned partitions
-    val cellsRaw = s.read.parquet(s"$indexDir/cells")
-      .filter(col("cell").isin(probedCells.toSeq: _*))
-    val cells = tombstonesOf(s, indexDir).fold(cellsRaw)(t =>
-      cellsRaw.join(broadcast(t), Seq("vec_id"), "left_anti"))
+    // tombstone mask (shared with the composed store, see deleteIvfPq)
+    // on the already-pruned partitions
+    val cells = liveRows(s, indexDir, s.read.parquet(s"$indexDir/cells")
+      .filter(col("cell").isin(probedCells.toSeq: _*)))
     val hits = routed.join(cells,
         routed("cell") === cells("cell") && col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("q_emb"), routed("cell"),
@@ -1867,10 +1636,7 @@ object EmbeddingOps {
 
   private def sq8Probe(s: SparkSession, d: String, mmRow: DataFrame,
       codes: DataFrame): DataFrame =
-    rankViaTopK(s, sq8Sims(s, d, mmRow, codes))
-      .select(col("query_id"), col("vizinho"), (-col("sim")).as("adist"),
-        col("rank"))
-      .orderBy("query_id", "rank")
+    rankByDistance(s, sq8Sims(s, d, mmRow, codes))
 
   /** Self-contained SQ8 top-k: train min/max, encode, probe. */
   def annSq8(s: SparkSession, d: String): DataFrame = {
@@ -1992,12 +1758,8 @@ object EmbeddingOps {
     */
   def annSq8Indexed(s: SparkSession, d: String, indexDir: String): DataFrame = {
     val mm = s.read.parquet(s"$indexDir/minmax")
-    val stored = s.read.parquet(s"$indexDir/codes").select("vec_id", "codes")
-    val codes = tombstonesOf(s, indexDir) match {
-      case Some(t) => stored.join(broadcast(t), Seq("vec_id"), "left_anti")
-      case None => stored
-    }
-    sq8Probe(s, d, mm, codes)
+    sq8Probe(s, d, mm, liveRows(s, indexDir,
+      s.read.parquet(s"$indexDir/codes").select("vec_id", "codes")))
   }
 
   /** Driver-contract wrapper (staleness-fingerprinted build-once). */
@@ -2048,10 +1810,7 @@ object EmbeddingOps {
     * in-cell reconstruction ranking, all bit-exact.
     */
   def annIvfSq8(s: SparkSession, d: String, nProbe: Int = 1): DataFrame =
-    rankViaTopK(s, ivfSq8Sims(s, d, nProbe))
-      .select(col("query_id"), col("vizinho"), (-col("sim")).as("adist"),
-        col("rank"))
-      .orderBy("query_id", "rank")
+    rankByDistance(s, ivfSq8Sims(s, d, nProbe))
 
   /** The composed probe + exact re-rank: the in-cell SQ8 shortlist
     * (rank ≤ c) re-scored against the original vectors as point lookups
@@ -2162,10 +1921,7 @@ object EmbeddingOps {
         (-graft.functions.GraftFunctions.sq8_adist(col("q_emb"),
           col("codes"), col("mns"), col("mxs"), SQ8_LEVELS)).as("sim"),
         col("vec_id"))
-    rankViaTopK(s, sims)
-      .select(col("query_id"), col("vizinho"), (-col("sim")).as("adist"),
-        col("rank"))
-      .orderBy("query_id", "rank")
+    rankByDistance(s, sims)
   }
 
   /** Persist the per-cell-trained store: centroids, the k-row cellmm
@@ -2227,7 +1983,7 @@ object EmbeddingOps {
     * full corpus, so a hash match proves the append re-trains nothing.
     */
   def annIvfSq8CellIncr(s: SparkSession, d: String): DataFrame = {
-    val dir = lifecycleDir(d, "ivfsq8cell_incr")
+    val dir = graft.Scratch.processDir(d, "ivfsq8cell_incr")
     val base = corpus(s, d).select("vec_id", "embedding")
     buildIvfSq8CellIndexOn(s, base.filter(!IncrArrival), dir)
     appendIvfSq8CellIndex(s, base.filter(IncrArrival), dir, batchId = 0L): Unit
@@ -2300,10 +2056,7 @@ object EmbeddingOps {
         (-graft.functions.GraftFunctions.sq8_adist(col("q_emb"),
           col("codes"), col("mns"), col("mxs"), SQ8_LEVELS)).as("sim"),
         col("vec_id"))
-    rankViaTopK(s, sims)
-      .select(col("query_id"), col("vizinho"), (-col("sim")).as("adist"),
-        col("rank"))
-      .orderBy("query_id", "rank")
+    rankByDistance(s, sims)
   }
 
   /** Driver-contract wrapper (staleness-fingerprinted build-once). */
@@ -2312,7 +2065,7 @@ object EmbeddingOps {
       annIvfSq8Indexed(s, d, _))
 
   private def sq8LifecycleDir(d: String, tag: String): String =
-    lifecycleDir(d, s"sq8_$tag")
+    graft.Scratch.processDir(d, s"sq8_$tag")
 
   // ------------------------------------------------ graph ANN (navigable per-cell graph)
 
@@ -3201,43 +2954,12 @@ object EmbeddingOps {
     * entries, clear tombstones. All partition-scoped: O(touched), not
     * O(corpus).
     */
-  /** Predicate selecting exactly the given (cell, batch) partitions:
-    * ONE InSet over a derived key — constant expression-tree size at
-    * any partition count (the r17 OR-chain grew a parse/codegen node
-    * per pair, a real ceiling at 10^5 batches) — referencing only
-    * partition columns, so the scan still prunes statically.
-    */
-  private[graft] def partitionPairPredicate(pairs: Seq[(Int, Long)]): Column =
-    concat_ws("#", col("cell").cast("string"), col("batch").cast("string"))
-      .isin(pairs.map { case (c, b) => s"$c#$b" }: _*)
-
   private[graft] def compactGraphIndex(s: SparkSession, indexDir: String): Unit =
     tombstonesOf(s, indexDir).foreach { t =>
       val cents = s.read.parquet(s"$indexDir/centroids")
-      val vecs = s.read.parquet(s"$indexDir/vectors")
-      val affected = vecs.join(broadcast(t), Seq("vec_id"), "left_semi")
-        .select(col("cell").cast("int"), col("batch").cast("long")).distinct()
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-      if (affected.nonEmpty) {
-        val kept = graft.Checkpoint.barrier(
-          s.read.parquet(s"$indexDir/vectors")
-            .filter(partitionPairPredicate(affected))
-            .join(broadcast(t), Seq("vec_id"), "left_anti"))
-        val survivingPairs = kept
-          .select(col("cell").cast("int"), col("batch").cast("long")).distinct()
-          .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
-        kept.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("cell", "batch").parquet(s"$indexDir/vectors")
-        (affected.toSet -- survivingPairs).foreach { case (c, b) =>
-          val dead =
-            java.nio.file.Paths.get(s"$indexDir/vectors/cell=$c/batch=$b")
-          if (java.nio.file.Files.exists(dead)) {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(dead).iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.delete)
-          }
-        }
-        val touched = affected.map(_._1).distinct
+      val touched = graft.Tombstones.fold(s, s"$indexDir/vectors", "vec_id",
+        "cell", t).map(_._1).distinct
+      if (touched.nonEmpty) {
         val members = graft.Checkpoint.barrier(
           s.read.parquet(s"$indexDir/vectors")
             .filter(col("cell").isin(touched: _*))
@@ -3257,10 +2979,7 @@ object EmbeddingOps {
             .unionByName(graphEntriesOf(members)))
         entries.write.mode("overwrite").parquet(s"$indexDir/entries")
       }
-      val tdir = java.nio.file.Paths.get(s"$indexDir/tombstones")
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tdir).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
+      graft.Scratch.rmTree(s"$indexDir/tombstones")
     }
 
   /** Beam search served from the persisted graph: queries route against
@@ -3509,30 +3228,9 @@ object EmbeddingOps {
       indexDir: String): Unit =
     tombstonesOf(s, indexDir).foreach { t =>
       val cents = s.read.parquet(s"$indexDir/centroids")
-      val vecs = s.read.parquet(s"$indexDir/vectors")
-      val affectedPairs = vecs.join(broadcast(t), Seq("vec_id"), "left_semi")
-        .select(col("cell").cast("int"), col("batch").cast("long")).distinct()
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-      if (affectedPairs.nonEmpty) {
-        val kept = graft.Checkpoint.barrier(
-          s.read.parquet(s"$indexDir/vectors")
-            .filter(partitionPairPredicate(affectedPairs))
-            .join(broadcast(t), Seq("vec_id"), "left_anti"))
-        val survivingPairs = kept
-          .select(col("cell").cast("int"), col("batch").cast("long")).distinct()
-          .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
-        kept.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("cell", "batch").parquet(s"$indexDir/vectors")
-        (affectedPairs.toSet -- survivingPairs).foreach { case (c, b) =>
-          val dead =
-            java.nio.file.Paths.get(s"$indexDir/vectors/cell=$c/batch=$b")
-          if (java.nio.file.Files.exists(dead)) {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(dead).iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.delete)
-          }
-        }
-        val touched = affectedPairs.map(_._1).distinct
+      val touched = graft.Tombstones.fold(s, s"$indexDir/vectors", "vec_id",
+        "cell", t).map(_._1).distinct
+      if (touched.nonEmpty) {
         relinkXcellIndex(s, indexDir, touched)
         val tMembers = s.read.parquet(s"$indexDir/vectors")
           .filter(col("cell").isin(touched: _*))
@@ -3549,17 +3247,12 @@ object EmbeddingOps {
           s.read.parquet(s"$indexDir/vectors").select("vec_id", "cell")))
         entry.write.mode("overwrite").parquet(s"$indexDir/entrycell")
       }
-      val tdir = java.nio.file.Paths.get(s"$indexDir/tombstones")
-      if (java.nio.file.Files.exists(tdir)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tdir).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.delete)
-      }
+      graft.Scratch.rmTree(s"$indexDir/tombstones")
     }
 
   /** build → append → tombstone-delete → MASKED serve (hole-y state). */
   def annGraphXcellDeleted(s: SparkSession, d: String): DataFrame = {
-    val dir = lifecycleDir(d, "graph_xcell_del")
+    val dir = graft.Scratch.processDir(d, "graph_xcell_del")
     val base = corpus(s, d).select("vec_id", "embedding")
     buildGraphXcellIndexOn(s, base.filter(!IncrArrival), dir,
       knownN = cachedCount(d, "pre", base.filter(!IncrArrival)))
@@ -3571,7 +3264,7 @@ object EmbeddingOps {
 
   /** …then compacted: survivor-kNN re-linked one seam wide (own oracle). */
   def annGraphXcellDeletedCompacted(s: SparkSession, d: String): DataFrame = {
-    val dir = lifecycleDir(d, "graph_xcell_delc")
+    val dir = graft.Scratch.processDir(d, "graph_xcell_delc")
     val base = corpus(s, d).select("vec_id", "embedding")
     buildGraphXcellIndexOn(s, base.filter(!IncrArrival), dir,
       knownN = cachedCount(d, "pre", base.filter(!IncrArrival)))
@@ -3607,7 +3300,7 @@ object EmbeddingOps {
     * no seam in the graph OR the layer.
     */
   def annGraphRoutedIncr(s: SparkSession, d: String): DataFrame = {
-    val dir = lifecycleDir(d, "graph_routed_incr")
+    val dir = graft.Scratch.processDir(d, "graph_routed_incr")
     val base = corpus(s, d).select("vec_id", "embedding")
     buildGraphIndexOn(s, base.filter(!IncrArrival), dir,
       knownN = cachedCount(d, "pre", base.filter(!IncrArrival)))
@@ -3716,7 +3409,7 @@ object EmbeddingOps {
     * affected-set rebuild is exactly seam-free.
     */
   def annGraphXcellIncr(s: SparkSession, d: String): DataFrame = {
-    val dir = lifecycleDir(d, "graph_xcell_incr")
+    val dir = graft.Scratch.processDir(d, "graph_xcell_incr")
     val base = corpus(s, d).select("vec_id", "embedding")
     buildGraphXcellIndexOn(s, base.filter(!IncrArrival), dir,
       knownN = cachedCount(d, "pre", base.filter(!IncrArrival)))
@@ -3732,7 +3425,7 @@ object EmbeddingOps {
     * unreachable arrivals).
     */
   def annGraphIncr(s: SparkSession, d: String): DataFrame = {
-    val dir = lifecycleDir(d, "graph_incr")
+    val dir = graft.Scratch.processDir(d, "graph_incr")
     val base = corpus(s, d).select("vec_id", "embedding")
     buildGraphIndexOn(s, base.filter(!IncrArrival), dir,
       knownN = cachedCount(d, "pre", base.filter(!IncrArrival)))
@@ -3745,7 +3438,7 @@ object EmbeddingOps {
     * re-linking), entries already refreshed by the delete.
     */
   def annGraphDeleted(s: SparkSession, d: String): DataFrame = {
-    val dir = lifecycleDir(d, "graph_del")
+    val dir = graft.Scratch.processDir(d, "graph_del")
     val base = corpus(s, d).select("vec_id", "embedding")
     buildGraphIndexOn(s, base.filter(!IncrArrival), dir,
       knownN = cachedCount(d, "pre", base.filter(!IncrArrival)))
@@ -3761,7 +3454,7 @@ object EmbeddingOps {
     * legitimately answer differently from the masked walk.
     */
   def annGraphDeletedCompacted(s: SparkSession, d: String): DataFrame = {
-    val dir = lifecycleDir(d, "graph_delc")
+    val dir = graft.Scratch.processDir(d, "graph_delc")
     val base = corpus(s, d).select("vec_id", "embedding")
     buildGraphIndexOn(s, base.filter(!IncrArrival), dir,
       knownN = cachedCount(d, "pre", base.filter(!IncrArrival)))
@@ -3795,11 +3488,11 @@ object EmbeddingOps {
     "q_ann_ivf_kmeans_incr_stream" ->
       (graft.streaming.Streams.ivfIndexStreamed _),
     // the composed compressed index maintained incrementally
-    "q_ann_ivfpq_incr" -> (annIvfPqIncr _),
+    "q_ann_ivfpq_incr" -> (annIvfPqIncr(_, _)),
     // the index lifecycle's missing third: build + append + tombstone
     // DELETE, served masked / served after physical compaction
-    "q_ann_ivfpq_delete" -> (annIvfPqDeleted _),
-    "q_ann_ivfpq_delete_compact" -> (annIvfPqDeletedCompacted _),
+    "q_ann_ivfpq_delete" -> (annIvfPqDeleted(_, _)),
+    "q_ann_ivfpq_delete_compact" -> (annIvfPqDeletedCompacted(_, _)),
     // delete × refine composition: exact re-rank over the masked index
     "q_ann_ivfpq_refined_delete" -> (annIvfPqRefinedDeleted _),
     "q_ann_ivf_kmeans_probe2" -> ((s: SparkSession, d: String) => annIvfKmeansProbe(s, d, 2)),
@@ -3818,11 +3511,11 @@ object EmbeddingOps {
     "q_pq_codes" -> (pqCodes _),
     "q_ann_pq" -> (annPqAdc _),
     "q_ann_pq_indexed" -> (annPqIndexedAuto _),
-    "q_ann_ivfpq" -> (annIvfPq _),
-    "q_ann_ivfpq_indexed" -> (annIvfPqIndexedAuto _),
+    "q_ann_ivfpq" -> (annIvfPq(_, _)),
+    "q_ann_ivfpq_indexed" -> (annIvfPqIndexedAuto(_, _)),
     // the composed probe + exact re-rank of the top-REFINE_C ADC
     // candidates against the original vectors
-    "q_ann_ivfpq_refined" -> (annIvfPqRefined _),
+    "q_ann_ivfpq_refined" -> (annIvfPqRefined(_, _)),
     // the serving form: ADC shortlist off the stored codes, exact
     // re-rank as point lookups — bit-identical to the refined probe
     "q_ann_ivfpq_refined_indexed" -> (annIvfPqRefinedIndexedAuto _),
@@ -3831,26 +3524,29 @@ object EmbeddingOps {
     // compressed family — self-contained, served, incremental, and
     // the full delete/compact lifecycle
     "q_ann_ivfpq_residual" ->
-      ((s: SparkSession, d: String) => annIvfPqResidual(s, d)),
+      ((s: SparkSession, d: String) => annIvfPq(s, d, residual = true)),
     // wide codebooks (K=64 → 24-bit codes): the code-budget lever
-    "q_ann_ivfpq_residual_k64" ->
-      ((s: SparkSession, d: String) => annIvfPqResidual(s, d, k = 64)),
+    "q_ann_ivfpq_residual_k64" -> ((s: SparkSession, d: String) =>
+      annIvfPq(s, d, residual = true, k = 64)),
     // fine subspace split (M=16 × 4 dims → 48-bit codes): the
     // precision lever that actually moves ADC recall
-    "q_ann_ivfpq_residual_m16" ->
-      ((s: SparkSession, d: String) => annIvfPqResidual(s, d, m = 16)),
+    "q_ann_ivfpq_residual_m16" -> ((s: SparkSession, d: String) =>
+      annIvfPq(s, d, residual = true, m = 16)),
     // residual shortlist + exact re-rank: the full production stack
-    "q_ann_ivfpq_residual_refined" ->
-      ((s: SparkSession, d: String) => annIvfPqResidualRefined(s, d)),
+    "q_ann_ivfpq_residual_refined" -> ((s: SparkSession, d: String) =>
+      annIvfPqRefined(s, d, residual = true)),
     // deep shortlist (c=80): the recall lever on a
     // distance-concentrated corpus, still O(c·|queries|) lookups
     "q_ann_ivfpq_refined_c80" ->
-      ((s: SparkSession, d: String) => annIvfPqRefinedDeep(s, d, 80)),
-    "q_ann_ivfpq_residual_indexed" -> (annIvfPqResidualIndexedAuto _),
-    "q_ann_ivfpq_residual_incr" -> (annIvfPqResidualIncr _),
-    "q_ann_ivfpq_residual_delete" -> (annIvfPqResidualDeleted _),
-    "q_ann_ivfpq_residual_delete_compact" ->
-      (annIvfPqResidualDeletedCompacted _),
+      ((s: SparkSession, d: String) => annIvfPqRefined(s, d, c = 80)),
+    "q_ann_ivfpq_residual_indexed" -> ((s: SparkSession, d: String) =>
+      annIvfPqIndexedAuto(s, d, residual = true)),
+    "q_ann_ivfpq_residual_incr" -> ((s: SparkSession, d: String) =>
+      annIvfPqIncr(s, d, residual = true)),
+    "q_ann_ivfpq_residual_delete" -> ((s: SparkSession, d: String) =>
+      annIvfPqDeleted(s, d, residual = true)),
+    "q_ann_ivfpq_residual_delete_compact" -> ((s: SparkSession, d: String) =>
+      annIvfPqDeletedCompacted(s, d, residual = true)),
     // SQ8 scalar quantization: the 4×-compression frontier point whose
     // compressed-domain ranking stays near-exact (per-dim 8-bit error
     // vs PQ's per-subspace codebook error) — trained quantizer (64-row

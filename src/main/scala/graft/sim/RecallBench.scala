@@ -104,7 +104,7 @@ object RecallBench {
     // one real quality lever: same code budget, spent on within-cell
     // detail instead of raw-corpus variance
     row("ivfpq_residual", truthFull) {
-      EmbeddingOps.annIvfPqResidualIndexedAuto(spark, sfDir)
+      EmbeddingOps.annIvfPqIndexedAuto(spark, sfDir, residual = true)
     }
 
     // the code-budget lever at matched encodings: K=64 per subspace
@@ -119,18 +119,18 @@ object RecallBench {
       }
     }
     row("ivfpq_residual_k64", truthFull) {
-      EmbeddingOps.annIvfPqResidual(spark, sfDir, k = 64)
+      EmbeddingOps.annIvfPq(spark, sfDir, residual = true, k = 64)
     }
     // the subspace-split lever: error ~ K^(−2/d) per subspace, so
     // halving d beats doubling K — M=8×8d and M=16×4d at K=8
     row("ivfpq_residual_m8", truthFull) {
-      EmbeddingOps.annIvfPqResidual(spark, sfDir, m = 8)
+      EmbeddingOps.annIvfPq(spark, sfDir, residual = true, m = 8)
     }
     row("ivfpq_residual_m16", truthFull) {
-      EmbeddingOps.annIvfPqResidual(spark, sfDir, m = 16)
+      EmbeddingOps.annIvfPq(spark, sfDir, residual = true, m = 16)
     }
     row("ivfpq_residual_m16_k16", truthFull) {
-      EmbeddingOps.annIvfPqResidual(spark, sfDir, k = 16, m = 16)
+      EmbeddingOps.annIvfPq(spark, sfDir, residual = true, k = 16, m = 16)
     }
 
     // SQ8 scalar quantization — the 4×-compression point: per-dim 8-bit
@@ -336,14 +336,14 @@ object RecallBench {
     // recall vs shortlist depth c, cost O(c·|queries|) point lookups
     for (c <- Seq(20, 40, 80, 160)) {
       row(s"ivfpq_refined_c$c", truthFull) {
-        EmbeddingOps.annIvfPqRefinedDeep(spark, sfDir, c)
+        EmbeddingOps.annIvfPqRefined(spark, sfDir, c = c)
       }
     }
     row("ivfpq_residual_refined", truthFull) {
-      EmbeddingOps.annIvfPqResidualRefined(spark, sfDir)
+      EmbeddingOps.annIvfPqRefined(spark, sfDir, residual = true)
     }
     row("ivfpq_residual_refined_c80", truthFull) {
-      EmbeddingOps.annIvfPqResidualRefined(spark, sfDir, c = 80)
+      EmbeddingOps.annIvfPqRefined(spark, sfDir, residual = true, c = 80)
     }
 
     // the SAME serves against exact-L2 truth — the metric ADC actually
@@ -356,7 +356,7 @@ object RecallBench {
     row("pq_vs_l2", truthL2) { EmbeddingOps.annPqIndexedAuto(spark, sfDir) }
     row("ivfpq_vs_l2", truthL2) { EmbeddingOps.annIvfPqIndexedAuto(spark, sfDir) }
     row("ivfpq_residual_vs_l2", truthL2) {
-      EmbeddingOps.annIvfPqResidualIndexedAuto(spark, sfDir)
+      EmbeddingOps.annIvfPqIndexedAuto(spark, sfDir, residual = true)
     }
     row("ivfpq_refined_vs_l2", truthL2) {
       EmbeddingOps.annIvfPqRefinedIndexedAuto(spark, sfDir)
@@ -376,7 +376,7 @@ object RecallBench {
       EmbeddingOps.annIvfPqRefinedDeleted(spark, sfDir)
     }
     row("ivfpq_residual_churned", truthSurv) {
-      EmbeddingOps.annIvfPqResidualDeleted(spark, sfDir)
+      EmbeddingOps.annIvfPqDeleted(spark, sfDir, residual = true)
     }
     row("sq8_churned", truthSurv) { EmbeddingOps.annSq8Deleted(spark, sfDir) }
 
@@ -393,8 +393,8 @@ object RecallBench {
     locally {
       val dir = s"/tmp/graft_recall_fresh_ivfpqres_${System.nanoTime()}"
       row("ivfpq_residual_fresh_surv", truthSurv) {
-        EmbeddingOps.buildIvfPqResidualIndexOn(spark, surv, surv, dir)
-        EmbeddingOps.annIvfPqResidualIndexed(spark, sfDir, dir)
+        EmbeddingOps.buildIvfPqIndexOn(spark, surv, surv, dir, residual = true)
+        EmbeddingOps.annIvfPqIndexed(spark, sfDir, dir, residual = true)
       }
     }
     locally {

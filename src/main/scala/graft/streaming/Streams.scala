@@ -15,28 +15,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object Streams {
 
-  /** Scratch space for the gated streaming jobs (staged inputs, sinks,
-    * checkpoints, state stores). The RETURNED DataFrames of those jobs
-    * read lazily from these dirs, so they cannot be deleted eagerly after
-    * the function returns — instead every base dir is registered for
-    * recursive deletion at JVM exit, so verify/bench runs stop
-    * accumulating staged copies in the tmpdir across invocations.
-    */
-  private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      scratchDirs.forEach(p => rm(p.toFile))
-    }))
-  }
-  private def tempDir(prefix: String): java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    scratchDirs.add(p)
-    p
-  }
+  // scratch space for the gated streaming jobs (staged inputs, sinks,
+  // checkpoints, state stores): their returned DataFrames read lazily
+  // from these dirs, so each is deleted at JVM exit, not on return
+  import graft.Scratch.tempDir
 
   /** Hourly windowed rollup of events — streaming twin of
     * RelationalOps.eventsHourly. On a stream, the 1-hour tumbling window +

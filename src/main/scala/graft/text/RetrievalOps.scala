@@ -969,49 +969,16 @@ object RetrievalOps {
     else None
 
   /** Fold tombstones into the postings store and clear them. Postings:
-    * rewrite ONLY the term-buckets that contain a tombstoned doc's rows
-    * (dynamic overwrite; fully-dead buckets — possible when a bucket's
-    * every posting came from deleted docs — are removed explicitly, the
-    * same obligation the ANN compaction carries, with the surviving set
-    * computed from the kept rows BEFORE the overwrite). Stats: the
-    * per-doc sidecar is rewritten whole behind a materialization barrier
-    * (it is |docs| rows of two ints — the corpus-scaled object is the
-    * postings, not this).
+    * the shared (tb, batch) partition fold ([[graft.Tombstones.fold]]) —
+    * only the term-buckets holding a tombstoned doc's rows are rewritten,
+    * so an appended batch's partitions stay untouched unless one of ITS
+    * docs died. Stats: the per-doc sidecar is rewritten whole behind a
+    * materialization barrier (it is |docs| rows of two ints — the
+    * corpus-scaled object is the postings, not this).
     */
   private[graft] def compactBm25Index(s: SparkSession, dir: String): Unit =
     bm25Tombstones(s, dir).foreach { t =>
-      val postings = s.read.parquet(s"$dir/postings")
-      // (tb, batch) pair granularity: only partitions that physically
-      // hold a tombstoned doc's rows are rewritten — an appended batch's
-      // partitions stay untouched unless one of ITS docs died
-      val affected = postings.join(broadcast(t), Seq("doc_id"), "left_semi")
-        .select(col("tb").cast("int"), col("batch").cast("long")).distinct()
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-      if (affected.nonEmpty) {
-        // one InSet over a derived key — constant expression-tree size
-        // at any partition count (an OR-chain grows a node per pair),
-        // still a statically-pruning partition predicate
-        val pairCond = concat_ws("#",
-          col("tb").cast("string"), col("batch").cast("string"))
-          .isin(affected.map { case (b, ba) => s"$b#$ba" }: _*)
-        val kept = s.read.parquet(s"$dir/postings")
-          .filter(pairCond)
-          .join(broadcast(t), Seq("doc_id"), "left_anti")
-        val surviving = kept
-          .select(col("tb").cast("int"), col("batch").cast("long")).distinct()
-          .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
-        kept.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("tb", "batch").parquet(s"$dir/postings")
-        (affected.toSet -- surviving).foreach { case (b, ba) =>
-          val dead =
-            java.nio.file.Paths.get(s"$dir/postings/tb=$b/batch=$ba")
-          if (java.nio.file.Files.exists(dead)) {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(dead).iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.delete)
-          }
-        }
-      }
+      graft.Tombstones.fold(s, s"$dir/postings", "doc_id", "tb", t): Unit
       // fold the adjustment into the aggregated stats row and shrink the
       // doc-keyed sidecar; both rewrites go through a materialization
       // barrier so the overwrite never reads the files it replaces
@@ -1027,10 +994,7 @@ object RetrievalOps {
           .join(broadcast(t.select("doc_id")), Seq("doc_id"), "left_anti"))
       keptLens.write.mode("overwrite").parquet(s"$dir/doclens")
       refreshBm25TermMeta(s, dir)
-      val tdir = java.nio.file.Paths.get(s"$dir/tombstones")
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tdir).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
+      graft.Scratch.rmTree(s"$dir/tombstones")
     }
 
   /** The delete-set convention of the gated BM25 lifecycle: every 7th
@@ -1134,15 +1098,10 @@ object RetrievalOps {
 
   private def bm25DeletedIndexDir(s: SparkSession, d: String,
       tag: String): String = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    // per-process key, same rationale as EmbeddingOps.lifecycleDir: this
-    // dir is rebuilt and mutated in place on every call (build → delete
-    // [→ compact → append]), so concurrent JVMs must not share it — one
-    // appending onto the other's fresh rebuild would serve wrong stats
-    val pid = java.lang.ProcessHandle.current().pid()
-    val dir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_bm25_${tag}_${h}_p$pid"
+    // rebuilt and mutated in place on every call (build → delete
+    // [→ compact → append]): a per-process dir, so one JVM never appends
+    // onto another's fresh rebuild and serves wrong stats
+    val dir = graft.Scratch.processDir(d, s"bm25_$tag")
     buildBm25Index(s, d, dir)
     deleteBm25Docs(s,
       documents(s, d).filter(Bm25DeleteVictims).select("doc_id"), dir, 0L)

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
-import scala.sys.process._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every main opens its session through [[GraftSession]]. The session
@@ -19,25 +18,8 @@ class GraftSessionSpec extends AnyFunSuite {
   /** `key=value` lines [[GraftSessionProbe]] prints in a fresh JVM started
     * with the extra JVM options `jvmOpts` and SPARK_GRAFT_CPUS=2.
     */
-  private def probe(jvmOpts: Seq[String]): Map[String, String] = {
-    val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
-    // --add-opens flags Spark needs on JDK 17, as this JVM was given them
-    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq.filter(_.startsWith("--add-opens="))
-    val cmd = Seq(javaBin, "-Xmx1g") ++ opens ++ jvmOpts ++
-      Seq("-cp", sys.props("java.class.path"), "graft.GraftSessionProbe", tiny)
-    val out = new StringBuilder
-    val err = new StringBuilder
-    val code = Process(cmd, None, "SPARK_GRAFT_CPUS" -> "2")
-      .!(ProcessLogger(l => out.append(l).append('\n'),
-        l => err.append(l).append('\n')))
-    assert(code == 0, s"probe JVM exited $code:\n${err.takeRight(4000)}")
-    out.toString.linesIterator.collect {
-      case l if l.startsWith("probe:") =>
-        val Array(k, v) = l.stripPrefix("probe:").split("=", 2)
-        k -> v
-    }.toMap
-  }
+  private def probe(jvmOpts: Seq[String]): Map[String, String] =
+    ChildJvm.probe("graft.GraftSessionProbe", Seq(tiny), jvmOpts)
 
   private lazy val unsubmitted = probe(Nil)
   // spark-submit hands its --master to the main as this system property

@@ -116,24 +116,30 @@ class IvfIndexSpec extends SparkSpec {
 
   test("composed IVF-PQ cell-append: split arrival equals one-shot full-assignment build") {
     import org.apache.spark.sql.functions.col
-    val incrDir = java.nio.file.Files.createTempDirectory("graft_ivfpq_incr").toString
-    val fullDir = java.nio.file.Files.createTempDirectory("graft_ivfpq_fullasg").toString
     val base = Tables.embeddings(spark, tiny)
       .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
     val arrival = col("vec_id") % 10 === 9
-    EmbeddingOps.buildIvfPqIndexOn(spark, base.filter(!arrival),
-      base.filter(!arrival), incrDir)
-    EmbeddingOps.appendIvfPqIndex(spark, base.filter(arrival), incrDir, batchId = 0L)
-    EmbeddingOps.buildIvfPqIndexOn(spark, base.filter(!arrival), base, fullDir)
-    assert(EmbeddingOps.annIvfPqIndexed(spark, tiny, incrDir).collect() ===
-      EmbeddingOps.annIvfPqIndexed(spark, tiny, fullDir).collect(),
-      "appended composed index must serve probes identical to a one-shot build")
-    // and the stored code tables agree row-for-row (compression included)
-    // (modulo the ingest-batch partition column, which records WHEN a
-    // vector arrived and so legitimately differs between the two builds)
-    val a = spark.read.parquet(s"$incrDir/codes").drop("batch").orderBy("vec_id").collect()
-    val b = spark.read.parquet(s"$fullDir/codes").drop("batch").orderBy("vec_id").collect()
-    assert(a === b)
+    // raw codes, then residual codes (the append re-encodes arrivals'
+    // residuals under the stored centroids)
+    for (residual <- Seq(false, true)) {
+      val incrDir = java.nio.file.Files.createTempDirectory("graft_ivfpq_incr").toString
+      val fullDir = java.nio.file.Files.createTempDirectory("graft_ivfpq_fullasg").toString
+      EmbeddingOps.buildIvfPqIndexOn(spark, base.filter(!arrival),
+        base.filter(!arrival), incrDir, residual)
+      EmbeddingOps.appendIvfPqIndex(spark, base.filter(arrival), incrDir,
+        batchId = 0L, residual)
+      EmbeddingOps.buildIvfPqIndexOn(spark, base.filter(!arrival), base, fullDir,
+        residual)
+      assert(EmbeddingOps.annIvfPqIndexed(spark, tiny, incrDir, residual).collect() ===
+        EmbeddingOps.annIvfPqIndexed(spark, tiny, fullDir, residual).collect(),
+        s"appended composed index must serve probes identical to a one-shot build (residual=$residual)")
+      // and the stored code tables agree row-for-row (compression included)
+      // (modulo the ingest-batch partition column, which records WHEN a
+      // vector arrived and so legitimately differs between the two builds)
+      val a = spark.read.parquet(s"$incrDir/codes").drop("batch").orderBy("vec_id").collect()
+      val b = spark.read.parquet(s"$fullDir/codes").drop("batch").orderBy("vec_id").collect()
+      assert(a === b, s"residual=$residual")
+    }
   }
 
   test("a replayed append (same batchId) overwrites itself instead of duplicating — exactly-once under redelivery") {
@@ -228,31 +234,68 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("delete lifecycle: tombstone serve == compacted serve; compaction clears and shrinks") {
-    val masked = EmbeddingOps.annIvfPqDeleted(spark, tiny).collect()
-    val compacted = EmbeddingOps.annIvfPqDeletedCompacted(spark, tiny).collect()
-    assert(masked === compacted,
-      "physical fold must answer exactly like the logical tombstone mask")
     val h = java.security.MessageDigest.getInstance("MD5")
       .digest(tiny.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
     val tmp = System.getProperty("java.io.tmpdir")
-    val delDir = s"$tmp/graft_ivfpq_del_${h}_p${java.lang.ProcessHandle.current().pid()}"     // tombstone-masked run
-    val delcDir = s"$tmp/graft_ivfpq_delc_${h}_p${java.lang.ProcessHandle.current().pid()}"   // compacted run
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$delDir/tombstones")),
-      "masked run must still carry its tombstones")
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$delcDir/tombstones")),
-      "compaction must clear the tombstone store")
-    // the compacted store must physically contain exactly the survivors
+    val pid = java.lang.ProcessHandle.current().pid()
     import spark.implicits._
-    val storeIds = spark.read.parquet(s"$delcDir/codes")
-      .select("vec_id").as[Long].collect().toSet
-    assert(storeIds.nonEmpty)
-    assert(!storeIds.exists(id => id % 5 == 4 && id >= 8),
-      "no victim id may survive compaction physically")
-    val maskedIds = spark.read.parquet(s"$delDir/codes")
-      .select("vec_id").as[Long].collect().toSet
-    assert(maskedIds.filterNot(id => id % 5 == 4 && id >= 8) === storeIds,
-      "compaction must drop exactly the victims")
+    // raw codes, then residual codes: the tombstone store and its fold
+    // are encoder-agnostic, and both must stay exact
+    for ((residual, tag) <- Seq(false -> "ivfpq", true -> "ivfpqres")) {
+      val masked = EmbeddingOps.annIvfPqDeleted(spark, tiny, residual).collect()
+      val compacted = EmbeddingOps.annIvfPqDeletedCompacted(spark, tiny, residual).collect()
+      assert(masked === compacted,
+        s"physical fold must answer exactly like the logical tombstone mask ($tag)")
+      val delDir = s"$tmp/graft_${tag}_del_${h}_p$pid"     // tombstone-masked run
+      val delcDir = s"$tmp/graft_${tag}_delc_${h}_p$pid"   // compacted run
+      assert(java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"$delDir/tombstones")),
+        s"masked run must still carry its tombstones ($tag)")
+      assert(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"$delcDir/tombstones")),
+        s"compaction must clear the tombstone store ($tag)")
+      // the compacted store must physically contain exactly the survivors
+      val storeIds = spark.read.parquet(s"$delcDir/codes")
+        .select("vec_id").as[Long].collect().toSet
+      assert(storeIds.nonEmpty)
+      assert(!storeIds.exists(id => id % 5 == 4 && id >= 8),
+        s"no victim id may survive compaction physically ($tag)")
+      val maskedIds = spark.read.parquet(s"$delDir/codes")
+        .select("vec_id").as[Long].collect().toSet
+      assert(maskedIds.filterNot(id => id % 5 == 4 && id >= 8) === storeIds,
+        s"compaction must drop exactly the victims ($tag)")
+    }
+  }
+
+  test("per-process lifecycle dirs are deleted when the JVM exits") {
+    // a fresh tmpdir for the child, so whatever it leaves is its own
+    val tmp = java.nio.file.Files.createTempDirectory("graft_exit_tmp")
+    try {
+      val out = ChildJvm.probe("graft.LifecycleDirProbe", Seq(tiny),
+        Seq(s"-Djava.io.tmpdir=$tmp"))
+      assert(out("built") == "true", "the child must have built its lifecycle dir")
+      import scala.jdk.CollectionConverters._
+      val listing = java.nio.file.Files.list(tmp)
+      val left = try listing.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("graft_ivfpq_incr_") &&
+          n.endsWith(s"_p${out("pid")}")).toList
+      finally listing.close()
+      assert(left.isEmpty, s"lifecycle dirs outlived their JVM: $left")
+    } finally Scratch.rmTree(tmp.toString)
+  }
+}
+
+/** Runs the incremental IVF-PQ gate over `args(0)` and exits, printing
+  * its pid and whether the gate's per-process dir existed (run by
+  * [[IvfIndexSpec]] in its own JVM).
+  */
+object LifecycleDirProbe {
+  def main(args: Array[String]): Unit = {
+    val spark = GraftSession.open(args(0))
+    EmbeddingOps.annIvfPqIncr(spark, args(0)).collect(): Unit
+    val dir = Scratch.processDir(args(0), "ivfpq_incr")
+    println(s"probe:pid=${java.lang.ProcessHandle.current().pid()}")
+    println(s"probe:built=${java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir))}")
+    spark.stop()
   }
 }

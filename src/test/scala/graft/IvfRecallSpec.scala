@@ -168,12 +168,12 @@ class IvfRecallSpec extends SparkSpec {
     // so a centroid/codebook mismatch between build and append would
     // show up here as a recall drop the exactness gates can't see
     val churnedRes = recallAt5(truthSurv,
-      EmbeddingOps.annIvfPqResidualDeleted(spark, clusteredDir))
+      EmbeddingOps.annIvfPqDeleted(spark, clusteredDir, residual = true))
     val freshResDir = java.nio.file.Files
       .createTempDirectory("graft_recall_fres").toString
-    EmbeddingOps.buildIvfPqResidualIndexOn(spark, surv, surv, freshResDir)
+    EmbeddingOps.buildIvfPqIndexOn(spark, surv, surv, freshResDir, residual = true)
     val freshRes = recallAt5(truthSurv,
-      EmbeddingOps.annIvfPqResidualIndexed(spark, clusteredDir, freshResDir))
+      EmbeddingOps.annIvfPqIndexed(spark, clusteredDir, freshResDir, residual = true))
     assert(churnedRes >= freshRes - 0.1,
       s"residual IVF-PQ recall degraded under churn: " +
         s"churned=$churnedRes fresh=$freshRes")
