@@ -1361,7 +1361,7 @@ object EmbeddingOps {
     * all sit in the base slice, so the build-time quantizer is
     * well-defined.
     */
-  private val IncrArrival = col("vec_id") % 10 === 9
+  private[graft] val IncrArrival = col("vec_id") % 10 === 9
 
   /** The incremental lifecycle as a gated query: build the index on the
     * corpus-as-of-build-time (9/10 of the vectors), cell-append the

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.types.StructType
+import graft.sim.EmbeddingOps.IncrArrival
 
 /** Structured Streaming surface — the capability extension over the
   * reference's batch-only truncate-and-reload (SURVEY.md §2.7): the same
@@ -15,10 +17,89 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object Streams {
 
-  // scratch space for the gated streaming jobs (staged inputs, sinks,
-  // checkpoints, state stores): their returned DataFrames read lazily
-  // from these dirs, so each is deleted at JVM exit, not on return
-  import graft.Scratch.tempDir
+  /** The replay harness every gated `*Streamed` query runs through: one
+    * instance per run, whose scratch dirs share one `Scratch.tempDir`
+    * (the returned DataFrames read from them lazily, so they are deleted
+    * at JVM exit, not on return):
+    *  - `in`: the staged shards;
+    *  - `out`: the parquet append sink, or an apply's own output;
+    *  - `state`: the store a foreachBatch apply folds into;
+    *  - `idx`: the index an apply maintains.
+    *
+    * A run stages its shards ([[stage]]) or opens a source staged
+    * elsewhere ([[open]]), then drains the stream once under
+    * `Trigger.AvailableNow`, into a foreachBatch apply ([[fold]]) or a
+    * parquet append sink ([[sink]]). Every source is read one file per
+    * micro-batch, so each staged shard is its own batch, in staging
+    * order: a pair, an ownership transfer or a tombstone that spans two
+    * shards can only come from the cross-batch state the gate proves.
+    */
+  private[graft] final class Replay(spark: SparkSession, tag: String) {
+    private val base = graft.Scratch.tempDir(tag)
+    private def sub(n: String) = base.resolve(n).toString
+    val in: String = sub("in")
+    val out: String = sub("out")
+    val state: String = sub("state")
+    val idx: String = sub("idx")
+
+    /** The file stream over `path`, one file per micro-batch. */
+    def open(path: String, schema: StructType,
+        format: String = "parquet"): DataFrame =
+      spark.readStream.format(format).schema(schema)
+        .option("maxFilesPerTrigger", "1").load(path)
+
+    /** Writes each shard as one parquet file under `name` (default `in`)
+      * and opens the stream over them, under the shards' own schema. The
+      * file source orders files by mtime, so the mtimes are set a minute
+      * apart in staging order: shard i is micro-batch i.
+      */
+    def stage(shards: Seq[DataFrame], name: String = "in"): DataFrame = {
+      val dest = java.nio.file.Files.createDirectories(base.resolve(name))
+      val t0 = System.currentTimeMillis()
+      shards.zipWithIndex.foreach { case (df, i) =>
+        df.coalesce(1).write.mode("overwrite").parquet(sub("stage"))
+        val part = new java.io.File(sub("stage")).listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        java.nio.file.Files.move(part.toPath, dest.resolve(f"$i%03d.parquet"))
+          .toFile.setLastModified(t0 + i * 60000L): Unit
+      }
+      open(dest.toString, shards.head.schema)
+    }
+
+    /** Drains `stream`, handing each micro-batch and its id to `each`. */
+    def fold(stream: DataFrame)(each: (DataFrame, Long) => Unit): Unit =
+      drain(stream.writeStream.foreachBatch(each))
+
+    /** Drains `stream` into the parquet append sink at `out` and reads
+      * the sink back as a batch frame.
+      */
+    def sink(stream: DataFrame, partitionBy: String*): DataFrame = {
+      drain(stream.writeStream.outputMode("append").format("parquet")
+        .partitionBy(partitionBy: _*).option("path", out))
+      spark.read.parquet(out)
+    }
+
+    private def drain(w: DataStreamWriter[Row]): Unit =
+      w.option("checkpointLocation", sub("cp"))
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+  }
+
+  /** Two shards split on the parity of `key`. */
+  private def parity(df: DataFrame, key: Column): Seq[DataFrame] =
+    Seq(df.filter(key % 2 === 0), df.filter(key % 2 === 1))
+
+  /** The documents table as parity shards on doc id, for the doc-stream
+    * gates (which may call the native text functions).
+    */
+  private def docShards(spark: SparkSession, dir: String,
+      cols: Seq[String] = Seq("CAST(doc_id AS BIGINT) AS doc_id", "text", "lang"))
+      : Seq[DataFrame] = {
+    graft.functions.GraftFunctions.register(spark)
+    parity(graft.Tables.documents(spark, dir).selectExpr(cols: _*), col("doc_id"))
+  }
+
+  /** The (doc_id, text) columns most doc-stream gates read. */
+  private val DocText = Seq("CAST(doc_id AS BIGINT) AS doc_id", "text")
 
   /** Hourly windowed rollup of events — streaming twin of
     * RelationalOps.eventsHourly. On a stream, the 1-hour tumbling window +
@@ -139,47 +220,23 @@ object Streams {
     * join the DuckDB oracle computes.
     */
   def attributionStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_attr_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val ev = graft.Tables.events(spark, dir).select(
-      col("event_id").cast("long").as("event_id"), col("ts"),
-      col("user_id").cast("long").as("user_id"), col("event_type"))
-    ev.filter(col("event_type") === "purchase")
-      .coalesce(1).write.parquet(sub("p"))
-    ev.filter(col("event_type") === "click")
-      .coalesce(1).write.parquet(sub("c"))
-    def src(n: String) = spark.readStream
-      .schema(spark.read.parquet(sub(n)).schema).parquet(sub(n))
-    val q = attributionStream(src("p"), src("c"))
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", sub("out")).option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(sub("out"))
+    val r = new Replay(spark, "graft_attr_stream")
+    val ev = attributionEvents(spark, dir)
+    r.sink(attributionStream(
+        r.stage(Seq(ev.filter(col("event_type") === "purchase")), "p"),
+        r.stage(Seq(ev.filter(col("event_type") === "click")), "c")))
       .select(col("purchase_id"), col("user_id"), col("click_id"),
         date_format(col("ts_compra"), "yyyy-MM-dd HH:mm:ss").as("ts_compra"),
         date_format(col("ts_click"), "yyyy-MM-dd HH:mm:ss").as("ts_click"))
       .orderBy("purchase_id", "click_id")
   }
 
-  /** The streamed LEFT OUTER interval join, gated: like
-    * [[attributionStreamed]] but unmatched purchases must ALSO emit (null
-    * click columns) — which a stream can only do once the watermark proves
-    * no matching click can still arrive. Two mechanics beyond the inner
-    * form:
-    *
-    *  - the global watermark is the MIN over BOTH watermarked sources, so
-    *    far-future sentinel rows go to EACH side (negative user_ids, which
-    *    can never join a real row and are filtered from the output): the
-    *    first sentinel batch advances both sides' watermarks past every
-    *    real purchase's join window, the second gives the join a batch in
-    *    which eviction runs and the null rows flush — without the purchase
-    *    sentinels the purchase-side watermark would pin the global one
-    *    10 minutes behind the last real purchase forever;
-    *  - nullable outputs are COALESCEd to sentinels (click_id → -1,
-    *    ts_click → 1900-01-01) in both engines, keeping the compare and
-    *    the total ordering null-free.
-    */
+  /** The events columns the attribution joins read. */
+  private def attributionEvents(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.events(spark, dir).select(
+      col("event_id").cast("long").as("event_id"), col("ts"),
+      col("user_id").cast("long").as("user_id"), col("event_type"))
+
   /** Shared two-sided staging + run for the outer/full attribution
     * forms: purchase and click file sources, each with the +72/+150 min
     * sentinel schedule. Spark maintains ONE global watermark — the MIN
@@ -209,54 +266,40 @@ object Streams {
     val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val ndPrior = spark.conf.getOption(ndKey)
     spark.conf.set(ndKey, "true")
-    try attributionStagedRunInner(spark, dir, tag, join)
-    finally ndPrior match {
+    try {
+      val r = new Replay(spark, tag)
+      val ev = attributionEvents(spark, dir)
+      val maxTs = ev.agg(max("ts")).head().getTimestamp(0)
+      def side(kind: String, uid: Long) = r.stage(
+        ev.filter(col("event_type") === kind) +: Seq(72, 150).map(offsetMin =>
+          Seq((uid, new java.sql.Timestamp(maxTs.getTime + offsetMin * 60000L),
+            uid, kind)).toDF("event_id", "ts", "user_id", "event_type")),
+        kind)
+      r.sink(join(side("purchase", -2L), side("click", -1L)))
+    } finally ndPrior match {
       case Some(v) => spark.conf.set(ndKey, v)
       case None    => spark.conf.unset(ndKey)
     }
   }
 
-  private def attributionStagedRunInner(spark: SparkSession, dir: String,
-      tag: String,
-      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    import spark.implicits._
-    val base = tempDir(tag)
-    def sub(n: String) = base.resolve(n).toString
-    val ev = graft.Tables.events(spark, dir).select(
-      col("event_id").cast("long").as("event_id"), col("ts"),
-      col("user_id").cast("long").as("user_id"), col("event_type"))
-    val maxTs = ev.agg(max("ts")).head().getTimestamp(0)
-    def stage(df: DataFrame, side: String, name: String, mtime: Long): Unit = {
-      val tmp = sub(s"stage_$side$name")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dest = java.nio.file.Paths.get(sub(side)).resolve(name)
-      java.nio.file.Files.createDirectories(dest.getParent)
-      java.nio.file.Files.copy(part.toPath, dest)
-      dest.toFile.setLastModified(mtime): Unit
-    }
-    def sentinel(uid: Long, offsetMin: Int, kind: String) = Seq(
-      (uid, new java.sql.Timestamp(maxTs.getTime + offsetMin * 60000L),
-        uid, kind)).toDF("event_id", "ts", "user_id", "event_type")
-    val t0 = System.currentTimeMillis()
-    stage(ev.filter(col("event_type") === "purchase"), "p", "000.parquet", t0)
-    stage(sentinel(-2L, 72, "purchase"), "p", "001.parquet", t0 + 60000)
-    stage(sentinel(-2L, 150, "purchase"), "p", "002.parquet", t0 + 120000)
-    stage(ev.filter(col("event_type") === "click"), "c", "000.parquet", t0)
-    stage(sentinel(-1L, 72, "click"), "c", "001.parquet", t0 + 60000)
-    stage(sentinel(-1L, 150, "click"), "c", "002.parquet", t0 + 120000)
-    def src(n: String) = spark.readStream
-      .schema(spark.read.parquet(sub(n)).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub(n))
-    val q = join(src("p"), src("c"))
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", sub("out")).option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(sub("out"))
-  }
-
+  /** The streamed LEFT OUTER interval join, gated: like
+    * [[attributionStreamed]] but unmatched purchases must ALSO emit (null
+    * click columns) — which a stream can only do once the watermark proves
+    * no matching click can still arrive. Two mechanics beyond the inner
+    * form:
+    *
+    *  - the global watermark is the MIN over BOTH watermarked sources, so
+    *    far-future sentinel rows go to EACH side (negative user_ids, which
+    *    can never join a real row and are filtered from the output): the
+    *    first sentinel batch advances both sides' watermarks past every
+    *    real purchase's join window, the second gives the join a batch in
+    *    which eviction runs and the null rows flush — without the purchase
+    *    sentinels the purchase-side watermark would pin the global one
+    *    10 minutes behind the last real purchase forever;
+    *  - nullable outputs are COALESCEd to sentinels (click_id → -1,
+    *    ts_click → 1900-01-01) in both engines, keeping the compare and
+    *    the total ordering null-free.
+    */
   def attributionStreamedOuter(spark: SparkSession, dir: String): DataFrame =
     attributionStagedRun(spark, dir, "graft_attro_stream",
       attributionStreamOuter)
@@ -338,37 +381,6 @@ object Streams {
       }
   }
 
-  /** Shared gating scaffold for the streamed dedup queries: stages the
-    * documents table as TWO parquet files (split by doc id parity),
-    * streams them one file per micro-batch — so pairs whose two docs
-    * arrive in DIFFERENT batches can only come from the stateful band
-    * index, which is the cross-batch increment the gate proves — runs
-    * `job(docStream)` to a parquet sink under `Trigger.AvailableNow`, and
-    * hands the sink to `post` for the follow-up batch shaping.
-    */
-  private def runDocStreamGate(spark: SparkSession, dir: String, tag: String,
-      cols: Seq[String] =
-        Seq("CAST(doc_id AS BIGINT) AS doc_id", "text", "lang"))(
-      job: DataFrame => DataFrame)(post: DataFrame => DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    val base = tempDir(s"graft_${tag}_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val docs = graft.Tables.documents(spark, dir)
-      .selectExpr(cols: _*)
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.parquet(sub("in"))
-    docs.filter(col("doc_id") % 2 === 1).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = job(stream)
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", sub("out")).option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    post(spark.read.parquet(sub("out")))
-  }
-
   /** JSONL corpus ingestion as a stream: the staged `.jsonl.gz` shards
     * ARE the stream source (`maxFilesPerTrigger=1` → one micro-batch per
     * shard — the shard-lands-in-a-bucket deployment shape), read
@@ -381,16 +393,9 @@ object Streams {
   def ingestJsonlStreamed(spark: SparkSession, dir: String): DataFrame = {
     import graft.etl.JsonlStage
     val staged = JsonlStage.stage(spark, dir)
-    val base = tempDir("graft_jsonl_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val stream = spark.readStream.schema(JsonlStage.stagedDdl(staged))
-      .option("maxFilesPerTrigger", "1").json(s"$staged/documents.jsonl")
-    val q = JsonlStage.flatten(stream)
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", sub("out")).option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(sub("out")).orderBy("doc_id")
+    val r = new Replay(spark, "graft_jsonl_stream")
+    r.sink(JsonlStage.flatten(r.open(s"$staged/documents.jsonl",
+      StructType.fromDDL(JsonlStage.stagedDdl(staged)), "json"))).orderBy("doc_id")
   }
 
   /** ORC ingest under streaming arrivals: the same multi-shard ORC
@@ -401,17 +406,9 @@ object Streams {
     */
   def ingestOrcStreamed(spark: SparkSession, dir: String): DataFrame = {
     import graft.etl.OrcStage
-    val staged = OrcStage.stage(spark, dir)
-    val base = tempDir("graft_orc_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val schema = spark.read.orc(s"$staged/documents.orc").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").orc(s"$staged/documents.orc")
-    val q = stream.writeStream.outputMode("append").format("parquet")
-      .option("path", sub("out")).option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(sub("out"))
+    val staged = s"${OrcStage.stage(spark, dir)}/documents.orc"
+    val r = new Replay(spark, "graft_orc_stream")
+    r.sink(r.open(staged, spark.read.orc(staged).schema, "orc"))
       .selectExpr("CAST(doc_id AS BIGINT) AS doc_id", "text", "lang",
         "source", "CAST(n_chars AS BIGINT) AS n_chars")
       .orderBy("doc_id")
@@ -428,16 +425,9 @@ object Streams {
   def evolveSchemaStreamed(spark: SparkSession, dir: String): DataFrame = {
     import graft.etl.EvolveStage
     val staged = EvolveStage.stage(spark, dir)
-    val base = tempDir("graft_evolve_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val stream = spark.readStream.schema(EvolveStage.UnifiedDdl)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staged/{gen1,gen2}")
-    val q = stream.writeStream.outputMode("append").format("parquet")
-      .option("path", sub("out")).option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(sub("out")).orderBy("doc_id")
+    val r = new Replay(spark, "graft_evolve_stream")
+    r.sink(r.open(s"$staged/{gen1,gen2}", StructType.fromDDL(EvolveStage.UnifiedDdl)))
+      .orderBy("doc_id")
   }
 
   /** The multimodal decode as a streamed twin: media payloads arrive in
@@ -449,11 +439,12 @@ object Streams {
     * the streamed result must equal the batch result row-for-row; same
     * DuckDB oracle as q_multimodal_decode_wav.
     */
-  def multimodalDecodeWavStreamed(spark: SparkSession, dir: String): DataFrame =
-    runDocStreamGate(spark, dir, "wavdec",
-      Seq("CAST(doc_id AS BIGINT) AS doc_id")) { stream =>
-      graft.multimodal.Multimodal.decodeWavRows(stream)
-    } { _.orderBy("media_id") }
+  def multimodalDecodeWavStreamed(spark: SparkSession, dir: String): DataFrame = {
+    val r = new Replay(spark, "graft_wavdec_stream")
+    r.sink(graft.multimodal.Multimodal.decodeWavRows(r.stage(
+      docShards(spark, dir, Seq("CAST(doc_id AS BIGINT) AS doc_id")))))
+      .orderBy("media_id")
+  }
 
   /** The perceptual-hash kernel as a streamed twin: image payloads arrive
     * in micro-batches, each batch runs the IDENTICAL real-PNG ingest +
@@ -465,18 +456,19 @@ object Streams {
     * only the hash columns, so the twin re-pins the BANDS, the part a
     * streamed index feed actually ships).
     */
-  def multimodalPhashStreamed(spark: SparkSession, dir: String): DataFrame =
-    runDocStreamGate(spark, dir, "phash",
-      Seq("CAST(doc_id AS BIGINT) AS doc_id")) { stream =>
-      graft.multimodal.Multimodal.phashRows(stream)
-        .selectExpr("media_id", "CAST(largura AS INT) AS largura",
-          "CAST(altura AS INT) AS altura",
-          "CAST(b0 AS INT) AS b0", "CAST(b1 AS INT) AS b1",
-          "CAST(b2 AS INT) AS b2", "CAST(b3 AS INT) AS b3")
-    } { _.orderBy("media_id") }
+  def multimodalPhashStreamed(spark: SparkSession, dir: String): DataFrame = {
+    val r = new Replay(spark, "graft_phash_stream")
+    r.sink(graft.multimodal.Multimodal.phashRows(r.stage(
+        docShards(spark, dir, Seq("CAST(doc_id AS BIGINT) AS doc_id"))))
+      .selectExpr("media_id", "CAST(largura AS INT) AS largura",
+        "CAST(altura AS INT) AS altura",
+        "CAST(b0 AS INT) AS b0", "CAST(b1 AS INT) AS b1",
+        "CAST(b2 AS INT) AS b2", "CAST(b3 AS INT) AS b3"))
+      .orderBy("media_id")
+  }
 
   /** [[lshPairsStream]] as a gated batch-comparable query (see
-    * [[runDocStreamGate]] for the two-file cross-batch mechanics),
+    * [[Replay]] for the two-file cross-batch mechanics),
     * against the very same DuckDB oracle as the batch
     * q_dedup_minhash_lsh — signature kernel and band-key template are
     * shared (graft.text.TextOps.lshBandsExpr), so stream and batch
@@ -484,22 +476,27 @@ object Streams {
     * (doc_a, doc_b, n_bands) in a follow-up batch read of the sink — the
     * standard two-stage shape for a streamed index feed.
     */
-  def dedupMinhashStreamed(spark: SparkSession, dir: String): DataFrame = {
+  def dedupMinhashStreamed(spark: SparkSession, dir: String): DataFrame =
+    lshDocPairsStreamed(spark, dir, "graft_lsh_stream")
+      .groupBy("doc_a", "doc_b")
+      .agg(count(lit(1)).as("n_bands"))
+      .orderBy("doc_a", "doc_b")
+
+  /** The per-band pairs [[lshPairsStream]] emits over the parity-staged
+    * documents, read back from the sink.
+    */
+  private def lshDocPairsStreamed(spark: SparkSession, dir: String,
+      tag: String): DataFrame = {
     import spark.implicits._
     val T = graft.text.TextExprs.tokens("text")
-    runDocStreamGate(spark, dir, "lsh") { stream =>
-      lshPairsStream(stream
-        .selectExpr("doc_id", s"${T.spark} AS toks")
-        .selectExpr("doc_id", "shingle_minhashes(toks, 3, 8) AS mh")
-        .selectExpr("doc_id", s"${graft.text.TextOps.lshBandsExpr} AS bands")
-        .select(col("doc_id"), posexplode(col("bands")).as(Seq("band_idx", "bkey")))
-        .selectExpr("concat(CAST(band_idx AS STRING), '|', bkey) AS band", "doc_id")
-        .as[BandedDoc]).toDF()
-    } { sink =>
-      sink.groupBy("doc_a", "doc_b")
-        .agg(count(lit(1)).as("n_bands"))
-        .orderBy("doc_a", "doc_b")
-    }
+    val r = new Replay(spark, tag)
+    r.sink(lshPairsStream(r.stage(docShards(spark, dir))
+      .selectExpr("doc_id", s"${T.spark} AS toks")
+      .selectExpr("doc_id", "shingle_minhashes(toks, 3, 8) AS mh")
+      .selectExpr("doc_id", s"${graft.text.TextOps.lshBandsExpr} AS bands")
+      .select(col("doc_id"), posexplode(col("bands")).as(Seq("band_idx", "bkey")))
+      .selectExpr("concat(CAST(band_idx AS STRING), '|', bkey) AS band", "doc_id")
+      .as[BandedDoc]).toDF())
   }
 
   /** The leakage-safe split maintained under streaming arrivals: the
@@ -516,26 +513,13 @@ object Streams {
     * events the band index emits. Converges to the batch
     * q_split_leakage_safe; same oracle.
     */
-  def splitLeakageSafeStreamed(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val T = graft.text.TextExprs.tokens("text")
-    runDocStreamGate(spark, dir, "split") { stream =>
-      lshPairsStream(stream
-        .selectExpr("doc_id", s"${T.spark} AS toks")
-        .selectExpr("doc_id", "shingle_minhashes(toks, 3, 8) AS mh")
-        .selectExpr("doc_id", s"${graft.text.TextOps.lshBandsExpr} AS bands")
-        .select(col("doc_id"), posexplode(col("bands")).as(Seq("band_idx", "bkey")))
-        .selectExpr("concat(CAST(band_idx AS STRING), '|', bkey) AS band", "doc_id")
-        .as[BandedDoc]).toDF()
-    } { sink =>
-      val clusters = graft.text.TextOps.componentsOf(
-        sink.select("doc_a", "doc_b").distinct())
-      graft.text.TextOps.splitAssign(
-        graft.Tables.documents(spark, dir)
-          .selectExpr("CAST(doc_id AS BIGINT) AS doc_id"),
-        clusters)
-    }
-  }
+  def splitLeakageSafeStreamed(spark: SparkSession, dir: String): DataFrame =
+    graft.text.TextOps.splitAssign(
+      graft.Tables.documents(spark, dir)
+        .selectExpr("CAST(doc_id AS BIGINT) AS doc_id"),
+      graft.text.TextOps.componentsOf(
+        lshDocPairsStreamed(spark, dir, "graft_split_stream")
+          .select("doc_a", "doc_b").distinct()))
 
   /** One (pigeonhole band key, doc, signature) row of the streamed
     * SimHash index (public for codegen).
@@ -586,7 +570,7 @@ object Streams {
   }
 
   /** [[simhashPairsStream]] as a gated batch-comparable query (see
-    * [[runDocStreamGate]] for the two-file cross-batch mechanics):
+    * [[Replay]] for the two-file cross-batch mechanics):
     * signature from the same native SimHash64 BIGINT kernel and the same
     * shift/mask band-key template as the batch pipeline
     * (graft.text.TextOps.simhashBandExpr — one source, no drift), gated
@@ -598,18 +582,16 @@ object Streams {
     val chaves = (0 until 4)
       .map(j => s"concat('$j', '|', CAST(${graft.text.TextOps.simhashBandExpr("sig", j)} AS STRING))")
       .mkString("array(", ", ", ")")
-    runDocStreamGate(spark, dir, "sim") { stream =>
-      simhashPairsStream(stream
+    val r = new Replay(spark, "graft_sim_stream")
+    r.sink(simhashPairsStream(r.stage(docShards(spark, dir))
         .selectExpr("doc_id", s"${T.spark} AS toks")
         .selectExpr("doc_id", "simhash64(toks) AS sig")
         .selectExpr("doc_id", "sig", s"$chaves AS bands")
         .select(col("doc_id"), col("sig"), explode(col("bands")).as("band"))
-        .select(col("band"), col("doc_id"), col("sig")).as[BandedSig]).toDF()
-    } { sink =>
-      sink.distinct()
-        .select(col("doc_a"), col("doc_b"), col("hamming").cast("int"))
-        .orderBy("doc_a", "doc_b")
-    }
+        .select(col("band"), col("doc_id"), col("sig")).as[BandedSig]).toDF())
+      .distinct()
+      .select(col("doc_a"), col("doc_b"), col("hamming").cast("int"))
+      .orderBy("doc_a", "doc_b")
   }
 
   /** One (prefix-shingle band key, doc, sorted shingle ids) row of the
@@ -686,7 +668,7 @@ object Streams {
   }
 
   /** [[jaccardPairsStream]] as a gated batch-comparable query (see
-    * [[runDocStreamGate]] for the two-file cross-batch mechanics): same
+    * [[Replay]] for the two-file cross-batch mechanics): same
     * shingle identities (native shingle_hashes kernel), same (lang,
     * token-bucket) blocking embedded in the band key, same exact-Jaccard
     * threshold — gated against the SAME DuckDB oracle as the batch
@@ -696,8 +678,8 @@ object Streams {
       threshold: Double = 0.5): DataFrame = {
     import spark.implicits._
     val T = graft.text.TextExprs.tokens("text")
-    runDocStreamGate(spark, dir, "jac") { stream =>
-      jaccardPairsStream(stream
+    val r = new Replay(spark, "graft_jac_stream")
+    r.sink(jaccardPairsStream(r.stage(docShards(spark, dir))
         .selectExpr("doc_id", "lang", s"${T.spark} AS toks")
         .selectExpr("doc_id", "lang", "shingle_hashes(toks, 3) AS shd",
           "CAST(floor(size(toks) / 20) AS INT) AS bucket")
@@ -709,12 +691,10 @@ object Streams {
         .selectExpr(
           "concat(CAST(s AS STRING), '|', lang, '|', CAST(bucket AS STRING)) AS band",
           "doc_id", "shd", "CAST(n AS INT) AS n")
-        .as[PrefixDoc], threshold).toDF()
-    } { sink =>
-      sink.distinct()
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))
-        .orderBy("doc_a", "doc_b")
-    }
+        .as[PrefixDoc], threshold).toDF())
+      .distinct()
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+      .orderBy("doc_a", "doc_b")
   }
 
   /** One rolling-window occurrence (public for codegen). */
@@ -777,19 +757,17 @@ object Streams {
   def dedupPassageStreamed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val T = graft.text.TextExprs.tokens("text")
-    runDocStreamGate(spark, dir, "passage") { stream =>
-      passageCutStream(stream
+    val r = new Replay(spark, "graft_passage_stream")
+    r.sink(passageCutStream(r.stage(docShards(spark, dir))
         .selectExpr("doc_id", s"${T.spark} AS toks")
         .filter("size(toks) >= 8")
         .selectExpr("doc_id", "window_hashes(toks, 8) AS whs")
         .select(col("doc_id"), posexplode(col("whs")).as(Seq("p0", "h")))
         .selectExpr("h", "doc_id", "CAST(p0 + 1 AS INT) AS pos")
-        .as[WinOcc]).toDF()
-    } { sink =>
-      sink.distinct()
-        .selectExpr("doc_id", "pos")
-        .orderBy("doc_id", "pos")
-    }
+        .as[WinOcc]).toDF())
+      .distinct()
+      .selectExpr("doc_id", "pos")
+      .orderBy("doc_id", "pos")
   }
 
   /** The incremental fact load as a REAL Structured Streaming job — the
@@ -813,30 +791,17 @@ object Streams {
     * exactly-once needs a transactional sink/table format on top.)
     */
   def factIncrementalStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_fact_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val o = graft.Tables.orders(spark, dir)
-    o.filter(col("o_orderdate") < lit("1996-01-01"))
-      .coalesce(1).write.parquet(sub("in"))
-    o.filter(col("o_orderdate") >= lit("1996-01-01"))
-      .coalesce(1).write.mode("append").parquet(sub("in"))
-    val oStream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
+    val r = new Replay(spark, "graft_fact_stream")
     // the static join sides are the STORED SK maps (sunk once per
     // dataset fingerprint, read back), so each micro-batch joins against
     // plain parquet scans instead of re-deriving the dimensional model
     // per trigger
     val Seq(dp, dc, dv, dl) = graft.etl.Incremental.ensureDims(spark, dir)
-    val fato = graft.etl.Star
-      .fatoVendasFromDims(oStream, graft.Tables.lineitem(spark, dir), dp, dc, dv, dl)
-      .withColumn("ano", (col("sk_tempo") / 10000).cast("int"))
-    val q = fato.writeStream.outputMode("append").format("parquet")
-      .partitionBy("ano")
-      .option("path", sub("out")).option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(sub("out")).drop("ano")
+    r.sink(graft.etl.Star
+        .fatoVendasFromDims(r.stage(orderCut(spark, dir)),
+          graft.Tables.lineitem(spark, dir), dp, dc, dv, dl)
+        .withColumn("ano", (col("sk_tempo") / 10000).cast("int")), "ano")
+      .drop("ano")
       .withColumn("valor_bruto", col("valor_bruto").cast("double"))
       .withColumn("valor_desconto", col("valor_desconto").cast("double"))
       .withColumn("valor_total", col("valor_total").cast("double"))
@@ -845,6 +810,30 @@ object Streams {
         "valor_bruto", "valor_desconto", "valor_total")
       .orderBy("id_pedido", "numero_linha", "sk_produto", "sk_vendedor",
         "qtd_vendida", "valor_bruto", "valor_desconto")
+  }
+
+  /** The orders table as two shards split at the incremental loads'
+    * order-date cut.
+    */
+  private def orderCut(spark: SparkSession, dir: String): Seq[DataFrame] = {
+    val o = graft.Tables.orders(spark, dir)
+    Seq(o.filter(col("o_orderdate") < lit("1996-01-01")),
+      o.filter(col("o_orderdate") >= lit("1996-01-01")))
+  }
+
+  /** [[graft.text.CurationOps.corpusCard]] maintained under streaming
+    * arrivals: each micro-batch's partial card merges into the committed
+    * state by integer addition (foreachBatch + StoreCommit, exactly-once
+    * under redelivery), and the read-time presentation is bit-identical
+    * to the one-shot scan because every cell is an associative count.
+    * Same oracle as the batch card.
+    */
+  def corpusCardStreamed(spark: SparkSession, dir: String): DataFrame = {
+    val r = new Replay(spark, "graft_card_stream")
+    r.fold(r.stage(docShards(spark, dir,
+      Seq("CAST(doc_id AS BIGINT) AS doc_id", "lang", "source", "text"))))(
+      graft.text.CurationOps.applyCardBatch(spark, _, r.state, _))
+    graft.text.CurationOps.readCardState(spark, r.state)
   }
 
   /** The materialized KPI maintained as a STREAM — the incremental twin
@@ -856,56 +845,12 @@ object Streams {
     * batching lands on the one-shot aggregate — gated against the SAME
     * DuckDB oracle as kpi6_vendas_categoria.
     */
-  /** [[graft.text.CurationOps.corpusCard]] maintained under streaming
-    * arrivals: each micro-batch's partial card merges into the committed
-    * state by integer addition (foreachBatch + StoreCommit, exactly-once
-    * under redelivery), and the read-time presentation is bit-identical
-    * to the one-shot scan because every cell is an associative count.
-    * Same oracle as the batch card.
-    */
-  def corpusCardStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_card_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val docs = graft.Tables.documents(spark, dir)
-      .selectExpr("CAST(doc_id AS BIGINT) AS doc_id", "lang", "source", "text")
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.parquet(sub("in"))
-    docs.filter(col("doc_id") % 2 === 1).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.text.CurationOps.applyCardBatch(spark, batch, sub("state"), batchId)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.text.CurationOps.readCardState(spark, sub("state"))
-  }
-
   def kpiIncrementalStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_kpi_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val o = graft.Tables.orders(spark, dir)
-    o.filter(col("o_orderdate") < lit("1996-01-01"))
-      .coalesce(1).write.parquet(sub("in"))
-    o.filter(col("o_orderdate") >= lit("1996-01-01"))
-      .coalesce(1).write.mode("append").parquet(sub("in"))
-    val state = sub("state")
+    val r = new Replay(spark, "graft_kpi_stream")
     val dims = graft.etl.Incremental.ensureDims(spark, dir)
-    val oStream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = oStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.etl.Incremental.applyKpiBatch(spark, dir, batch, state,
-          batchId, dims)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.etl.Incremental.readKpiState(spark, dir, state)
+    r.fold(r.stage(orderCut(spark, dir)))(
+      graft.etl.Incremental.applyKpiBatch(spark, dir, _, r.state, _, dims))
+    graft.etl.Incremental.readKpiState(spark, dir, r.state)
   }
 
   /** SCD2 dimension maintenance as a STREAMING UPSERT — the foreachBatch
@@ -929,28 +874,16 @@ object Streams {
     * one-shot table, and the gate checks it bit-exactly.
     */
   def scd2Streamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_scd2_stream")
-    def sub(n: String) = base.resolve(n).toString
+    val r = new Replay(spark, "graft_scd2_stream")
     val up = graft.etl.Scd.updateBatch(spark, dir)
-    up.filter(col("id_cliente") >= 0).coalesce(1).write.parquet(sub("in"))
-    up.filter(col("id_cliente") < 0).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    graft.etl.Scd.initStateStore(spark, dir, sub("state"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        // batchId threads through to the store's commit watermark: a
-        // replayed batch after a restart is skipped, not re-applied —
-        // the store is exactly-once, not at-least-once
-        graft.etl.Scd.applyBatchToStore(spark, sub("state"), batch,
-          "1999-01-01", batchId)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.etl.Scd.readStateStore(spark, sub("state"))
+    graft.etl.Scd.initStateStore(spark, dir, r.state)
+    // batchId threads through to the store's commit watermark: a
+    // replayed batch after a restart is skipped, not re-applied —
+    // the store is exactly-once, not at-least-once
+    r.fold(r.stage(Seq(up.filter(col("id_cliente") >= 0),
+        up.filter(col("id_cliente") < 0))))(
+      graft.etl.Scd.applyBatchToStore(spark, r.state, _, "1999-01-01", _))
+    graft.etl.Scd.readStateStore(spark, r.state)
       .orderBy("id_cliente", "valid_from", "vigente")
   }
 
@@ -967,44 +900,27 @@ object Streams {
     * and arrival order must not leak into the probes.
     */
   def ivfIndexStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_ivf_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val emb = graft.Tables.embeddings(spark, dir)
-      .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
-    val arrival = col("vec_id") % 10 === 9
+    val r = new Replay(spark, "graft_ivf_stream")
+    val emb = vectors(spark, dir)
     graft.sim.EmbeddingOps.buildIvfIndexKmeansOn(spark,
-      emb.filter(!arrival), emb.filter(!arrival), sub("idx"), "stream")
-    val arr = emb.filter(arrival)
-    arr.filter(expr("(vec_id div 10) % 2 = 0")).coalesce(1)
-      .write.parquet(sub("in"))
-    arr.filter(expr("(vec_id div 10) % 2 = 1")).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        // the batch owns its (cell, batch) partitions: a replay after a
-        // restart dynamically overwrites them instead of duplicating
-        // appended vectors — exactly-once index maintenance
-        graft.sim.EmbeddingOps.appendIvfIndexKmeans(spark, batch, sub("idx"),
-          batchId): Unit
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.sim.EmbeddingOps.annIvfKmeansIndexed(spark, dir, sub("idx"))
+      emb.filter(!IncrArrival), emb.filter(!IncrArrival), r.idx, "stream")
+    // the batch owns its (cell, batch) partitions: a replay after a
+    // restart dynamically overwrites them instead of duplicating
+    // appended vectors — exactly-once index maintenance
+    r.fold(r.stage(arrivalShards(emb)))(
+      graft.sim.EmbeddingOps.appendIvfIndexKmeans(spark, _, r.idx, _))
+    graft.sim.EmbeddingOps.annIvfKmeansIndexed(spark, dir, r.idx)
   }
 
-  /** The streamed ingest twin of the SQ8 index lifecycle
-    * (q_ann_sq8_incr): min/max trained on the 9/10 build slice, the
-    * arriving 1/10 split across two micro-batches, each encoded under
-    * the STORED training and landed as its own batch partition (the
-    * replay-idempotent dynamic overwrite the IVF append uses — a
-    * restarted micro-batch overwrites itself, exactly-once). The
-    * drained index must answer the same oracle as the batch incr gate:
-    * how the arrivals were sliced into batches is unobservable.
-    */
+  /** The embeddings the streamed index gates build on and stream in. */
+  private def vectors(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.embeddings(spark, dir)
+      .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
+
+  /** The arriving vectors as two shards, on the parity of vec_id div 10. */
+  private def arrivalShards(emb: DataFrame): Seq[DataFrame] =
+    parity(emb.filter(IncrArrival), expr("vec_id div 10"))
+
   /** The streamed DELETE twin for the graph store: victim ids arrive
     * as a file stream over two micro-batches, each landing as its own
     * tombstone partition (replay-idempotent) with the O(touched cells)
@@ -1014,36 +930,19 @@ object Streams {
     * victims arrived is unobservable.
     */
   def graphDeleteStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_graphdel_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val emb = graft.Tables.embeddings(spark, dir)
-      .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
-    val arrival = col("vec_id") % 10 === 9
+    val r = new Replay(spark, "graft_graphdel_stream")
+    val emb = vectors(spark, dir)
     graft.sim.EmbeddingOps.buildGraphIndexOn(spark,
-      emb.filter(!arrival), sub("idx"),
+      emb.filter(!IncrArrival), r.idx,
       knownN = graft.sim.EmbeddingOps.cachedCount(dir, "pre",
-        emb.filter(!arrival)))
-    graft.sim.EmbeddingOps.appendGraphIndex(spark, emb.filter(arrival),
-      sub("idx"), batchId = 0L)
-    val victims = emb.filter(graft.sim.EmbeddingOps.DeleteVictims)
-      .select("vec_id")
-    victims.filter(expr("(vec_id div 5) % 2 = 0")).coalesce(1)
-      .write.parquet(sub("in"))
-    victims.filter(expr("(vec_id div 5) % 2 = 1")).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.sim.EmbeddingOps.deleteGraphIndex(spark, batch, sub("idx"),
-          // tombstone batches live beside the append's batch 0
-          batchId + 1L)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.sim.EmbeddingOps.annGraphIndexedMasked(spark, dir, sub("idx"))
+        emb.filter(!IncrArrival)))
+    graft.sim.EmbeddingOps.appendGraphIndex(spark, emb.filter(IncrArrival),
+      r.idx, batchId = 0L)
+    r.fold(r.stage(parity(emb.filter(graft.sim.EmbeddingOps.DeleteVictims)
+        .select("vec_id"), expr("vec_id div 5"))))((batch, batchId) =>
+      // tombstone batches live beside the append's batch 0
+      graft.sim.EmbeddingOps.deleteGraphIndex(spark, batch, r.idx, batchId + 1L))
+    graft.sim.EmbeddingOps.annGraphIndexedMasked(spark, dir, r.idx)
   }
 
   /** Drift-triggered retraining INSIDE the stream — the operational
@@ -1061,36 +960,19 @@ object Streams {
     * membership.
     */
   def sq8RetrainStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_sq8_retrain_stream")
-    def sub(n: String) = base.resolve(n).toString
+    val r = new Replay(spark, "graft_sq8_retrain_stream")
     val emb = graft.sim.EmbeddingOps.sq8DriftBase(spark, dir)
-    val arrival = col("vec_id") % 10 === 9
     graft.sim.EmbeddingOps.buildSq8IndexOn(spark,
-      emb.filter(!arrival), emb.filter(!arrival), sub("idx"))
-    val arr = emb.filter(arrival)
-    arr.filter(expr("(vec_id div 10) % 2 = 0")).coalesce(1)
-      .write.parquet(sub("in"))
-    arr.filter(expr("(vec_id div 10) % 2 = 1")).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val rate = graft.sim.EmbeddingOps.appendSq8Index(spark, batch,
-          sub("idx"), batchId)
-        if (rate > graft.sim.EmbeddingOps.SQ8_CLAMP_RETRAIN) {
-          val members = spark.read.parquet(sub("idx") + "/codes")
-            .select("vec_id")
-          val indexed = emb.join(members, Seq("vec_id"), "left_semi")
-          graft.sim.EmbeddingOps.buildSq8IndexOn(spark, indexed, indexed,
-            sub("idx"))
-        }
+      emb.filter(!IncrArrival), emb.filter(!IncrArrival), r.idx)
+    r.fold(r.stage(arrivalShards(emb))) { (batch, batchId) =>
+      val rate = graft.sim.EmbeddingOps.appendSq8Index(spark, batch, r.idx, batchId)
+      if (rate > graft.sim.EmbeddingOps.SQ8_CLAMP_RETRAIN) {
+        val members = spark.read.parquet(r.idx + "/codes").select("vec_id")
+        val indexed = emb.join(members, Seq("vec_id"), "left_semi")
+        graft.sim.EmbeddingOps.buildSq8IndexOn(spark, indexed, indexed, r.idx)
       }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.sim.EmbeddingOps.annSq8Indexed(spark, dir, sub("idx"))
+    }
+    graft.sim.EmbeddingOps.annSq8Indexed(spark, dir, r.idx)
   }
 
   /** The graph index's streamed ingest twin: arrivals land as
@@ -1104,32 +986,15 @@ object Streams {
     * as the batch q_ann_graph_incr — arrival shape unobservable.
     */
   def graphIndexStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_graph_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val emb = graft.Tables.embeddings(spark, dir)
-      .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
-    val arrival = col("vec_id") % 10 === 9
+    val r = new Replay(spark, "graft_graph_stream")
+    val emb = vectors(spark, dir)
     graft.sim.EmbeddingOps.buildGraphIndexOn(spark,
-      emb.filter(!arrival), sub("idx"),
+      emb.filter(!IncrArrival), r.idx,
       knownN = graft.sim.EmbeddingOps.cachedCount(dir, "pre",
-        emb.filter(!arrival)))
-    val arr = emb.filter(arrival)
-    arr.filter(expr("(vec_id div 10) % 2 = 0")).coalesce(1)
-      .write.parquet(sub("in"))
-    arr.filter(expr("(vec_id div 10) % 2 = 1")).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.sim.EmbeddingOps.appendGraphIndex(spark, batch, sub("idx"),
-          batchId)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.sim.EmbeddingOps.annGraphIndexed(spark, dir, sub("idx"))
+        emb.filter(!IncrArrival)))
+    r.fold(r.stage(arrivalShards(emb)))(
+      graft.sim.EmbeddingOps.appendGraphIndex(spark, _, r.idx, _))
+    graft.sim.EmbeddingOps.annGraphIndexed(spark, dir, r.idx)
   }
 
   /** Streamed twin of the XCELL append: arrival micro-batches land
@@ -1139,32 +1004,15 @@ object Streams {
     * (cell, batch) vector partitions, the shared graph convention.
     */
   def graphXcellIndexStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_graph_xcell_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val emb = graft.Tables.embeddings(spark, dir)
-      .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
-    val arrival = col("vec_id") % 10 === 9
+    val r = new Replay(spark, "graft_graph_xcell_stream")
+    val emb = vectors(spark, dir)
     graft.sim.EmbeddingOps.buildGraphXcellIndexOn(spark,
-      emb.filter(!arrival), sub("idx"),
+      emb.filter(!IncrArrival), r.idx,
       knownN = graft.sim.EmbeddingOps.cachedCount(dir, "pre",
-        emb.filter(!arrival)))
-    val arr = emb.filter(arrival)
-    arr.filter(expr("(vec_id div 10) % 2 = 0")).coalesce(1)
-      .write.parquet(sub("in"))
-    arr.filter(expr("(vec_id div 10) % 2 = 1")).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.sim.EmbeddingOps.appendGraphXcellIndex(spark, batch,
-          sub("idx"), batchId)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.sim.EmbeddingOps.annGraphXcellIndexed(spark, dir, sub("idx"))
+        emb.filter(!IncrArrival)))
+    r.fold(r.stage(arrivalShards(emb)))(
+      graft.sim.EmbeddingOps.appendGraphXcellIndex(spark, _, r.idx, _))
+    graft.sim.EmbeddingOps.annGraphXcellIndexed(spark, dir, r.idx)
   }
 
   /** Streamed twin of the ROUTED append: arrival micro-batches land
@@ -1175,60 +1023,35 @@ object Streams {
     * family already had its streamed maintenance twin.
     */
   def graphRoutedIndexStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_graph_routed_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val emb = graft.Tables.embeddings(spark, dir)
-      .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
-    val arrival = col("vec_id") % 10 === 9
+    val r = new Replay(spark, "graft_graph_routed_stream")
+    val emb = vectors(spark, dir)
     graft.sim.EmbeddingOps.buildGraphIndexOn(spark,
-      emb.filter(!arrival), sub("idx"),
+      emb.filter(!IncrArrival), r.idx,
       knownN = graft.sim.EmbeddingOps.cachedCount(dir, "pre",
-        emb.filter(!arrival)))
-    graft.sim.EmbeddingOps.buildGraphLayerOn(spark, sub("idx"))
-    val arr = emb.filter(arrival)
-    arr.filter(expr("(vec_id div 10) % 2 = 0")).coalesce(1)
-      .write.parquet(sub("in"))
-    arr.filter(expr("(vec_id div 10) % 2 = 1")).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.sim.EmbeddingOps.appendGraphRoutedIndex(spark, batch,
-          sub("idx"), batchId)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.sim.EmbeddingOps.annGraphRoutedIndexed(spark, dir, sub("idx"))
+        emb.filter(!IncrArrival)))
+    graft.sim.EmbeddingOps.buildGraphLayerOn(spark, r.idx)
+    r.fold(r.stage(arrivalShards(emb)))(
+      graft.sim.EmbeddingOps.appendGraphRoutedIndex(spark, _, r.idx, _))
+    graft.sim.EmbeddingOps.annGraphRoutedIndexed(spark, dir, r.idx)
   }
 
+  /** The streamed ingest twin of the SQ8 index lifecycle
+    * (q_ann_sq8_incr): min/max trained on the 9/10 build slice, the
+    * arriving 1/10 split across two micro-batches, each encoded under
+    * the STORED training and landed as its own batch partition (the
+    * replay-idempotent dynamic overwrite the IVF append uses — a
+    * restarted micro-batch overwrites itself, exactly-once). The
+    * drained index must answer the same oracle as the batch incr gate:
+    * how the arrivals were sliced into batches is unobservable.
+    */
   def sq8IndexStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_sq8_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val emb = graft.Tables.embeddings(spark, dir)
-      .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
-    val arrival = col("vec_id") % 10 === 9
+    val r = new Replay(spark, "graft_sq8_stream")
+    val emb = vectors(spark, dir)
     graft.sim.EmbeddingOps.buildSq8IndexOn(spark,
-      emb.filter(!arrival), emb.filter(!arrival), sub("idx"))
-    val arr = emb.filter(arrival)
-    arr.filter(expr("(vec_id div 10) % 2 = 0")).coalesce(1)
-      .write.parquet(sub("in"))
-    arr.filter(expr("(vec_id div 10) % 2 = 1")).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.sim.EmbeddingOps.appendSq8Index(spark, batch, sub("idx"),
-          batchId): Unit
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.sim.EmbeddingOps.annSq8Indexed(spark, dir, sub("idx"))
+      emb.filter(!IncrArrival), emb.filter(!IncrArrival), r.idx)
+    r.fold(r.stage(arrivalShards(emb)))(
+      graft.sim.EmbeddingOps.appendSq8Index(spark, _, r.idx, _))
+    graft.sim.EmbeddingOps.annSq8Indexed(spark, dir, r.idx)
   }
 
   /** The streamed DELETE twin of the k-means index lifecycle: the same
@@ -1243,32 +1066,16 @@ object Streams {
     * replay) must be unobservable in the answer.
     */
   def ivfDeleteStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_ivfdel_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val emb = graft.Tables.embeddings(spark, dir)
-      .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
-    val arrival = col("vec_id") % 10 === 9
+    val r = new Replay(spark, "graft_ivfdel_stream")
+    val emb = vectors(spark, dir)
     graft.sim.EmbeddingOps.buildIvfIndexKmeansOn(spark,
-      emb.filter(!arrival), emb.filter(!arrival), sub("idx"), "stream-del")
-    graft.sim.EmbeddingOps.appendIvfIndexKmeans(spark, emb.filter(arrival),
-      sub("idx"), batchId = 0L): Unit
-    val victims = emb.filter(graft.sim.EmbeddingOps.DeleteVictims)
-      .select("vec_id")
-    victims.filter(expr("(vec_id div 5) % 2 = 0")).coalesce(1)
-      .write.parquet(sub("in"))
-    victims.filter(expr("(vec_id div 5) % 2 = 1")).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.sim.EmbeddingOps.deleteIvfPq(spark, batch, sub("idx"), batchId)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.sim.EmbeddingOps.annIvfKmeansIndexed(spark, dir, sub("idx"))
+      emb.filter(!IncrArrival), emb.filter(!IncrArrival), r.idx, "stream-del")
+    graft.sim.EmbeddingOps.appendIvfIndexKmeans(spark, emb.filter(IncrArrival),
+      r.idx, batchId = 0L): Unit
+    r.fold(r.stage(parity(emb.filter(graft.sim.EmbeddingOps.DeleteVictims)
+        .select("vec_id"), expr("vec_id div 5"))))(
+      graft.sim.EmbeddingOps.deleteIvfPq(spark, _, r.idx, _))
+    graft.sim.EmbeddingOps.annIvfKmeansIndexed(spark, dir, r.idx)
   }
 
   /** The streamed DELETE twin for the persisted BM25 index: document
@@ -1280,26 +1087,12 @@ object Streams {
     * read-time df) included.
     */
   def bm25DeleteStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_bm25del_stream")
-    def sub(n: String) = base.resolve(n).toString
-    graft.text.RetrievalOps.buildBm25Index(spark, dir, sub("idx"))
-    val victims = graft.Tables.documents(spark, dir)
-      .filter(col("doc_id") % 7 === 3).select("doc_id")
-    victims.filter(expr("(doc_id div 7) % 2 = 0")).coalesce(1)
-      .write.parquet(sub("in"))
-    victims.filter(expr("(doc_id div 7) % 2 = 1")).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.text.RetrievalOps.deleteBm25Docs(spark, batch, sub("idx"), batchId)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.text.RetrievalOps.bm25Served(spark, sub("idx"))
+    val r = new Replay(spark, "graft_bm25del_stream")
+    graft.text.RetrievalOps.buildBm25Index(spark, dir, r.idx)
+    r.fold(r.stage(parity(graft.Tables.documents(spark, dir)
+        .filter(col("doc_id") % 7 === 3).select("doc_id"), expr("doc_id div 7"))))(
+      graft.text.RetrievalOps.deleteBm25Docs(spark, _, r.idx, _))
+    graft.text.RetrievalOps.bm25Served(spark, r.idx)
   }
 
   /** The FULL star-maintenance loop as ONE stream — the capstone
@@ -1327,44 +1120,33 @@ object Streams {
     * partition instead of appending.
     */
   def factScd2LifecycleStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_scd2life_stream")
-    def sub(n: String) = base.resolve(n).toString
+    val r = new Replay(spark, "graft_scd2life_stream")
     val cut = graft.etl.Scd.PitLoadDate
     val o = graft.Tables.orders(spark, dir).select(
       col("o_orderkey").cast("long").as("id_pedido"),
       col("o_custkey").cast("long").as("id_cliente"),
       col("o_orderdate").as("data_pedido"),
       col("o_totalprice").cast("double").as("valor_pedido"))
-    o.filter(col("data_pedido") < lit(cut)).coalesce(1).write.parquet(sub("in"))
-    o.filter(col("data_pedido") >= lit(cut)).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    graft.etl.Scd.initStateStore(spark, dir, sub("state"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val hasPostCut = batch.filter(col("data_pedido") >= lit(cut)).limit(1)
-          .count() > 0
-        // the dim merge applies once, guarded by the STORE's own commit
-        // watermark (its single update batch is store-batch 0) — no
-        // driver-side var, so a restarted query cannot re-apply it
-        if (hasPostCut)
-          graft.etl.Scd.applyBatchToStore(spark, sub("state"),
-            graft.etl.Scd.updateBatch(spark, dir), cut, batchId = 0L)
-        // the fact sink is idempotent by batch id: each micro-batch owns
-        // its batch=<id> partition and a replay dynamically overwrites it
-        // — no duplicated fact rows under redelivery
-        graft.etl.Scd.pitResolve(batch,
-            graft.etl.Scd.readStateStore(spark, sub("state")))
-          .withColumn("batch", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch").parquet(sub("fato"))
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(sub("fato"))
+    graft.etl.Scd.initStateStore(spark, dir, r.state)
+    r.fold(r.stage(Seq(o.filter(col("data_pedido") < lit(cut)),
+        o.filter(col("data_pedido") >= lit(cut))))) { (batch, batchId) =>
+      val hasPostCut = batch.filter(col("data_pedido") >= lit(cut)).limit(1)
+        .count() > 0
+      // the dim merge applies once, guarded by the STORE's own commit
+      // watermark (its single update batch is store-batch 0) — no
+      // driver-side var, so a restarted query cannot re-apply it
+      if (hasPostCut)
+        graft.etl.Scd.applyBatchToStore(spark, r.state,
+          graft.etl.Scd.updateBatch(spark, dir), cut, batchId = 0L)
+      // the fact sink is idempotent by batch id: each micro-batch owns
+      // its batch=<id> partition and a replay dynamically overwrites it
+      // — no duplicated fact rows under redelivery
+      graft.etl.Scd.pitResolve(batch, graft.etl.Scd.readStateStore(spark, r.state))
+        .withColumn("batch", lit(batchId))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch").parquet(r.out)
+    }
+    spark.read.parquet(r.out)
       .select("id_pedido", "id_cliente", "data_pedido", "valor_pedido",
         "segmento", "versao_desde")
       .orderBy("id_pedido")
@@ -1388,26 +1170,10 @@ object Streams {
     * partition-insensitive, so batch boundaries cannot leak.
     */
   def sketchHllStreamed(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    val base = tempDir("graft_hll_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val docs = graft.Tables.documents(spark, dir)
-      .selectExpr("CAST(doc_id AS BIGINT) AS doc_id", "text")
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.parquet(sub("in"))
-    docs.filter(col("doc_id") % 2 === 1).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val state = sub("state")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.text.CurationOps.hllApplyBatch(spark, state, batch, batchId)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.text.CurationOps.hllReadState(spark, state).orderBy("balde")
+    val r = new Replay(spark, "graft_hll_stream")
+    r.fold(r.stage(docShards(spark, dir, DocText)))(
+      graft.text.CurationOps.hllApplyBatch(spark, r.state, _, _))
+    graft.text.CurationOps.hllReadState(spark, r.state).orderBy("balde")
   }
 
   /** The per-day grouped HLL register table maintained as a STREAM —
@@ -1419,25 +1185,11 @@ object Streams {
     * bit-identical to the one-shot scan (same oracle).
     */
   def hllGroupedStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_hll_grouped_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val ev = graft.Tables.events(spark, dir)
-      .selectExpr("CAST(event_id AS BIGINT) AS event_id", "ts", "user_id")
-    ev.filter(col("event_id") % 2 === 0).coalesce(1).write.parquet(sub("in"))
-    ev.filter(col("event_id") % 2 === 1).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val state = sub("state")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.ops.GraphOps.hllGroupedApplyBatch(spark, state, batch, batchId)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.GraphOps.hllGroupedReadState(spark, state).orderBy("dia", "balde")
+    val r = new Replay(spark, "graft_hll_grouped_stream")
+    r.fold(r.stage(parity(graft.Tables.events(spark, dir).selectExpr(
+        "CAST(event_id AS BIGINT) AS event_id", "ts", "user_id"), col("event_id"))))(
+      graft.ops.GraphOps.hllGroupedApplyBatch(spark, r.state, _, _))
+    graft.ops.GraphOps.hllGroupedReadState(spark, r.state).orderBy("dia", "balde")
   }
 
   /** The events constraint suite maintained as a STREAM — incremental
@@ -1450,25 +1202,11 @@ object Streams {
     * visible continuously, never a full rescan.
     */
   def dqEventsStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_dq_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val ev = graft.Tables.events(spark, dir)
-      .select("event_id", "event_type", "value", "props")
-    ev.filter(col("event_id") % 2 === 0).coalesce(1).write.parquet(sub("in"))
-    ev.filter(col("event_id") % 2 === 1).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val state = sub("state")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.ops.QualityOps.dqApplyBatch(spark, state, batch, batchId)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.QualityOps.dqReadState(spark, state)
+    val r = new Replay(spark, "graft_dq_stream")
+    r.fold(r.stage(parity(graft.Tables.events(spark, dir)
+        .select("event_id", "event_type", "value", "props"), col("event_id"))))(
+      graft.ops.QualityOps.dqApplyBatch(spark, r.state, _, _))
+    graft.ops.QualityOps.dqReadState(spark, r.state)
   }
 
   /** The NATIVE session_window sessionizer run as a real STREAMING
@@ -1488,12 +1226,7 @@ object Streams {
     import org.apache.spark.sql.expressions.Window
     val gapMin = 30
     val delayMin = 10
-    val base = tempDir("graft_sessw_stream")
-    val streamDir = base.resolve("in"); java.nio.file.Files.createDirectory(streamDir)
-    val stage = base.resolve("stage").toString
-    val outDir = base.resolve("out").toString
-    val cpDir = base.resolve("cp").toString
-
+    val r = new Replay(spark, "graft_sessw_stream")
     val ev = graft.Tables.events(spark, dir).select(
       col("event_id").cast("long").as("event_id"), col("ts"),
       col("user_id").cast("long").as("user_id"),
@@ -1507,35 +1240,15 @@ object Streams {
         .select(col("event_id"), col("ts"), col("user_id"),
           col("value").cast("decimal(18,2)").as("value"))
     }
-    def stageFile(df: DataFrame, name: String, mtime: Long): Unit = {
-      df.coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dest = streamDir.resolve(name)
-      java.nio.file.Files.copy(part.toPath, dest)
-      dest.toFile.setLastModified(mtime): Unit
-    }
-    val t0 = System.currentTimeMillis()
-    stageFile(ev, "000_events.parquet", t0)
-    stageFile(sentinel(-1L, gapMin + delayMin + 1), "001_s1.parquet", t0 + 60000)
-    stageFile(sentinel(-2L, gapMin + delayMin + 61), "002_s2.parquet", t0 + 120000)
-
-    val sch = spark.read.parquet(streamDir.toString).schema
-    val stream = spark.readStream.schema(sch)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-    val q = stream
+    r.sink(r.stage(Seq(ev, sentinel(-1L, gapMin + delayMin + 1),
+        sentinel(-2L, gapMin + delayMin + 61)))
       .withWatermark("ts", s"$delayMin minutes")
       .groupBy(col("user_id"),
         session_window(col("ts"), s"$gapMin minutes").as("sw"))
       .agg(count(lit(1)).as("n_eventos"),
         min(col("ts")).as("inicio_ts"), max(col("ts")).as("fim_ts"),
-        sum(col("value")).as("valor_dec"))
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", outDir).option("checkpointLocation", cpDir)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-
-    spark.read.parquet(outDir).filter(col("user_id") >= 0)
+        sum(col("value")).as("valor_dec")))
+      .filter(col("user_id") >= 0)
       .withColumn("sessao", row_number().over(
         Window.partitionBy("user_id").orderBy("inicio_ts")).cast("int"))
       .select(col("user_id"), col("sessao"),
@@ -1555,24 +1268,11 @@ object Streams {
     * released sample under corpus growth without rescans.
     */
   def weightedSampleStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_wsample_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val docs = graft.Tables.documents(spark, dir).select("doc_id", "n_chars")
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.parquet(sub("in"))
-    docs.filter(col("doc_id") % 2 === 1).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val state = sub("state")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.ops.QualityOps.wsApplyBatch(spark, state, batch, batchId)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.QualityOps.wsReadState(spark, state)
+    val r = new Replay(spark, "graft_wsample_stream")
+    r.fold(r.stage(parity(graft.Tables.documents(spark, dir)
+        .select("doc_id", "n_chars"), col("doc_id"))))(
+      graft.ops.QualityOps.wsApplyBatch(spark, r.state, _, _))
+    graft.ops.QualityOps.wsReadState(spark, r.state)
   }
 
   /** The hourly gap-fill maintained as a STREAM — incremental twin of
@@ -1584,25 +1284,11 @@ object Streams {
     * shape of feature-table densification under user-cohort backfills.
     */
   def timeGapfillStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_gapfill_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val ev = graft.Tables.events(spark, dir)
-      .select("user_id", "ts", "event_id", "value")
-    ev.filter(col("user_id") % 2 === 0).coalesce(1).write.parquet(sub("in"))
-    ev.filter(col("user_id") % 2 === 1).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val state = sub("state")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.ops.QualityOps.gapfillApplyBatch(spark, state, batch, batchId)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.QualityOps.gapfillReadState(spark, state)
+    val r = new Replay(spark, "graft_gapfill_stream")
+    r.fold(r.stage(parity(graft.Tables.events(spark, dir)
+        .select("user_id", "ts", "event_id", "value"), col("user_id"))))(
+      graft.ops.QualityOps.gapfillApplyBatch(spark, r.state, _, _))
+    graft.ops.QualityOps.gapfillReadState(spark, r.state)
   }
 
   /** The transition-graph triangle census maintained as a STREAM —
@@ -1613,25 +1299,11 @@ object Streams {
     * log) and the census runs at read. Same oracle as the scan.
     */
   def triangleStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_tri_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val ev = graft.Tables.events(spark, dir)
-      .select("user_id", "ts", "event_id", "props")
-    ev.filter(col("user_id") % 2 === 0).coalesce(1).write.parquet(sub("in"))
-    ev.filter(col("user_id") % 2 === 1).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val state = sub("state")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.ops.QualityOps.triangleApplyBatch(spark, state, batch, batchId)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.QualityOps.triangleReadState(spark, state)
+    val r = new Replay(spark, "graft_tri_stream")
+    r.fold(r.stage(parity(graft.Tables.events(spark, dir)
+        .select("user_id", "ts", "event_id", "props"), col("user_id"))))(
+      graft.ops.QualityOps.triangleApplyBatch(spark, r.state, _, _))
+    graft.ops.QualityOps.triangleReadState(spark, r.state)
   }
 
   /** PMI collocation counts maintained as a STREAM — incremental twin
@@ -1643,24 +1315,11 @@ object Streams {
     * atomic. Same oracle as the one-shot scan.
     */
   def phrasePmiStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_pmi_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val docs = graft.Tables.documents(spark, dir).select("doc_id", "text")
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.parquet(sub("in"))
-    docs.filter(col("doc_id") % 2 === 1).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val state = sub("state")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.ops.QualityOps.pmiApplyBatch(spark, state, batch, batchId)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.QualityOps.pmiReadState(spark, state)
+    val r = new Replay(spark, "graft_pmi_stream")
+    r.fold(r.stage(parity(graft.Tables.documents(spark, dir)
+        .select("doc_id", "text"), col("doc_id"))))(
+      graft.ops.QualityOps.pmiApplyBatch(spark, r.state, _, _))
+    graft.ops.QualityOps.pmiReadState(spark, r.state)
   }
 
   /** The equi-width histogram maintained as a STREAM — incremental twin
@@ -1672,28 +1331,14 @@ object Streams {
     * one-shot scan (same oracle).
     */
   def histogramStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_hist_stream")
-    def sub(n: String) = base.resolve(n).toString
+    val r = new Replay(spark, "graft_hist_stream")
     val li = graft.Tables.lineitem(spark, dir).select("l_orderkey", "l_extendedprice")
     val Array(mn, mx) = li.agg(org.apache.spark.sql.functions.min("l_extendedprice"),
       org.apache.spark.sql.functions.max("l_extendedprice"))
       .collect().head.toSeq.map(_.asInstanceOf[Double]).toArray
-    li.filter(col("l_orderkey") % 2 === 0).coalesce(1).write.parquet(sub("in"))
-    li.filter(col("l_orderkey") % 2 === 1).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val state = sub("state")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.ops.RelationalOps.histogramApplyBatch(
-          spark, state, batch, mn, mx, batchId)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.RelationalOps.histogramReadState(spark, state)
+    r.fold(r.stage(parity(li, col("l_orderkey"))))(
+      graft.ops.RelationalOps.histogramApplyBatch(spark, r.state, _, mn, mx, _))
+    graft.ops.RelationalOps.histogramReadState(spark, r.state)
   }
 
   /** Journey-path counts maintained as a STREAM — incremental twin of
@@ -1704,25 +1349,11 @@ object Streams {
     * same oracle as the one-shot scan.
     */
   def pathMiningStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_path_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val ev = graft.Tables.events(spark, dir)
-      .select("user_id", "ts", "event_id", "event_type")
-    ev.filter(col("user_id") % 2 === 0).coalesce(1).write.parquet(sub("in"))
-    ev.filter(col("user_id") % 2 === 1).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val state = sub("state")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.ops.GraphOps.pathApplyBatch(spark, state, batch, batchId)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.ops.GraphOps.pathReadState(spark, state)
+    val r = new Replay(spark, "graft_path_stream")
+    r.fold(r.stage(parity(graft.Tables.events(spark, dir)
+        .select("user_id", "ts", "event_id", "event_type"), col("user_id"))))(
+      graft.ops.GraphOps.pathApplyBatch(spark, r.state, _, _))
+    graft.ops.GraphOps.pathReadState(spark, r.state)
   }
 
   /** The CDC changelog ingested as a STREAM — incremental twin of
@@ -1736,24 +1367,11 @@ object Streams {
     * the batch apply.
     */
   def cdcStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_cdc_stream")
-    def sub(n: String) = base.resolve(n).toString
+    val r = new Replay(spark, "graft_cdc_stream")
     val log = graft.etl.Cdc.changelog(spark, dir)
-    log.filter(col("seq") === 2).coalesce(1).write.parquet(sub("in"))
-    log.filter(col("seq") === 1).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val state = sub("state")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.etl.Cdc.cdcApplyBatch(spark, state, batch, batchId)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.etl.Cdc.cdcReadState(spark, state)
+    r.fold(r.stage(Seq(log.filter(col("seq") === 2), log.filter(col("seq") === 1))))(
+      graft.etl.Cdc.cdcApplyBatch(spark, r.state, _, _))
+    graft.etl.Cdc.cdcReadState(spark, r.state)
   }
 
   /** The BM25 inverted index maintained as a STREAM — incremental twin
@@ -1765,25 +1383,10 @@ object Streams {
     * build no matter how documents split across batches (same oracle).
     */
   def bm25Streamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_bm25_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val docs = graft.Tables.documents(spark, dir)
-      .selectExpr("CAST(doc_id AS BIGINT) AS doc_id", "text")
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.parquet(sub("in"))
-    docs.filter(col("doc_id") % 2 === 1).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val state = sub("state")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.text.RetrievalOps.bm25ApplyBatch(spark, state, batch, batchId)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.text.RetrievalOps.bm25ReadState(spark, state)
+    val r = new Replay(spark, "graft_bm25_stream")
+    r.fold(r.stage(docShards(spark, dir, DocText)))(
+      graft.text.RetrievalOps.bm25ApplyBatch(spark, r.state, _, _))
+    graft.text.RetrievalOps.bm25ReadState(spark, r.state)
   }
 
   /** The positional index maintained under document arrivals — the
@@ -1795,25 +1398,10 @@ object Streams {
     * shares q_phrase_search's oracle.
     */
   def phraseSearchStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_phrase_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val docs = graft.Tables.documents(spark, dir)
-      .selectExpr("CAST(doc_id AS BIGINT) AS doc_id", "text")
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.parquet(sub("in"))
-    docs.filter(col("doc_id") % 2 === 1).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val state = sub("state")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.text.RetrievalOps.phraseApplyBatch(spark, state, batch, batchId)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.text.RetrievalOps.phraseReadState(spark, state)
+    val r = new Replay(spark, "graft_phrase_stream")
+    r.fold(r.stage(docShards(spark, dir, DocText)))(
+      graft.text.RetrievalOps.phraseApplyBatch(spark, r.state, _, _))
+    graft.text.RetrievalOps.phraseReadState(spark, r.state)
   }
 
   /** The heavy-hitter summary maintained as a STREAM — the incremental
@@ -1829,25 +1417,10 @@ object Streams {
     * batch form — gated against the same GROUP BY/HAVING oracle.
     */
   def heavyHittersStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_hh_stream")
-    def sub(n: String) = base.resolve(n).toString
-    val docs = graft.Tables.documents(spark, dir)
-      .selectExpr("CAST(doc_id AS BIGINT) AS doc_id", "text")
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.parquet(sub("in"))
-    docs.filter(col("doc_id") % 2 === 1).coalesce(1)
-      .write.mode("append").parquet(sub("in"))
-    val state = sub("state")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(sub("in")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(sub("in"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.text.CurationOps.hhApplyBatch(spark, state, batch, batchId)
-      }
-      .option("checkpointLocation", sub("cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.text.CurationOps.hhResolve(spark, state, spark.read.parquet(sub("in")))
+    val r = new Replay(spark, "graft_hh_stream")
+    r.fold(r.stage(docShards(spark, dir, DocText)))(
+      graft.text.CurationOps.hhApplyBatch(spark, r.state, _, _))
+    graft.text.CurationOps.hhResolve(spark, r.state, spark.read.parquet(r.in))
   }
 
   /** One signal-passing doc arriving at the streamed dedup stage (public
@@ -1912,38 +1485,37 @@ object Streams {
     * transfers across micro-batches, so the gate proves the retroactive
     * release path, not just in-batch minima.
     */
-  def corpusCurateStreamed(spark: SparkSession, dir: String): DataFrame = {
+  def corpusCurateStreamed(spark: SparkSession, dir: String): DataFrame =
+    curateStreamed(spark, dir, "graft_curate_stream", None)
+
+  /** The streamed curation pass shared by the plain, fluent and
+    * low-perplexity forms: signal survivors (semi-joined against the
+    * statically derived `keep` set, when given) run the keep-min dedup
+    * state, and the per-language rollup nets the claims at read time.
+    */
+  private def curateStreamed(spark: SparkSession, dir: String, tag: String,
+      keep: Option[DataFrame]): DataFrame = {
     import spark.implicits._
-    runDocStreamGate(spark, dir, "curate") { stream =>
-      curateKeepMinStream(
-        graft.text.CurationOps.curateSignals(stream, barrier = false)
-          .where("qualidade = 'boa' AND lang_ok = 1 AND repetitivo = 0")
+    val r = new Replay(spark, tag)
+    val survivors = graft.text.CurationOps
+      .curateSignals(r.stage(docShards(spark, dir)), barrier = false)
+      .where("qualidade = 'boa' AND lang_ok = 1 AND repetitivo = 0")
+    r.sink(curateKeepMinStream(
+        keep.fold(survivors)(k => survivors.join(broadcast(k), Seq("doc_id"), "left_semi"))
           .selectExpr("md5(text) AS hash", "doc_id", "lang", "n_tokens")
-          .as[CurDoc]).toDF()
-    } { sink =>
-      sink.distinct() // at-least-once absorber, as in the other streams
-        .groupBy("doc_id", "lang", "n_tokens")
-        .agg(sum(col("delta")).as("net"))
-        .where("net > 0")
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("total_tokens"))
-        .selectExpr("lang", "n_docs", "total_tokens",
-          "CAST(total_tokens AS DOUBLE) / CAST(n_docs AS DOUBLE) AS media_tokens")
-        .orderBy("lang")
-    }
+          .as[CurDoc]).toDF())
+      .distinct() // at-least-once absorber, as in the other streams
+      .groupBy("doc_id", "lang", "n_tokens")
+      .agg(sum(col("delta")).as("net"))
+      .where("net > 0")
+      .groupBy("lang")
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("n_tokens")).as("total_tokens"))
+      .selectExpr("lang", "n_docs", "total_tokens",
+        "CAST(total_tokens AS DOUBLE) / CAST(n_docs AS DOUBLE) AS media_tokens")
+      .orderBy("lang")
   }
 
-  /** [[corpusCurateStreamed]] + the fluency-prior gate — the CCNet shape
-    * in its streaming form: the unigram weight table and the per-doc
-    * fluency verdicts are derived STATICALLY ahead of the stream (the
-    * trained prior — exactly how a perplexity model is deployed: fit
-    * once, score arrivals against it), and each micro-batch semi-joins
-    * its signal survivors against that broadcastable keep set before the
-    * keep-min dedup state. Gated against the SAME oracle as the batch
-    * q_corpus_curate_fluent, so batch boundaries, arrival order, and the
-    * static-prior deployment split must all be invisible in the result.
-    */
   /** [[graft.text.CurationOps.ngramNovelty]] under streaming arrivals:
     * the reference shingle-hash store is derived statically (at 100 TB
     * it is the previous crawl's persisted store), each arriving doc's
@@ -1960,23 +1532,29 @@ object Streams {
     val ref = statics
       .filter(s"source IN (${CurationOps.noveltyRefIn})")
       .select(explode(col("shd")).as("h")).distinct()
-    runDocStreamGate(spark, dir, "novelty",
-      cols = Seq("CAST(doc_id AS BIGINT) AS doc_id", "text")) { stream =>
-      stream
+    val r = new Replay(spark, "graft_novelty_stream")
+    val novel = r.sink(r.stage(docShards(spark, dir, DocText))
         .selectExpr("doc_id", s"${CurationOps.hashedShinglesExpr} AS shd")
         .select(col("doc_id"), explode(col("shd")).as("h"))
-        .join(ref, Seq("h"), "left_anti")
-    } { sink =>
-      val novel = sink.groupBy("doc_id").agg(count(lit(1)).as("n_novos"))
-      statics.selectExpr("doc_id", "CAST(size(shd) AS INTEGER) AS n_shingles")
-        .join(novel, Seq("doc_id"), "left")
-        .na.fill(0L, Seq("n_novos"))
-        .selectExpr("doc_id", "n_shingles",
-          "CAST(n_novos AS INTEGER) AS n_novos",
-          "CAST(n_novos AS DOUBLE) / CAST(n_shingles AS DOUBLE) AS taxa_nova")
-        .orderBy("doc_id")
-    }
+        .join(ref, Seq("h"), "left_anti"))
+      .groupBy("doc_id").agg(count(lit(1)).as("n_novos"))
+    statics.selectExpr("doc_id", "CAST(size(shd) AS INTEGER) AS n_shingles")
+      .join(novel, Seq("doc_id"), "left")
+      .na.fill(0L, Seq("n_novos"))
+      .selectExpr("doc_id", "n_shingles",
+        "CAST(n_novos AS INTEGER) AS n_novos",
+        "CAST(n_novos AS DOUBLE) / CAST(n_shingles AS DOUBLE) AS taxa_nova")
+      .orderBy("doc_id")
   }
+
+  /** The LM-scored doc gates' token stream: the parity-staged documents
+    * outside the training slice, tokenized.
+    */
+  private def lmTokens(r: Replay, spark: SparkSession, dir: String): DataFrame =
+    r.stage(docShards(spark, dir, DocText))
+      .filter(col("doc_id") % graft.text.CurationOps.LmTrainMod =!= 0)
+      .selectExpr("doc_id",
+        s"${graft.text.TextExprs.tokens("text").spark} AS toks")
 
   /** [[graft.text.CurationOps.lmPerplexity]] under streaming arrivals —
     * the deployed shape of a perplexity filter: the bigram/unigram count
@@ -1997,16 +1575,10 @@ object Streams {
     val (uni, bi) = CurationOps.lmTrainTables(statics)
     val biB = graft.Checkpoint.barrier(bi)
     val nn = uni.agg(sum("n_w")).collect()(0).getLong(0)
-    runDocStreamGate(spark, dir, "lmppl",
-      cols = Seq("CAST(doc_id AS BIGINT) AS doc_id", "text")) { stream =>
-      val toks = stream
-        .filter(col("doc_id") % CurationOps.LmTrainMod =!= 0)
-        .selectExpr("doc_id",
-          s"${graft.text.TextExprs.tokens("text").spark} AS toks")
-      CurationOps.lmBitsSelect(
-        CurationOps.lmJoined(CurationOps.lmTokenTriples(toks), uni, biB),
-        nn.toString)
-    } { sink => CurationOps.lmDocAgg(sink) }
+    val r = new Replay(spark, "graft_lmppl_stream")
+    CurationOps.lmDocAgg(r.sink(CurationOps.lmBitsSelect(
+      CurationOps.lmJoined(CurationOps.lmTokenTriples(lmTokens(r, spark, dir)), uni, biB),
+      nn.toString)))
   }
 
   /** [[graft.text.CurationOps.lmPerplexity3]] under streaming arrivals —
@@ -2027,24 +1599,18 @@ object Streams {
     val bi = graft.Checkpoint.barrier(bi0)
     val tri = graft.Checkpoint.barrier(CurationOps.lmTriTable(statics))
     val nn = uni.agg(sum("n_w")).collect()(0).getLong(0)
-    runDocStreamGate(spark, dir, "lmppl3",
-      cols = Seq("CAST(doc_id AS BIGINT) AS doc_id", "text")) { stream =>
-      val toks = stream
-        .filter(col("doc_id") % CurationOps.LmTrainMod =!= 0)
-        .selectExpr("doc_id",
-          s"${graft.text.TextExprs.tokens("text").spark} AS toks")
-      CurationOps.lmBits3Select(
-        CurationOps.lmTokenQuads(toks)
-          .join(tri, Seq("w0", "w1", "w2"), "left")
-          .join(bi.select(col("w1").as("w0"), col("w2").as("w1"),
-            col("n_ab").as("n_ctx")), Seq("w0", "w1"), "left")
-          .join(bi, Seq("w1", "w2"), "left")
-          .join(uni.select(col("w").as("w1"), col("n_w").as("n_b")),
-            Seq("w1"), "left")
-          .join(uni.select(col("w").as("w2"), col("n_w").as("n_c")),
-            Seq("w2"), "left")
-          .withColumn("nn", lit(nn)))
-    } { sink => CurationOps.lmDocAgg(sink) }
+    val r = new Replay(spark, "graft_lmppl3_stream")
+    CurationOps.lmDocAgg(r.sink(CurationOps.lmBits3Select(
+      CurationOps.lmTokenQuads(lmTokens(r, spark, dir))
+        .join(tri, Seq("w0", "w1", "w2"), "left")
+        .join(bi.select(col("w1").as("w0"), col("w2").as("w1"),
+          col("n_ab").as("n_ctx")), Seq("w0", "w1"), "left")
+        .join(bi, Seq("w1", "w2"), "left")
+        .join(uni.select(col("w").as("w1"), col("n_w").as("n_b")),
+          Seq("w1"), "left")
+        .join(uni.select(col("w").as("w2"), col("n_w").as("n_c")),
+          Seq("w2"), "left")
+        .withColumn("nn", lit(nn)))))
   }
 
   /** [[graft.text.CurationOps.dsirScore]] under streaming arrivals: the
@@ -2058,48 +1624,34 @@ object Streams {
     val T = graft.text.TextExprs.tokens("text")
     val ratio = graft.Checkpoint.barrier(
       CurationOps.dsirRatioOf(CurationOps.dsirExplode(spark, dir)))
-    runDocStreamGate(spark, dir, "dsir",
-      cols = Seq("CAST(doc_id AS BIGINT) AS doc_id", "text")) { stream =>
-      stream
+    val r = new Replay(spark, "graft_dsir_stream")
+    r.sink(r.stage(docShards(spark, dir, DocText))
         .selectExpr("doc_id", s"${T.spark} AS t")
         .select(col("doc_id"), explode(col("t")).as("term"))
         .selectExpr("doc_id", s"${CurationOps.dsirBucketExpr} AS balde")
         .join(broadcast(ratio), Seq("balde"))
-        .select("doc_id", "v")
-    } { sink =>
-      sink.groupBy("doc_id")
-        .agg(sum("v").as("pontuacao"), count(lit(1)).as("n_tokens"))
-        .selectExpr("doc_id", "CAST(n_tokens AS INTEGER) AS n_tokens",
-          "CAST(pontuacao AS BIGINT) AS pontuacao",
-          "CAST(pontuacao * 1000 div n_tokens AS BIGINT) AS pontuacao_norm")
-        .orderBy("doc_id")
-    }
+        .select("doc_id", "v"))
+      .groupBy("doc_id")
+      .agg(sum("v").as("pontuacao"), count(lit(1)).as("n_tokens"))
+      .selectExpr("doc_id", "CAST(n_tokens AS INTEGER) AS n_tokens",
+        "CAST(pontuacao AS BIGINT) AS pontuacao",
+        "CAST(pontuacao * 1000 div n_tokens AS BIGINT) AS pontuacao_norm")
+      .orderBy("doc_id")
   }
 
-  def corpusCurateFluentStreamed(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val fluent = graft.Checkpoint.barrier(
-      graft.text.CurationOps.fluentDocIds(spark, dir))
-    runDocStreamGate(spark, dir, "curate_fluent") { stream =>
-      curateKeepMinStream(
-        graft.text.CurationOps.curateSignals(stream, barrier = false)
-          .where("qualidade = 'boa' AND lang_ok = 1 AND repetitivo = 0")
-          .join(broadcast(fluent), Seq("doc_id"), "left_semi")
-          .selectExpr("md5(text) AS hash", "doc_id", "lang", "n_tokens")
-          .as[CurDoc]).toDF()
-    } { sink =>
-      sink.distinct()
-        .groupBy("doc_id", "lang", "n_tokens")
-        .agg(sum(col("delta")).as("net"))
-        .where("net > 0")
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("total_tokens"))
-        .selectExpr("lang", "n_docs", "total_tokens",
-          "CAST(total_tokens AS DOUBLE) / CAST(n_docs AS DOUBLE) AS media_tokens")
-        .orderBy("lang")
-    }
-  }
+  /** [[corpusCurateStreamed]] + the fluency-prior gate — the CCNet shape
+    * in its streaming form: the unigram weight table and the per-doc
+    * fluency verdicts are derived STATICALLY ahead of the stream (the
+    * trained prior — exactly how a perplexity model is deployed: fit
+    * once, score arrivals against it), and each micro-batch semi-joins
+    * its signal survivors against that broadcastable keep set before the
+    * keep-min dedup state. Gated against the SAME oracle as the batch
+    * q_corpus_curate_fluent, so batch boundaries, arrival order, and the
+    * static-prior deployment split must all be invisible in the result.
+    */
+  def corpusCurateFluentStreamed(spark: SparkSession, dir: String): DataFrame =
+    curateStreamed(spark, dir, "graft_curate_fluent_stream", Some(
+      graft.Checkpoint.barrier(graft.text.CurationOps.fluentDocIds(spark, dir))))
 
   /** [[graft.text.CurationOps.corpusCuratePpl]] under streaming
     * arrivals: the low-perplexity keep set is the statically trained
@@ -2109,30 +1661,9 @@ object Streams {
     * keep-min ownership state resolving cross-batch duplicates. Same
     * oracle as the batch form.
     */
-  def corpusCuratePplStreamed(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val keep = graft.Checkpoint.barrier(
-      graft.text.CurationOps.pplKeepDocIds(spark, dir))
-    runDocStreamGate(spark, dir, "curate_ppl") { stream =>
-      curateKeepMinStream(
-        graft.text.CurationOps.curateSignals(stream, barrier = false)
-          .where("qualidade = 'boa' AND lang_ok = 1 AND repetitivo = 0")
-          .join(broadcast(keep), Seq("doc_id"), "left_semi")
-          .selectExpr("md5(text) AS hash", "doc_id", "lang", "n_tokens")
-          .as[CurDoc]).toDF()
-    } { sink =>
-      sink.distinct()
-        .groupBy("doc_id", "lang", "n_tokens")
-        .agg(sum(col("delta")).as("net"))
-        .where("net > 0")
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("total_tokens"))
-        .selectExpr("lang", "n_docs", "total_tokens",
-          "CAST(total_tokens AS DOUBLE) / CAST(n_docs AS DOUBLE) AS media_tokens")
-        .orderBy("lang")
-    }
-  }
+  def corpusCuratePplStreamed(spark: SparkSession, dir: String): DataFrame =
+    curateStreamed(spark, dir, "graft_curate_ppl_stream", Some(
+      graft.Checkpoint.barrier(graft.text.CurationOps.pplKeepDocIds(spark, dir))))
 
   // ------------------------------------------------------ streamed funnel
 
@@ -2235,48 +1766,15 @@ object Streams {
     * (window, type) — the watermark horizon bounds it.
     */
   def eventsSlidingStreamed(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val delayMin = 10
-    val base = tempDir("graft_sliding_stream")
-    val streamDir = base.resolve("in")
-    java.nio.file.Files.createDirectory(streamDir)
-    val stage = base.resolve("stage").toString
-    val outDir = base.resolve("out").toString
-    val cpDir = base.resolve("cp").toString
-    val ev = graft.Tables.events(spark, dir).select(
-      col("event_id").cast("long").as("event_id"), col("ts"),
-      col("user_id").cast("long").as("user_id"), col("event_type"),
-      col("value").cast("double").as("value"))
-    val maxTs = ev.agg(max("ts")).head().getTimestamp(0)
-    def sentinel(uid: Long, offsetMin: Int) = Seq(
-      Event(uid, new java.sql.Timestamp(
-        maxTs.getTime + offsetMin * 60000L), uid, "sentinel", 0.0)).toDF()
-    def stageFile(df: DataFrame, name: String, mtime: Long): Unit = {
-      df.coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dest = streamDir.resolve(name)
-      java.nio.file.Files.copy(part.toPath, dest)
-      dest.toFile.setLastModified(mtime)
-    }
-    val t0 = System.currentTimeMillis()
-    stageFile(ev, "000_events.parquet", t0)
+    val r = new Replay(spark, "graft_sliding_stream")
     // the sentinel's event time exceeds every real window end (+1h) plus
     // the watermark delay, so every real window finalizes
-    stageFile(sentinel(-1L, 60 + delayMin + 1), "001_s1.parquet", t0 + 60000)
-    val sch = spark.read.parquet(streamDir.toString).schema
-    val stream = spark.readStream.schema(sch)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-    val q = stream
+    r.sink(r.stage(withSentinels(typedEvents(spark, dir), -1L -> (60 + delayMin + 1)))
       .withWatermark("ts", s"$delayMin minutes")
       .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("soma_valor"))
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", outDir).option("checkpointLocation", cpDir)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(outDir)
+        sum(col("value").cast("decimal(18,2)")).cast("double").as("soma_valor")))
       .filter(col("event_type") =!= "sentinel")
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("inicio"),
@@ -2296,44 +1794,39 @@ object Streams {
     * SQL, just the table itself.
     */
   def dedupEventsStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = tempDir("graft_evdedup_stream")
-    val streamDir = base.resolve("in")
-    java.nio.file.Files.createDirectory(streamDir)
-    val stage = base.resolve("stage").toString
-    val outDir = base.resolve("out").toString
-    val cpDir = base.resolve("cp").toString
-    val ev = graft.Tables.events(spark, dir).select(
-      col("event_id").cast("long").as("event_id"), col("ts"),
-      col("user_id").cast("long").as("user_id"), col("event_type"),
-      col("value").cast("double").as("value"))
-    def stageFile(df: DataFrame, name: String, mtime: Long): Unit = {
-      df.coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dest = streamDir.resolve(name)
-      java.nio.file.Files.copy(part.toPath, dest)
-      dest.toFile.setLastModified(mtime)
-    }
-    val t0 = System.currentTimeMillis()
-    stageFile(ev, "000_events.parquet", t0)
-    // the at-least-once re-send: every 7th event again, verbatim
-    stageFile(ev.filter(col("event_id") % 7 === 0), "001_resend.parquet",
-      t0 + 60000)
-    val sch = spark.read.parquet(streamDir.toString).schema
-    val stream = spark.readStream.schema(sch)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-    // the delivery window spans the staged corpus, so a re-send is never
+    val r = new Replay(spark, "graft_evdedup_stream")
+    val ev = typedEvents(spark, dir)
+    // the at-least-once re-send: every 7th event again, verbatim; the
+    // delivery window spans the staged corpus, so a re-send is never
     // "late" — it always meets its state row and dedups
-    val q = stream
-      .withWatermark("ts", "3650 days")
-      .dropDuplicatesWithinWatermark("event_id")
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", outDir).option("checkpointLocation", cpDir)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(outDir)
+    r.sink(r.stage(Seq(ev, ev.filter(col("event_id") % 7 === 0)))
+        .withWatermark("ts", "3650 days")
+        .dropDuplicatesWithinWatermark("event_id"))
       .select("event_id", "ts", "user_id", "event_type", "value")
       .orderBy("event_id")
+  }
+
+  /** The events table under the [[Event]] schema, `value` as given. */
+  private def typedEvents(spark: SparkSession, dir: String,
+      value: Column = col("value").cast("double")): DataFrame =
+    graft.Tables.events(spark, dir).select(
+      col("event_id").cast("long").as("event_id"), col("ts"),
+      col("user_id").cast("long").as("user_id"), col("event_type"),
+      value.as("value"))
+
+  /** `ev` followed by one far-future sentinel event per (negative user
+    * id, minutes past the last real event), each its own shard: staged
+    * after the real events, they advance the watermark and fire the
+    * timers as the passage of time would in a live stream. No real row
+    * has a negative user id, so the read-back filters them out.
+    */
+  private def withSentinels(ev: DataFrame, offsets: (Long, Int)*): Seq[DataFrame] = {
+    import ev.sparkSession.implicits._
+    val maxTs = ev.agg(max("ts")).head().getTimestamp(0)
+    ev +: offsets.map { case (uid, offsetMin) =>
+      Seq(Event(uid, new java.sql.Timestamp(maxTs.getTime + offsetMin * 60000L),
+        uid, "sentinel", 0.0)).toDF()
+    }
   }
 
   /** The streamed funnel as a gated batch-comparable query: one real
@@ -2345,41 +1838,11 @@ object Streams {
   def funnelStreamed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val delayMin = 10
-    val base = tempDir("graft_funnel_stream")
-    val streamDir = base.resolve("in")
-    java.nio.file.Files.createDirectory(streamDir)
-    val stage = base.resolve("stage").toString
-    val outDir = base.resolve("out").toString
-    val cpDir = base.resolve("cp").toString
-    val ev = graft.Tables.events(spark, dir).select(
-      col("event_id").cast("long").as("event_id"), col("ts"),
-      col("user_id").cast("long").as("user_id"), col("event_type"),
-      col("value").cast("double").as("value"))
-    val maxTs = ev.agg(max("ts")).head().getTimestamp(0)
-    def sentinel(uid: Long, offsetMin: Int) = Seq(
-      Event(uid, new java.sql.Timestamp(
-        maxTs.getTime + offsetMin * 60000L), uid, "sentinel", 0.0)).toDF()
-    def stageFile(df: DataFrame, name: String, mtime: Long): Unit = {
-      df.coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dest = streamDir.resolve(name)
-      java.nio.file.Files.copy(part.toPath, dest)
-      dest.toFile.setLastModified(mtime)
-    }
-    val t0 = System.currentTimeMillis()
-    stageFile(ev, "000_events.parquet", t0)
-    stageFile(sentinel(-1L, delayMin + 1), "001_s1.parquet", t0 + 60000)
-    stageFile(sentinel(-2L, delayMin + 61), "002_s2.parquet", t0 + 120000)
-    val sch = spark.read.parquet(streamDir.toString).schema
-    val stream = spark.readStream.schema(sch)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-    val q = funnelFold(stream.as[Event], s"$delayMin minutes")
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", outDir).option("checkpointLocation", cpDir)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(outDir).filter(col("user_id") >= 0)
+    val r = new Replay(spark, "graft_funnel_stream")
+    r.sink(funnelFold(r.stage(withSentinels(typedEvents(spark, dir),
+        -1L -> (delayMin + 1), -2L -> (delayMin + 61))).as[Event],
+        s"$delayMin minutes").toDF())
+      .filter(col("user_id") >= 0)
       .select(col("user_id"), col("t_view"), col("t_click"),
         col("t_compra"), col("converteu"))
       .orderBy("user_id")
@@ -2401,30 +1864,6 @@ object Streams {
     */
   final case class SessionBufState(buf: Seq[PendingEvent], cur: SessionState)
 
-  /** Gap-based sessionization with explicit state
-    * (flatMapGroupsWithState): a session SUMMARY is emitted when a later
-    * event arrives more than `gapMinutes` after the previous one, or when
-    * the event-time watermark passes the session's idle deadline
-    * (last event + gap) — so a user's FINAL session flushes without
-    * needing a successor event.
-    *
-    * Cross-batch ordering: events are BUFFERED in state until the
-    * watermark passes their event time. Only then are they folded — in
-    * event-time order — into the session accumulator, so a late event
-    * arriving in a later micro-batch (but within the watermark) lands in
-    * its TRUE session, exactly as the batch twin
-    * (RelationalOps.sessionizeBatch) would place it. The watermark is the
-    * finalization frontier: an event is folded only once nothing earlier
-    * can still arrive, and a session closes only once the watermark
-    * proves its gap (every in-gap instant is behind the watermark with no
-    * buffered event inside it). Per-key state is the session accumulator
-    * plus the pending buffer, which the watermark horizon bounds (an
-    * event stays buffered only while the watermark lags it — with delay D,
-    * at most the events of the trailing D window per key).
-    *
-    * Every key carries an event-time timer at min(idle deadline, oldest
-    * pending event), so idle users flush and evict instead of accreting.
-    */
   /** The STREAMED sessionizer as a gated batch-comparable query: runs
     * [[sessionize]] as a real Structured Streaming job (file source →
     * flatMapGroupsWithState → parquet sink, `Trigger.AvailableNow`) over
@@ -2454,47 +1893,16 @@ object Streams {
     import org.apache.spark.sql.expressions.Window
     val gapMin = 30
     val delayMin = 10
-    val base = tempDir("graft_sess_stream")
-    val streamDir = base.resolve("in"); java.nio.file.Files.createDirectory(streamDir)
-    val stage = base.resolve("stage").toString
-    val outDir = base.resolve("out").toString
-    val cpDir = base.resolve("cp").toString
-
+    val r = new Replay(spark, "graft_sess_stream")
     // exact-cent staging: DECIMAL(18,2)·100 is an exact integral double,
     // so the streaming fold sums integers (no double-rounding drift)
-    val ev = graft.Tables.events(spark, dir).select(
-      col("event_id").cast("long").as("event_id"), col("ts"),
-      col("user_id").cast("long").as("user_id"), col("event_type"),
-      (col("value").cast("decimal(18,2)") * 100).cast("double").as("value"))
-    val maxTs = ev.agg(max("ts")).head().getTimestamp(0)
-    def sentinel(uid: Long, offsetMin: Int) = Seq(
-      Event(uid, new java.sql.Timestamp(
-        maxTs.getTime + offsetMin * 60000L), uid, "sentinel", 0.0)).toDF()
-    def stageFile(df: DataFrame, name: String, mtime: Long): Unit = {
-      df.coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dest = streamDir.resolve(name)
-      java.nio.file.Files.copy(part.toPath, dest)
-      dest.toFile.setLastModified(mtime)
-    }
-    val t0 = System.currentTimeMillis()
-    stageFile(ev, "000_events.parquet", t0)
+    val ev = typedEvents(spark, dir,
+      (col("value").cast("decimal(18,2)") * 100).cast("double"))
     // sentinel-1 ts puts the watermark (ts − delay) past every real idle
     // deadline (max real ts + gap); sentinel-2 triggers the timer batch
-    stageFile(sentinel(-1L, gapMin + delayMin + 1), "001_s1.parquet", t0 + 60000)
-    stageFile(sentinel(-2L, gapMin + delayMin + 61), "002_s2.parquet", t0 + 120000)
-
-    val sch = spark.read.parquet(streamDir.toString).schema
-    val stream = spark.readStream.schema(sch)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-    val q = sessionize(stream.as[Event], gapMin, s"$delayMin minutes")
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", outDir).option("checkpointLocation", cpDir)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-
-    spark.read.parquet(outDir).filter(col("user_id") >= 0)
+    r.sink(sessionize(r.stage(withSentinels(ev, -1L -> (gapMin + delayMin + 1),
+        -2L -> (gapMin + delayMin + 61))).as[Event], gapMin, s"$delayMin minutes").toDF())
+      .filter(col("user_id") >= 0)
       .withColumn("sessao", row_number().over(
         Window.partitionBy("user_id").orderBy("inicio")).cast("int"))
       .select(col("user_id"), col("sessao"),
@@ -2505,6 +1913,30 @@ object Streams {
       .orderBy("user_id", "sessao")
   }
 
+  /** Gap-based sessionization with explicit state
+    * (flatMapGroupsWithState): a session SUMMARY is emitted when a later
+    * event arrives more than `gapMinutes` after the previous one, or when
+    * the event-time watermark passes the session's idle deadline
+    * (last event + gap) — so a user's FINAL session flushes without
+    * needing a successor event.
+    *
+    * Cross-batch ordering: events are BUFFERED in state until the
+    * watermark passes their event time. Only then are they folded — in
+    * event-time order — into the session accumulator, so a late event
+    * arriving in a later micro-batch (but within the watermark) lands in
+    * its TRUE session, exactly as the batch twin
+    * (RelationalOps.sessionizeBatch) would place it. The watermark is the
+    * finalization frontier: an event is folded only once nothing earlier
+    * can still arrive, and a session closes only once the watermark
+    * proves its gap (every in-gap instant is behind the watermark with no
+    * buffered event inside it). Per-key state is the session accumulator
+    * plus the pending buffer, which the watermark horizon bounds (an
+    * event stays buffered only while the watermark lags it — with delay D,
+    * at most the events of the trailing D window per key).
+    *
+    * Every key carries an event-time timer at min(idle deadline, oldest
+    * pending event), so idle users flush and evict instead of accreting.
+    */
   def sessionize(events: Dataset[Event], gapMinutes: Int = 30,
                  watermarkDelay: String = "10 minutes"): Dataset[SessionSummary] = {
     import events.sparkSession.implicits._

@@ -23,7 +23,7 @@ class CdcSpec extends SparkSpec {
   }
 
   test("cdc store: tombstone-first arrival and batch replays leave state ≡ batch apply") {
-    val dir = java.nio.file.Files.createTempDirectory("cdc_store_spec").toString
+    val dir = Scratch.tempDir("cdc_store_spec").toString
     val log = Cdc.changelog(spark, tiny)
     val late = log.filter(col("seq") === 2)  // updates + tombstones FIRST
     val early = log.filter(col("seq") === 1) // inserts second
@@ -38,7 +38,7 @@ class CdcSpec extends SparkSpec {
   }
 
   test("cdc compaction: O(keys) state, tombstones kept, later batches still apply") {
-    val dir = java.nio.file.Files.createTempDirectory("cdc_compact_spec").toString
+    val dir = Scratch.tempDir("cdc_compact_spec").toString
     val log = Cdc.changelog(spark, tiny)
     Cdc.cdcApplyBatch(spark, dir, log.filter(col("seq") === 1), 0L)
     Cdc.cdcApplyBatch(spark, dir, log.filter(col("seq") === 2), 1L)

@@ -22,7 +22,7 @@ class CheckpointSpec extends SparkSpec {
     val baseline = TextOps.dedupClusters(spark, tiny).collect()
     assert(baseline.nonEmpty)
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toFile
+    val dir = Scratch.tempDir("graft_ckpt").toFile
     spark.conf.set(Checkpoint.DirConf, dir.getAbsolutePath)
     try {
       val reliable = TextOps.dedupClusters(spark, tiny).collect()
@@ -41,7 +41,7 @@ class CheckpointSpec extends SparkSpec {
     val df = spark.read.parquet(s"$tiny/part.parquet")
     val default = graft.etl.SurrogateKeys
       .dense(df, "sk", Seq(col("p_partkey"))).select("sk", "p_partkey").collect()
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt2").toFile
+    val dir = Scratch.tempDir("graft_ckpt2").toFile
     spark.conf.set(Checkpoint.DirConf, dir.getAbsolutePath)
     try {
       val reliable = graft.etl.SurrogateKeys
@@ -104,7 +104,7 @@ class CheckpointSpec extends SparkSpec {
 
   test("star build releases the barriers its dims read; other barriers stay; fact unchanged") {
     def fact(dw: String) = Star.readDw(spark, dw, "fato_vendas")
-    def tmp() = java.nio.file.Files.createTempDirectory("graft_star_ckpt").toString
+    def tmp() = Scratch.tempDir("graft_star_ckpt").toString
     val viaWindow = tmp()
     StarBench.starBuildTo(spark, tiny, viaWindow)
     // a barrier the build did not create must survive it

@@ -32,7 +32,7 @@ class CsvStageSpec extends SparkSpec {
   }
 
   test("CSV options keep null, empty string, delimiters and quotes distinct") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csvopt").toString
+    val dir = Scratch.tempDir("graft_csvopt").toString
     val rows = Seq(
       (1L, Some("plain")),
       (2L, None),                       // NULL, not ""

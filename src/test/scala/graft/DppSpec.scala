@@ -16,7 +16,7 @@ import graft.etl.Star
 class DppSpec extends SparkSpec {
 
   test("dim-side date filter dynamically prunes fact partitions") {
-    val dw = java.nio.file.Files.createTempDirectory("dpp_spec").toString
+    val dw = Scratch.tempDir("dpp_spec").toString
     Star.fatoVendas(spark, tiny)
       .withColumn("ano", (col("sk_tempo") / 10000).cast("int"))
       .write.mode("overwrite").partitionBy("ano").parquet(dw)

@@ -13,7 +13,7 @@ import graft.etl.Star
   */
 class DwReadSpec extends SparkSpec {
   private lazy val dw = {
-    val d = java.nio.file.Files.createTempDirectory("graft_dw_read").toString
+    val d = Scratch.tempDir("graft_dw_read").toString
     StarBench.starBuildTo(spark, tiny, d)
     d
   }

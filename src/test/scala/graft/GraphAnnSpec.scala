@@ -105,8 +105,7 @@ class GraphAnnSpec extends SparkSpec {
     val base = Tables.embeddings(spark, tiny)
       .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
     val arrival = col("vec_id") % 10 === 9
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_graph_lc").toString
+    val dir = Scratch.tempDir("graft_graph_lc").toString
     EmbeddingOps.buildGraphIndexOn(spark, base.filter(!arrival), dir)
     EmbeddingOps.appendGraphIndex(spark, base.filter(arrival), dir, 0L)
     val arrivals = base.filter(arrival).select("vec_id").collect()
@@ -239,7 +238,7 @@ class GraphAnnSpec extends SparkSpec {
   }
 
   test("persisted routed/xcell serves: bit-identical to self-contained") {
-    val rDir = s"/tmp/graft_graph_routed_spec_${System.nanoTime()}"
+    val rDir = Scratch.tempDir("graft_graph_routed_spec").toString
     EmbeddingOps.buildGraphRoutedIndex(spark, tiny, rDir)
     assert(EmbeddingOps.annGraphRoutedIndexed(spark, tiny, rDir).collect().toSeq
       == EmbeddingOps.annGraphRouted(spark, tiny).collect().toSeq,
@@ -252,7 +251,7 @@ class GraphAnnSpec extends SparkSpec {
       .map(r => (r.getAs[Number]("src").intValue(), r.getAs[Number]("dst").intValue())).toSet
     assert(storedLayer == derived, "stored layer must equal the derivation")
 
-    val xDir = s"/tmp/graft_graph_xcell_spec_${System.nanoTime()}"
+    val xDir = Scratch.tempDir("graft_graph_xcell_spec").toString
     EmbeddingOps.buildGraphXcellIndex(spark, tiny, xDir)
     assert(EmbeddingOps.annGraphXcellIndexed(spark, tiny, xDir).collect().toSeq
       == EmbeddingOps.annGraphXcell(spark, tiny).collect().toSeq,
@@ -263,7 +262,7 @@ class GraphAnnSpec extends SparkSpec {
     val base = Tables.embeddings(spark, tiny)
       .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
     val arrival = col("vec_id") % 10 === 9
-    val incDir = s"/tmp/graft_xcell_incr_spec_${System.nanoTime()}"
+    val incDir = Scratch.tempDir("graft_xcell_incr_spec").toString
     EmbeddingOps.buildGraphXcellIndexOn(spark, base.filter(!arrival), incDir)
     val preEdges = spark.read.parquet(s"$incDir/xedges")
       .select("src", "dst").collect()
@@ -294,7 +293,7 @@ class GraphAnnSpec extends SparkSpec {
   }
 
   test("persisted serve: bit-identical, store reads partition-pruned") {
-    val dir = s"/tmp/graft_graph_spec_${System.nanoTime()}"
+    val dir = Scratch.tempDir("graft_graph_spec").toString
     EmbeddingOps.buildGraphIndex(spark, tiny, dir)
     val served = EmbeddingOps.annGraphIndexed(spark, tiny, dir).collect().toSeq
     val self = EmbeddingOps.annGraph(spark, tiny).collect().toSeq
@@ -363,8 +362,7 @@ class GraphAnnSpec extends SparkSpec {
 
   test("xcell append on a ring cell-graph: seam-correct beyond adjacent(affected)") {
     val arrivals = rimPts
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_xcell_ring").toString
+    val dir = Scratch.tempDir("graft_xcell_ring").toString
     EmbeddingOps.buildGraphXcellIndexOn(spark, ringBase(ringPts), dir, k = 16)
     EmbeddingOps.appendGraphXcellIndex(spark, ringBase(arrivals), dir, 0L)
     // precondition: the scenario exercises the seam — touched ∪
@@ -393,8 +391,7 @@ class GraphAnnSpec extends SparkSpec {
   }
 
   test("xcell delete+compact on a ring cell-graph: seam-correct re-link") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_xcell_ring_c").toString
+    val dir = Scratch.tempDir("graft_xcell_ring_c").toString
     // build WITH the rim points, then delete exactly them: removal must
     // undo the cross-seam links the append test proves they create —
     // re-picks land in partitions beyond adjacent(affected)

@@ -72,7 +72,7 @@ class HeavyHitterSpec extends SparkSpec {
 
   test("streamed summary store: replayed batch is a no-op, resolve equals the one-shot result") {
     import graft.etl.StoreCommit
-    val base = java.nio.file.Files.createTempDirectory("graft_hh_spec").toString
+    val base = Scratch.tempDir("graft_hh_spec").toString
     val state = s"$base/state"
     val docs = Tables.documents(spark, tiny)
       .selectExpr("CAST(doc_id AS BIGINT) AS doc_id", "text")

@@ -12,7 +12,7 @@ import graft.sim.EmbeddingOps
 class IvfIndexSpec extends SparkSpec {
 
   private lazy val indexDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = Scratch.tempDir("graft_ivf").toString
     EmbeddingOps.buildIvfIndex(spark, tiny, dir)
     dir
   }
@@ -44,7 +44,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("kmeans index-backed probe equals the self-contained train/assign/probe") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_km").toString
+    val dir = Scratch.tempDir("graft_ivf_km").toString
     EmbeddingOps.buildIvfIndexKmeans(spark, tiny, dir)
     assert(EmbeddingOps.annIvfKmeansIndexed(spark, tiny, dir).collect() ===
       EmbeddingOps.annIvfKmeans(spark, tiny).collect())
@@ -59,7 +59,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("near-dup served off the kmeans index equals the self-contained form") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_nd").toString
+    val dir = Scratch.tempDir("graft_ivf_nd").toString
     EmbeddingOps.buildIvfIndexKmeans(spark, tiny, dir)
     assert(EmbeddingOps.embedNearDupIndexed(spark, tiny, dir).collect() ===
       EmbeddingOps.embedNearDup(spark, tiny).collect(),
@@ -75,8 +75,8 @@ class IvfIndexSpec extends SparkSpec {
 
   test("cell-append: split-arrival index serves probes identical to a one-shot full-assignment build") {
     import org.apache.spark.sql.functions.col
-    val incrDir = java.nio.file.Files.createTempDirectory("graft_ivf_incr").toString
-    val fullDir = java.nio.file.Files.createTempDirectory("graft_ivf_full").toString
+    val incrDir = Scratch.tempDir("graft_ivf_incr").toString
+    val fullDir = Scratch.tempDir("graft_ivf_full").toString
     val base = Tables.embeddings(spark, tiny)
       .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
     val arrival = col("vec_id") % 10 === 9
@@ -122,8 +122,8 @@ class IvfIndexSpec extends SparkSpec {
     // raw codes, then residual codes (the append re-encodes arrivals'
     // residuals under the stored centroids)
     for (residual <- Seq(false, true)) {
-      val incrDir = java.nio.file.Files.createTempDirectory("graft_ivfpq_incr").toString
-      val fullDir = java.nio.file.Files.createTempDirectory("graft_ivfpq_fullasg").toString
+      val incrDir = Scratch.tempDir("graft_ivfpq_incr").toString
+      val fullDir = Scratch.tempDir("graft_ivfpq_fullasg").toString
       EmbeddingOps.buildIvfPqIndexOn(spark, base.filter(!arrival),
         base.filter(!arrival), incrDir, residual)
       EmbeddingOps.appendIvfPqIndex(spark, base.filter(arrival), incrDir,
@@ -144,7 +144,7 @@ class IvfIndexSpec extends SparkSpec {
 
   test("a replayed append (same batchId) overwrites itself instead of duplicating — exactly-once under redelivery") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_replay").toString
+    val dir = Scratch.tempDir("graft_ivf_replay").toString
     val base = Tables.embeddings(spark, tiny)
       .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
     val arrival = col("vec_id") % 10 === 9
@@ -164,10 +164,10 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("IVF-PQ built from shared km centroids + pq codebooks is byte-identical") {
-    val kmDir = java.nio.file.Files.createTempDirectory("graft_km_share").toString
-    val pqDir = java.nio.file.Files.createTempDirectory("graft_pq_share").toString
-    val selfDir = java.nio.file.Files.createTempDirectory("graft_ivfpq_self").toString
-    val sharedDir = java.nio.file.Files.createTempDirectory("graft_ivfpq_shared").toString
+    val kmDir = Scratch.tempDir("graft_km_share").toString
+    val pqDir = Scratch.tempDir("graft_pq_share").toString
+    val selfDir = Scratch.tempDir("graft_ivfpq_self").toString
+    val sharedDir = Scratch.tempDir("graft_ivfpq_shared").toString
     EmbeddingOps.buildIvfIndexKmeans(spark, tiny, kmDir)
     EmbeddingOps.buildPqIndex(spark, tiny, pqDir)
     EmbeddingOps.buildIvfPqIndex(spark, tiny, selfDir)
@@ -186,7 +186,7 @@ class IvfIndexSpec extends SparkSpec {
     // training) rather than serve a stale quantizer
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$kmDir/_fingerprint"), "stale")
-    val fbDir = java.nio.file.Files.createTempDirectory("graft_ivfpq_fb").toString
+    val fbDir = Scratch.tempDir("graft_ivfpq_fb").toString
     EmbeddingOps.buildIvfPqIndex(spark, tiny, fbDir, Some(kmDir), Some(pqDir))
     val c3 = spark.read.parquet(s"$fbDir/centroids").orderBy("cell").collect()
     val c1 = spark.read.parquet(s"$selfDir/centroids").orderBy("cell").collect()
@@ -205,7 +205,7 @@ class IvfIndexSpec extends SparkSpec {
     val incrDir = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_incr_${h}_p${java.lang.ProcessHandle.current().pid()}"
     assert(java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$incrDir/_fingerprint")).endsWith(":incr"))
-    val composedDir = java.nio.file.Files.createTempDirectory("graft_ivfpq_incrsrc").toString
+    val composedDir = Scratch.tempDir("graft_ivfpq_incrsrc").toString
     EmbeddingOps.buildIvfPqIndex(spark, tiny, composedDir, Some(incrDir))
     val composed = spark.read.parquet(s"$composedDir/centroids")
       .orderBy("cell").collect()
@@ -269,7 +269,7 @@ class IvfIndexSpec extends SparkSpec {
 
   test("per-process lifecycle dirs are deleted when the JVM exits") {
     // a fresh tmpdir for the child, so whatever it leaves is its own
-    val tmp = java.nio.file.Files.createTempDirectory("graft_exit_tmp")
+    val tmp = Scratch.tempDir("graft_exit_tmp")
     try {
       val out = ChildJvm.probe("graft.LifecycleDirProbe", Seq(tiny),
         Seq(s"-Djava.io.tmpdir=$tmp"))

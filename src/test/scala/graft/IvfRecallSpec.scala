@@ -33,8 +33,7 @@ class IvfRecallSpec extends SparkSpec {
     * [8c, 8c+8) and 0 elsewhere — mutually orthogonal, far apart.
     */
   private lazy val clusteredDir: String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_recall").toString
+    val dir = Scratch.tempDir("graft_recall").toString
     val rows = (0L until (K * PER_CLUSTER).toLong).map { id =>
       val c = (id % K).toInt // vec_id 0..7 = one query per cluster
       val v = Array.tabulate(DIM) { j =>
@@ -144,8 +143,7 @@ class IvfRecallSpec extends SparkSpec {
 
     val churnedPq = recallAt5(truthSurv,
       EmbeddingOps.annIvfPqDeleted(spark, clusteredDir))
-    val freshPqDir = java.nio.file.Files
-      .createTempDirectory("graft_recall_fpq").toString
+    val freshPqDir = Scratch.tempDir("graft_recall_fpq").toString
     EmbeddingOps.buildIvfPqIndexOn(spark, surv, surv, freshPqDir)
     val freshPq = recallAt5(truthSurv,
       EmbeddingOps.annIvfPqIndexed(spark, clusteredDir, freshPqDir))
@@ -154,8 +152,7 @@ class IvfRecallSpec extends SparkSpec {
 
     val churnedKm = recallAt5(truthSurv,
       EmbeddingOps.annIvfKmeansDeleted(spark, clusteredDir))
-    val freshKmDir = java.nio.file.Files
-      .createTempDirectory("graft_recall_fkm").toString
+    val freshKmDir = Scratch.tempDir("graft_recall_fkm").toString
     EmbeddingOps.buildIvfIndexKmeansOn(spark, surv, surv, freshKmDir,
       "recall-spec-fresh-surv")
     val freshKm = recallAt5(truthSurv,
@@ -169,8 +166,7 @@ class IvfRecallSpec extends SparkSpec {
     // show up here as a recall drop the exactness gates can't see
     val churnedRes = recallAt5(truthSurv,
       EmbeddingOps.annIvfPqDeleted(spark, clusteredDir, residual = true))
-    val freshResDir = java.nio.file.Files
-      .createTempDirectory("graft_recall_fres").toString
+    val freshResDir = Scratch.tempDir("graft_recall_fres").toString
     EmbeddingOps.buildIvfPqIndexOn(spark, surv, surv, freshResDir, residual = true)
     val freshRes = recallAt5(truthSurv,
       EmbeddingOps.annIvfPqIndexed(spark, clusteredDir, freshResDir, residual = true))

@@ -10,7 +10,7 @@ import graft.etl.Star
 class JdbcSinkSpec extends SparkSpec {
 
   test("JDBC round-trip: truncate+append sink, projected scan back") {
-    val db = java.nio.file.Files.createTempDirectory("graft_derby")
+    val db = Scratch.tempDir("graft_derby")
       .resolve("dw").toString
     val url = s"jdbc:derby:$db;create=true"
     val props = new java.util.Properties()
@@ -35,7 +35,7 @@ class JdbcSinkSpec extends SparkSpec {
 
   test("JDBC round-trip preserves NUMERIC(18,2) money values and scale") {
     import org.apache.spark.sql.functions._
-    val db = java.nio.file.Files.createTempDirectory("graft_derby_money")
+    val db = Scratch.tempDir("graft_derby_money")
       .resolve("dw").toString
     val url = s"jdbc:derby:$db;create=true"
     val props = new java.util.Properties()

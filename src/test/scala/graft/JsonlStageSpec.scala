@@ -29,7 +29,7 @@ class JsonlStageSpec extends SparkSpec {
   }
 
   test("JSON escaping keeps newlines, quotes, unicode and null-vs-empty distinct") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonopt").toString
+    val dir = Scratch.tempDir("graft_jsonopt").toString
     val rows = Seq(
       (1L, Some("plain")),
       (2L, None),                         // NULL, not ""

@@ -246,7 +246,7 @@ class QualityOpsSpec extends SparkSpec {
       (6L, "Customer#000001567", 7), // 3 substitutions — must NOT pair with 1
       (7L, "Customer#000001234", 8)) // identical but other block — no pair
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_fz").toString
+    val dir = Scratch.tempDir("graft_fz").toString
     rows.toDF("c_custkey", "c_name", "c_nationkey")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
     val got = QualityOps.fuzzyMatchDeleteNbr(spark, dir)

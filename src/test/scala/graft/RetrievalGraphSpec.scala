@@ -180,7 +180,7 @@ class RetrievalGraphSpec extends SparkSpec {
 
   test("bm25 served plan: the postings scan is pruned to the query terms' buckets") {
     import org.apache.spark.sql.execution.FileSourceScanExec
-    val dir = java.nio.file.Files.createTempDirectory("bm25_prune_spec").toString
+    val dir = Scratch.tempDir("bm25_prune_spec").toString
     graft.text.RetrievalOps.buildBm25Index(spark, tiny, dir)
     val df = graft.text.RetrievalOps.bm25Served(spark, dir)
     df.collect() // finalize AQE
@@ -284,8 +284,7 @@ class RetrievalGraphSpec extends SparkSpec {
     val expect = graft.etl.Cdc.cdcApply(spark, tiny).collect().toSeq
     val rnd = new scala.util.Random(7)
     (1 to 3).foreach { trial =>
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"cdc_prop_$trial").toString
+      val dir = Scratch.tempDir(s"cdc_prop_$trial").toString
       // random 3-way split by key hash — batches interleave I/U/D
       // arbitrarily; only seq order semantics may matter, and resolution
       // is by seq, not arrival
@@ -351,7 +350,7 @@ class RetrievalGraphSpec extends SparkSpec {
   }
 
   test("bm25 store: batch replays are skipped and the served result matches one-shot") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25_store_spec").toString
+    val dir = Scratch.tempDir("bm25_store_spec").toString
     val docs = Tables.documents(spark, tiny)
       .selectExpr("CAST(doc_id AS BIGINT) AS doc_id", "text")
     val b0 = docs.filter(col("doc_id") % 2 === 0)
@@ -369,7 +368,7 @@ class RetrievalGraphSpec extends SparkSpec {
   }
 
   test("bm25 store compaction: bounded files, served result bit-identical, appends continue") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25_compact_spec").toString
+    val dir = Scratch.tempDir("bm25_compact_spec").toString
     val docs = Tables.documents(spark, tiny)
       .selectExpr("CAST(doc_id AS BIGINT) AS doc_id", "text")
     graft.text.RetrievalOps.bm25ApplyBatch(spark, dir, docs.filter(col("doc_id") % 3 === 0), 0L)

@@ -96,7 +96,7 @@ class ScaleOpsSpec extends SparkSpec {
     // scan; (b) OptimizeSkewedJoin only matches the canonical
     // SMJ(sort+shuffle, sort+shuffle) pattern, so the dim is materialized
     // and read back, as a real dim table would be
-    val src = s"/tmp/graft_aqe_skew_${System.nanoTime()}"
+    val src = Scratch.tempDir("graft_aqe_skew").toString
     val ev8 = RelationalOps.skewEvents(Tables.events(spark, tiny))
     ev8.repartition(8).write.mode("overwrite").parquet(s"$src/ev")
     RelationalOps.skewDim(ev8).write.mode("overwrite").parquet(s"$src/dim")

@@ -74,14 +74,6 @@ class ScdPitSpec extends SparkSpec {
       .map(f => (f.getPath, f.length, f.lastModified)).toSeq.sortBy(_._1)
   }
 
-  private def rmTree(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(path))
-  }
-
   test("versioned state store: batch applies never touch history files and converge to the one-shot table") {
     import org.apache.spark.sql.functions.col
     val state = s"/tmp/graft_scd2_store_${System.nanoTime()}"
@@ -108,7 +100,7 @@ class ScdPitSpec extends SparkSpec {
         .orderBy("id_cliente", "valid_from", "vigente").collect()
       val oneShot = Scd.scd2(spark, tiny).collect()
       assert(store === oneShot)
-    } finally rmTree(state)
+    } finally Scratch.rmTree(state)
   }
 
   test("state store is exactly-once: a replayed committed batch is skipped bit-for-bit") {
@@ -135,7 +127,7 @@ class ScdPitSpec extends SparkSpec {
       val store = Scd.readStateStore(spark, state)
         .orderBy("id_cliente", "valid_from", "vigente").collect()
       assert(store === Scd.scd2(spark, tiny).collect())
-    } finally rmTree(state)
+    } finally Scratch.rmTree(state)
   }
 
   test("state store absorbs a crash mid-apply: replay of a half-staged batch converges to the one-shot oracle") {
@@ -165,7 +157,7 @@ class ScdPitSpec extends SparkSpec {
         .orderBy("id_cliente", "valid_from", "vigente").collect()
       assert(store === Scd.scd2(spark, tiny).collect(),
         "replayed half-staged batch must converge to the one-shot table")
-    } finally rmTree(state)
+    } finally Scratch.rmTree(state)
   }
 
   test("state store absorbs a crash BETWEEN the two stage writes: history landed, current did not") {
@@ -181,7 +173,7 @@ class ScdPitSpec extends SparkSpec {
       // hist_b1 is fully written, the worker dies BEFORE current_b1 —
       // on disk that is a staged history dir with no current sibling
       Scd.stageBatch(spark, state, "current_b0", b1, "1999-01-01", batchId = 1L)
-      rmTree(s"$state/current_b1")
+      Scratch.rmTree(s"$state/current_b1")
       // the orphaned history staging is above the committed watermark, so
       // readers must not see it and reads must not fail on the missing dir
       val preReplay = Scd.readStateStore(spark, state)
@@ -199,6 +191,6 @@ class ScdPitSpec extends SparkSpec {
       assert(store.orderBy("id_cliente", "valid_from", "vigente").collect()
         === Scd.scd2(spark, tiny).collect(),
         "crash-between-writes replay must converge to the one-shot table")
-    } finally rmTree(state)
+    } finally Scratch.rmTree(state)
   }
 }

@@ -12,7 +12,7 @@ class SchemaEvolutionSpec extends SparkSpec {
   import spark.implicits._
 
   test("mergeSchema unifies grown schemas; pushdown works on the new column") {
-    val dir = s"/tmp/graft_schema_evo_${System.nanoTime()}"
+    val dir = Scratch.tempDir("graft_schema_evo").resolve("t").toString
     // wave 1: (doc_id, text)
     Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
       .write.parquet(dir)

@@ -19,7 +19,7 @@ class SessionWindowSpec extends SparkSpec {
   }
 
   test("exact 30-min gap stays one session; 30min+1µs splits — both forms") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sess").toString
+    val tmp = Scratch.tempDir("graft_sess").toString
     import java.sql.Timestamp
     Seq(
       // user 10: e2 lands exactly 30:00.000000 after e1 (must NOT split),
@@ -64,8 +64,7 @@ class SessionWindowSpec extends SparkSpec {
             "view", rnd.nextDouble() * 100, "{}")
         }
       }
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft_sessprop_$trial").toString
+      val tmp = Scratch.tempDir(s"graft_sessprop_$trial").toString
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .write.parquet(s"$tmp/events.parquet")
       val a = RelationalOps.sessionizeBatch(spark, tmp).collect().toSeq

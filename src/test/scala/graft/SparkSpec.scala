@@ -17,8 +17,7 @@ trait SparkSpec extends AnyFunSuite {
     // bucketed-table specs saveAsTable; keep the warehouse out of the repo
     // and unique per JVM — a reused location with a fresh in-memory catalog
     // makes CREATE TABLE fail on LOCATION_ALREADY_EXISTS
-    .config("spark.sql.warehouse.dir",
-      s"/tmp/graft_test_wh_${java.lang.ProcessHandle.current().pid()}_${System.nanoTime()}")
+    .config("spark.sql.warehouse.dir", Scratch.tempDir("graft_test_wh_").toString)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 

@@ -76,8 +76,7 @@ class Sq8Spec extends SparkSpec {
     // operating condition, not an edge case
     val train = Seq((0L, vec(1.0f)), (1L, vec(2.0f)))
       .toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sq8_clamp").toString
+    val dir = Scratch.tempDir("graft_sq8_clamp").toString
     EmbeddingOps.buildSq8IndexOn(spark, train, train, dir)
     val arrivals = Seq((2L, vec(0.0f)), (3L, vec(9.0f)))
       .toDF("vec_id", "embedding")
@@ -91,7 +90,7 @@ class Sq8Spec extends SparkSpec {
   }
 
   test("IVF-SQ8 indexed serve prunes the code scan to the routed cells") {
-    val dir = s"/tmp/graft_sq8_plan_${System.nanoTime()}"
+    val dir = Scratch.tempDir("graft_sq8_plan").toString
     EmbeddingOps.buildIvfSq8Index(spark, tiny, dir)
     val served = EmbeddingOps.annIvfSq8Indexed(spark, tiny, dir)
     served.count(): Unit
@@ -118,8 +117,7 @@ class Sq8Spec extends SparkSpec {
     val base = Tables.embeddings(spark, tiny)
       .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
     val arrival = col("vec_id") % 10 === 9
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sq8_drift").toString
+    val dir = Scratch.tempDir("graft_sq8_drift").toString
     EmbeddingOps.buildSq8IndexOn(spark,
       base.filter(!arrival), base.filter(!arrival), dir)
     // in-distribution arrivals: a coordinate clamps only when it falls
@@ -145,8 +143,7 @@ class Sq8Spec extends SparkSpec {
     val base = Tables.embeddings(spark, tiny)
       .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
     val arrival = col("vec_id") % 10 === 9
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_cellmm_drift").toString
+    val dir = Scratch.tempDir("graft_cellmm_drift").toString
     EmbeddingOps.buildIvfSq8CellIndexOn(spark, base.filter(!arrival), dir)
     // a MIXED batch: one drifted vector among ~49 in-distribution
     // arrivals — the regime where a single global clamp average stays

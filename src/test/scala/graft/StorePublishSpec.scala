@@ -9,8 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class StorePublishSpec extends AnyFunSuite {
 
+  // a store path that does not exist yet; its builders' staging
+  // siblings land in the same temp dir, which goes at JVM exit
   private def freshDir(): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_sp_${System.nanoTime()}"
+    Scratch.tempDir("graft_sp_").resolve("store").toString
 
   private def slowBuild(files: Int, payload: String)(dir: String): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))

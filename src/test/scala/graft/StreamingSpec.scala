@@ -1,6 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.Streams
@@ -149,9 +151,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("checkpointed file-source stream: restart resumes exactly-once") {
-    val watch = java.nio.file.Files.createTempDirectory("graft_watch").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_out").toString
+    val watch = Scratch.tempDir("graft_watch").toString
+    val ckpt = Scratch.tempDir("graft_ckpt").toString
+    val out = Scratch.tempDir("graft_out").toString
     def feed(evs: Seq[Event]): Unit =
       evs.toDF().repartition(1).write.mode("append").parquet(watch)
 
@@ -178,7 +180,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("scd2 foreachBatch store: a killed-and-restarted query resumes from the checkpoint onto the one-shot table") {
-    val base = java.nio.file.Files.createTempDirectory("graft_scd2_restart")
+    val base = Scratch.tempDir("graft_scd2_restart")
     def sub(n: String) = base.resolve(n).toString
     val up = graft.etl.Scd.updateBatch(spark, tiny)
     graft.etl.Scd.initStateStore(spark, tiny, sub("state"))
@@ -403,5 +405,45 @@ class StreamingSpec extends SparkSpec {
       }
       assert(f.getInt(4) == b.getInt(4))
     }
+  }
+
+  test("replay harness: each staged shard is one micro-batch, in staging order") {
+    def batches(shards: Seq[Seq[Long]]): List[(Long, Seq[Long])] = {
+      val r = new Streams.Replay(spark, "graft_replay_spec")
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Long])]
+      r.fold(r.stage(shards.map(_.toDF("id")))) { (b, id) =>
+        seen.add(id -> b.as[Long].collect().toSeq.sorted): Unit
+      }
+      seen.asScala.toList
+    }
+    // a parity split: a staging that collapsed both shards into one file
+    // would deliver one batch, and no cross-batch state would be exercised
+    val ids = (1L to 12L).toList
+    val (even, odd) = ids.partition(_ % 2 == 0)
+    assert(batches(Seq(even, odd)) === List(0L -> even, 1L -> odd))
+    // a corpus and two sentinels: the sentinels must follow the corpus,
+    // one batch each, or they cannot advance the watermark past it
+    assert(batches(Seq(ids, Seq(-1L), Seq(-2L))) ===
+      List(0L -> ids, 1L -> Seq(-1L), 2L -> Seq(-2L)))
+  }
+
+  test("AvailableNow and maxFilesPerTrigger appear in src/main/scala only in Streams.Replay") {
+    val root = Paths.get(sys.props.getOrElse("user.dir", "."), "src/main/scala")
+    val comment = """\s*(\*|/\*\*|\*/|//).*"""
+    def lines(p: java.nio.file.Path) = Files.readAllLines(p).asScala.toSeq
+    val hits = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap(p => lines(p).zipWithIndex.collect {
+        case (l, i) if !l.matches(comment) &&
+            (l.contains("AvailableNow") || l.contains("maxFilesPerTrigger")) =>
+          (root.relativize(p).toString, i)
+      })
+    val streams = lines(root.resolve("graft/streaming/Streams.scala"))
+    val start = streams.indexWhere(_.contains("final class Replay("))
+    val end = streams.indexWhere(_ == "  }", start)
+    assert(start >= 0 && hits.size == 2 &&
+      hits.forall { case (f, i) =>
+        f == "graft/streaming/Streams.scala" && i > start && i < end },
+      s"stage and drain gated streams through Streams.Replay, not a copy: $hits")
   }
 }

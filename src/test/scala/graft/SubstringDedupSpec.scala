@@ -24,8 +24,7 @@ class SubstringDedupSpec extends SparkSpec {
     */
   private def staged(docs: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_substr_spec").toString
+    val dir = Scratch.tempDir("graft_substr_spec").toString
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("spec"))
       .withColumn("n_chars", length(col("text")).cast("long"))

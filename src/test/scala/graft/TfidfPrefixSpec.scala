@@ -42,8 +42,7 @@ class TfidfPrefixSpec extends SparkSpec {
     // reaches threshold and the prefix filter should refuse nearly all
     // of the naive blocking.
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tfidf_prefix").toString
+    val dir = Scratch.tempDir("graft_tfidf_prefix").toString
     val docs = (1 to 120).map { i =>
       val shared = if (i <= 11) "commontoken " else ""
       (i.toLong, shared + (1 to 20).map(j => s"tok_${i}_$j").mkString(" "))

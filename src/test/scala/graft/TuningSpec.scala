@@ -14,7 +14,7 @@ class TuningSpec extends AnyFunSuite {
   }
 
   test("tableBytes sums top-level *.parquet only, skipping markers and stores") {
-    val root = java.nio.file.Files.createTempDirectory("graft_tuning")
+    val root = Scratch.tempDir("graft_tuning")
     mkTable(root, "lineitem.parquet", 1000)
     mkTable(root, "orders.parquet", 500)
     // derived stores and DW output under the same root are NOT inputs
@@ -24,13 +24,13 @@ class TuningSpec extends AnyFunSuite {
   }
 
   test("partition count: small data clamps to one wave of cores") {
-    val root = java.nio.file.Files.createTempDirectory("graft_tuning")
+    val root = Scratch.tempDir("graft_tuning")
     mkTable(root, "t.parquet", 1000)
     assert(Tuning.shufflePartitions(root.toString, 32) == 32)
   }
 
   test("partition count: rounds up to full waves as data grows") {
-    val root = java.nio.file.Files.createTempDirectory("graft_tuning")
+    val root = Scratch.tempDir("graft_tuning")
     // 100 units of target → 100 raw → 4 waves of 32 = 128
     mkTable(root, "t.parquet", 1000)
     assert(Tuning.shufflePartitions(root.toString, 32, target = 10L) == 128)
@@ -39,7 +39,7 @@ class TuningSpec extends AnyFunSuite {
   test("the staged-corpus calibration points the Scaladoc claims") {
     // 7.0 GB (the sf100 staging) → 256, the hand-tuned part-1c value;
     // 625 MB (sf10) and below → the gated 32 default
-    val root = java.nio.file.Files.createTempDirectory("graft_tuning")
+    val root = Scratch.tempDir("graft_tuning")
     val d = root.resolve("big.parquet")
     java.nio.file.Files.createDirectories(d)
     def at(bytes: Long) = {
