@@ -237,15 +237,7 @@ object Bench {
     // The fact is partitioned by year (derived from the smart date key) so
     // time-bounded queries prune partitions — the role the reference's
     // fact indexes played in Postgres.
-    // the five dims are independent (the reference runs them as parallel
-    // Airflow DAGs) — submit their sink jobs CONCURRENTLY so Spark's
-    // scheduler overlaps the small dim builds instead of serializing
-    // five sub-second jobs' fixed overheads; the fact follows alone.
-    // Parameterized by source/sink dir so the 10× scale phase runs the
-    // IDENTICAL build.
-    def starBuildTo(srcDir: String, dwDir: String): Unit =
-      StarBench.starBuildTo(spark, srcDir, dwDir)
-    time("etl_star_build") { starBuildTo(sfDir, dw) }
+    time("etl_star_build") { StarBench.starBuildTo(spark, sfDir, dw) }
 
     // Phase 2 — KPI suite over the materialized DW (reference: KPIs.sql).
     // (drop the ano partition column after any pruning filter — dim_tempo
@@ -821,7 +813,7 @@ object Bench {
         StarBench.stage10x(spark, sfDir, sf1Dir)
         // one rep each: these are scale-ratio measurements against the
         // sf0.1 rows above (star ~2.3×-per-10×-data is the story)
-        once("etl_star_build_sf1") { starBuildTo(sf1Dir, dw1) }
+        once("etl_star_build_sf1") { StarBench.starBuildTo(spark, sf1Dir, dw1) }
         once("kpi_suite_sf1") {
           // the 13 KPI queries are independent reads over the same DW —
           // submit them from a small pool so each query's straggler tail

@@ -5,65 +5,74 @@ import graft.etl.Star
 import graft.kpi.Kpis
 
 /** The star build + KPI suite shared by [[Bench]] (per-round artifact),
-  * [[PlanAudit]] `--dw` and the DW benchmark under `perfbench/`. One
-  * copy, so every measurement prices the IDENTICAL code path — a
-  * divergent copy would make the numbers incomparable.
+  * [[PlanAudit]] `--dw`, the DW benchmark under `perfbench/` and the
+  * Airflow DAG's `graft.etl.aw.AwRun`. One copy, so every measurement
+  * prices the IDENTICAL code path the DAG runs — a divergent copy would
+  * make the numbers incomparable.
   */
 object StarBench {
 
-  /** Build + sink the full star (reference: the six Airflow DAG tasks).
-    * Dim sink jobs are submitted CONCURRENTLY so Spark's scheduler
-    * overlaps the small dim builds instead of serializing five
-    * sub-second jobs' fixed overheads; the fact follows alone. Once the
-    * dims are written, the checkpoint barriers their plans read (the
-    * distributed surrogate-key route's) are released: the fact reads
-    * the dims back from disk, so nothing needs those blocks again.
+  /** Build + sink the full star (reference: the six Airflow DAG tasks):
+    * [[buildTo]] over the testdata source.
     */
-  def starBuildTo(spark: SparkSession, srcDir: String, dwDir: String): Unit = {
+  def starBuildTo(spark: SparkSession, srcDir: String, dwDir: String): Unit =
+    buildTo(spark, Star.source(spark, srcDir), dwDir)
+
+  /** Every DW table of `src`, each through [[publish]]. Dim sink jobs are
+    * submitted CONCURRENTLY so Spark's scheduler overlaps the small dim
+    * builds instead of serializing five sub-second jobs' fixed overheads;
+    * the fact follows alone.
+    */
+  def buildTo(spark: SparkSession, src: Star.Source, dwDir: String): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val dims = Seq(
-      "dim_produto" -> (() => Star.dimProduto(spark, srcDir)),
-      "dim_cliente" -> (() => Star.dimCliente(spark, srcDir)),
-      "dim_vendedor" -> (() => Star.dimVendedor(spark, srcDir)),
-      "dim_localidade" -> (() => Star.dimLocalidade(spark, srcDir)),
-      "dim_tempo" -> (() => Star.dimTempo(spark)))
-    val written = Await.result(Future.sequence(dims.map { case (name, build) =>
-      Future {
-        val dim = build()
-        graft.sink.Sink.parquet(dim, s"$dwDir/$name")
-        dim
-      }
+    Await.result(Future.sequence(src.dims.map { case (t, _) =>
+      Future(publish(spark, src, dwDir, t))
     }), Duration.Inf)
-    written.foreach(Checkpoint.releaseReadBy)
-    // note: NOT repartition(ano) before the write — the extra full-fact
-    // shuffle buys nothing here because AQE already coalesces output to
-    // ~2 files per year partition (measured: no improvement, within
-    // run-to-run noise at this scale).
-    // r22: the fact joins the JUST-WRITTEN dims read back from the DW
-    // ((sk, business key) projections) instead of re-deriving all four
-    // dim pipelines in-plan — the reference's own SK-map read-back
-    // (dags/etl_fato_vendas.py:21-24). Interleaved A/B at the 10× point:
-    // jobs 72→46, summed task time 23.3→18.9 s, wall ~0.85×, fact
-    // byte-identical (exceptAll symdiff 0/0 over 6M rows) — the SK
-    // assignment is deterministic, so read-back dims carry exactly the
-    // values the in-plan derivation would. Each read-back uses the DW
-    // schema declared in Star.DwSchemas, so it runs no footer-inference
-    // job.
-    def rd(t: String, sk: String, bk: String) =
-      Star.readDw(spark, dwDir, t).select(sk, bk)
-    val ano = (org.apache.spark.sql.functions.col("sk_tempo") / 10000).cast("int")
-    graft.sink.Sink.parquet(
-      Star.fatoVendasFromDims(
-        graft.Tables.orders(spark, srcDir), graft.Tables.lineitem(spark, srcDir),
-        rd("dim_produto", "sk_produto", "id_produto_original"),
-        rd("dim_cliente", "sk_cliente", "id_cliente_original"),
-        rd("dim_vendedor", "sk_vendedor", "id_vendedor_original"),
-        rd("dim_localidade", "sk_localidade", "id_localidade_original"))
-        .withColumn("ano", ano),
-      s"$dwDir/fato_vendas", partitionBy = Seq("ano"))
+    publish(spark, src, dwDir, "fato_vendas")
   }
+
+  /** Build and sink one DW table of `src` — one Airflow task's work. A
+    * dimension is built and written, then the checkpoint barriers its plan
+    * read (the distributed surrogate-key route's) are released: the fact
+    * reads the dims back from disk, so nothing needs those blocks again.
+    * The fact joins the dims already written, read back as (sk, business
+    * key) maps with `src`'s declared schemas (no footer-inference job) —
+    * the reference's own SK-map read-back (dags/etl_fato_vendas.py:21-24)
+    * — and is written partitioned by `ano`.
+    */
+  def publish(spark: SparkSession, src: Star.Source, dwDir: String,
+              table: String): Unit =
+    src.dims.toMap.get(table) match {
+      case Some(build) =>
+        val dim = build()
+        graft.sink.Sink.parquet(dim, s"$dwDir/$table")
+        Checkpoint.releaseReadBy(dim)
+      case None =>
+        require(table == "fato_vendas", s"unknown DW table '$table'")
+        // note: NOT repartition(ano) before the write — the extra
+        // full-fact shuffle buys nothing here because AQE already
+        // coalesces output to ~2 files per year partition (measured: no
+        // improvement, within run-to-run noise at this scale).
+        // r22: reading the dims back instead of re-deriving all four dim
+        // pipelines in-plan measured, interleaved at the 10× point, jobs
+        // 72→46, summed task time 23.3→18.9 s, wall ~0.85×, fact
+        // byte-identical (exceptAll symdiff 0/0 over 6M rows) — the SK
+        // assignment is deterministic, so read-back dims carry exactly the
+        // values the in-plan derivation would.
+        def rd(t: String, sk: String, bk: String) =
+          Star.readDw(spark, dwDir, t, src.schemas).select(sk, bk)
+        val ano = (org.apache.spark.sql.functions.col("sk_tempo") / 10000).cast("int")
+        graft.sink.Sink.parquet(
+          Star.fatoVendasOver(src.orderLines(), src.fact,
+            rd("dim_produto", "sk_produto", "id_produto_original"),
+            rd("dim_cliente", "sk_cliente", "id_cliente_original"),
+            rd("dim_vendedor", "sk_vendedor", "id_vendedor_original"),
+            rd("dim_localidade", "sk_localidade", "id_localidade_original"))
+            .withColumn("ano", ano),
+          s"$dwDir/fato_vendas", partitionBy = Seq("ano"))
+    }
 
   /** The 13 KPI queries over a materialized DW (reference: KPIs.sql).
     * Reads are deferred so a failed ETL phase still yields a complete
@@ -71,6 +80,8 @@ object StarBench {
     * Each table is read with its schema declared in Star.DwSchemas, so
     * building a query runs no Spark job and collecting it runs only the
     * jobs of the query itself, not one footer-inference job per table.
+    * Any source's DW reads through these declarations: every column a
+    * reference KPI reads has the same name and type in every source.
     */
   def kpiSuite(spark: SparkSession, dwDir: String): Seq[(String, () => DataFrame)] = {
     def rd(t: String) = Star.readDw(spark, dwDir, t)

@@ -113,7 +113,7 @@ object Scd {
   /** The kernel generalized over an arbitrary business key + attribute
     * set, so ANY dimension gets the versioned-merge story — the
     * AdventureWorks dim_cliente path reuses it on the reference's own
-    * CSVs (AwEtl.dimClienteScd2). `cur` must carry (key, attrs*,
+    * CSVs (AwEtl.dimScd2). `cur` must carry (key, attrs*,
     * valid_from, valid_to, vigente); `up` carries (key, attrs*).
     * Attribute change detection is NULL-SAFE (`<=>`), so a null→value
     * transition versions correctly instead of vanishing into a

@@ -17,10 +17,13 @@ import org.apache.spark.sql.types.StructType
   *  - fatoVendas    ← dags/etl_fato_vendas.py:30-101  (header⋈detail + SK
   *    lookups + decimal metrics + null-key prune)
   *
-  * Unlike the reference (per-task pandas + Postgres read-back), the whole
-  * pipeline is ONE lazy Catalyst plan: dims are plain DataFrames consumed by
-  * the fact build, so column pruning / filter pushdown / broadcast planning
-  * see the entire lineage.
+  * Unlike the reference (per-task pandas + Postgres read-back),
+  * [[fatoVendas]] is the whole pipeline as ONE lazy Catalyst plan: dims are
+  * plain DataFrames consumed by the fact build, so column pruning / filter
+  * pushdown / broadcast planning see the entire lineage. The published DW
+  * (`graft.StarBench.publish`, over any [[Source]], the AdventureWorks
+  * extract included) reads the written dims back instead; both run the
+  * one fact kernel, [[fatoVendasOver]].
   *
   * Numeric discipline: money is computed AND stored in exact DecimalType
   * (the reference declares NUMERIC(18,2), create_dw_tables.sql:62-64);
@@ -182,8 +185,55 @@ object Star {
   ).map { case (t, ddl) => t -> StructType.fromDDL(ddl) }
 
   /** One DW table read back from `dwDir` with its declared schema. */
-  def readDw(spark: SparkSession, dwDir: String, table: String): DataFrame =
-    spark.read.schema(DwSchemas(table)).parquet(s"$dwDir/$table")
+  def readDw(spark: SparkSession, dwDir: String, table: String,
+             schemas: Map[String, StructType] = DwSchemas): DataFrame =
+    spark.read.schema(schemas(table)).parquet(s"$dwDir/$table")
+
+  // ------------------------------------------------------------- sources
+
+  /** A source's fact columns over its header ⨝ detail frame: line grain,
+    * the four dimension lookup keys, order date, quantity, and the three
+    * money expressions, each already DECIMAL(18,2).
+    */
+  final case class FactColumns(idPedido: Column, numeroLinha: Column,
+      produto: Column, cliente: Column, vendedor: Column, localidade: Column,
+      orderDate: Column, qty: Column, bruto: Column, desconto: Column, total: Column)
+
+  /** One input of the star pipeline: its five dim builders keyed by DW
+    * table, the DW schemas it is read back with (its own four dims, the
+    * shared `dim_tempo` and `fato_vendas`), its header ⨝ detail frame
+    * and its fact columns over that frame.
+    */
+  final case class Source(dims: Seq[(String, () => DataFrame)],
+      schemas: Map[String, StructType], orderLines: () => DataFrame,
+      fact: FactColumns)
+
+  /** The testdata star as a [[Source]]. */
+  def source(spark: SparkSession, dir: String): Source = Source(
+    Seq("dim_produto" -> (() => dimProduto(spark, dir)),
+      "dim_cliente" -> (() => dimCliente(spark, dir)),
+      "dim_vendedor" -> (() => dimVendedor(spark, dir)),
+      "dim_localidade" -> (() => dimLocalidade(spark, dir)),
+      "dim_tempo" -> (() => dimTempo(spark))),
+    DwSchemas, () => orderLines(orders(spark, dir), lineitem(spark, dir)), Fact)
+
+  private def orderLines(o: DataFrame, l: DataFrame): DataFrame =
+    o.join(l, o("o_orderkey") === l("l_orderkey"), "inner")
+
+  /** NUMERIC(18,2) money end-to-end, matching the reference DDL
+    * (create_dw_tables.sql:62-64): the products carry scale 4 and are
+    * rounded (HALF_UP) back to the declared scale 2 at the column
+    * boundary, exactly as Postgres would on insert.
+    */
+  private val Fact: FactColumns = {
+    val epDec = money(col("l_extendedprice"))
+    val discDec = col("l_discount").cast("decimal(4,2)")
+    val one = lit("1.00").cast("decimal(3,2)")
+    FactColumns(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
+      col("o_custkey"), col("l_suppkey"), col("l_suppkey"), col("o_orderdate"),
+      col("l_quantity"), epDec, (epDec * discDec).cast("decimal(18,2)"),
+      (epDec * (one - discDec)).cast("decimal(18,2)"))
+  }
 
   // ---------------------------------------------------------------- fact
 
@@ -193,17 +243,9 @@ object Star {
     * ShipToAddressID, dags/etl_fato_vendas.py:69-76, not the customer's
     * address; here the ship-side location key on a line is l_suppkey) +
     * arithmetic sk_tempo (F9) + decimal metrics (F10/F11) + null-key
-    * prune (P4).
-    *
-    * Scale notes: the header⨝detail join shuffles both sides on the order
-    * key (their natural co-partition key — at 100 TB, bucketing both tables
-    * by orderkey turns this into a shuffle-free sort-merge join). Dimension
-    * lookups that are BOUNDED (produto catalog, vendedor roster) carry an
-    * explicit `broadcast()` hint; dims that GROW with the corpus (cliente,
-    * localidade — 10⁸+ rows at 100 TB, where a forced broadcast OOMs the
-    * driver) are left unhinted so the planner/AQE picks broadcast only
-    * while they actually fit under autoBroadcastJoinThreshold and falls
-    * back to a shuffled join beyond it.
+    * prune (P4). The header⨝detail join shuffles both sides on the order
+    * key (their natural co-partition key — at 100 TB, bucketing both
+    * tables by orderkey turns this into a shuffle-free sort-merge join).
     */
   def fatoVendas(spark: SparkSession, dir: String): DataFrame =
     fatoVendasFrom(spark, dir, orders(spark, dir), lineitem(spark, dir))
@@ -230,34 +272,38 @@ object Star {
     * only.
     */
   def fatoVendasFromDims(o: DataFrame, l: DataFrame, dp: DataFrame,
-                         dc: DataFrame, dv: DataFrame, dl: DataFrame): DataFrame = {
-    val epDec = money(col("l_extendedprice"))
-    val discDec = col("l_discount").cast("decimal(4,2)")
-    val one = lit("1.00").cast("decimal(3,2)")
+                         dc: DataFrame, dv: DataFrame, dl: DataFrame): DataFrame =
+    fatoVendasOver(orderLines(o, l), Fact, dp, dc, dv, dl)
 
-    o.join(l, o("o_orderkey") === l("l_orderkey"), "inner")
-      .join(broadcast(dp), l("l_partkey") === dp("id_produto_original"), "left")
-      .join(dc, o("o_custkey") === dc("id_cliente_original"), "left")
-      .join(broadcast(dv), l("l_suppkey") === dv("id_vendedor_original"), "left")
-      .join(dl, l("l_suppkey") === dl("id_localidade_original"), "left")
+  /** The fact kernel every source's `fato_vendas` runs: `lines` (a
+    * header ⨝ detail frame) + 4 SK lookups (J9-J12) + arithmetic sk_tempo
+    * (F9) + the source's decimal metrics (F10/F11) + null-key prune (P4).
+    * Each dim needs (sk, business key) only. Dimension lookups that are
+    * BOUNDED (produto catalog, vendedor roster) carry an explicit
+    * `broadcast()` hint; dims that GROW with the corpus (cliente,
+    * localidade — 10⁸+ rows at 100 TB, where a forced broadcast OOMs the
+    * driver) are left unhinted so the planner/AQE picks broadcast only
+    * while they actually fit under autoBroadcastJoinThreshold and falls
+    * back to a shuffled join beyond it.
+    */
+  def fatoVendasOver(lines: DataFrame, f: FactColumns, dp: DataFrame,
+                     dc: DataFrame, dv: DataFrame, dl: DataFrame): DataFrame =
+    lines
+      .join(broadcast(dp), f.produto === dp("id_produto_original"), "left")
+      .join(dc, f.cliente === dc("id_cliente_original"), "left")
+      .join(broadcast(dv), f.vendedor === dv("id_vendedor_original"), "left")
+      .join(dl, f.localidade === dl("id_localidade_original"), "left")
       .select(
-        l("l_orderkey").cast("long").as("id_pedido"),
-        l("l_linenumber").cast("int").as("numero_linha"),
+        f.idPedido.cast("long").as("id_pedido"),
+        f.numeroLinha.cast("int").as("numero_linha"),
         col("sk_produto"), col("sk_cliente"), col("sk_vendedor"),
         col("sk_localidade"),
-        smartDateKey(o("o_orderdate")).as("sk_tempo"),
-        l("l_quantity").cast("int").as("qtd_vendida"),
-        // NUMERIC(18,2) end-to-end, matching the reference DDL
-        // (create_dw_tables.sql:62-64): the products carry scale 4 and are
-        // rounded (HALF_UP) back to the declared scale 2 at the column
-        // boundary, exactly as Postgres would on insert.
-        epDec.as("valor_bruto"),
-        (epDec * discDec).cast("decimal(18,2)").as("valor_desconto"),
-        (epDec * (one - discDec)).cast("decimal(18,2)").as("valor_total"))
+        smartDateKey(f.orderDate).as("sk_tempo"),
+        f.qty.cast("int").as("qtd_vendida"), f.bruto.as("valor_bruto"),
+        f.desconto.as("valor_desconto"), f.total.as("valor_total"))
       // null-key prune matches the reference exactly: dropna
       // subset=['sk_produto','sk_cliente','sk_tempo']
       // (dags/etl_fato_vendas.py:96) — sk_localidade and sk_vendedor stay
       // nullable so an unresolved ship-side key doesn't shrink KPI totals.
       .na.drop("any", Seq("sk_produto", "sk_cliente", "sk_tempo"))
-  }
 }

@@ -6,18 +6,19 @@ import org.apache.spark.sql.types.{StringType, StructType}
 import graft.etl.{Star, SurrogateKeys}
 
 /** Reference-parity ETL over the real AdventureWorks 2019 CSV extract —
-  * the six DW table builds of Cgmc18/ETL-AirFlow-AdventureWorks,
-  * re-expressed as pure DataFrame transforms (one lazy plan, no database
-  * read-back between dims and fact; cf. SURVEY.md §3.2).
+  * the dimension builds of Cgmc18/ETL-AirFlow-AdventureWorks as pure
+  * DataFrame transforms, and the fact's columns — as a star [[source]]
+  * under `Star.DwSchemas`' names, built like the testdata star.
   *
   * Faithfulness notes:
   *  - CSV nulls: pandas reads both `""` and empty fields as NaN; Spark's
   *    nullValue only covers the unquoted case, so [[readCsv]] normalizes
   *    empty strings to null after the scan.
   *  - Surrogate keys: Postgres SERIAL numbers rows by insert order (= CSV
-  *    file order); we assign row_number by business key, which coincides
-  *    because every AW extract is sorted by its key — and the KPI surface
-  *    only uses SK equality, never values (SURVEY.md §7.4).
+  *    file order); we assign row_number by business key
+  *    (`SurrogateKeys.auto`), which coincides because every AW extract is
+  *    sorted by its key — and the KPI surface only uses SK equality, never
+  *    values (SURVEY.md §7.4).
   *  - Money: computed in DecimalType end-to-end (the reference computes in
   *    float64 and lets Postgres NUMERIC(18,2) round at insert,
   *    dags/etl_fato_vendas.py:83; divergence ≤ 1 cent, documented).
@@ -53,19 +54,19 @@ object AwEtl {
     val joined = product
       .join(subcat.select(col("ProductSubcategoryID"), col("ProductCategoryID"),
         col("Name").as("nome_subcategoria")), Seq("ProductSubcategoryID"), "left")
-      .join(cat.select(col("ProductCategoryID"), col("Name").as("nome_categoria")),
+      .join(cat.select(col("ProductCategoryID"), col("Name").as("categoria")),
         Seq("ProductCategoryID"), "left")
       .select(
         col("ProductID").as("id_produto_original"),
         col("Name").as("nome_produto"),
         col("nome_subcategoria"),
-        col("nome_categoria"),
+        col("categoria"),
         col("Color").as("cor"))
       .na.fill(Map(
         "cor" -> "N/A",
         "nome_subcategoria" -> "Sem Subcategoria",
-        "nome_categoria" -> "Sem Categoria"))
-    SurrogateKeys.dense(joined, "sk_produto", Seq(col("id_produto_original")))
+        "categoria" -> "Sem Categoria"))
+    SurrogateKeys.auto(joined, "sk_produto", Seq(col("id_produto_original")))
   }
 
   /** dim_cliente (dags/etl_dim_cliente.py:16-47): customer ⟕ person on
@@ -87,7 +88,7 @@ object AwEtl {
       .select(col("CustomerID").as("id_cliente_original"),
         col("nome_completo"), col("tipo_cliente"))
       .transform(SurrogateKeys.dedupKeepSmallest(_, "id_cliente_original"))
-    SurrogateKeys.dense(joined, "sk_cliente", Seq(col("id_cliente_original")))
+    SurrogateKeys.auto(joined, "sk_cliente", Seq(col("id_cliente_original")))
   }
 
   /** The business surface every AW dimension versions under SCD2:
@@ -96,10 +97,10 @@ object AwEtl {
     */
   private[graft] val dimScd2Surface: Map[String, (String, Seq[String])] = Map(
     "dim_produto" -> (("id_produto_original",
-      Seq("nome_produto", "nome_subcategoria", "nome_categoria", "cor"))),
+      Seq("nome_produto", "nome_subcategoria", "categoria", "cor"))),
     "dim_cliente" -> (("id_cliente_original",
       Seq("nome_completo", "tipo_cliente"))),
-    "dim_localidade" -> (("id_endereco_original",
+    "dim_localidade" -> (("id_localidade_original",
       Seq("cidade", "estado", "pais"))),
     "dim_vendedor" -> (("id_vendedor_original",
       Seq("nome_vendedor", "cargo"))))
@@ -133,17 +134,6 @@ object AwEtl {
     graft.etl.Scd.scd2MergeOn(cur, updates, key, attrs, loadDate)
   }
 
-  /** dim_cliente's version table (the original r10 entry point, now a
-    * [[dimVersions]] delegate).
-    */
-  def dimClienteVersions(dim: DataFrame, epoch: String = "2011-01-01"): DataFrame =
-    dimVersions("dim_cliente", dim, epoch)
-
-  /** dim_cliente's SCD2 merge ([[dimScd2]] delegate). */
-  def dimClienteScd2(cur: DataFrame, updates: DataFrame,
-      loadDate: String): DataFrame =
-    dimScd2("dim_cliente", cur, updates, loadDate)
-
   /** dim_localidade (dags/etl_dim_localidade.py:17-56): address ⟕ state ⟕
     * country with pre-join renames, null repair, keyed dedup.
     */
@@ -154,7 +144,7 @@ object AwEtl {
       .join(country.select(col("CountryRegionCode"), col("Name").as("Nome_Pais")),
         Seq("CountryRegionCode"), "left")
       .select(
-        col("AddressID").as("id_endereco_original"),
+        col("AddressID").as("id_localidade_original"),
         col("City").as("cidade"),
         col("Nome_Estado").as("estado"),
         col("Nome_Pais").as("pais"))
@@ -162,8 +152,8 @@ object AwEtl {
         "cidade" -> "Desconhecida",
         "estado" -> "Não Informado",
         "pais" -> "Não Informado"))
-      .transform(SurrogateKeys.dedupKeepSmallest(_, "id_endereco_original"))
-    SurrogateKeys.dense(joined, "sk_localidade", Seq(col("id_endereco_original")))
+      .transform(SurrogateKeys.dedupKeepSmallest(_, "id_localidade_original"))
+    SurrogateKeys.auto(joined, "sk_localidade", Seq(col("id_localidade_original")))
   }
 
   /** dim_vendedor (dags/etl_dim_vendedor.py:18-58): salesperson ⟕ employee
@@ -185,7 +175,7 @@ object AwEtl {
       .select(col("BusinessEntityID").as("id_vendedor_original"),
         col("nome_vendedor"), col("JobTitle").as("cargo"))
       .transform(SurrogateKeys.dedupKeepSmallest(_, "id_vendedor_original"))
-    SurrogateKeys.dense(joined, "sk_vendedor", Seq(col("id_vendedor_original")))
+    SurrogateKeys.auto(joined, "sk_vendedor", Seq(col("id_vendedor_original")))
   }
 
   /** dim_tempo (dags/etl_dim_tempo.py:11-43): generated 2010-2025 calendar
@@ -194,128 +184,71 @@ object AwEtl {
   def dimTempo(spark: SparkSession): DataFrame =
     Star.dimTempo(spark, "2010-01-01", "2025-12-31")
 
+  /** The four AW dims' DW schemas as a parquet read of what the builders
+    * above write returns them (every field nullable, the sk last); the
+    * drift test (DwReadSpec) pins them against the written tables.
+    * `dim_tempo` and `fato_vendas` are the shared `Star.DwSchemas` ones.
+    */
+  private[graft] val DwSchemas: Map[String, StructType] = Star.DwSchemas ++ Map(
+    "dim_produto" -> ("id_produto_original INT, nome_produto STRING, " +
+      "nome_subcategoria STRING, categoria STRING, cor STRING, sk_produto INT"),
+    "dim_cliente" -> ("id_cliente_original INT, nome_completo STRING, " +
+      "tipo_cliente STRING, sk_cliente INT"),
+    "dim_vendedor" -> ("id_vendedor_original INT, nome_vendedor STRING, " +
+      "cargo STRING, sk_vendedor INT"),
+    "dim_localidade" -> ("id_localidade_original INT, cidade STRING, " +
+      "estado STRING, pais STRING, sk_localidade INT")
+  ).map { case (t, ddl) => t -> StructType.fromDDL(ddl) }
+
   // ------------------------------------------------------------- fact
 
-  /** fato_vendas (dags/etl_fato_vendas.py:28-106): header ⨝ detail,
-    * arithmetic sk_tempo from OrderDate, 4 broadcast SK lookups, decimal
-    * metrics, null-key prune. Dims are taken as DataFrames — the
-    * reference's Postgres read-back (S2) is unnecessary in one plan.
-    */
-  def fatoVendas(header: DataFrame, detail: DataFrame, dimProduto: DataFrame,
-                 dimCliente: DataFrame, dimVendedor: DataFrame,
-                 dimLocalidade: DataFrame): DataFrame = {
-    val dp = dimProduto.select("sk_produto", "id_produto_original")
-    val dc = dimCliente.select("sk_cliente", "id_cliente_original")
-    val dv = dimVendedor.select("sk_vendedor", "id_vendedor_original")
-    val dl = dimLocalidade.select("sk_localidade", "id_endereco_original")
+  /** header ⨝ detail on SalesOrderID (dags/etl_fato_vendas.py:30). */
+  def orderLines(header: DataFrame, detail: DataFrame): DataFrame =
+    header.join(detail, Seq("SalesOrderID"), "inner")
 
-    val orderTs = to_timestamp(col("OrderDate"))
+  /** fato_vendas' columns over [[orderLines]] (dags/etl_fato_vendas.py:
+    * 28-106), sk_localidade by ship-to address. `valor_bruto` is
+    * OrderQty × (UnitPrice rounded to cents), so KPI 1 equals the
+    * reference's SUM(qtd_vendida * valor_unitario).
+    */
+  val Fact: Star.FactColumns = {
     val price = col("UnitPrice").cast("decimal(19,4)")
     val disc = col("UnitPriceDiscount").cast("decimal(6,4)")
     val qty = col("OrderQty").cast("decimal(9,0)")
     val one = lit("1.0000").cast("decimal(5,4)")
-
-    header.join(detail, Seq("SalesOrderID"), "inner")
-      .withColumn("sk_tempo", Star.smartDateKey(orderTs))
-      .join(broadcast(dp), col("ProductID") === dp("id_produto_original"), "left")
-      .join(broadcast(dc), col("CustomerID") === dc("id_cliente_original"), "left")
-      .join(broadcast(dv), col("SalesPersonID") === dv("id_vendedor_original"), "left")
-      .join(broadcast(dl), col("ShipToAddressID") === dl("id_endereco_original"), "left")
-      .select(
-        col("sk_produto"), col("sk_cliente"), col("sk_tempo"),
-        col("sk_localidade"), col("sk_vendedor"),
-        col("OrderQty").as("qtd_vendida"),
-        col("UnitPrice").cast("decimal(18,2)").as("valor_unitario"),
-        (price * qty * disc).cast("decimal(18,2)").as("valor_desconto"),
-        (price * qty * (one - disc)).cast("decimal(18,2)").as("valor_total"))
-      .na.drop("any", Seq("sk_produto", "sk_cliente", "sk_tempo"))
+    Star.FactColumns(
+      idPedido = col("SalesOrderID"), numeroLinha = col("SalesOrderDetailID"),
+      produto = col("ProductID"), cliente = col("CustomerID"),
+      vendedor = col("SalesPersonID"), localidade = col("ShipToAddressID"),
+      orderDate = to_timestamp(col("OrderDate")), qty = col("OrderQty"),
+      bruto = (col("UnitPrice").cast("decimal(18,2)") * qty).cast("decimal(18,2)"),
+      desconto = (price * qty * disc).cast("decimal(18,2)"),
+      total = (price * qty * (one - disc)).cast("decimal(18,2)"))
   }
 
-  // ------------------------------------------------------------- KPIs
-
-  /** The 10 KPI queries (KPIs.sql:1-83), DataFrame form, reference column
-    * names. Catalyst broadcasts every dim⨝fact join (dims ≪ 10 MB).
+  /** The extract as a star source. `csv(name, schema)` reads one extract
+    * file by its name (`Production Product`, ...).
     */
-  object Kpi {
-    private def dec(c: String) = col(c).cast("decimal(18,4)")
-
-    def kpi1(fato: DataFrame): DataFrame =
-      fato.agg(sum(dec("qtd_vendida") * dec("valor_unitario"))
-        .cast("decimal(18,2)").as("faturamento_bruto"))
-
-    def kpi2(fato: DataFrame): DataFrame =
-      fato.agg(sum(dec("valor_total")).cast("decimal(18,2)").as("faturamento_liquido"))
-
-    def kpi3(fato: DataFrame): DataFrame =
-      fato.agg(sum(dec("valor_desconto")).cast("decimal(18,2)").as("total_descontos"))
-
-    def kpi4(fato: DataFrame): DataFrame =
-      fato.agg(sum(col("qtd_vendida").cast("long")).as("total_itens_vendidos"))
-
-    def kpi5(fato: DataFrame, dimProduto: DataFrame): DataFrame =
-      fato.join(broadcast(dimProduto), Seq("sk_produto"))
-        .groupBy("nome_produto")
-        .agg(sum(dec("valor_total")).cast("decimal(18,2)").as("total_vendas"))
-        .orderBy(desc("total_vendas"), asc("nome_produto")).limit(5)
-
-    def kpi6(fato: DataFrame, dimProduto: DataFrame): DataFrame =
-      fato.join(broadcast(dimProduto), Seq("sk_produto"))
-        .groupBy("nome_categoria")
-        .agg(sum(dec("valor_total")).cast("decimal(18,2)").as("total_vendas"),
-          count(lit(1)).as("quantidade_vendas"))
-        .orderBy(desc("total_vendas"), asc("nome_categoria"))
-
-    def kpi7(fato: DataFrame, dimLocalidade: DataFrame): DataFrame =
-      fato.join(broadcast(dimLocalidade), Seq("sk_localidade"))
-        .groupBy("pais")
-        .agg(sum(dec("valor_total")).cast("decimal(18,2)").as("total_vendas"))
-        .orderBy(desc("total_vendas"), asc("pais"))
-
-    def kpi8(fato: DataFrame, dimTempo: DataFrame): DataFrame =
-      fato.join(broadcast(dimTempo.select("sk_tempo", "ano", "mes", "nome_mes")),
-          Seq("sk_tempo"))
-        .groupBy("ano", "mes", "nome_mes")
-        .agg(sum(dec("valor_total")).cast("decimal(18,2)").as("total_vendas"))
-        .orderBy("ano", "mes")
-
-    def kpi9(fato: DataFrame, dimVendedor: DataFrame): DataFrame =
-      fato.join(broadcast(dimVendedor), Seq("sk_vendedor"))
-        .filter(col("nome_vendedor").isNotNull)
-        .groupBy("nome_vendedor")
-        .agg(sum(dec("valor_total")).cast("decimal(18,2)").as("total_gerado"))
-        .orderBy(desc("total_gerado"), asc("nome_vendedor")).limit(10)
-
-    def kpi10(fato: DataFrame): DataFrame =
-      fato.agg((sum(dec("valor_total")).cast("double") /
-        count(lit(1)).cast("double")).as("ticket_medio_item"))
-  }
-
-  // ------------------------------------------------------------- pipeline
-
-  /** Whole-DW build from a CSV directory: the reference's six DAGs as one
-    * plan. Returns every DW table keyed by its reference name.
-    */
-  def pipeline(spark: SparkSession, dataDir: String,
-               personCsv: Option[DataFrame] = None,
-               headerDf: Option[DataFrame] = None,
-               detailDf: Option[DataFrame] = None): Map[String, DataFrame] = {
-    def rd(name: String, schema: StructType) =
-      readCsv(spark, s"$dataDir/$name.csv", schema)
-    val person = personCsv.getOrElse(rd("Person Person", AwSchemas.person))
-    val dimP = dimProduto(rd("Production Product", AwSchemas.product),
-      rd("Production ProductSubcategory", AwSchemas.productSubcategory),
-      rd("Production ProductCategory", AwSchemas.productCategory))
-    val dimC = dimCliente(rd("Sales Customer", AwSchemas.customer), person)
-    val dimL = dimLocalidade(rd("Person Address", AwSchemas.address),
-      rd("Person StateProvince", AwSchemas.stateProvince),
-      rd("Person CountryRegion", AwSchemas.countryRegion))
-    val dimV = dimVendedor(rd("Sales SalesPerson", AwSchemas.salesPerson),
-      rd("HumanResources Employee", AwSchemas.employee), person)
-    val dimT = dimTempo(spark)
-    val header = headerDf.getOrElse(rd("Sales SalesOrderHeader", AwSchemas.salesOrderHeader))
-    val detail = detailDf.getOrElse(rd("Sales SalesOrderDetail", AwSchemas.salesOrderDetail))
-    val fato = fatoVendas(header, detail, dimP, dimC, dimV, dimL)
-    Map("dim_produto" -> dimP, "dim_cliente" -> dimC, "dim_localidade" -> dimL,
-      "dim_vendedor" -> dimV, "dim_tempo" -> dimT, "fato_vendas" -> fato)
+  def source(spark: SparkSession,
+             csv: (String, StructType) => DataFrame): Star.Source = {
+    def person = csv("Person Person", AwSchemas.person)
+    Star.Source(
+      Seq("dim_produto" -> (() => dimProduto(
+          csv("Production Product", AwSchemas.product),
+          csv("Production ProductSubcategory", AwSchemas.productSubcategory),
+          csv("Production ProductCategory", AwSchemas.productCategory))),
+        "dim_cliente" -> (() => dimCliente(
+          csv("Sales Customer", AwSchemas.customer), person)),
+        "dim_vendedor" -> (() => dimVendedor(
+          csv("Sales SalesPerson", AwSchemas.salesPerson),
+          csv("HumanResources Employee", AwSchemas.employee), person)),
+        "dim_localidade" -> (() => dimLocalidade(
+          csv("Person Address", AwSchemas.address),
+          csv("Person StateProvince", AwSchemas.stateProvince),
+          csv("Person CountryRegion", AwSchemas.countryRegion))),
+        "dim_tempo" -> (() => dimTempo(spark))),
+      DwSchemas, () => orderLines(csv("Sales SalesOrderHeader", AwSchemas.salesOrderHeader),
+        csv("Sales SalesOrderDetail", AwSchemas.salesOrderDetail)),
+      Fact)
   }
 }

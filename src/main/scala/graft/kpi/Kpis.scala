@@ -1,8 +1,7 @@
 package graft.kpi
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.etl.Star
 
 /** The reference's 10-query analytical surface (KPIs.sql:1-83), computed
   * over the Spark-built star (graft.etl.Star) — no database round-trip:
@@ -122,26 +121,4 @@ object Kpis {
   def kpi10TicketMedio(fato: DataFrame): DataFrame =
     fato.agg((sum(dec("valor_total")).cast("double") /
       count(lit(1)).cast("double")).as("ticket_medio_item"))
-
-  /** All 10, keyed, bound to a scale-factor dir. */
-  def all(spark: SparkSession, dir: String): Map[String, DataFrame] = {
-    val fato = Star.fatoVendas(spark, dir)
-    val dp = Star.dimProduto(spark, dir)
-    val dc = Star.dimCliente(spark, dir)
-    val dv = Star.dimVendedor(spark, dir)
-    val dl = Star.dimLocalidade(spark, dir)
-    val dt = Star.dimTempo(spark)
-    Map(
-      "kpi7_vendas_pais" -> kpi7PorPais(fato, dl),
-      "kpi1_faturamento_bruto" -> kpi1FaturamentoBruto(fato),
-      "kpi2_faturamento_liquido" -> kpi2FaturamentoLiquido(fato),
-      "kpi3_total_descontos" -> kpi3TotalDescontos(fato),
-      "kpi4_itens_vendidos" -> kpi4ItensVendidos(fato),
-      "kpi5_top_produtos" -> kpi5TopProdutos(fato, dp),
-      "kpi6_vendas_categoria" -> kpi6VendasPorCategoria(fato, dp),
-      "kpi7_vendas_nacao" -> kpi7PorNacao(fato, dc),
-      "kpi8_sazonalidade" -> kpi8Sazonalidade(fato, dt),
-      "kpi9_ranking_vendedores" -> kpi9RankingVendedores(fato, dv),
-      "kpi10_ticket_medio" -> kpi10TicketMedio(fato))
-  }
 }

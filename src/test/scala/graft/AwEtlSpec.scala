@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import graft.etl.Star
 import graft.etl.aw.{AwEtl, AwSchemas}
+import graft.kpi.Kpis
 
 /** Reference-parity tests on the REAL AdventureWorks CSVs where present
   * (row counts from the reference's run logs, BASELINE.md) and on
@@ -38,7 +40,7 @@ class AwEtlSpec extends SparkSpec {
     assert(dim.count() === 504)
     // 209 products have no subcategory (FIXTURES.md) → repaired label
     assert(dim.filter($"nome_subcategoria" === "Sem Subcategoria").count() === 209)
-    assert(dim.filter($"nome_categoria" === "Sem Categoria").count() === 209)
+    assert(dim.filter($"categoria" === "Sem Categoria").count() === 209)
     assert(dim.filter($"cor".isNull).count() === 0)
     // SKs contiguous from 1
     val Row(mn: Int, mx: Int, n: Long) = dim
@@ -87,7 +89,7 @@ class AwEtlSpec extends SparkSpec {
     // first load: the real 19,820-row Sales Customer.csv (person fixture
     // for the names), opened as the initial version table
     val dim = AwEtl.dimCliente(rd("Sales Customer", AwSchemas.customer), person)
-    val cur = AwEtl.dimClienteVersions(dim)
+    val cur = AwEtl.dimVersions("dim_cliente", dim)
     val n = cur.count()
     // second load: a source change re-types every 7th customer and one
     // brand-new customer appears (1000003 is not divisible by 7)
@@ -98,7 +100,7 @@ class AwEtlSpec extends SparkSpec {
           .otherwise(col("tipo_cliente")))
       .unionByName(Seq((1000003, "Cliente Novo", "Individual"))
         .toDF("id_cliente_original", "nome_completo", "tipo_cliente"))
-    val merged = AwEtl.dimClienteScd2(cur, updates, "2013-06-01")
+    val merged = AwEtl.dimScd2("dim_cliente", cur, updates, "2013-06-01")
     val changedN = surface.filter(col("id_cliente_original") % 7 === 0).count()
     assert(changedN > 0)
     // merge, not truncate-reload: old versions survive — |dim| rows plus
@@ -191,18 +193,20 @@ class AwEtlSpec extends SparkSpec {
       (102, "2013-07-01 00:00:00", 3, Some(275), 999)) // address 999 unmatched
       .toDF("SalesOrderID", "OrderDate", "CustomerID", "SalesPersonID", "ShipToAddressID")
     val detail = Seq(
-      (100, 1, 2, 10.0, 0.10),   // product 1: desconto 2.00, total 18.00
-      (100, 2, 1, 99.99, 0.0),
-      (100, 3, 5, 5.0, 0.0),     // product 3 not in dim → dropped
-      (101, 1, 5, 5.0, 0.0),     // online order line (null seller)
-      (102, 2, 4, 2.5, 0.02))
-      .toDF("SalesOrderID", "ProductID", "OrderQty", "UnitPrice", "UnitPriceDiscount")
+      (100, 1, 1, 2, 10.0, 0.10),   // product 1: desconto 2.00, total 18.00
+      (100, 2, 2, 1, 99.99, 0.0),
+      (100, 3, 3, 5, 5.0, 0.0),     // product 3 not in dim → dropped
+      (101, 4, 1, 5, 5.0, 0.0),     // online order line (null seller)
+      (102, 5, 2, 4, 2.5, 0.02))
+      .toDF("SalesOrderID", "SalesOrderDetailID", "ProductID", "OrderQty",
+        "UnitPrice", "UnitPriceDiscount")
     val dimP = Seq((1, 1), (2, 2)).toDF("sk_produto", "id_produto_original")
     val dimC = Seq((1, 1), (2, 2), (3, 3)).toDF("sk_cliente", "id_cliente_original")
     val dimV = Seq((1, 274), (2, 275)).toDF("sk_vendedor", "id_vendedor_original")
-    val dimL = Seq((1, 900), (2, 901)).toDF("sk_localidade", "id_endereco_original")
+    val dimL = Seq((1, 900), (2, 901)).toDF("sk_localidade", "id_localidade_original")
 
-    val fato = AwEtl.fatoVendas(header, detail, dimP, dimC, dimV, dimL)
+    val fato = Star.fatoVendasOver(AwEtl.orderLines(header, detail), AwEtl.Fact,
+        dimP, dimC, dimV, dimL)
       .orderBy("sk_tempo", "sk_produto")
     val rows = fato.collect()
     assert(rows.length === 4) // product-3 line pruned
@@ -220,26 +224,26 @@ class AwEtlSpec extends SparkSpec {
     // F10/F11 identity: total + desconto == qty * price
     val identity = fato.withColumn("lhs",
         $"valor_total" + $"valor_desconto")
-      .withColumn("rhs", $"qtd_vendida" * $"valor_unitario")
+      .withColumn("rhs", $"valor_bruto")
       .filter(abs($"lhs" - $"rhs") > 0.005)
     assert(identity.count() === 0)
   }
 
   test("KPIs on a fixture fact: values match hand computation") {
     val dimP = Seq((1, 1, "Bike A", "Bikes"), (2, 2, "Helmet", "Accessories"))
-      .toDF("sk_produto", "id_produto_original", "nome_produto", "nome_categoria")
+      .toDF("sk_produto", "id_produto_original", "nome_produto", "categoria")
     val fato = Seq(
-      (1, 2, 10.0, 2.0, 18.0),
+      (1, 2, 20.0, 2.0, 18.0),
       (1, 1, 99.99, 0.0, 99.99),
-      (2, 4, 2.5, 0.2, 9.8))
-      .toDF("sk_produto", "qtd_vendida", "valor_unitario", "valor_desconto", "valor_total")
-    val k1 = AwEtl.Kpi.kpi1(fato).head.getDecimal(0).doubleValue()
+      (2, 4, 10.0, 0.2, 9.8))
+      .toDF("sk_produto", "qtd_vendida", "valor_bruto", "valor_desconto", "valor_total")
+    val k1 = Kpis.kpi1FaturamentoBruto(fato).head.getDouble(0)
     assert(k1 === 2 * 10.0 + 1 * 99.99 + 4 * 2.5) // 129.99
-    val k6 = AwEtl.Kpi.kpi6(fato, dimP).collect()
-    assert(k6.head.getAs[String]("nome_categoria") === "Bikes")
-    assert(k6.head.getDecimal(1).doubleValue() === 117.99)
+    val k6 = Kpis.kpi6VendasPorCategoria(fato, dimP).collect()
+    assert(k6.head.getAs[String]("categoria") === "Bikes")
+    assert(k6.head.getDouble(1) === 117.99)
     assert(k6.head.getAs[Long]("quantidade_vendas") === 2L)
-    val k10 = AwEtl.Kpi.kpi10(fato).head.getDouble(0)
+    val k10 = Kpis.kpi10TicketMedio(fato).head.getDouble(0)
     assert(math.abs(k10 - (18.0 + 99.99 + 9.8) / 3) < 1e-9)
   }
 }

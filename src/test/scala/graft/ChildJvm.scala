@@ -16,6 +16,20 @@ object ChildJvm {
     */
   def probe(main: String, args: Seq[String],
       jvmOpts: Seq[String] = Nil): Map[String, String] = {
+    val (code, out, err) = run(main, args, jvmOpts)
+    assert(code == 0, s"$main JVM exited $code:\n${err.takeRight(4000)}")
+    out.linesIterator.collect {
+      case l if l.startsWith("probe:") =>
+        val Array(k, v) = l.stripPrefix("probe:").split("=", 2)
+        k -> v
+    }.toMap
+  }
+
+  /** `main`'s exit code, stdout and stderr, run with SPARK_GRAFT_CPUS=2
+    * and the extra JVM options `jvmOpts`.
+    */
+  def run(main: String, args: Seq[String],
+      jvmOpts: Seq[String] = Nil): (Int, String, String) = {
     val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
     // --add-opens flags Spark needs on JDK 17, as this JVM was given them
     val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
@@ -27,11 +41,6 @@ object ChildJvm {
     val code = Process(cmd, None, "SPARK_GRAFT_CPUS" -> "2")
       .!(ProcessLogger(l => out.append(l).append('\n'),
         l => err.append(l).append('\n')))
-    assert(code == 0, s"$main JVM exited $code:\n${err.takeRight(4000)}")
-    out.toString.linesIterator.collect {
-      case l if l.startsWith("probe:") =>
-        val Array(k, v) = l.stripPrefix("probe:").split("=", 2)
-        k -> v
-    }.toMap
+    (code, out.toString, err.toString)
   }
 }

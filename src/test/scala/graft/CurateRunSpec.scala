@@ -45,56 +45,42 @@ class CurateRunSpec extends SparkSpec {
   }
 
   test("curation funnel is monotone; written corpus matches the survivors; rerun identical") {
-    val out = s"/tmp/graft_curate_spec_${System.nanoTime()}"
-    try {
-      val funnel = CurateRun.run(spark, tiny, out)
-      assert(funnel.head._1 == "ingest")
-      funnel.sliding(2).foreach { case Seq((a, na), (b, nb)) =>
-        assert(nb <= na, s"stage '$b' grew the corpus ($na -> $nb)")
-      }
-      assert(funnel.last._2 > 0, "tiny corpus should survive curation")
-      // the closing HLL diagnostic: a sane distinct-shingle estimate of
-      // the corpus the funnel just wrote (the estimator's error band is
-      // pinned by CurationOpsSpec; here the wiring must produce a number
-      // in the right ballpark, not zero and not astronomically off)
-      val est = CurateRun.corpusShingleEstimate(spark, out)
-      assert(est > 0, "HLL estimate of the written corpus must be positive")
-      val corpus = spark.read.parquet(s"$out/corpus")
-      assert(corpus.count() == funnel.last._2)
-      assert(corpus.columns.toSet ==
-        Set("doc_id", "lang", "source", "texto_limpo", "n_tokens"))
-      // text is the CLEANED form: token count must equal the n_tokens col
-      corpus.collect().foreach { r =>
-        val n = r.getAs[String]("texto_limpo").trim.split("\\s+").length
-        assert(n == r.getAs[Int]("n_tokens"), s"doc ${r.getAs[Long]("doc_id")}")
-      }
-      val first = corpus.orderBy("doc_id").collect().toSeq
-      val funnel2 = CurateRun.run(spark, tiny, out)
-      assert(funnel2 == funnel)
-      assert(spark.read.parquet(s"$out/corpus").orderBy("doc_id").collect().toSeq == first)
-      // the three-process DAG shape (signals -> dedup -> final, each
-      // reading the previous keep-list back) must land on the SAME corpus
-      val staged = s"$out-staged"
-      try {
-        val nSig = CurateRun.runStage(spark, "signals", tiny, staged)
-        assert(nSig == funnel.find(_._1 == "lm perplexity").get._2)
-        val nDed = CurateRun.runStage(spark, "dedup", tiny, staged)
-        assert(nDed == funnel.find(_._1 == "not contaminated").get._2)
-        val nFin = CurateRun.runStage(spark, "final", tiny, staged)
-        assert(nFin == funnel.last._2)
-        assert(spark.read.parquet(s"$staged/corpus")
-          .orderBy("doc_id").collect().toSeq == first)
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-        }
-        rm(new java.io.File(staged))
-      }
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-      }
-      rm(new java.io.File(out))
+    val out = s"${Scratch.tempDir("graft_curate_spec_")}/out"
+    val funnel = CurateRun.run(spark, tiny, out)
+    assert(funnel.head._1 == "ingest")
+    funnel.sliding(2).foreach { case Seq((a, na), (b, nb)) =>
+      assert(nb <= na, s"stage '$b' grew the corpus ($na -> $nb)")
     }
+    assert(funnel.last._2 > 0, "tiny corpus should survive curation")
+    // the closing HLL diagnostic: a sane distinct-shingle estimate of
+    // the corpus the funnel just wrote (the estimator's error band is
+    // pinned by CurationOpsSpec; here the wiring must produce a number
+    // in the right ballpark, not zero and not astronomically off)
+    val est = CurateRun.corpusShingleEstimate(spark, out)
+    assert(est > 0, "HLL estimate of the written corpus must be positive")
+    val corpus = spark.read.parquet(s"$out/corpus")
+    assert(corpus.count() == funnel.last._2)
+    assert(corpus.columns.toSet ==
+      Set("doc_id", "lang", "source", "texto_limpo", "n_tokens"))
+    // text is the CLEANED form: token count must equal the n_tokens col
+    corpus.collect().foreach { r =>
+      val n = r.getAs[String]("texto_limpo").trim.split("\\s+").length
+      assert(n == r.getAs[Int]("n_tokens"), s"doc ${r.getAs[Long]("doc_id")}")
+    }
+    val first = corpus.orderBy("doc_id").collect().toSeq
+    val funnel2 = CurateRun.run(spark, tiny, out)
+    assert(funnel2 == funnel)
+    assert(spark.read.parquet(s"$out/corpus").orderBy("doc_id").collect().toSeq == first)
+    // the three-process DAG shape (signals -> dedup -> final, each
+    // reading the previous keep-list back) must land on the SAME corpus
+    val staged = s"$out-staged"
+    val nSig = CurateRun.runStage(spark, "signals", tiny, staged)
+    assert(nSig == funnel.find(_._1 == "lm perplexity").get._2)
+    val nDed = CurateRun.runStage(spark, "dedup", tiny, staged)
+    assert(nDed == funnel.find(_._1 == "not contaminated").get._2)
+    val nFin = CurateRun.runStage(spark, "final", tiny, staged)
+    assert(nFin == funnel.last._2)
+    assert(spark.read.parquet(s"$staged/corpus")
+      .orderBy("doc_id").collect().toSeq == first)
   }
 }

@@ -18,6 +18,12 @@ class DwReadSpec extends SparkSpec {
     d
   }
   private lazy val suite = StarBench.kpiSuite(spark, dw).toMap
+  // the AdventureWorks DW the DAG's entry point builds over AwFixture
+  private lazy val awDw = {
+    val d = Scratch.tempDir("graft_dw_read_aw").toString
+    graft.etl.aw.AwRun.run(spark, None, AwFixture.csvDir, d)
+    d
+  }
 
   private val factOnly = Seq("kpi1", "kpi2", "kpi3", "kpi4", "kpi10")
   private val grouped = Seq("kpi6", "kpi7", "kpi7_pais", "kpi8", "kpi8_pruned")
@@ -28,9 +34,10 @@ class DwReadSpec extends SparkSpec {
     assert(Star.DwSchemas.keySet == Set("dim_produto", "dim_cliente",
       "dim_vendedor", "dim_localidade", "dim_tempo", "fato_vendas"))
     def shape(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
-    for ((t, declared) <- Star.DwSchemas)
-      assert(shape(declared) == shape(spark.read.parquet(s"$dw/$t").schema),
-        s"$t: declared schema differs from the one Spark infers")
+    for ((schemas, dir) <- Seq(Star.DwSchemas -> dw,
+        graft.etl.aw.AwEtl.DwSchemas -> awDw); (t, declared) <- schemas)
+      assert(shape(declared) == shape(spark.read.parquet(s"$dir/$t").schema),
+        s"$t: declared schema differs from the one Spark infers from $dir")
   }
 
   test("building every kpiSuite query and reading its schema runs zero Spark jobs") {

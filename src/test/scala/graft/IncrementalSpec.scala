@@ -34,31 +34,23 @@ class IncrementalSpec extends SparkSpec {
             .map(f => (f.getName, f.length, f.lastModified)).toSeq.sortBy(_._1)
         }.toMap
     }
-    val dw = s"/tmp/graft_incr_spec_${System.nanoTime()}"
-    try {
-      val dims = Incremental.writeDims(spark, tiny, s"$dw-dims")
-      Incremental.writeSlice(spark, tiny,
-        col("o_orderdate") < lit("1996-01-01"), dw, "overwrite", dims)
-      val before = listing(dw)
-      assert(before.keys.forall(_.stripPrefix("ano=").toInt < 1996),
-        "historical slice must only populate pre-cut years")
-      Incremental.writeSlice(spark, tiny,
-        col("o_orderdate") >= lit("1996-01-01"), dw, "append", dims)
-      val after = listing(dw)
-      // every pre-cut partition's file set is byte-identical — the
-      // historical majority was neither rewritten nor touched
-      before.foreach { case (p, files) =>
-        assert(after(p) == files, s"append modified historical partition $p")
-      }
-      assert(after.keys.exists(_.stripPrefix("ano=").toInt >= 1996),
-        "increment must add post-cut year partitions")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-      }
-      rm(new java.io.File(dw))
-      rm(new java.io.File(s"$dw-dims"))
+    val dw = s"${Scratch.tempDir("graft_incr_spec_")}/dw"
+    val dims = Incremental.writeDims(spark, tiny, s"$dw-dims")
+    Incremental.writeSlice(spark, tiny,
+      col("o_orderdate") < lit("1996-01-01"), dw, "overwrite", dims)
+    val before = listing(dw)
+    assert(before.keys.forall(_.stripPrefix("ano=").toInt < 1996),
+      "historical slice must only populate pre-cut years")
+    Incremental.writeSlice(spark, tiny,
+      col("o_orderdate") >= lit("1996-01-01"), dw, "append", dims)
+    val after = listing(dw)
+    // every pre-cut partition's file set is byte-identical — the
+    // historical majority was neither rewritten nor touched
+    before.foreach { case (p, files) =>
+      assert(after(p) == files, s"append modified historical partition $p")
     }
+    assert(after.keys.exists(_.stripPrefix("ano=").toInt >= 1996),
+      "increment must add post-cut year partitions")
   }
 
   test("dynamic-overwrite backfill replaces only the backfilled year") {
@@ -70,39 +62,31 @@ class IncrementalSpec extends SparkSpec {
             .map(f => (f.getName, f.length, f.lastModified)).toSeq.sortBy(_._1)
         }.toMap
     }
-    val dw = s"/tmp/graft_backfill_spec_${System.nanoTime()}"
-    try {
-      val dims = Incremental.writeDims(spark, tiny, s"$dw-dims")
-      Incremental.writeSlice(spark, tiny, lit(true), dw, "overwrite", dims)
-      val full = spark.read.parquet(dw)
-      val fullRows = full.count()
-      val before = listing(dw)
-      Thread.sleep(1100) // mtime resolution guard
-      val prev = spark.conf
-        .get("spark.sql.sources.partitionOverwriteMode", "static")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try Incremental.writeSlice(spark, tiny,
-        year(col("o_orderdate")) === 1996, dw, "overwrite", dims)
-      finally spark.conf
-        .set("spark.sql.sources.partitionOverwriteMode", prev)
-      val after = listing(dw)
-      assert(after.keySet == before.keySet,
-        "backfill must not add or drop partitions")
-      before.foreach { case (p, files) =>
-        if (p == "ano=1996")
-          assert(after(p) != files, "the backfilled year must be rewritten")
-        else
-          assert(after(p) == files, s"backfill touched unrelated partition $p")
-      }
-      assert(spark.read.parquet(dw).count() == fullRows,
-        "backfill must preserve the row count")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-      }
-      rm(new java.io.File(dw))
-      rm(new java.io.File(s"$dw-dims"))
+    val dw = s"${Scratch.tempDir("graft_backfill_spec_")}/dw"
+    val dims = Incremental.writeDims(spark, tiny, s"$dw-dims")
+    Incremental.writeSlice(spark, tiny, lit(true), dw, "overwrite", dims)
+    val full = spark.read.parquet(dw)
+    val fullRows = full.count()
+    val before = listing(dw)
+    Thread.sleep(1100) // mtime resolution guard
+    val prev = spark.conf
+      .get("spark.sql.sources.partitionOverwriteMode", "static")
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try Incremental.writeSlice(spark, tiny,
+      year(col("o_orderdate")) === 1996, dw, "overwrite", dims)
+    finally spark.conf
+      .set("spark.sql.sources.partitionOverwriteMode", prev)
+    val after = listing(dw)
+    assert(after.keySet == before.keySet,
+      "backfill must not add or drop partitions")
+    before.foreach { case (p, files) =>
+      if (p == "ano=1996")
+        assert(after(p) != files, "the backfilled year must be rewritten")
+      else
+        assert(after(p) == files, s"backfill touched unrelated partition $p")
     }
+    assert(spark.read.parquet(dw).count() == fullRows,
+      "backfill must preserve the row count")
   }
 
   test("maintained KPI state: O(|products|) rows, replay is a no-op, equals the one-shot aggregate") {

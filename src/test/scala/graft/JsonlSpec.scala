@@ -18,46 +18,39 @@ class JsonlSpec extends SparkSpec {
     StructField("n_chars", LongType)))
 
   test("documents round-trip through JSONL bit-exactly, with zh text intact") {
-    val out = s"/tmp/graft_jsonl_${System.nanoTime()}"
-    try {
-      val docs = Tables.documents(spark, tiny)
-        .selectExpr("CAST(doc_id AS BIGINT) AS doc_id", "text", "lang",
-          "source", "CAST(n_chars AS BIGINT) AS n_chars")
-      docs.coalesce(1).write.json(out) // one object per line
-      val back = spark.read.schema(schema).json(out)
-      assert(back.schema == schema, "explicit schema must win over inference")
-      val a = docs.orderBy("doc_id").collect().toSeq
-      val b = back.orderBy("doc_id").collect().toSeq
-      assert(a == b, "JSONL round trip must be lossless")
-      // the zh docs carry multi-byte unicode — the exact-equality above
-      // already covers them, but assert presence so corpus drift can't
-      // silently vacuous-pass this
-      assert(a.exists(_.getAs[String]("lang") == "zh"))
-      // corrupt-line posture: PERMISSIVE (default) surfaces the bad row
-      // as a flagged record rather than failing the 100 TB job (a
-      // hand-written file — appending to a Spark-written part would
-      // invalidate its .crc sidecar and fail the read outright)
-      val badDir = new java.io.File(out + "_bad")
-      badDir.mkdirs()
-      val w = new java.io.PrintWriter(
-        new java.io.File(badDir, "data.json"), "UTF-8")
-      w.println("""{"doc_id":1,"text":"a b","lang":"en","source":"s","n_chars":3}""")
-      w.println("{not json")
-      w.close()
-      val read = spark.read.schema(
-          schema.add("_corrupt_record", StringType))
-        .json(badDir.getPath)
-      // materialize full rows first: Spark disallows queries touching
-      // ONLY the corrupt column over a raw JSON source
-      val rows = read.collect()
-      assert(rows.length == 2)
-      assert(rows.count(_.getAs[String]("_corrupt_record") != null) == 1,
-        "the corrupt line must surface as a flagged row, not a job failure")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-      }
-      rm(new java.io.File(out)); rm(new java.io.File(out + "_bad"))
-    }
+    val out = s"${Scratch.tempDir("graft_jsonl_")}/out"
+    val docs = Tables.documents(spark, tiny)
+      .selectExpr("CAST(doc_id AS BIGINT) AS doc_id", "text", "lang",
+        "source", "CAST(n_chars AS BIGINT) AS n_chars")
+    docs.coalesce(1).write.json(out) // one object per line
+    val back = spark.read.schema(schema).json(out)
+    assert(back.schema == schema, "explicit schema must win over inference")
+    val a = docs.orderBy("doc_id").collect().toSeq
+    val b = back.orderBy("doc_id").collect().toSeq
+    assert(a == b, "JSONL round trip must be lossless")
+    // the zh docs carry multi-byte unicode — the exact-equality above
+    // already covers them, but assert presence so corpus drift can't
+    // silently vacuous-pass this
+    assert(a.exists(_.getAs[String]("lang") == "zh"))
+    // corrupt-line posture: PERMISSIVE (default) surfaces the bad row
+    // as a flagged record rather than failing the 100 TB job (a
+    // hand-written file — appending to a Spark-written part would
+    // invalidate its .crc sidecar and fail the read outright)
+    val badDir = new java.io.File(out + "_bad")
+    badDir.mkdirs()
+    val w = new java.io.PrintWriter(
+      new java.io.File(badDir, "data.json"), "UTF-8")
+    w.println("""{"doc_id":1,"text":"a b","lang":"en","source":"s","n_chars":3}""")
+    w.println("{not json")
+    w.close()
+    val read = spark.read.schema(
+        schema.add("_corrupt_record", StringType))
+      .json(badDir.getPath)
+    // materialize full rows first: Spark disallows queries touching
+    // ONLY the corrupt column over a raw JSON source
+    val rows = read.collect()
+    assert(rows.length == 2)
+    assert(rows.count(_.getAs[String]("_corrupt_record") != null) == 1,
+      "the corrupt line must surface as a flagged row, not a job failure")
   }
 }

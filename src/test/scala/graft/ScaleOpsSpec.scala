@@ -119,10 +119,6 @@ class ScaleOpsSpec extends SparkSpec {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)
       }
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-      }
-      rm(new java.io.File(src))
     }
   }
 

@@ -49,43 +49,29 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("compaction rewrites to one file per partition, rows bit-identical") {
-    val out = s"/tmp/graft_compact_${System.nanoTime()}"
-    try {
-      val fato = etl.Star.fatoVendas(spark, tiny)
-      val (before, after, identical) = StorageDemo.compactDemo(spark, fato, out)
-      assert(identical, "compaction must be lossless")
-      val years = spark.read.parquet(s"$out/compact")
-        .select("ano").distinct().count().toInt
-      assert(after == years, s"expected 1 file per partition, got $after/$years")
-      assert(before > after, s"fragmentation should exceed $after files ($before)")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-      }
-      rm(new java.io.File(out))
-    }
+    val out = s"${Scratch.tempDir("graft_compact_")}/out"
+    val fato = etl.Star.fatoVendas(spark, tiny)
+    val (before, after, identical) = StorageDemo.compactDemo(spark, fato, out)
+    assert(identical, "compaction must be lossless")
+    val years = spark.read.parquet(s"$out/compact")
+      .select("ano").distinct().count().toInt
+    assert(after == years, s"expected 1 file per partition, got $after/$years")
+    assert(before > after, s"fragmentation should exceed $after files ($before)")
   }
 
   test("z-ordered layout prunes the second dimension; time-sorted cannot") {
-    val out = s"/tmp/graft_zorder_${System.nanoTime()}"
-    try {
-      val z = StorageDemo.zorderSkipDemo(spark, tiny, out, 16)
-      // both layouts prune the time slice well below a full scan
-      assert(z.tsTime < z.total / 2, s"ts layout should prune time: $z")
-      assert(z.zTime < z.total, s"z layout must not degrade to full scan: $z")
-      // the point of the layout: the user predicate prunes ONLY under
-      // z-order — the time-sorted layout spreads every user over every
-      // file and must materialize (almost) everything
-      // at 16 files × ~60 rows the skipping granularity is coarse; the
-      // REQUIRED property is strict improvement with real headroom (the
-      // sf0.1 demo shows the sharp version: 32 files, ~8x less I/O)
-      assert(z.zUser <= z.tsUser * 3 / 4,
-        s"z-order must out-prune the 1-D layout on the second dimension: $z")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-      }
-      rm(new java.io.File(out))
-    }
+    val out = s"${Scratch.tempDir("graft_zorder_")}/out"
+    val z = StorageDemo.zorderSkipDemo(spark, tiny, out, 16)
+    // both layouts prune the time slice well below a full scan
+    assert(z.tsTime < z.total / 2, s"ts layout should prune time: $z")
+    assert(z.zTime < z.total, s"z layout must not degrade to full scan: $z")
+    // the point of the layout: the user predicate prunes ONLY under
+    // z-order — the time-sorted layout spreads every user over every
+    // file and must materialize (almost) everything
+    // at 16 files × ~60 rows the skipping granularity is coarse; the
+    // REQUIRED property is strict improvement with real headroom (the
+    // sf0.1 demo shows the sharp version: 32 files, ~8x less I/O)
+    assert(z.zUser <= z.tsUser * 3 / 4,
+      s"z-order must out-prune the 1-D layout on the second dimension: $z")
   }
 }
