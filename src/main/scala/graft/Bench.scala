@@ -79,11 +79,6 @@ object Bench {
           .filter(_.length > 8).map(_(8).toLong).getOrElse(-1L)
         finally src.close()
       } catch { case _: Throwable => -1L }
-    // jiffies of steal since snapshot `s0`, or -1 if either read failed
-    def stealSince(s0: Long): Long = {
-      val s1 = stealJiffies()
-      if (s0 < 0 || s1 < 0) -1L else s1 - s0
-    }
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(
           e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
@@ -100,16 +95,46 @@ object Bench {
     def storeMb(): Long =
       spark.sparkContext.getRDDStorageInfo
         .map(i => i.memSize + i.diskSize).sum >> 20
-    // `steal`: the row's steal jiffies, -1 when any snapshot failed;
-    // `peak`: the row's peak task execution memory in bytes
-    def recordHealth(name: String, gc0: Long, task0: Long, steal: Long,
-        peak: Long): Unit = {
+    // one timed run: wall seconds (-1.0 when the body throws, so a
+    // failed query is unmistakable in BENCH json, not a suspiciously-fast
+    // timing) and the GC ms, task ms, steal jiffies (-1 when a snapshot
+    // failed) and peak task execution memory across it
+    final case class Rep(sec: Double, gc: Long, task: Long, steal: Long, peak: Long)
+    def rep(name: String)(f: => Unit): Rep = {
+      val gc0 = gcMillis()
+      val task0 = taskMsTotal.get()
+      val steal0 = stealJiffies()
+      peakTaskMem.set(0L)
+      val t0 = System.nanoTime()
+      val s =
+        try { f; (System.nanoTime() - t0) / 1e9 }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          -1.0
+        } finally {
+          // barrier-block hygiene BETWEEN reps, outside the timed region:
+          // the rep's action has fully materialized, its frames are
+          // discarded, so its localCheckpoint blocks are dead weight —
+          // without this a 1000 s session accumulates every row's
+          // barriers in the block manager (the r21 32-core anomaly)
+          Checkpoint.releaseAll()
+        }
+      val steal1 = stealJiffies()
+      Rep(s, gcMillis() - gc0, taskMsTotal.get() - task0,
+        if (steal0 < 0 || steal1 < 0) -1L else steal1 - steal0, peakTaskMem.get())
+    }
+    // a row's time is the min over its reps (-1 if any failed); its health
+    // sums GC, task time and steal over ITS OWN reps (one failed steal
+    // snapshot poisons the sum to -1) and takes their peak memory
+    def record(name: String, runs: Seq[Rep]): Unit = {
+      times(name) = if (runs.exists(_.sec == -1.0)) -1.0 else runs.map(_.sec).min
       val up = java.lang.management.ManagementFactory.getRuntimeMXBean.getUptime / 1000
-      val taskS = (taskMsTotal.get() - task0) / 1000.0
+      val steal = runs.map(_.steal).reduce((a, b) => if (a < 0 || b < 0) -1L else a + b)
       val stealS = // USER_HZ = 100 (fixed /proc ABI)
         if (steal < 0) -1.0 else steal / 100.0
-      jvmHealth(name) = s"gc_ms=${gcMillis() - gc0} uptime_s=$up " +
-        f"task_s=$taskS%.1f peak_mb=${peak >> 20} " +
+      val taskS = runs.map(_.task).sum / 1000.0
+      jvmHealth(name) = s"gc_ms=${runs.map(_.gc).sum} uptime_s=$up " +
+        f"task_s=$taskS%.1f peak_mb=${runs.map(_.peak).max >> 20} " +
         f"store_mb=${storeMb()} steal_s=$stealS%.1f"
     }
     def fingerprint(name: String, df: => org.apache.spark.sql.DataFrame): Unit =
@@ -128,109 +153,32 @@ object Bench {
       // rep 1 performs the physical tombstone fold; later reps find a
       // clean store and no-op — the min is a floor, not a measurement
       "bm25_update_compact")
-    def time(name: String)(f: => Unit): Unit = {
-      val gc0 = gcMillis()
-      val task0 = taskMsTotal.get()
-      val steal0 = stealJiffies()
-      peakTaskMem.set(0L)
-      val runs = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try {
-          f
-          (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
-          // a failed query must be unmistakable in BENCH json, not a
-          // suspiciously-fast timing
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          -1.0
-        } finally {
-          // barrier-block hygiene BETWEEN reps, outside the timed region:
-          // the rep's action has fully materialized, its frames are
-          // discarded, so its localCheckpoint blocks are dead weight —
-          // without this a 1000 s session accumulates every row's
-          // barriers in the block manager (the r21 32-core anomaly)
-          Checkpoint.releaseAll()
-        }
-      }
-      times(name) = if (runs.contains(-1.0)) -1.0 else runs.min
-      recordHealth(name, gc0, task0, stealSince(steal0), peakTaskMem.get())
-      // first rep of the ETL phase is the COLD number BASELINE.md compares
-      // against (later reps are JVM/page-cache warm); for the index
-      // compaction only rep 1 performs the physical fold (later reps find
-      // no affected partitions — a no-op floor), so its rep-1 is the
-      // number of record. Keep both visible. `_cold` keys are excluded
-      // from the headline total.
-      if (ColdNames(name) && reps > 1) times(name + "_cold") = runs.head
-    }
-    // ONE-rep timing for end-to-end pipeline runs (funnel, scale phase):
-    // these are lifecycle measurements, not query noise floors
-    def once(name: String)(f: => Unit): Unit = {
-      val gc0 = gcMillis()
-      val task0 = taskMsTotal.get()
-      val steal0 = stealJiffies()
-      peakTaskMem.set(0L)
-      val t0 = System.nanoTime()
-      try { f; times(name) = (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        times(name) = -1.0
-      }
-      finally Checkpoint.releaseAll() // between-rows hygiene (see time)
-      recordHealth(name, gc0, task0, stealSince(steal0), peakTaskMem.get())
+    // `n` reps of one row (`n` = 1 for the end-to-end lifecycle rows —
+    // funnel, scale phase — which are not query noise floors). The first
+    // rep of the ETL phase is the COLD number BASELINE.md compares against
+    // (later reps are JVM/page-cache warm); for the index compaction only
+    // rep 1 performs the physical fold (later reps find no affected
+    // partitions — a no-op floor), so its rep-1 is the number of record.
+    // Keep both visible. `_cold` keys are excluded from the headline total.
+    def time(name: String, n: Int = reps)(f: => Unit): Unit = {
+      val runs = (1 to n).map(_ => rep(name)(f))
+      record(name, runs)
+      if (ColdNames(name) && n > 1) times(name + "_cold") = runs.head.sec
     }
     // INTERLEAVED A/B reps (a, b, a, b, …) inside one phase, so slow
     // machine-load drift hits both sides alike and the recorded DIRECTION
-    // is load-invariant; each side still reports its min across reps
+    // is load-invariant; each side reports its min across reps, and its
+    // health from its own reps only, so a row can adjudicate which side paid
     def interleaved(aName: String, bName: String)(a: => Unit)(b: => Unit): Unit = {
-      // GC, task time, steal and peak memory kept PER SIDE (snapshot
-      // around each rep): a row must not report the pair's combined delta
-      // or max, or it can't adjudicate which side paid
-      var gcA = 0L
-      var gcB = 0L
-      var tkA = 0L
-      var tkB = 0L
-      var stA = 0L
-      var stB = 0L
-      var pkA = 0L
-      var pkB = 0L
-      def oneRep(f: => Unit, addGc: Long => Unit, addTk: Long => Unit,
-          addSt: Long => Unit, addPk: Long => Unit): Double = {
-        val g0 = gcMillis()
-        val k0 = taskMsTotal.get()
-        val s0 = stealJiffies()
-        peakTaskMem.set(0L)
-        val t0 = System.nanoTime()
-        try { f; (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] interleaved rep failed: ${e.getMessage}")
-          -1.0
-        }
-        finally {
-          addGc(gcMillis() - g0)
-          addTk(taskMsTotal.get() - k0)
-          addSt(stealSince(s0))
-          addPk(peakTaskMem.get())
-          Checkpoint.releaseAll() // between-reps hygiene (see time)
-        }
-      }
-      // one failed steal snapshot poisons the side's sum to -1
-      def plus(acc: Long, d: Long): Long = if (acc < 0 || d < 0) -1L else acc + d
-      val runs = (1 to reps).map(_ =>
-        (oneRep(a, gcA += _, tkA += _, d => stA = plus(stA, d), p => pkA = pkA max p),
-          oneRep(b, gcB += _, tkB += _, d => stB = plus(stB, d), p => pkB = pkB max p)))
-      def minOr(xs: Seq[Double]): Double =
-        if (xs.contains(-1.0)) -1.0 else xs.min
-      times(aName) = minOr(runs.map(_._1))
-      times(bName) = minOr(runs.map(_._2))
-      // baseline = current − side's accumulated delta, the same snapshot
-      // trick as gc/task; steal is passed as the side's own sum
-      recordHealth(aName, gcMillis() - gcA, taskMsTotal.get() - tkA, stA, pkA)
-      recordHealth(bName, gcMillis() - gcB, taskMsTotal.get() - tkB, stB, pkB)
+      val runs = (1 to reps).map(_ => (rep(aName)(a), rep(bName)(b)))
+      record(aName, runs.map(_._1))
+      record(bName, runs.map(_._2))
     }
 
-    val dw = s"/tmp/graft_bench_dw_${System.nanoTime()}"
-    // nanoTime-unique scratch dirs (DW sink, ANN indexes) are deleted
-    // after their phases — they would otherwise accumulate per bench run
+    val dw = s"${Scratch.tempDir("graft_bench_dw_")}/out"
+    // scratch dirs (DW sink, ANN indexes) are Scratch.tempDir dirs, gone
+    // at JVM exit; each is also emptied after its phase, so the disk one
+    // run holds stays one phase's worth
     import Scratch.rmTree
 
     // Phase 1 — ETL: build + sink the whole star (reference: 6 DAG tasks).
@@ -358,7 +306,7 @@ object Bench {
     // latency of an index-backed probe (the serving-path number — what
     // q_ann_ivf would cost if it didn't re-train per invocation). Index
     // dirs are deleted after timing.
-    val ivfIdx = s"/tmp/graft_bench_ivf_${System.nanoTime()}"
+    val ivfIdx = s"${Scratch.tempDir("graft_bench_ivf_")}/out"
     time("ann_ivf_index_build") {
       graft.sim.EmbeddingOps.buildIvfIndex(spark, sfDir, ivfIdx)
     }
@@ -368,7 +316,7 @@ object Bench {
     rmTree(ivfIdx)
     // same split for the trained quantizer: Lloyd rounds are the build
     // cost; the serving probe only reads the persisted index
-    val kmIdx = s"/tmp/graft_bench_ivf_km_${System.nanoTime()}"
+    val kmIdx = s"${Scratch.tempDir("graft_bench_ivf_km_")}/out"
     time("ann_kmeans_index_build") {
       graft.sim.EmbeddingOps.buildIvfIndexKmeans(spark, sfDir, kmIdx)
     }
@@ -390,7 +338,7 @@ object Bench {
     // BM25 lifecycle split, same pattern: tokenize + invert + persist is
     // the build; the served probe reads only the query terms' postings
     // buckets off the partitioned index
-    val bmIdx = s"/tmp/graft_bench_bm25_${System.nanoTime()}"
+    val bmIdx = s"${Scratch.tempDir("graft_bench_bm25_")}/out"
     time("bm25_index_build") {
       graft.text.RetrievalOps.buildBm25Index(spark, sfDir, bmIdx)
     }
@@ -433,8 +381,8 @@ object Bench {
     // persisted index; the evaluation counts land in stderr beside the
     // wall-clock rows.
     locally {
-      val zdir = s"/tmp/graft_bench_zipf_${System.nanoTime()}"
-      once("bm25_zipf_stage") {
+      val zdir = s"${Scratch.tempDir("graft_bench_zipf_")}/out"
+      time("bm25_zipf_stage", 1) {
         // SPARK_GRAFT_ZIPF_DOCS scales the staging for one-off
         // crossover measurement (the per-round default keeps the row
         // inside the bench budget; see BENCH.md §WAND crossover)
@@ -488,16 +436,16 @@ object Bench {
     // artifact: bounded capped time beside the quadratic detonation.
     locally {
       import org.apache.spark.sql.functions.{col, concat, lit, when}
-      val skewDir = s"/tmp/graft_bench_substrskew_${System.nanoTime()}"
+      val skewDir = s"${Scratch.tempDir("graft_bench_substrskew_")}/out"
       val boiler = (1 to 32).map(i => s"skewtok$i").mkString(" ")
       Tables.documents(spark, sfDir)
         .withColumn("text", when(col("doc_id") <= 1000,
           concat(lit(boiler + " "), col("text"))).otherwise(col("text")))
         .write.mode("overwrite").parquet(s"$skewDir/documents.parquet")
-      once("dedup_substring_skew_capped") {
+      time("dedup_substring_skew_capped", 1) {
         graft.text.TextOps.substringDedup(spark, skewDir).count(): Unit
       }
-      once("dedup_substring_skew_uncapped") {
+      time("dedup_substring_skew_uncapped", 1) {
         graft.text.TextOps.substringDedup(spark, skewDir,
           maxAnchorFreq = Int.MaxValue).count(): Unit
       }
@@ -512,13 +460,13 @@ object Bench {
     // the phrase survives the whole corpus.
     locally {
       import org.apache.spark.sql.functions.{col, concat, lit}
-      val hotDir = s"/tmp/graft_bench_substrhot_${System.nanoTime()}"
+      val hotDir = s"${Scratch.tempDir("graft_bench_substrhot_")}/out"
       val boiler = (1 to 32).map(i => s"hotskew$i").mkString(" ")
       Tables.documents(spark, sfDir)
         .withColumn("text",
           concat(lit(boiler + " " + boiler + " "), col("text")))
         .write.mode("overwrite").parquet(s"$hotDir/documents.parquet")
-      once("dedup_substring_hot_removed") {
+      time("dedup_substring_hot_removed", 1) {
         graft.text.TextOps.substringRemovedHot(spark, hotDir)
           .write.mode("overwrite").parquet(s"$hotDir/out")
       }
@@ -536,7 +484,7 @@ object Bench {
     }
     // positional-index lifecycle: posexplode + term-bucketed persist is
     // the build; the phrase probe reads only its terms' buckets
-    val phIdx = s"/tmp/graft_bench_phrase_${System.nanoTime()}"
+    val phIdx = s"${Scratch.tempDir("graft_bench_phrase_")}/out"
     time("phrase_index_build") {
       graft.text.RetrievalOps.buildPhraseIndex(spark, sfDir, phIdx)
     }
@@ -546,7 +494,7 @@ object Bench {
     rmTree(phIdx)
     // PQ lifecycle split: codebook training + corpus encoding are the
     // build; the served ADC probe reads the compressed index only
-    val pqIdx = s"/tmp/graft_bench_pq_${System.nanoTime()}"
+    val pqIdx = s"${Scratch.tempDir("graft_bench_pq_")}/out"
     time("ann_pq_index_build") {
       graft.sim.EmbeddingOps.buildPqIndex(spark, sfDir, pqIdx)
     }
@@ -559,7 +507,7 @@ object Bench {
     // so the composed build is corpus encoding + cell assignment only;
     // one training per corpus feeds every derived artifact, and the
     // served probe routes + ADC-ranks off parquet only
-    val ivfpqIdx = s"/tmp/graft_bench_ivfpq_${System.nanoTime()}"
+    val ivfpqIdx = s"${Scratch.tempDir("graft_bench_ivfpq_")}/out"
     time("ann_ivfpq_index_build") {
       graft.sim.EmbeddingOps.buildIvfPqIndex(spark, sfDir, ivfpqIdx,
         Some(kmIdx), Some(pqIdx))
@@ -577,7 +525,7 @@ object Bench {
     // the build should be dominated by the encode pass — and the served
     // probe prices the family's pitch: near-exact ranking straight off
     // the 4× codes, no refine stage
-    val sq8Idx = s"/tmp/graft_bench_sq8_${System.nanoTime()}"
+    val sq8Idx = s"${Scratch.tempDir("graft_bench_sq8_")}/out"
     time("ann_sq8_index_build") {
       graft.sim.EmbeddingOps.buildSq8Index(spark, sfDir, sq8Idx)
     }
@@ -587,7 +535,7 @@ object Bench {
     // the COMPOSED route+SQ8 store (r16: the r15 gate-only family priced):
     // coarse cells partition the code store, the served probe prunes to
     // the routed cells and ranks through the fused sq8_adist kernel
-    val ivfSq8Idx = s"/tmp/graft_bench_ivfsq8_${System.nanoTime()}"
+    val ivfSq8Idx = s"${Scratch.tempDir("graft_bench_ivfsq8_")}/out"
     time("ann_ivfsq8_index_build") {
       graft.sim.EmbeddingOps.buildIvfSq8Index(spark, sfDir, ivfSq8Idx)
     }
@@ -598,7 +546,7 @@ object Bench {
     // graph ANN (r16): per-cell kNN adjacency build (the quadratic-in-cell
     // construction pass) vs the H-hop beam serve — the read-bounded
     // alternative to the refine family's fixed c-deep shortlist
-    val graphIdx = s"/tmp/graft_bench_graph_${System.nanoTime()}"
+    val graphIdx = s"${Scratch.tempDir("graft_bench_graph_")}/out"
     time("ann_graph_index_build") {
       graft.sim.EmbeddingOps.buildGraphIndex(spark, sfDir, graphIdx)
     }
@@ -619,7 +567,7 @@ object Bench {
     // persisted navigable-layer serves: routed reads only the probed
     // cells' partitions, xcell the probed cells' H-hop closure
     locally {
-      val rIdx = s"/tmp/graft_bench_graph_routed_${System.nanoTime()}"
+      val rIdx = s"${Scratch.tempDir("graft_bench_graph_routed_")}/out"
       time("ann_graph_routed_index_build") {
         graft.sim.EmbeddingOps.buildGraphRoutedIndex(spark, sfDir, rIdx)
       }
@@ -627,7 +575,7 @@ object Bench {
         graft.sim.EmbeddingOps.annGraphRoutedIndexed(spark, sfDir, rIdx).count()
       }
       rmTree(rIdx)
-      val xIdx = s"/tmp/graft_bench_graph_xcell_${System.nanoTime()}"
+      val xIdx = s"${Scratch.tempDir("graft_bench_graph_xcell_")}/out"
       time("ann_graph_xcell_index_build") {
         graft.sim.EmbeddingOps.buildGraphXcellIndex(spark, sfDir, xIdx)
       }
@@ -655,8 +603,8 @@ object Bench {
     // incremental index maintenance: cell-append a 10% arrival batch onto
     // an index built on the other 90% — the O(batch) alternative to the
     // O(corpus × rounds) rebuild measured by ann_kmeans_index_build
-    val incrIdx = s"/tmp/graft_bench_ivf_incr_${System.nanoTime()}"
-    val incrPqIdx = s"/tmp/graft_bench_ivfpq_incr_${System.nanoTime()}"
+    val incrIdx = s"${Scratch.tempDir("graft_bench_ivf_incr_")}/out"
+    val incrPqIdx = s"${Scratch.tempDir("graft_bench_ivfpq_incr_")}/out"
     locally {
       import org.apache.spark.sql.functions.col
       val base = Tables.embeddings(spark, sfDir)
@@ -704,7 +652,7 @@ object Bench {
     rmTree(incrPqIdx)
 
     // Phase 4 — bucketed storage as the measured fact-build default (the
-    // 100 TB posture StorageDemo only demonstrated): header and detail are
+    // 100 TB posture, measured rather than demonstrated): header and detail are
     // bucketed+sorted by the order key ONCE (the amortized write), after
     // which every fact build's header⨝detail join plans with ZERO
     // Exchanges — a bucket-co-located sort-merge join instead of shuffling
@@ -794,27 +742,27 @@ object Bench {
     // run, not a query; recording it makes funnel regressions visible to
     // the driver instead of living only in commit-message narrative.
     locally {
-      val curOut = s"/tmp/graft_bench_curate_${System.nanoTime()}"
-      once("curate_run_funnel") { CurateRun.run(spark, sfDir, curOut): Unit }
+      val curOut = s"${Scratch.tempDir("graft_bench_curate_")}/out"
+      time("curate_run_funnel", 1) { CurateRun.run(spark, sfDir, curOut): Unit }
       rmTree(curOut)
     }
 
     // Phase 6 — the 10× scale point RECORDED AS AN ARTIFACT (sf0.1 fact
-    // replicated 10× with offset order keys ≈ sf1, dims unchanged — the
-    // ScaleProbe construction, now in the driver bench so the sub-linear
-    // scaling story is a per-round number, not a probe narrative), and
+    // replicated 10× with offset order keys ≈ sf1, dims unchanged, by
+    // StarBench.stage10x, so the sub-linear scaling story is a per-round
+    // number, not a probe narrative), and
     // the bucketed-vs-shuffled direction decided at a fact size where the
     // removed header⨝detail shuffle is material (6M lines, not 600k).
     locally {
       import org.apache.spark.sql.functions.col
-      val sf1Dir = s"/tmp/graft_bench_sf1_${System.nanoTime()}"
-      val dw1 = s"/tmp/graft_bench_dw1_${System.nanoTime()}"
+      val sf1Dir = s"${Scratch.tempDir("graft_bench_sf1_")}/out"
+      val dw1 = s"${Scratch.tempDir("graft_bench_dw1_")}/out"
       try {
         StarBench.stage10x(spark, sfDir, sf1Dir)
         // one rep each: these are scale-ratio measurements against the
         // sf0.1 rows above (star ~2.3×-per-10×-data is the story)
-        once("etl_star_build_sf1") { StarBench.starBuildTo(spark, sf1Dir, dw1) }
-        once("kpi_suite_sf1") {
+        time("etl_star_build_sf1", 1) { StarBench.starBuildTo(spark, sf1Dir, dw1) }
+        time("kpi_suite_sf1", 1) {
           // the 13 KPI queries are independent reads over the same DW —
           // submit them from a small pool so each query's straggler tail
           // back-fills with the next query's tasks (the suite is the
@@ -848,7 +796,7 @@ object Bench {
         // trusted sort metadata, INTERLEAVED reps
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-        once("etl_bucket_tables_build_10x") {
+        time("etl_bucket_tables_build_10x", 1) {
           StarBench.bucket10x(spark, sf1Dir, cpus)
         }
         if (spark.catalog.tableExists("orders_bkt10") &&

@@ -93,7 +93,7 @@ object PlanAudit {
     * plans that serve.
     */
   private def auditDw(spark: SparkSession, dir: String): Unit = {
-    val dw = s"/tmp/graft_planaudit_dw_${System.nanoTime()}"
+    val dw = s"${Scratch.tempDir("graft_planaudit_dw_")}/dw"
     StarBench.starBuildTo(spark, dir, dw)
     StarBench.kpiSuite(spark, dw).foreach { case (name, q) =>
       val df = q()

@@ -112,8 +112,8 @@ object StarBench {
   }
 
   /** Stage the 10× corpus: sf0.1's fact tables replicated 10× with
-    * offset order keys (≈ sf1), dims copied unchanged — the ScaleProbe
-    * construction used by Bench phase 6.
+    * offset order keys (≈ sf1), dims copied unchanged — the 10× point
+    * of Bench phase 6.
     */
   def stage10x(spark: SparkSession, sfDir: String, sf1Dir: String): Unit = {
     import org.apache.spark.sql.functions.col

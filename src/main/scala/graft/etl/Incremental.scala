@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 
 /** Incremental star maintenance — the lifecycle extension past the
@@ -157,9 +158,12 @@ object Incremental {
       "dc" -> Star.dimCliente(s, d).select("sk_cliente", "id_cliente_original"),
       "dv" -> Star.dimVendedor(s, d).select("sk_vendedor", "id_vendedor_original"),
       "dl" -> Star.dimLocalidade(s, d).select("sk_localidade", "id_localidade_original"))
+    // read back with the written frame's schema, all fields nullable as
+    // parquet reads them, so a read runs no footer-inference job
     val out = dims.map { case (n, df) =>
       if (!fresh) df.write.mode("overwrite").parquet(s"$dimDir/$n")
-      s.read.parquet(s"$dimDir/$n")
+      s.read.schema(StructType(df.schema.map(_.copy(nullable = true))))
+        .parquet(s"$dimDir/$n")
     }
     if (!fresh)
       java.nio.file.Files.writeString(marker.toPath, fp): Unit

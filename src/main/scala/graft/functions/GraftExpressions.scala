@@ -502,7 +502,7 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
   * multi-dimensional clustering key for data-layout optimization — rows
   * range-partitioned and sorted by this key land in files whose parquet
   * min/max footers bound BOTH dimensions, so a 2-D selective scan prunes
-  * row groups on either predicate (see [[graft.StorageDemo]]).
+  * row groups on either predicate (measured by `ZOrderSpec`).
   */
 case class ZOrder64(left: Expression, right: Expression)
   extends BinaryExpression {

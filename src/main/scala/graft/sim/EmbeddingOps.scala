@@ -2145,8 +2145,9 @@ object EmbeddingOps {
     * bounded O(R)-state TopK groups stay hashed when it would not.
     * On a 1000-executor cluster the spill divides by the fleet and the
     * default wins at any corpus — which is exactly what the estimate
-    * derives there. `SPARK_GRAFT_AGG_FALLBACK_THRESHOLD` (the r19
-    * single-box hatch) still overrides when set.
+    * derives there. The budget, `SPARK_GRAFT_SORT_SPILL_BUDGET`, also
+    * forces either posture: 0 always keeps the groups hashed, and an
+    * unbounded budget always keeps Spark's default.
     */
   private val AggFallbackKey =
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
@@ -2155,8 +2156,8 @@ object EmbeddingOps {
     * so [[restoreAggFallback]] can scope the override to the build that
     * asked for it (r20 ADVICE: the pin used to outlive the graph build
     * and strip the sort-spill safety net from every LATER aggregation in
-    * the same long-lived session — e.g. the BM25 lifecycle stages of a
-    * MaintainAtScale run, whose per-group state is NOT bounded O(R)).
+    * the same long-lived session — e.g. BM25 lifecycle stages run after a
+    * graph build, whose per-group state is NOT bounded O(R)).
     * `None` = the key was unset before the pin.
     */
   private val savedAggFallback =
@@ -2180,34 +2181,33 @@ object EmbeddingOps {
   private val CellMembership = 4000L
 
   private def hashAggHeadroom(s: SparkSession, cells: Long,
-      universeCells: Long = 1L): Unit =
-    if (!sys.env.contains("SPARK_GRAFT_AGG_FALLBACK_THRESHOLD")) {
-      val spillBudget = sys.env.getOrElse("SPARK_GRAFT_SORT_SPILL_BUDGET",
-        (64L << 30).toString).toLong
-      // candidate rows ≈ srcs (cells × membership) × target cell
-      // membership × candidate universe width (1 for the own-cell
-      // adjacency, 1 + the layer degree for xcell); 24 B per
-      // (src, sim, dst) row of pre-aggregation sort spill
-      val estSpill =
-        cells * CellMembership * CellMembership * universeCells * 24L
-      if (estSpill > spillBudget) {
-        // a partial-aggregation task's distinct groups are NOT
-        // srcs/parts — candidate rows arrive partitioned by the JOIN
-        // key (cell), so one task holds every src with a candidate in
-        // its cells (measured the hard way: a derived per-task
-        // threshold of srcs/parts×2 still fell back at 2M/xcell and
-        // sorted 2×10⁸ rows/task to disk-full). The states are bounded
-        // O(R) per src by construction — worst-case ALL of them hashed
-        // is ~GBs against a 28 g heap — so when the sort spill cannot
-        // fit, the correct setting is "never fall back" FOR THIS BUILD
-        // (saved here, restored by [[restoreAggFallback]])
-        val cur = s.conf.getOption(AggFallbackKey)
-        if (cur.forall(_.toLong < Int.MaxValue)) {
-          savedAggFallback.putIfAbsent(s, cur)
-          s.conf.set(AggFallbackKey, Int.MaxValue.toString)
-        }
+      universeCells: Long = 1L): Unit = {
+    val spillBudget = sys.env.getOrElse("SPARK_GRAFT_SORT_SPILL_BUDGET",
+      (64L << 30).toString).toLong
+    // candidate rows ≈ srcs (cells × membership) × target cell
+    // membership × candidate universe width (1 for the own-cell
+    // adjacency, 1 + the layer degree for xcell); 24 B per
+    // (src, sim, dst) row of pre-aggregation sort spill
+    val estSpill =
+      cells * CellMembership * CellMembership * universeCells * 24L
+    if (estSpill > spillBudget) {
+      // a partial-aggregation task's distinct groups are NOT
+      // srcs/parts — candidate rows arrive partitioned by the JOIN
+      // key (cell), so one task holds every src with a candidate in
+      // its cells (measured the hard way: a derived per-task
+      // threshold of srcs/parts×2 still fell back at 2M/xcell and
+      // sorted 2×10⁸ rows/task to disk-full). The states are bounded
+      // O(R) per src by construction — worst-case ALL of them hashed
+      // is ~GBs against a 28 g heap — so when the sort spill cannot
+      // fit, the correct setting is "never fall back" FOR THIS BUILD
+      // (saved here, restored by [[restoreAggFallback]])
+      val cur = s.conf.getOption(AggFallbackKey)
+      if (cur.forall(_.toLong < Int.MaxValue)) {
+        savedAggFallback.putIfAbsent(s, cur)
+        s.conf.set(AggFallbackKey, Int.MaxValue.toString)
       }
     }
+  }
 
   private[graft] def graphEdgesOf(s: SparkSession, asg: DataFrame,
       cells: Long = KMEANS_K): DataFrame = {
@@ -2402,7 +2402,7 @@ object EmbeddingOps {
     * cells (200k vectors) the fixed knobs route 25% of truth pairs
     * into unprobed cells (recall@5 0.75 on the routed AND xcell serves
     * while the own-cell walk holds 1.0 — the routing is what misses,
-    * not the in-cell walk; RecallAtScale, SCALE_VERIFY_r19.md). The
+    * not the in-cell walk; SCALE_VERIFY_r19.md). The
     * layer's diameter and its local-minimum depth both grow ~log in
     * the cell count, so every knob gains ONE step per doubling of
     * cells beyond the gated K: probes, beam and hops all stay

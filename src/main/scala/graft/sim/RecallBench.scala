@@ -2,6 +2,7 @@ package graft.sim
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 
 /** Absolute recall@k of every ANN index family against brute-force
   * truth, measured on the gated data at the gated probe parameters —
@@ -112,7 +113,7 @@ object RecallBench {
     // and residual-trained codebooks — residual vs raw at equal budget,
     // and wide vs narrow within each family
     locally {
-      val dir = s"/tmp/graft_recall_k64_raw_${System.nanoTime()}"
+      val dir = s"${Scratch.tempDir("graft_recall_k64_raw_")}/idx"
       row("ivfpq_k64", truthFull) {
         EmbeddingOps.buildIvfPqIndexOn(spark, base, base, dir, k = 64)
         EmbeddingOps.annIvfPqIndexed(spark, sfDir, dir)
@@ -304,7 +305,7 @@ object RecallBench {
                 col("codes"), col("mns"), col("mxs"), 255)).as("sim"),
               col("vec_id")))
       }
-      val stale = s"/tmp/graft_recall_sq8_stale_${System.nanoTime()}"
+      val stale = s"${Scratch.tempDir("graft_recall_sq8_stale_")}/idx"
       row("sq8_shifted_noretrain", truthShift) {
         EmbeddingOps.buildSq8IndexOn(spark,
           shifted.filter(!arrival), shifted.filter(!arrival), stale)
@@ -312,7 +313,7 @@ object RecallBench {
           EmbeddingOps.appendSq8Index(spark, shifted.filter(arrival), stale, 0L)
         sq8ServeWith(stale)
       }
-      val retr = s"/tmp/graft_recall_sq8_retrain_${System.nanoTime()}"
+      val retr = s"${Scratch.tempDir("graft_recall_sq8_retrain_")}/idx"
       row("sq8_shifted_retrained", truthShift) {
         EmbeddingOps.buildSq8IndexOn(spark, shifted, shifted, retr)
         sq8ServeWith(retr)
@@ -384,28 +385,28 @@ object RecallBench {
     // the churn-degradation delta proper
     val surv = base.filter(!EmbeddingOps.DeleteVictims)
     locally {
-      val dir = s"/tmp/graft_recall_fresh_ivfpq_${System.nanoTime()}"
+      val dir = s"${Scratch.tempDir("graft_recall_fresh_ivfpq_")}/idx"
       row("ivfpq_fresh_surv", truthSurv) {
         EmbeddingOps.buildIvfPqIndexOn(spark, surv, surv, dir)
         EmbeddingOps.annIvfPqIndexed(spark, sfDir, dir)
       }
     }
     locally {
-      val dir = s"/tmp/graft_recall_fresh_ivfpqres_${System.nanoTime()}"
+      val dir = s"${Scratch.tempDir("graft_recall_fresh_ivfpqres_")}/idx"
       row("ivfpq_residual_fresh_surv", truthSurv) {
         EmbeddingOps.buildIvfPqIndexOn(spark, surv, surv, dir, residual = true)
         EmbeddingOps.annIvfPqIndexed(spark, sfDir, dir, residual = true)
       }
     }
     locally {
-      val dir = s"/tmp/graft_recall_fresh_sq8_${System.nanoTime()}"
+      val dir = s"${Scratch.tempDir("graft_recall_fresh_sq8_")}/idx"
       row("sq8_fresh_surv", truthSurv) {
         EmbeddingOps.buildSq8IndexOn(spark, surv, surv, dir)
         EmbeddingOps.annSq8Indexed(spark, sfDir, dir)
       }
     }
     locally {
-      val dir = s"/tmp/graft_recall_fresh_km_${System.nanoTime()}"
+      val dir = s"${Scratch.tempDir("graft_recall_fresh_km_")}/idx"
       row("ivf_kmeans_fresh_surv", truthSurv) {
         EmbeddingOps.buildIvfIndexKmeansOn(spark, surv, surv, dir,
           s"recall-fresh-surv:$sfDir")

@@ -46,6 +46,22 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(s("warehouse").contains("/tmp/graft_wh_"))
   }
 
+  test("src/main/scala reads exactly the eleven SPARK_GRAFT_* env knobs") {
+    val root = Paths.get(sys.props.getOrElse("user.dir", "."), "src/main/scala")
+    val Knob = "SPARK_GRAFT_[A-Z0-9_]+".r
+    val comment = (l: String) => Seq("//", "/*", "*").exists(l.trim.startsWith)
+    val knobs = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => Files.readAllLines(p).asScala.filterNot(comment))
+      .flatMap(Knob.findAllIn).toSet
+    // a new knob is a deliberate edit of this list
+    assert(knobs == Set("SPARK_GRAFT_BENCH_BANDS", "SPARK_GRAFT_BENCH_LINE_BUDGET",
+      "SPARK_GRAFT_BENCH_OUT", "SPARK_GRAFT_BENCH_REPS", "SPARK_GRAFT_CPUS",
+      "SPARK_GRAFT_ONLY", "SPARK_GRAFT_PARQUET_CODEC", "SPARK_GRAFT_SF_DIR",
+      "SPARK_GRAFT_SHUFFLE_PARTITIONS", "SPARK_GRAFT_SORT_SPILL_BUDGET",
+      "SPARK_GRAFT_ZIPF_DOCS"))
+  }
+
   test("a submitted master is kept; without one the session runs local[SPARK_GRAFT_CPUS]") {
     assert(unsubmitted("master") == "local[2]")
     assert(submitted("master") == "local[1]")

@@ -25,6 +25,14 @@ class IncrementalSpec extends SparkSpec {
     assert(inc2 === inc1)
   }
 
+  test("a second ensureDims over an unchanged source runs no Spark job") {
+    Incremental.ensureDims(spark, tiny)
+    val (_, jobs) = jobsDuring(Incremental.ensureDims(spark, tiny))
+    // the stored SK maps are served as they are: no rebuild, and each
+    // read-back declares its schema instead of inferring it from a footer
+    assert(jobs == 0, s"a fresh ensureDims ran $jobs Spark jobs")
+  }
+
   test("the increment append leaves historical year partitions untouched") {
     def listing(dw: String): Map[String, Seq[(String, Long, Long)]] = {
       val root = new java.io.File(dw)

@@ -40,8 +40,8 @@ def main() -> int:
     for t in TABLES:
         p = Path(sf_dir) / f"{t}.parquet"
         if p.exists():
-            # driver testdata ships single parquet FILES; staged dirs
-            # (ScaleProbe --stage-sf1) are Spark-written DIRECTORIES of
+            # testdata ships single parquet FILES; staged dirs (e.g.
+            # StarBench.stage10x) are Spark-written DIRECTORIES of
             # part files — DuckDB needs the glob form for those
             pat = f"{p}/*.parquet" if p.is_dir() else str(p)
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{pat}'")
