@@ -537,10 +537,12 @@ object Bench {
     // the routed cells and ranks through the fused sq8_adist kernel
     val ivfSq8Idx = s"${Scratch.tempDir("graft_bench_ivfsq8_")}/out"
     time("ann_ivfsq8_index_build") {
-      graft.sim.EmbeddingOps.buildIvfSq8Index(spark, sfDir, ivfSq8Idx)
+      graft.sim.EmbeddingOps.buildSq8Index(spark, sfDir, ivfSq8Idx,
+        graft.sim.EmbeddingOps.Sq8Layout.Ivf)
     }
     time("q_ann_ivfsq8_indexed") {
-      graft.sim.EmbeddingOps.annIvfSq8Indexed(spark, sfDir, ivfSq8Idx).count()
+      graft.sim.EmbeddingOps.annSq8Indexed(spark, sfDir, ivfSq8Idx,
+        graft.sim.EmbeddingOps.Sq8Layout.Ivf).count()
     }
     rmTree(ivfSq8Idx)
     // graph ANN (r16): per-cell kNN adjacency build (the quadratic-in-cell

@@ -35,11 +35,21 @@ object Incremental {
     */
   private val cut = "1996-01-01"
 
-  private def dwDir(d: String): String = {
+  /** The build-once SK maps, shared across processes: [[writeDims]]
+    * rebuilds them only when the source fingerprint changes.
+    */
+  private def dimsDir(d: String): String = {
     val h = java.security.MessageDigest.getInstance("MD5")
       .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"${System.getProperty("java.io.tmpdir")}/graft_fact_incr_$h"
+    s"${System.getProperty("java.io.tmpdir")}/graft_fact_incr_$h/dims"
   }
+
+  /** A fact every call rewrites in place (overwrite, then append or
+    * merge) lives in a per-process dir, deleted at JVM exit, so two JVMs
+    * running the same gate on one dataset never rewrite each other's.
+    */
+  private def factDir(d: String, tag: String): String =
+    graft.Scratch.processDir(d, s"fact_incr$tag")
 
   /** The split lifecycle, returning the read-back fact in the
     * star_fato_vendas presentation form (doubles for the money columns,
@@ -83,7 +93,7 @@ object Incremental {
   }
 
   private[graft] def buildFull(s: SparkSession, d: String): String = {
-    val dw = dwDir(d) + "_backfill/fato"
+    val dw = factDir(d, "_backfill") + "/fato"
     writeSlice(s, d, lit(true), dw, "overwrite", ensureDims(s, d))
     dw
   }
@@ -111,7 +121,7 @@ object Incremental {
     * fact batches'.
     */
   private[graft] def buildSplit(s: SparkSession, d: String): String = {
-    val dw = dwDir(d)
+    val dw = factDir(d, "")
     val dims = ensureDims(s, d)
     writeSlice(s, d, col("o_orderdate") < lit(cut), s"$dw/fato", "overwrite", dims)
     writeSlice(s, d, col("o_orderdate") >= lit(cut), s"$dw/fato", "append", dims)
@@ -136,7 +146,7 @@ object Incremental {
     * source data changed, serve parquet read-backs after.
     */
   private[graft] def ensureDims(s: SparkSession, d: String): Seq[DataFrame] =
-    writeDims(s, d, s"${dwDir(d)}/dims", onlyIfStale = true)
+    writeDims(s, d, dimsDir(d), onlyIfStale = true)
 
   /** Sink the four SK maps; return them read back from parquet.
     *
@@ -183,7 +193,7 @@ object Incremental {
 
   // ------------------------------------------------- aggregate maintenance
 
-  private def kpiStateDir(d: String): String = dwDir(d) + "_kpi"
+  private def kpiStateDir(d: String): String = factDir(d, "_kpi")
 
   /** Incremental AGGREGATE maintenance — the materialized-view member of
     * the incremental family (facts append partitions, SCD2 dims merge

@@ -290,7 +290,7 @@ object Scd {
           col("o.data_pedido") >= col("v.valid_from") &&
           col("o.data_pedido") < col("v.valid_to"),
         "left")
-      .select(o.columns.map(c => col(s"o.$c")) :+
+      .select(o.columns.toSeq.map(c => col(s"o.$c")) :+
         coalesce(col("v.segmento"), lit("SEM_VERSAO")).as("segmento") :+
         col("v.valid_from").as("versao_desde"): _*)
   }

@@ -345,34 +345,6 @@ object EmbeddingOps {
   def kmeansCentroids(s: SparkSession, d: String): DataFrame =
     kmeansCentroidsOf(corpus(s, d).select("vec_id", "embedding"))
 
-  /** Lloyd training over an arbitrary training base — factored out so the
-    * incremental index path can train on the corpus-as-of-build-time and
-    * later batches join the index without retraining.
-    *
-    * Only the FINAL centroid table goes through a checkpoint barrier:
-    * each round references the previous round's centroids exactly once
-    * (the broadcast side of the assignment), so the unbarriered lineage
-    * nests LINEARLY in the round count — the 2^i frontier explosion that
-    * forces per-iteration barriers in the self-join loops (label
-    * propagation) cannot happen here, and collapsing the rounds into one
-    * job drops a scheduler+checkpoint round-trip per iteration (the
-    * in-query trainings' dominant fixed cost). The one barrier at the
-    * end still guarantees every downstream consumer reads a materialized
-    * table instead of re-running the training.
-    */
-  /** Build-time quantizer size for the graph family's PERSISTED stores:
-    * cells target constant membership at any corpus size. The graph
-    * adjacency derivation is a per-cell kNN self-join, so a FIXED K
-    * makes cell populations grow with the corpus and the candidate
-    * block quadratic — measured at sf10 (200k vectors, K=8): 1227 s
-    * build, ~5×10⁹ scored pairs; K=N/4000 bounds every cell block at
-    * ~1.6×10⁷ pairs and the total at ~N·4000 (linear). Every gated
-    * corpus (sf0.001 → sf1, ≤ 32k vectors) resolves to KMEANS_K, so
-    * the oracle kmeans unrolls are unchanged where oracles run. (At
-    * 10⁶+ cells the centroid layer's own kNN inherits the same shape
-    * and would cell-partition recursively — the HNSW upper-layer
-    * analog the routed family already documents.)
-    */
   private val knownCounts =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
@@ -389,11 +361,39 @@ object EmbeddingOps {
     knownCounts.computeIfAbsent(s"${datasetFingerprint(d)}#$slice",
       _ => Long.box(base.count())).longValue()
 
+  /** Build-time quantizer size for the graph family's PERSISTED stores:
+    * cells target constant membership at any corpus size. The graph
+    * adjacency derivation is a per-cell kNN self-join, so a FIXED K
+    * makes cell populations grow with the corpus and the candidate
+    * block quadratic — measured at sf10 (200k vectors, K=8): 1227 s
+    * build, ~5×10⁹ scored pairs; K=N/4000 bounds every cell block at
+    * ~1.6×10⁷ pairs and the total at ~N·4000 (linear). Every gated
+    * corpus (sf0.001 → sf1, ≤ 32k vectors) resolves to KMEANS_K, so
+    * the oracle kmeans unrolls are unchanged where oracles run. (At
+    * 10⁶+ cells the centroid layer's own kNN inherits the same shape
+    * and would cell-partition recursively — the HNSW upper-layer
+    * analog the routed family already documents.)
+    */
   private def adaptiveK(base: DataFrame, knownN: Long = -1L): Int = {
     val n = if (knownN >= 0L) knownN else base.count()
     math.max(KMEANS_K, math.ceil(n.toDouble / CellMembership).toInt)
   }
 
+  /** Lloyd training over an arbitrary training base — factored out so the
+    * incremental index path can train on the corpus-as-of-build-time and
+    * later batches join the index without retraining.
+    *
+    * Only the FINAL centroid table goes through a checkpoint barrier:
+    * each round references the previous round's centroids exactly once
+    * (the broadcast side of the assignment), so the unbarriered lineage
+    * nests LINEARLY in the round count — the 2^i frontier explosion that
+    * forces per-iteration barriers in the self-join loops (label
+    * propagation) cannot happen here, and collapsing the rounds into one
+    * job drops a scheduler+checkpoint round-trip per iteration (the
+    * in-query trainings' dominant fixed cost). The one barrier at the
+    * end still guarantees every downstream consumer reads a materialized
+    * table instead of re-running the training.
+    */
   private[graft] def kmeansCentroidsOf(base: DataFrame,
       k: Int = KMEANS_K): DataFrame = {
     val quant = "transform(embedding, x -> CAST(CAST(round(CAST(x AS DOUBLE) " +
@@ -1350,9 +1350,9 @@ object EmbeddingOps {
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("cell", "batch")
       .parquet(s"$indexDir/cells")
-    val batchMean = asg.agg(avg(col("dist"))).head.getDouble(0)
+    val batchMean = asg.agg(avg(col("dist"))).head().getDouble(0)
     val trainMean = s.read.parquet(s"$indexDir/stats")
-      .head.getAs[Double]("mean_dist")
+      .head().getAs[Double]("mean_dist")
     batchMean / trainMean
   }
 
@@ -1470,7 +1470,6 @@ object EmbeddingOps {
   def annIvfIndexedAuto(s: SparkSession, d: String): DataFrame =
     autoIndexed(d, "", buildIvfIndex(s, d, _), annIvfIndexed(s, d, 1, _))
 
-  /** Build-once-then-probe with the staleness-fingerprinted location. */
   /** Build-once with ATOMIC publish (shared [[graft.StorePublish]]
     * device): the index is built into a private temp dir and renamed
     * into the fingerprint-keyed location in one filesystem move, so a
@@ -1569,112 +1568,150 @@ object EmbeddingOps {
         s"$mns[i] + ($codes[i]::DOUBLE + 0.5) " +
         s"* ($mxs[i] - $mns[i]) / ${SQ8_LEVELS}.0)")
 
+  /** The three SQ8 store layouts, the one choice every SQ8 path takes
+    * (so no other combination of cells and min/max keys can be built):
+    *  - `Flat`: one global min/max row, no cells;
+    *  - `Ivf`: the trained coarse quantizer routes each query to its
+    *    L2-nearest cell(s) (search space ~N/k, the code table
+    *    partitioned by cell so a persisted serve prunes its scan), one
+    *    global min/max row — the uniform quantizer's error is
+    *    range-driven and already far below the corpus's neighbor gaps,
+    *    and a global row keeps the append training-free;
+    *  - `IvfCell`: cells and one min/max row PER CELL — the
+    *    per-partition lever the drift measurement motivates (BENCH.md
+    *    §SQ8 distribution drift): a global row over a bimodal corpus
+    *    spans both populations, per-cell ranges stay tight around each
+    *    population the coarse quantizer separates.
+    * `suffix` names the layout's build-once published store.
+    */
+  private[graft] sealed abstract class Sq8Layout(val suffix: String,
+      val routed: Boolean, perCell: Boolean) {
+    /** The min/max rows' key: `cell`, or none for the global row. */
+    val mmKeys: Seq[String] = if (perCell) Seq("cell") else Nil
+    /** The code rows' cell column (routed layouts), also their
+      * partition key ahead of `batch`.
+      */
+    val cellKeys: Seq[String] = if (routed) Seq("cell") else Nil
+  }
+
+  private[graft] object Sq8Layout {
+    case object Flat extends Sq8Layout("_sq8", routed = false, perCell = false)
+    case object Ivf extends Sq8Layout("_sq8ivf", routed = true, perCell = false)
+    case object IvfCell extends Sq8Layout("_sq8cell", routed = true, perCell = true)
+  }
+
+  /** One SQ8 store, trained in-query ([[sq8Build]]) or read back from
+    * `dir` ([[sq8Read]]): the coarse centroids (routed layouts only),
+    * the min/max rows keyed by `layout.mmKeys`, and the code rows
+    * (vec_id, [cell], codes).
+    */
+  private[graft] case class Sq8Store(layout: Sq8Layout,
+      cents: Option[DataFrame], mm: DataFrame, codes: DataFrame,
+      dir: Option[String] = None)
+
   /** The trained quantizer, gate shape: one row per dimension with its
     * corpus min/max (0-based `i` to match posexplode). At scale this is
     * ONE partial+final aggregate over the corpus — 64 rows out.
     */
   def sq8MinMax(s: SparkSession, d: String): DataFrame =
-    sq8Dims(corpus(s, d)).orderBy("i")
+    sq8Dims(corpus(s, d), Nil).orderBy("i")
 
-  private def sq8Dims(base: DataFrame): DataFrame = base
-    .select(posexplode(col("embedding")).as(Seq("i", "x")))
-    .groupBy("i")
+  private def sq8Dims(rows: DataFrame, keys: Seq[String]): DataFrame = rows
+    .select(keys.map(col) :+ posexplode(col("embedding")).as(Seq("i", "x")): _*)
+    .groupBy((keys :+ "i").map(col): _*)
     .agg(min(col("x").cast("double")).as("mn"),
       max(col("x").cast("double")).as("mx"))
-    .select(col("i").cast("int").as("i"), col("mn"), col("mx"))
+    .select(keys.map(col) ++ Seq(col("i").cast("int").as("i"), col("mn"),
+      col("mx")): _*)
 
-  /** The 64-row dims table folded to ONE broadcastable (mns, mxs) row —
-    * the artifact every encode and serve joins against.
+  /** The min/max trainer: the dims table folded to ONE broadcastable
+    * (mns, mxs) row per key — one row for a global layout, one per cell
+    * for `IvfCell`. One keyed aggregate, no Lloyd, no codebooks.
     */
-  private def sq8MinMaxRowOf(base: DataFrame): DataFrame = sq8Dims(base)
-    .groupBy()
-    .agg(array_sort(collect_list(struct(col("i"), col("mn")))).as("a"),
-      array_sort(collect_list(struct(col("i"), col("mx")))).as("b"))
-    .selectExpr("transform(a, p -> p.mn) AS mns",
-      "transform(b, p -> p.mx) AS mxs")
+  private def sq8MinMaxOf(rows: DataFrame, keys: Seq[String]): DataFrame =
+    sq8Dims(rows, keys).groupBy(keys.map(col): _*)
+      .agg(array_sort(collect_list(struct(col("i"), col("mn")))).as("a"),
+        array_sort(collect_list(struct(col("i"), col("mx")))).as("b"))
+      .select(keys.map(col) ++ Seq(expr("transform(a, p -> p.mn)").as("mns"),
+        expr("transform(b, p -> p.mx)").as("mxs")): _*)
 
-  /** Encode a corpus under an already-trained min/max row: one scan, one
-    * broadcast, no shuffle — the shape that lets the append path encode
-    * only the arrival batch.
+  private def joinOn(rows: DataFrame, small: DataFrame,
+      keys: Seq[String]): DataFrame =
+    if (keys.isEmpty) rows.crossJoin(broadcast(small))
+    else rows.join(broadcast(small), keys)
+
+  /** (vec_id, embedding) rows, each with its cell under the store's
+    * centroids (routed layouts: one checkpointed assignment).
     */
-  private def sq8CodesOfBase(base: DataFrame, mmRow: DataFrame): DataFrame =
-    base.crossJoin(broadcast(mmRow))
+  private def sq8Assigned(cents: Option[DataFrame], rows: DataFrame): DataFrame =
+    cents.fold(rows.select("vec_id", "embedding"))(c =>
+      graft.Checkpoint.barrier(assignCells(rows.sparkSession, rows, c))
+        .select("vec_id", "embedding", "cell"))
+
+  /** The encoder: each row joined to the min/max row it keys into (one
+    * broadcast, no shuffle) and coded — the shape that lets the append
+    * encode only the arrival batch. `embedding`, `mns` and `mxs` stay on
+    * for the clamp monitor.
+    */
+  private def sq8Encoded(rows: DataFrame, mm: DataFrame,
+      layout: Sq8Layout): DataFrame =
+    joinOn(rows, mm, layout.mmKeys)
       .withColumn("codes", expr(sq8CodeX("embedding", "mns", "mxs").spark))
-      .select("vec_id", "codes")
+
+  private def sq8CodeRows(enc: DataFrame, layout: Sq8Layout): DataFrame =
+    enc.select(("vec_id" +: layout.cellKeys :+ "codes").map(col): _*)
+
+  /** Train a store over `base` and encode it: Lloyd centroids (routed
+    * layouts), min/max rows over the assigned base, codes.
+    */
+  private[graft] def sq8Build(layout: Sq8Layout, base: DataFrame): Sq8Store = {
+    val cents = if (layout.routed) Some(kmeansCentroidsOf(base)) else None
+    val rows = sq8Assigned(cents, base)
+    val mm = graft.Checkpoint.barrier(sq8MinMaxOf(rows, layout.mmKeys))
+    Sq8Store(layout, cents, mm, sq8CodeRows(sq8Encoded(rows, mm, layout), layout))
+  }
 
   /** The compressed corpus, gate shape: codes folded to a comma string so
     * the exactness compare is representation-stable across engines.
     */
-  def sq8Codes(s: SparkSession, d: String): DataFrame = {
-    val base = corpus(s, d).select("vec_id", "embedding")
-    sq8CodesOfBase(base, sq8MinMaxRowOf(base))
+  def sq8Codes(s: SparkSession, d: String): DataFrame =
+    sq8Build(Sq8Layout.Flat, corpus(s, d).select("vec_id", "embedding")).codes
       .selectExpr("vec_id",
         "array_join(transform(codes, c -> CAST(c AS STRING)), ',') AS codes_str")
       .orderBy("vec_id")
-  }
 
-  /** (query_id, −L2², vec_id) candidates of the asymmetric SQ8 probe:
-    * one scan of the code table, two broadcasts (min/max row, query
-    * set), distance via the fused native [[graft.functions.Kernels
-    * .sq8Adist]] kernel — decode-at-bin-center and the L2² fold in one
-    * codegen'd pass, never materializing a reconstruction array per
-    * candidate (bit-identical to recon + l2_sq by construction; the
-    * oracle still verifies the composed SQL form). Never a corpus
-    * shuffle.
+  /** Persist a store — the 4× artifact a deployment scans instead of the
+    * float column: centroids (routed layouts), the min/max rows, and the
+    * code table partitioned by ([cell,] batch). The build is batch −1
+    * under a static overwrite, so a retrain rebuilds in place and drops
+    * every appended batch with the old codes.
     */
-  private def sq8Sims(s: SparkSession, d: String, mmRow: DataFrame,
-      codes: DataFrame): DataFrame = {
-    val q = corpus(s, d).filter(col("vec_id") < N_QUERIES)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    codes.crossJoin(broadcast(mmRow)).crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"),
-        (-graft.functions.GraftFunctions.sq8_adist(col("q_emb"),
-          col("codes"), col("mns"), col("mxs"), SQ8_LEVELS)).as("sim"),
-        col("vec_id"))
+  private[graft] def buildSq8IndexOn(s: SparkSession, base: DataFrame,
+      indexDir: String, layout: Sq8Layout = Sq8Layout.Flat): Unit = {
+    val st = sq8Build(layout, base)
+    st.cents.foreach(_.write.mode("overwrite").parquet(s"$indexDir/centroids"))
+    st.mm.write.mode("overwrite").parquet(s"$indexDir/minmax")
+    sq8WriteCodes(st.codes, layout, indexDir, -1L)
   }
 
-  private def sq8Probe(s: SparkSession, d: String, mmRow: DataFrame,
-      codes: DataFrame): DataFrame =
-    rankByDistance(s, sq8Sims(s, d, mmRow, codes))
+  def buildSq8Index(s: SparkSession, d: String, indexDir: String,
+      layout: Sq8Layout = Sq8Layout.Flat): Unit =
+    buildSq8IndexOn(s, corpus(s, d).select("vec_id", "embedding"), indexDir,
+      layout)
 
-  /** Self-contained SQ8 top-k: train min/max, encode, probe. */
-  def annSq8(s: SparkSession, d: String): DataFrame = {
-    val base = corpus(s, d).select("vec_id", "embedding")
-    val mm = graft.Checkpoint.barrier(sq8MinMaxRowOf(base))
-    sq8Probe(s, d, mm, sq8CodesOfBase(base, mm))
-  }
+  private def sq8WriteCodes(codes: DataFrame, layout: Sq8Layout,
+      indexDir: String, batchId: Long): Unit =
+    codes.withColumn("batch", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", if (batchId < 0L) "static" else "dynamic")
+      .partitionBy(layout.cellKeys :+ "batch": _*).parquet(s"$indexDir/codes")
 
-  /** SQ8 shortlist + exact re-rank — the same composed production stack
-    * as the PQ refined probes, sharing [[refineExact]] so the re-rank
-    * tail is byte-identical across families.
-    */
-  def annSq8Refined(s: SparkSession, d: String, c: Int = REFINE_C): DataFrame = {
-    val base = corpus(s, d).select("vec_id", "embedding")
-    val mm = graft.Checkpoint.barrier(sq8MinMaxRowOf(base))
-    refineExact(s, d, sq8Sims(s, d, mm, sq8CodesOfBase(base, mm)), c)
-  }
-
-  /** Persist the SQ8 index: the one-row min/max table plus the code
-    * table — the 4× artifact a deployment scans instead of the float
-    * column. Train base and encode base are split for the incremental
-    * path (arrivals must encode under the STORED training).
-    */
-  private[graft] def buildSq8IndexOn(s: SparkSession, trainBase: DataFrame,
-      encodeBase: DataFrame, indexDir: String): Unit = {
-    val mm = graft.Checkpoint.barrier(sq8MinMaxRowOf(trainBase))
-    mm.write.mode("overwrite").parquet(s"$indexDir/minmax")
-    sq8CodesOfBase(encodeBase, mm).withColumn("batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("batch")
-      .parquet(s"$indexDir/codes")
-  }
-
-  def buildSq8Index(s: SparkSession, d: String, indexDir: String): Unit = {
-    val base = corpus(s, d).select("vec_id", "embedding")
-    buildSq8IndexOn(s, base, base, indexDir)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$indexDir/_fingerprint"), datasetFingerprint(d))
-  }
+  private[graft] def sq8Read(s: SparkSession, layout: Sq8Layout,
+      indexDir: String): Sq8Store =
+    Sq8Store(layout,
+      if (layout.routed) Some(s.read.parquet(s"$indexDir/centroids")) else None,
+      s.read.parquet(s"$indexDir/minmax"), s.read.parquet(s"$indexDir/codes"),
+      Some(indexDir))
 
   /** Clamp-rate retrain trigger: the fraction of appended COORDINATES
     * that saturate the stored 8-bit range. In-distribution arrivals sit
@@ -1689,29 +1726,34 @@ object EmbeddingOps {
     */
   private[graft] val SQ8_CLAMP_RETRAIN = 0.05
 
-  /** Append an arrival batch: encode ONLY the new rows under the stored
-    * min/max (no retraining — the contract every index family here
-    * keeps), written as a new batch partition so the write is O(batch).
+  /** Append an arrival batch: assign it to the stored centroids (routed
+    * layouts) and encode ONLY the new rows under the stored min/max rows
+    * (no retraining — the contract every index family here keeps),
+    * written as a new batch partition under dynamic overwrite, so the
+    * write is O(batch) and a replayed batch overwrites itself.
     *
-    * Returns the batch's CLAMP RATE (see [[SQ8_CLAMP_RETRAIN]]) — one
-    * extra O(|batch|) pass, the monitor the retrain decision reads.
+    * Returns the WORST per-key CLAMP RATE (see [[SQ8_CLAMP_RETRAIN]]),
+    * one extra O(|batch|) pass: the global rate for a global row; per
+    * cell for `IvfCell`, where a drifted population lands in its own
+    * routed cells and saturates THEIR rows, which a global average
+    * would dilute.
     */
   private[graft] def appendSq8Index(s: SparkSession, newRows: DataFrame,
-      indexDir: String, batchId: Long): Double = {
-    val mm = s.read.parquet(s"$indexDir/minmax")
-    sq8CodesOfBase(newRows, mm).withColumn("batch", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(s"$indexDir/codes")
+      indexDir: String, batchId: Long,
+      layout: Sq8Layout = Sq8Layout.Flat): Double = {
+    val st = sq8Read(s, layout, indexDir)
+    val enc = sq8Encoded(sq8Assigned(st.cents, newRows), st.mm, layout)
+    sq8WriteCodes(sq8CodeRows(enc, layout), layout, indexDir, batchId)
     val clamped = s"aggregate(transform(sequence(1, $DIM), i -> " +
       "CASE WHEN CAST(element_at(embedding, i) AS DOUBLE) < element_at(mns, i) " +
       "OR CAST(element_at(embedding, i) AS DOUBLE) > element_at(mxs, i) " +
       "THEN 1 ELSE 0 END), 0, (a, x) -> a + x)"
-    val r = newRows.crossJoin(broadcast(mm))
-      .selectExpr(s"$clamped AS nc")
-      .agg(sum(col("nc")).cast("double").as("c"),
-        count(lit(1)).cast("double").as("n"))
-      .head()
-    if (r.getDouble(1) == 0.0) 0.0 else r.getDouble(0) / (r.getDouble(1) * DIM)
+    enc.selectExpr(layout.mmKeys :+ s"$clamped AS nc": _*)
+      .groupBy(layout.mmKeys.map(col): _*)
+      .agg(try_divide(sum(col("nc")).cast("double"),
+        count(lit(1)).cast("double") * DIM).as("rate"))
+      .agg(coalesce(max("rate"), lit(0.0)))
+      .head().getDouble(0)
   }
 
   /** The drift construction for the retrain gate: arrival vectors
@@ -1734,94 +1776,6 @@ object EmbeddingOps {
         "transform(embedding, x -> CAST(CAST(x AS DOUBLE) + 2.0 AS FLOAT))"))
         .otherwise(col("embedding")))
 
-  /** The retrain-on-drift lifecycle gated end to end: build on the 9/10
-    * slice, append the deliberately-shifted arrivals, read the clamp
-    * monitor, and — because the shifted batch saturates far past the
-    * threshold — RETRAIN on the corpus as modified and re-encode. The
-    * monitor IS the gate: the oracle re-derives min/max over the FULL
-    * modified corpus, so a silent monitor (serve off the stale
-    * training) hash-fails rather than passing quietly.
-    */
-  def annSq8Retrain(s: SparkSession, d: String): DataFrame = {
-    val dir = sq8LifecycleDir(d, "retrain")
-    val base = sq8DriftBase(s, d)
-    buildSq8IndexOn(s, base.filter(!IncrArrival), base.filter(!IncrArrival), dir)
-    val clamp = appendSq8Index(s, base.filter(IncrArrival), dir, batchId = 0L)
-    if (clamp > SQ8_CLAMP_RETRAIN) buildSq8IndexOn(s, base, base, dir)
-    annSq8Indexed(s, d, dir)
-  }
-
-  /** Serve from the persisted index: read the stored min/max row and
-    * code table, mask any tombstones (the store shares the tombstone
-    * layout of the PQ family, so [[tombstonesOf]] works unchanged), and
-    * run the standard probe — bit-identical to the self-contained form.
-    */
-  def annSq8Indexed(s: SparkSession, d: String, indexDir: String): DataFrame = {
-    val mm = s.read.parquet(s"$indexDir/minmax")
-    sq8Probe(s, d, mm, liveRows(s, indexDir,
-      s.read.parquet(s"$indexDir/codes").select("vec_id", "codes")))
-  }
-
-  /** Driver-contract wrapper (staleness-fingerprinted build-once). */
-  def annSq8IndexedAuto(s: SparkSession, d: String): DataFrame =
-    autoIndexed(d, "_sq8", buildSq8Index(s, d, _), annSq8Indexed(s, d, _))
-
-  /** The incremental lifecycle gated: min/max trained on 9/10 of the
-    * corpus, the arriving 1/10 encoded under the stored training and
-    * batch-appended, standard serve. Oracle: dims over the build slice,
-    * encode + probe over the full corpus — bit-exact, so a hash match
-    * proves the append path re-derives nothing.
-    */
-  def annSq8Incr(s: SparkSession, d: String): DataFrame = {
-    val dir = sq8LifecycleDir(d, "incr")
-    val base = corpus(s, d).select("vec_id", "embedding")
-    buildSq8IndexOn(s, base.filter(!IncrArrival), base.filter(!IncrArrival), dir)
-    appendSq8Index(s, base.filter(IncrArrival), dir, batchId = 0L): Unit
-    annSq8Indexed(s, d, dir)
-  }
-
-  /** build → append → tombstone-delete → serve masked: the same
-    * lifecycle contract as the PQ families ([[annIvfPqDeleted]]), against
-    * built and appended partitions alike; the delete reuses the shared
-    * tombstone store ([[deleteIvfPq]] writes ids, [[tombstonesOf]] reads
-    * them back).
-    */
-  def annSq8Deleted(s: SparkSession, d: String): DataFrame = {
-    val dir = sq8LifecycleDir(d, "del")
-    val base = corpus(s, d).select("vec_id", "embedding")
-    buildSq8IndexOn(s, base.filter(!IncrArrival), base.filter(!IncrArrival), dir)
-    appendSq8Index(s, base.filter(IncrArrival), dir, batchId = 0L): Unit
-    deleteIvfPq(s, base.filter(DeleteVictims).select("vec_id"), dir, batchId = 1L)
-    annSq8Indexed(s, d, dir)
-  }
-
-  /** IVF·SQ8 — the composition that actually fits this corpus (BENCH.md
-    * r15): the trained coarse quantizer routes the query to its
-    * L2-nearest cell (search space ~N/k, partition-prunable exactly like
-    * IVF-PQ's code store), and WITHIN the cell candidates rank by the
-    * near-exact SQ8 reconstruction — so the composed serve keeps the
-    * kmeans family's 0.975 routing ceiling instead of burning it on
-    * codebook noise the way IVF-PQ does here. Min/max is GLOBAL (raw,
-    * not per-cell residual): the uniform quantizer's error is
-    * range-driven and already sits far below the corpus's neighbor gaps,
-    * so residualizing would buy precision nothing needs — and a global
-    * row keeps the append path training-free. The oracle re-derives both
-    * trainings (Lloyd + min/max), the assignment, the routing, and the
-    * in-cell reconstruction ranking, all bit-exact.
-    */
-  def annIvfSq8(s: SparkSession, d: String, nProbe: Int = 1): DataFrame =
-    rankByDistance(s, ivfSq8Sims(s, d, nProbe))
-
-  /** The composed probe + exact re-rank: the in-cell SQ8 shortlist
-    * (rank ≤ c) re-scored against the original vectors as point lookups
-    * — recovers the routing ceiling exactly (the one neighbor the
-    * quantization margin costs the plain composed probe comes back),
-    * sharing [[refineExact]] with every other refined family.
-    */
-  def annIvfSq8Refined(s: SparkSession, d: String,
-      c: Int = REFINE_C): DataFrame =
-    refineExact(s, d, ivfSq8Sims(s, d), c)
-
   /** Route each (query_id, q_emb) to its single L2-nearest cell under
     * the given centroids — the (dist ASC, cell ASC) tie-break every
     * serve path and oracle shares; ONE copy so the tie-break can't
@@ -1837,235 +1791,138 @@ object EmbeddingOps {
       .filter(col("rk") <= nProbe)
       .select(col("query_id"), col("q_emb"), col("cell"))
 
-  private def ivfSq8Sims(s: SparkSession, d: String,
-      nProbe: Int = 1): DataFrame = {
-    val base = corpus(s, d).select("vec_id", "embedding")
-    val cents = kmeansCentroids(s, d)
-    val asg = assignCells(s, base, cents).select("vec_id", "cell")
-    val mm = graft.Checkpoint.barrier(sq8MinMaxRowOf(base))
-    val codes = sq8CodesOfBase(base, mm).join(asg, Seq("vec_id"))
-    val q = base.filter(col("vec_id") < N_QUERIES).toDF("query_id", "q_emb")
-    val routed = routeToCell(q, cents, nProbe)
-    // join to the routed cells FIRST (decode only in-cell candidates,
-    // not the ~(k−1)/k the cell filter discards), then the fused
-    // decode+distance kernel — bit-identical answer, codegen'd scan
-    codes.join(broadcast(routed), Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .crossJoin(broadcast(mm))
-      .select(col("query_id"),
-        (-graft.functions.GraftFunctions.sq8_adist(col("q_emb"),
-          col("codes"), col("mns"), col("mxs"), SQ8_LEVELS)).as("sim"),
-        col("vec_id"))
-  }
-
-  /** IVF·SQ8 with PER-CELL min/max training — the per-partition lever
-    * the drift measurement motivates (BENCH.md §SQ8 distribution
-    * drift): a GLOBAL uniform quantizer over a bimodal corpus spans
-    * both populations and pays ~|range|/256 error everywhere, while
-    * per-cell ranges stay tight around each population (the coarse
-    * quantizer separates them — that is what it is for). Same
-    * residual-style idea as per-cell PQ codebooks, at scalar-quantizer
-    * cost: training is one (cell, dim)-keyed min/max aggregate.
-    * Serve routes the query to its cell and ranks candidates through
-    * the fused kernel under THAT cell's row.
-    */
-  def annIvfSq8Cell(s: SparkSession, d: String): DataFrame = {
-    val base = corpus(s, d).select("vec_id", "embedding")
-    val q = base.filter(col("vec_id") < N_QUERIES).toDF("query_id", "q_emb")
-    ivfSq8CellServeOver(s, base, q)
-  }
-
-  /** The per-cell-trained serve over explicit base/queries — shared by
-    * the gate and RecallBench's drift rows (which feed the shifted
-    * bimodal corpus + shifted traffic through it).
-    */
-  private[graft] def ivfSq8CellServeOver(s: SparkSession, base: DataFrame,
-      q: DataFrame): DataFrame = {
-    val cents = kmeansCentroidsOf(base)
-    val asg = graft.Checkpoint.barrier(assignCells(s, base, cents))
-      .select("vec_id", "embedding", "cell")
-    val mmCell = graft.Checkpoint.barrier(cellMinMaxOf(asg))
-    ivfSq8CellProbe(s, cellCodesOf(asg, mmCell), mmCell,
-      routeToCell(q, cents, 1))
-  }
-
-  /** Per-(cell, dim) min/max rows folded to one broadcastable
-    * (cell, mns, mxs) row per cell — one keyed aggregate.
-    */
-  private def cellMinMaxOf(asg: DataFrame): DataFrame = asg
-    .select(col("cell"), posexplode(col("embedding")).as(Seq("i", "x")))
-    .groupBy("cell", "i")
-    .agg(min(col("x").cast("double")).as("mn"),
-      max(col("x").cast("double")).as("mx"))
-    .groupBy("cell")
-    .agg(array_sort(collect_list(struct(col("i"), col("mn")))).as("a"),
-      array_sort(collect_list(struct(col("i"), col("mx")))).as("b"))
-    .selectExpr("cell", "transform(a, p -> p.mn) AS mns",
-      "transform(b, p -> p.mx) AS mxs")
-
-  /** Encode each assigned vector under ITS cell's min/max row. */
-  private def cellCodesOf(asg: DataFrame, mmCell: DataFrame): DataFrame =
-    asg.join(broadcast(mmCell), Seq("cell"))
-      .withColumn("codes", expr(sq8CodeX("embedding", "mns", "mxs").spark))
-      .select("vec_id", "cell", "codes")
-
-  /** The routed per-cell ranking tail shared by the self-contained and
-    * persisted forms.
-    */
-  private def ivfSq8CellProbe(s: SparkSession, codes: DataFrame,
-      mmCell: DataFrame, routed: DataFrame): DataFrame = {
-    val sims = codes.join(broadcast(routed), Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .join(broadcast(mmCell), Seq("cell"))
-      .select(col("query_id"),
-        (-graft.functions.GraftFunctions.sq8_adist(col("q_emb"),
-          col("codes"), col("mns"), col("mxs"), SQ8_LEVELS)).as("sim"),
-        col("vec_id"))
-    rankByDistance(s, sims)
-  }
-
-  /** Persist the per-cell-trained store: centroids, the k-row cellmm
-    * table, the code table partitioned by cell — the serve prunes to
-    * the routed cells' partitions like every composed store here.
-    */
-  def buildIvfSq8CellIndex(s: SparkSession, d: String, indexDir: String): Unit =
-    buildIvfSq8CellIndexOn(s, corpus(s, d).select("vec_id", "embedding"),
-      indexDir)
-
-  private[graft] def buildIvfSq8CellIndexOn(s: SparkSession, base: DataFrame,
-      indexDir: String): Unit = {
-    val cents = kmeansCentroidsOf(base)
-    cents.write.mode("overwrite").parquet(s"$indexDir/centroids")
-    val asg = graft.Checkpoint.barrier(assignCells(s, base, cents))
-      .select("vec_id", "embedding", "cell")
-    val mmCell = graft.Checkpoint.barrier(cellMinMaxOf(asg))
-    mmCell.write.mode("overwrite").parquet(s"$indexDir/cellmm")
-    cellCodesOf(asg, mmCell).withColumn("batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("cell", "batch")
-      .parquet(s"$indexDir/codes")
-  }
-
-  /** Append arrivals to the per-cell store: assign to the stored
-    * centroids, encode each under ITS cell's stored row (no retraining
-    * — the shared index contract), batch-keyed dynamic overwrite.
-    * Returns the WORST per-cell clamp rate — the per-partition drift
-    * monitor matching the per-partition training: a drifted population
-    * lands in its own routed cells and saturates THEIR rows, which a
-    * global average would dilute.
-    */
-  private[graft] def appendIvfSq8CellIndex(s: SparkSession, newRows: DataFrame,
-      indexDir: String, batchId: Long): Double = {
-    val cents = s.read.parquet(s"$indexDir/centroids")
-    val mmCell = s.read.parquet(s"$indexDir/cellmm")
-    val asg = graft.Checkpoint.barrier(assignCells(s, newRows, cents))
-      .select("vec_id", "embedding", "cell")
-    cellCodesOf(asg, mmCell).withColumn("batch", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell", "batch").parquet(s"$indexDir/codes")
-    val clamped = s"aggregate(transform(sequence(1, $DIM), i -> " +
-      "CASE WHEN CAST(element_at(embedding, i) AS DOUBLE) < element_at(mns, i) " +
-      "OR CAST(element_at(embedding, i) AS DOUBLE) > element_at(mxs, i) " +
-      "THEN 1 ELSE 0 END), 0, (a, x) -> a + x)"
-    val worst = asg.join(broadcast(mmCell), Seq("cell"))
-      .selectExpr("cell", s"$clamped AS nc")
-      .groupBy("cell")
-      .agg((sum(col("nc")).cast("double") /
-        (count(lit(1)).cast("double") * DIM)).as("rate"))
-      .agg(coalesce(max("rate"), lit(0.0)).as("worst"))
-      .head().getDouble(0)
-    worst
-  }
-
-  /** The per-cell store's incremental lifecycle gated: per-cell rows
-    * trained on the 9/10 slice, arrivals encoded under the STORED rows
-    * and cell-appended, standard routed serve — the oracle re-derives
-    * slice-trained per-cell min/max with the serving encode over the
-    * full corpus, so a hash match proves the append re-trains nothing.
-    */
-  def annIvfSq8CellIncr(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.Scratch.processDir(d, "ivfsq8cell_incr")
-    val base = corpus(s, d).select("vec_id", "embedding")
-    buildIvfSq8CellIndexOn(s, base.filter(!IncrArrival), dir)
-    appendIvfSq8CellIndex(s, base.filter(IncrArrival), dir, batchId = 0L): Unit
-    annIvfSq8CellIndexed(s, d, dir)
-  }
-
-  /** The persisted per-cell serve: route on stored centroids, prune the
-    * code scan to the routed cells, rank under each cell's stored row —
-    * bit-identical to the self-contained form, same oracle.
-    */
-  def annIvfSq8CellIndexed(s: SparkSession, d: String,
-      indexDir: String): DataFrame = {
-    val cents = s.read.parquet(s"$indexDir/centroids")
-    val q = corpus(s, d).select("vec_id", "embedding")
-      .filter(col("vec_id") < N_QUERIES).toDF("query_id", "q_emb")
-    val routed = routeToCell(q, cents, 1)
-    val cells = routed.select("cell").distinct().collect()
-      .map(_.getAs[Number]("cell").intValue()).toSeq
-    val codes = s.read.parquet(s"$indexDir/codes")
-      .filter(col("cell").isin(cells: _*))
-    val mmCell = s.read.parquet(s"$indexDir/cellmm")
-      .filter(col("cell").isin(cells: _*))
-    ivfSq8CellProbe(s, codes, mmCell, routed)
-  }
-
-  /** Driver-contract wrapper (build-once, atomic publish). */
-  def annIvfSq8CellIndexedAuto(s: SparkSession, d: String): DataFrame =
-    autoIndexed(d, "_ivfsq8cell", buildIvfSq8CellIndex(s, d, _),
-      annIvfSq8CellIndexed(s, d, _))
-
-  /** Persist the composed IVF·SQ8 index: coarse centroids (tiny), the
-    * one-row min/max, and the code table `partitionBy(cell)` — the
-    * routed probe's scan prunes to its cell's partitions exactly like
-    * the IVF-PQ store, but what it reads per cell are the near-exact 4×
-    * codes instead of codebook indexes.
-    */
-  def buildIvfSq8Index(s: SparkSession, d: String, indexDir: String): Unit = {
-    val base = corpus(s, d).select("vec_id", "embedding")
-    val cents = kmeansCentroids(s, d)
-    cents.write.mode("overwrite").parquet(s"$indexDir/centroids")
-    val mm = graft.Checkpoint.barrier(sq8MinMaxRowOf(base))
-    mm.write.mode("overwrite").parquet(s"$indexDir/minmax")
-    val asg = assignCells(s, base, cents).select("vec_id", "cell")
-    sq8CodesOfBase(base, mm).join(asg, Seq("vec_id"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$indexDir/codes")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$indexDir/_fingerprint"), datasetFingerprint(d))
-  }
-
-  /** The composed serve off the persisted store: route on the stored
-    * centroids (broadcast), scan ONLY the routed cells' code partitions
-    * (the collected cell-id set is O(queries) rows — the same
-    * PartitionFilters device as the IVF-PQ serve), reconstruct and rank
-    * in-cell. Bit-identical to [[annIvfSq8]] — same oracle.
-    */
-  def annIvfSq8Indexed(s: SparkSession, d: String,
-      indexDir: String): DataFrame = {
-    val cents = s.read.parquet(s"$indexDir/centroids")
-    val mm = s.read.parquet(s"$indexDir/minmax")
-    val q = corpus(s, d).filter(col("vec_id") < N_QUERIES)
+  private def sq8Queries(s: SparkSession, d: String): DataFrame =
+    corpus(s, d).filter(col("vec_id") < N_QUERIES)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val routed = graft.Checkpoint.barrier(routeToCell(q, cents))
-    val probedCells = routed.select("cell").distinct().collect().map(_.getInt(0))
-    val codes = s.read.parquet(s"$indexDir/codes")
-      .filter(col("cell").isin(probedCells.toSeq: _*))
-    val sims = codes.join(broadcast(routed), Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .crossJoin(broadcast(mm))
+
+  /** The one SQ8 serve: (query_id, sim = −adist, vec_id) candidates of
+    * the query frame `q` (query_id, q_emb) against a store. A routed
+    * layout joins the code rows to the query's `nProbe` nearest cells
+    * FIRST, so only in-cell candidates decode. A persisted store also
+    * scans ONLY the routed cells' code partitions (the collected cell-id
+    * set is O(queries) rows — the PartitionFilters device of the IVF-PQ
+    * serve) and masks its tombstones ([[deleteIvfPq]] writes them).
+    * Never a corpus shuffle.
+    */
+  private[graft] def sq8Serve(s: SparkSession, st: Sq8Store, q: DataFrame,
+      nProbe: Int = 1): DataFrame = {
+    val routed = st.cents.map(c => graft.Checkpoint.barrier(routeToCell(q, c, nProbe)))
+    val codes = st.dir.fold(st.codes) { dir =>
+      val cells = routed.map(_.select("cell").distinct().collect().map(_.getInt(0)))
+      liveRows(s, dir,
+        cells.fold(st.codes)(c => st.codes.filter(col("cell").isin(c.toSeq: _*))))
+    }
+    val cand = routed.fold(codes.crossJoin(broadcast(q)))(r =>
+      codes.join(broadcast(r), Seq("cell")))
+    sq8Scored(cand.filter(col("query_id") =!= col("vec_id")), st)
+  }
+
+  /** The scorer of every SQ8 serve and of [[annGraphSq8]]'s walk: each
+    * (query_id, q_emb, vec_id, [cell], codes) candidate under its
+    * min/max row, distance via the fused native [[graft.functions
+    * .Kernels.sq8Adist]] kernel — decode-at-bin-center and the L2² fold
+    * in one codegen'd pass, never materializing a reconstruction array
+    * per candidate (bit-identical to recon + l2_sq by construction; the
+    * oracle still verifies the composed SQL form).
+    */
+  private def sq8Scored(cand: DataFrame, st: Sq8Store): DataFrame =
+    joinOn(cand, st.mm, st.layout.mmKeys)
       .select(col("query_id"),
         (-graft.functions.GraftFunctions.sq8_adist(col("q_emb"),
           col("codes"), col("mns"), col("mxs"), SQ8_LEVELS)).as("sim"),
         col("vec_id"))
-    rankByDistance(s, sims)
-  }
+
+  /** Ranked answer of a store's serve of `q` — bit-identical whether the
+    * store was trained in-query or read back, so every layout's
+    * self-contained and persisted gates share one oracle.
+    */
+  private[graft] def annSq8Over(s: SparkSession, st: Sq8Store,
+      q: DataFrame, nProbe: Int = 1): DataFrame =
+    rankByDistance(s, sq8Serve(s, st, q, nProbe))
+
+  private def sq8InQuery(s: SparkSession, d: String, layout: Sq8Layout): Sq8Store =
+    sq8Build(layout, corpus(s, d).select("vec_id", "embedding"))
+
+  /** Self-contained SQ8 top-k: train, encode, probe. */
+  def annSq8(s: SparkSession, d: String, layout: Sq8Layout = Sq8Layout.Flat,
+      nProbe: Int = 1): DataFrame =
+    annSq8Over(s, sq8InQuery(s, d, layout), sq8Queries(s, d), nProbe)
+
+  /** SQ8 shortlist + exact re-rank — the same composed production stack
+    * as the PQ refined probes, sharing [[refineExact]] so the re-rank
+    * tail is byte-identical across families. Under `Ivf` it recovers the
+    * routing ceiling exactly (the one neighbor the quantization margin
+    * costs the plain composed probe comes back).
+    */
+  def annSq8Refined(s: SparkSession, d: String,
+      layout: Sq8Layout = Sq8Layout.Flat, c: Int = REFINE_C): DataFrame =
+    refineExact(s, d,
+      sq8Serve(s, sq8InQuery(s, d, layout), sq8Queries(s, d)), c)
+
+  /** Serve from the persisted store — bit-identical to the self-contained
+    * form, same oracle.
+    */
+  def annSq8Indexed(s: SparkSession, d: String, indexDir: String,
+      layout: Sq8Layout = Sq8Layout.Flat): DataFrame =
+    annSq8Over(s, sq8Read(s, layout, indexDir), sq8Queries(s, d))
 
   /** Driver-contract wrapper (staleness-fingerprinted build-once). */
-  def annIvfSq8IndexedAuto(s: SparkSession, d: String): DataFrame =
-    autoIndexed(d, "_ivfsq8", buildIvfSq8Index(s, d, _),
-      annIvfSq8Indexed(s, d, _))
+  def annSq8IndexedAuto(s: SparkSession, d: String,
+      layout: Sq8Layout = Sq8Layout.Flat): DataFrame =
+    autoIndexed(d, layout.suffix, buildSq8Index(s, d, _, layout),
+      annSq8Indexed(s, d, _, layout))
 
-  private def sq8LifecycleDir(d: String, tag: String): String =
-    graft.Scratch.processDir(d, s"sq8_$tag")
+  /** The lifecycle the gates below share: build on the 9/10 slice of
+    * `base`, append the arriving 1/10 as batch 0 under the STORED
+    * training. Returns the per-process store dir and the batch's clamp
+    * rate.
+    */
+  private def sq8Appended(s: SparkSession, d: String, base: DataFrame,
+      tag: String, layout: Sq8Layout = Sq8Layout.Flat): (String, Double) = {
+    val dir = graft.Scratch.processDir(d, tag + layout.suffix)
+    buildSq8IndexOn(s, base.filter(!IncrArrival), dir, layout)
+    (dir, appendSq8Index(s, base.filter(IncrArrival), dir, 0L, layout))
+  }
+
+  /** The incremental lifecycle gated: trained on 9/10 of the corpus,
+    * the arriving 1/10 encoded under the stored training and
+    * batch-appended, standard serve. Oracle: training over the build
+    * slice, encode + probe over the full corpus — bit-exact, so a hash
+    * match proves the append path re-derives nothing.
+    */
+  def annSq8Incr(s: SparkSession, d: String,
+      layout: Sq8Layout = Sq8Layout.Flat): DataFrame =
+    annSq8Indexed(s, d,
+      sq8Appended(s, d, corpus(s, d).select("vec_id", "embedding"), "incr",
+        layout)._1, layout)
+
+  /** build → append → tombstone-delete → serve masked: the same
+    * lifecycle contract as the PQ families ([[annIvfPqDeleted]]), against
+    * built and appended partitions alike; the delete reuses the shared
+    * tombstone store ([[deleteIvfPq]] writes ids, [[tombstonesOf]] reads
+    * them back).
+    */
+  def annSq8Deleted(s: SparkSession, d: String): DataFrame = {
+    val base = corpus(s, d).select("vec_id", "embedding")
+    val (dir, _) = sq8Appended(s, d, base, "del")
+    deleteIvfPq(s, base.filter(DeleteVictims).select("vec_id"), dir, batchId = 1L)
+    annSq8Indexed(s, d, dir)
+  }
+
+  /** The retrain-on-drift lifecycle gated end to end: build on the 9/10
+    * slice, append the deliberately-shifted arrivals, read the clamp
+    * monitor, and — because the shifted batch saturates far past the
+    * threshold — RETRAIN on the corpus as modified and re-encode. The
+    * monitor IS the gate: the oracle re-derives min/max over the FULL
+    * modified corpus, so a silent monitor (serve off the stale
+    * training) hash-fails rather than passing quietly.
+    */
+  def annSq8Retrain(s: SparkSession, d: String): DataFrame = {
+    val base = sq8DriftBase(s, d)
+    val (dir, clamp) = sq8Appended(s, d, base, "retrain")
+    if (clamp > SQ8_CLAMP_RETRAIN) buildSq8IndexOn(s, base, dir)
+    annSq8Indexed(s, d, dir)
+  }
 
   // ------------------------------------------------ graph ANN (navigable per-cell graph)
 
@@ -2744,8 +2601,8 @@ object EmbeddingOps {
     val base = corpus(s, d).select("vec_id", "embedding")
     val cents = kmeansCentroids(s, d)
     val asg = graft.Checkpoint.barrier(assignCells(s, base, cents))
-    val mm = graft.Checkpoint.barrier(sq8MinMaxRowOf(base))
-    val codes = graft.Checkpoint.barrier(sq8CodesOfBase(base, mm))
+    val sq8 = sq8Build(Sq8Layout.Flat, base)
+    val codes = graft.Checkpoint.barrier(sq8.codes)
     val routed = asg.filter(col("vec_id") < N_QUERIES)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("cell"))
@@ -2753,13 +2610,8 @@ object EmbeddingOps {
     val entries = graphEntriesOf(asg)
     val q = routed.select("query_id", "q_emb")
     // the compressed-domain scorer the WALK uses: −adist off the codes
-    def withCodeSims(ids: DataFrame): DataFrame =
-      ids.join(codes, Seq("vec_id"))
-        .join(broadcast(q), Seq("query_id"))
-        .crossJoin(broadcast(mm))
-        .select(col("query_id"), col("vec_id"),
-          (-graft.functions.GraftFunctions.sq8_adist(col("q_emb"),
-            col("codes"), col("mns"), col("mxs"), SQ8_LEVELS)).as("sim"))
+    def withCodeSims(ids: DataFrame): DataFrame = sq8Scored(
+      ids.join(codes, Seq("vec_id")).join(broadcast(q), Seq("query_id")), sq8)
     // same per-hop edge-materialization discipline as [[graphBeamVisited]]
     val e = graft.Checkpoint.barrier(
       edges.select(col("src").as("vec_id"), col("dst")))
@@ -2786,7 +2638,7 @@ object EmbeddingOps {
     // fed the hops only — the exact re-rank below reads raw vectors
     graft.Checkpoint.release(e)
     graft.Checkpoint.release(codes)
-    graft.Checkpoint.release(mm)
+    graft.Checkpoint.release(sq8.mm)
     // the exact re-rank: the visited ids' RAW vectors as point lookups,
     // ranked by exact cosine — the only full-precision reads of the serve
     val exact = visited.select("query_id", "vec_id")
@@ -3554,11 +3406,12 @@ object EmbeddingOps {
     // serve, incremental append, tombstone delete
     "q_sq8_minmax" -> (sq8MinMax _),
     "q_sq8_codes" -> (sq8Codes _),
-    "q_ann_sq8" -> (annSq8 _),
+    "q_ann_sq8" -> ((s: SparkSession, d: String) => annSq8(s, d)),
     "q_ann_sq8_refined" ->
       ((s: SparkSession, d: String) => annSq8Refined(s, d)),
-    "q_ann_sq8_indexed" -> (annSq8IndexedAuto _),
-    "q_ann_sq8_incr" -> (annSq8Incr _),
+    "q_ann_sq8_indexed" ->
+      ((s: SparkSession, d: String) => annSq8IndexedAuto(s, d)),
+    "q_ann_sq8_incr" -> ((s: SparkSession, d: String) => annSq8Incr(s, d)),
     // arrivals as a micro-batched stream: answer must be
     // arrival-shape-independent (same oracle as the batch incr)
     "q_ann_sq8_incr_stream" ->
@@ -3576,24 +3429,28 @@ object EmbeddingOps {
     // the composed coarse-route + in-cell SQ8 ranking: cell-pruned
     // search at the near-exact quantizer's recall
     "q_ann_ivfsq8" ->
-      ((s: SparkSession, d: String) => annIvfSq8(s, d)),
+      ((s: SparkSession, d: String) => annSq8(s, d, Sq8Layout.Ivf)),
     // the persisted form: routed cells' partitions only, stored codes
-    "q_ann_ivfsq8_indexed" -> (annIvfSq8IndexedAuto _),
+    "q_ann_ivfsq8_indexed" ->
+      ((s: SparkSession, d: String) => annSq8IndexedAuto(s, d, Sq8Layout.Ivf)),
     // cell-pruned shortlist + exact re-rank: the full composed stack
     "q_ann_ivfsq8_refined" ->
-      ((s: SparkSession, d: String) => annIvfSq8Refined(s, d)),
+      ((s: SparkSession, d: String) => annSq8Refined(s, d, Sq8Layout.Ivf)),
     // the probe-width recall knob, same as the kmeans family's
     "q_ann_ivfsq8_probe2" ->
-      ((s: SparkSession, d: String) => annIvfSq8(s, d, nProbe = 2)),
+      ((s: SparkSession, d: String) => annSq8(s, d, Sq8Layout.Ivf, nProbe = 2)),
     // per-cell min/max training: the per-partition quantizer the drift
     // measurement motivates (tight ranges per population on a bimodal
     // corpus, where one global row pays wide-bin error everywhere)
-    "q_ann_ivfsq8_cell" -> (annIvfSq8Cell _),
+    "q_ann_ivfsq8_cell" ->
+      ((s: SparkSession, d: String) => annSq8(s, d, Sq8Layout.IvfCell)),
     // the persisted per-cell store: routed-cell-pruned scan, same oracle
-    "q_ann_ivfsq8_cell_indexed" -> (annIvfSq8CellIndexedAuto _),
+    "q_ann_ivfsq8_cell_indexed" ->
+      ((s: SparkSession, d: String) => annSq8IndexedAuto(s, d, Sq8Layout.IvfCell)),
     // the per-cell store's append path: arrivals encoded under the
     // stored rows, worst-cell clamp monitored, no retraining
-    "q_ann_ivfsq8_cell_incr" -> (annIvfSq8CellIncr _),
+    "q_ann_ivfsq8_cell_incr" ->
+      ((s: SparkSession, d: String) => annSq8Incr(s, d, Sq8Layout.IvfCell)),
     // graph ANN: per-cell navigable kNN graph + H-hop beam search — the
     // serving family whose exact reads scale with the walk (≤ 1+H·B·R),
     // not with a fixed c-deep shortlist; self-contained and served off
@@ -4716,10 +4573,6 @@ SELECT query_id, vizinho, sim, rank FROM (
 WHERE rank <= $TOP_K ORDER BY query_id, rank"""
   }
 
-  /** Shared SQ8 oracle CTE chain: min/max training (optionally over a
-    * slice), uniform codes, bin-center reconstructions — the DuckDB
-    * re-derivation of everything [[buildSq8IndexOn]] persists.
-    */
   /** The drift-gate base in SQL: arrivals translated +2 (exact-in-double
     * float add, so both engines round to the same float) — the DuckDB
     * twin of [[sq8DriftBase]].
@@ -4731,6 +4584,10 @@ WHERE rank <= $TOP_K ORDER BY query_id, rank"""
     ELSE embedding END AS embedding
   FROM embeddings)"""
 
+  /** Shared SQ8 oracle CTE chain: min/max training (optionally over a
+    * slice), uniform codes, bin-center reconstructions — the DuckDB
+    * re-derivation of everything a flat [[buildSq8IndexOn]] persists.
+    */
   private def sq8Ctes(trainWhere: String,
       baseCte: String = s"""sqbase AS (SELECT CAST(vec_id AS BIGINT) AS vec_id, embedding
   FROM embeddings)"""): String =
@@ -4779,11 +4636,6 @@ WHERE rank <= $TOP_K ORDER BY query_id, rank"""
   private def annSq8IncrOracle: String =
     annSq8OracleFrom("WHERE vec_id % 10 <> 9", "TRUE")
 
-  /** Retrain-on-drift oracle: the MODIFIED corpus (arrivals shifted 3×),
-    * min/max re-derived over ALL of it — what the store must serve after
-    * the clamp monitor fires and the retrain re-encodes. A serve off the
-    * stale slice training cannot match this.
-    */
   /** The STREAMED retrain oracle: the monitor fires on the FIRST
     * shifted micro-batch (clamp ≈ 1.0), the in-stream retrain trains on
     * everything indexed so far (build slice + batch 0 — the even-decade
@@ -4801,6 +4653,12 @@ SELECT query_id, vizinho, adist, rank FROM (
 ${sq8RankedSims("TRUE")})
 WHERE rank <= $TOP_K ORDER BY query_id, rank"""
 
+  /** Retrain-on-drift oracle: the MODIFIED corpus (arrivals translated
+    * +2, as [[sq8DriftBase]] builds it), min/max re-derived over ALL of
+    * it — what the store must serve after the clamp monitor fires and
+    * the retrain re-encodes. A serve off the stale slice training cannot
+    * match this.
+    */
   private def annSq8RetrainOracle: String =
     s"""WITH ${sq8Ctes("", sq8DriftBaseCte)}
 SELECT query_id, vizinho, adist, rank FROM (

@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Scratch
+import graft.sim.EmbeddingOps.Sq8Layout
 
 /** Absolute recall@k of every ANN index family against brute-force
   * truth, measured on the gated data at the gated probe parameters —
@@ -142,12 +143,12 @@ object RecallBench {
     // the composed route+SQ8 serve: should hold the kmeans family's
     // routing ceiling (cell pruning costs recall only via routing, and
     // in-cell SQ8 ranking is near-exact)
-    row("ivfsq8", truthFull) { EmbeddingOps.annIvfSq8(spark, sfDir) }
+    row("ivfsq8", truthFull) { EmbeddingOps.annSq8(spark, sfDir, Sq8Layout.Ivf) }
     row("ivfsq8_refined", truthFull) {
-      EmbeddingOps.annIvfSq8Refined(spark, sfDir)
+      EmbeddingOps.annSq8Refined(spark, sfDir, Sq8Layout.Ivf)
     }
     row("ivfsq8_probe2", truthFull) {
-      EmbeddingOps.annIvfSq8(spark, sfDir, nProbe = 2)
+      EmbeddingOps.annSq8(spark, sfDir, Sq8Layout.Ivf, nProbe = 2)
     }
 
     // graph ANN (r16): the H-hop beam walk should hold the routed-cell
@@ -294,29 +295,19 @@ object RecallBench {
               .as("sim"),
             col("vec_id"))).cache()
       truthShift.count(): Unit
-      def sq8ServeWith(dir: String): DataFrame = {
-        val mm = spark.read.parquet(s"$dir/minmax")
-        val codes = spark.read.parquet(s"$dir/codes").select("vec_id", "codes")
-        EmbeddingOps.rankViaTopK(spark,
-          codes.crossJoin(broadcast(mm)).crossJoin(broadcast(qShift))
-            .filter(col("query_id") =!= col("vec_id"))
-            .select(col("query_id"),
-              (-graft.functions.GraftFunctions.sq8_adist(col("q_emb"),
-                col("codes"), col("mns"), col("mxs"), 255)).as("sim"),
-              col("vec_id")))
-      }
       val stale = s"${Scratch.tempDir("graft_recall_sq8_stale_")}/idx"
       row("sq8_shifted_noretrain", truthShift) {
-        EmbeddingOps.buildSq8IndexOn(spark,
-          shifted.filter(!arrival), shifted.filter(!arrival), stale)
+        EmbeddingOps.buildSq8IndexOn(spark, shifted.filter(!arrival), stale)
         out("sq8_shifted_clamp_rate") =
           EmbeddingOps.appendSq8Index(spark, shifted.filter(arrival), stale, 0L)
-        sq8ServeWith(stale)
+        EmbeddingOps.annSq8Over(spark,
+          EmbeddingOps.sq8Read(spark, Sq8Layout.Flat, stale), qShift)
       }
       val retr = s"${Scratch.tempDir("graft_recall_sq8_retrain_")}/idx"
       row("sq8_shifted_retrained", truthShift) {
-        EmbeddingOps.buildSq8IndexOn(spark, shifted, shifted, retr)
-        sq8ServeWith(retr)
+        EmbeddingOps.buildSq8IndexOn(spark, shifted, retr)
+        EmbeddingOps.annSq8Over(spark,
+          EmbeddingOps.sq8Read(spark, Sq8Layout.Flat, retr), qShift)
       }
       // the per-partition lever: retrained GLOBAL min/max spans both
       // populations (wide bins, the 0.90 residual cost above); PER-CELL
@@ -326,7 +317,8 @@ object RecallBench {
       // (IVF) truth territory: the serve scans one cell, so its ceiling
       // is the routing ceiling, not the full-scan sq8 rows above.
       row("ivfsq8_cell_shifted_retrained", truthShift) {
-        EmbeddingOps.ivfSq8CellServeOver(spark, shifted, qShift)
+        EmbeddingOps.annSq8Over(spark,
+          EmbeddingOps.sq8Build(Sq8Layout.IvfCell, shifted), qShift)
       }
     }
 
@@ -401,7 +393,7 @@ object RecallBench {
     locally {
       val dir = s"${Scratch.tempDir("graft_recall_fresh_sq8_")}/idx"
       row("sq8_fresh_surv", truthSurv) {
-        EmbeddingOps.buildSq8IndexOn(spark, surv, surv, dir)
+        EmbeddingOps.buildSq8IndexOn(spark, surv, dir)
         EmbeddingOps.annSq8Indexed(spark, sfDir, dir)
       }
     }

@@ -962,14 +962,13 @@ object Streams {
   def sq8RetrainStreamed(spark: SparkSession, dir: String): DataFrame = {
     val r = new Replay(spark, "graft_sq8_retrain_stream")
     val emb = graft.sim.EmbeddingOps.sq8DriftBase(spark, dir)
-    graft.sim.EmbeddingOps.buildSq8IndexOn(spark,
-      emb.filter(!IncrArrival), emb.filter(!IncrArrival), r.idx)
+    graft.sim.EmbeddingOps.buildSq8IndexOn(spark, emb.filter(!IncrArrival), r.idx)
     r.fold(r.stage(arrivalShards(emb))) { (batch, batchId) =>
       val rate = graft.sim.EmbeddingOps.appendSq8Index(spark, batch, r.idx, batchId)
       if (rate > graft.sim.EmbeddingOps.SQ8_CLAMP_RETRAIN) {
         val members = spark.read.parquet(r.idx + "/codes").select("vec_id")
         val indexed = emb.join(members, Seq("vec_id"), "left_semi")
-        graft.sim.EmbeddingOps.buildSq8IndexOn(spark, indexed, indexed, r.idx)
+        graft.sim.EmbeddingOps.buildSq8IndexOn(spark, indexed, r.idx)
       }
     }
     graft.sim.EmbeddingOps.annSq8Indexed(spark, dir, r.idx)
@@ -1047,8 +1046,7 @@ object Streams {
   def sq8IndexStreamed(spark: SparkSession, dir: String): DataFrame = {
     val r = new Replay(spark, "graft_sq8_stream")
     val emb = vectors(spark, dir)
-    graft.sim.EmbeddingOps.buildSq8IndexOn(spark,
-      emb.filter(!IncrArrival), emb.filter(!IncrArrival), r.idx)
+    graft.sim.EmbeddingOps.buildSq8IndexOn(spark, emb.filter(!IncrArrival), r.idx)
     r.fold(r.stage(arrivalShards(emb)))(
       graft.sim.EmbeddingOps.appendSq8Index(spark, _, r.idx, _))
     graft.sim.EmbeddingOps.annSq8Indexed(spark, dir, r.idx)

@@ -45,7 +45,7 @@ class AwEtlSpec extends SparkSpec {
     // SKs contiguous from 1
     val Row(mn: Int, mx: Int, n: Long) = dim
       .agg(min("sk_produto"), max("sk_produto"), countDistinct("sk_produto"))
-      .head
+      .head()
     assert((mn, mx, n) === ((1, 504, 504L)))
   }
 
@@ -62,7 +62,7 @@ class AwEtlSpec extends SparkSpec {
   test("dim_tempo: 5,844 days 2010-2025, smart keys and pt-BR month names") {
     val dim = AwEtl.dimTempo(spark)
     assert(dim.count() === 5844)
-    val may20 = dim.filter($"sk_tempo" === 20230520).head
+    val may20 = dim.filter($"sk_tempo" === 20230520).head()
     assert(may20.getAs[String]("nome_mes") === "Maio")
     assert(may20.getAs[Int]("trimestre") === 2)
     assert(may20.getAs[Int]("semestre") === 1)
@@ -237,13 +237,13 @@ class AwEtlSpec extends SparkSpec {
       (1, 1, 99.99, 0.0, 99.99),
       (2, 4, 10.0, 0.2, 9.8))
       .toDF("sk_produto", "qtd_vendida", "valor_bruto", "valor_desconto", "valor_total")
-    val k1 = Kpis.kpi1FaturamentoBruto(fato).head.getDouble(0)
+    val k1 = Kpis.kpi1FaturamentoBruto(fato).head().getDouble(0)
     assert(k1 === 2 * 10.0 + 1 * 99.99 + 4 * 2.5) // 129.99
     val k6 = Kpis.kpi6VendasPorCategoria(fato, dimP).collect()
     assert(k6.head.getAs[String]("categoria") === "Bikes")
     assert(k6.head.getDouble(1) === 117.99)
     assert(k6.head.getAs[Long]("quantidade_vendas") === 2L)
-    val k10 = Kpis.kpi10TicketMedio(fato).head.getDouble(0)
+    val k10 = Kpis.kpi10TicketMedio(fato).head().getDouble(0)
     assert(math.abs(k10 - (18.0 + 99.99 + 9.8) / 3) < 1e-9)
   }
 }

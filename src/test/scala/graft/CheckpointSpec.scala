@@ -84,7 +84,7 @@ class CheckpointSpec extends SparkSpec {
     assert((persistedIds intersect aIds).isEmpty,
       "superseded round's blocks must be gone after rotation")
     // the rotated frame is intact and correct (computed BEFORE the drop)
-    assert(b.agg(org.apache.spark.sql.functions.sum("id")).head.getLong(0)
+    assert(b.agg(org.apache.spark.sql.functions.sum("id")).head().getLong(0)
       === (1L to 100L).sum)
     Checkpoint.release(b)
   }

@@ -100,7 +100,7 @@ class CurationOpsSpec extends SparkSpec {
     graft.functions.GraftFunctions.register(spark)
     val exact = spark.read.parquet(s"$tiny/documents.parquet")
       .selectExpr("explode(shingle_hashes(split(trim(text), '\\\\s+'), 3)) AS h")
-      .agg(countDistinct(col("h"))).head.getLong(0)
+      .agg(countDistinct(col("h"))).head().getLong(0)
     val err = math.abs(est - exact) / exact
     // HLL std error ~ 1.04/sqrt(256) = 6.5%; 25% is a ~4-sigma bound
     assert(err < 0.25, s"HLL rel error $err (est $est vs exact $exact)")
@@ -260,7 +260,7 @@ class CurationOpsSpec extends SparkSpec {
             "substring(md5(CAST(doc_id AS STRING)), 1, 2) AS sh")
             .distinct().count()
         case _ =>
-          val mx = docs.agg(max("doc_id")).head.getLong(0)
+          val mx = docs.agg(max("doc_id")).head().getLong(0)
           docs.selectExpr("lang", s"doc_id div ($mx div 256 + 1) AS sh")
             .distinct().count()
       }

@@ -156,9 +156,9 @@ class EngineSpec extends SparkSpec {
 
   test("kpi consistency: kpi2 == sum over kpi7 nation rollup") {
     val fato = Star.fatoVendas(spark, tiny)
-    val total = graft.kpi.Kpis.kpi2FaturamentoLiquido(fato).head.getDouble(0)
+    val total = graft.kpi.Kpis.kpi2FaturamentoLiquido(fato).head().getDouble(0)
     val byNation = graft.kpi.Kpis.kpi7PorNacao(fato, Star.dimCliente(spark, tiny))
-      .agg(sum("total_vendas")).head.getDouble(0)
+      .agg(sum("total_vendas")).head().getDouble(0)
     assert(math.abs(total - byNation) < 1e-6)
   }
 
@@ -340,7 +340,7 @@ class EngineSpec extends SparkSpec {
       // why the 100 TB money path keeps ANSI ON: a null grand total is a
       // wrong report, an exception is an operational signal.
       spark.conf.set("spark.sql.ansi.enabled", "false")
-      assert(big.select(sum($"v")).head.isNullAt(0),
+      assert(big.select(sum($"v")).head().isNullAt(0),
         "non-ANSI decimal overflow must yield NULL (never a wrapped value)")
     } finally spark.conf.set("spark.sql.ansi.enabled", ansiSaved)
     // the widening escape hatch: pre-cast the column to DECIMAL(38,2) and
@@ -348,8 +348,8 @@ class EngineSpec extends SparkSpec {
     // (28,2) accumulator while staying exact
     val widened = fato.select(sum($"valor_total".cast("decimal(38,2)")))
     assert(widened.schema.head.dataType === DecimalType(38, 2))
-    assert(widened.head.getDecimal(0) ===
-      fato.select(sum($"valor_total")).head.getDecimal(0)
+    assert(widened.head().getDecimal(0) ===
+      fato.select(sum($"valor_total")).head().getDecimal(0)
         .setScale(2))
   }
 

@@ -25,6 +25,14 @@ class IncrementalSpec extends SparkSpec {
     assert(inc2 === inc1)
   }
 
+  test("the split lifecycle rewrites its fact in a per-process dir") {
+    // the fact is overwritten and appended on every call: a dir shared
+    // across JVMs would let two concurrent runs rewrite each other's
+    val dw = Incremental.buildSplit(spark, tiny)
+    val pid = ProcessHandle.current().pid()
+    assert(dw.contains(s"_p$pid/"), s"split fact dir $dw is not this process's")
+  }
+
   test("a second ensureDims over an unchanged source runs no Spark job") {
     Incremental.ensureDims(spark, tiny)
     val (_, jobs) = jobsDuring(Incremental.ensureDims(spark, tiny))

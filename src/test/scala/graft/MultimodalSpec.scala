@@ -64,7 +64,7 @@ class MultimodalSpec extends SparkSpec {
   test("sampleFrames: one row per sampled fixed-size window") {
     val frames = Multimodal.sampleFrames(media, frameBytes = 64, every = 4)
     val f = frames.filter($"media_id" === 1).orderBy("frame_no").collect()
-    val payloadLen = media.filter($"media_id" === 1).head.payload.length
+    val payloadLen = media.filter($"media_id" === 1).head().payload.length
     val nWindows = (payloadLen + 63) / 64
     assert(f.map(_.getAs[Int]("frame_no")).toSeq ===
       (0 until nWindows by 4).toSeq)

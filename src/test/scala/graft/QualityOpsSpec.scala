@@ -272,7 +272,7 @@ class QualityOpsSpec extends SparkSpec {
     assert(s1.map(_._3).toSeq === s1.map(_._3).sorted.toSeq)
     // weighting bias: sampled docs skew longer than the corpus mean
     val corpusMean = Tables.documents(spark, tiny)
-      .agg(avg("n_chars")).head.getDouble(0)
+      .agg(avg("n_chars")).head().getDouble(0)
     val sampleMean = s1.map(_._2.toDouble).sum / s1.length
     assert(sampleMean > corpusMean,
       s"weighted sample mean $sampleMean should exceed corpus mean $corpusMean")

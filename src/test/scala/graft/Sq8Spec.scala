@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.sim.{EmbeddingOps, RecallBench}
+import graft.sim.EmbeddingOps.Sq8Layout
 
 /** SQ8 scalar quantization — the properties the exactness gates
   * structurally cannot see:
@@ -54,7 +55,7 @@ class Sq8Spec extends SparkSpec {
       .toDF("q", "c", "mn", "mx")
       .select(graft.functions.GraftFunctions.sq8_adist(
         col("q"), col("c"), col("mn"), col("mx"), 255).as("d"))
-      .head.getDouble(0)
+      .head().getDouble(0)
     var aa = 0.0; var ab = 0.0; var bb = 0.0
     for (i <- 0 until 3) {
       val x = q(i).toDouble
@@ -77,7 +78,7 @@ class Sq8Spec extends SparkSpec {
     val train = Seq((0L, vec(1.0f)), (1L, vec(2.0f)))
       .toDF("vec_id", "embedding")
     val dir = Scratch.tempDir("graft_sq8_clamp").toString
-    EmbeddingOps.buildSq8IndexOn(spark, train, train, dir)
+    EmbeddingOps.buildSq8IndexOn(spark, train, dir)
     val arrivals = Seq((2L, vec(0.0f)), (3L, vec(9.0f)))
       .toDF("vec_id", "embedding")
     EmbeddingOps.appendSq8Index(spark, arrivals, dir, batchId = 0L)
@@ -90,17 +91,22 @@ class Sq8Spec extends SparkSpec {
   }
 
   test("IVF-SQ8 indexed serve prunes the code scan to the routed cells") {
-    val dir = Scratch.tempDir("graft_sq8_plan").toString
-    EmbeddingOps.buildIvfSq8Index(spark, tiny, dir)
-    val served = EmbeddingOps.annIvfSq8Indexed(spark, tiny, dir)
-    served.count(): Unit
-    val plan = served.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [cell"),
-      s"codes scan must carry PartitionFilters from the probed-cell isin:\n$plan")
-    // and the served answer equals the self-contained composed probe
-    val a = served.collect().toSeq
-    val b = EmbeddingOps.annIvfSq8(spark, tiny).collect().toSeq
-    assert(a == b, "persisted serve must be bit-identical to the probe")
+    // every layout: the persisted serve equals the self-contained probe;
+    // the routed layouts' code scans prune to the probed cells
+    for (layout <- Seq(Sq8Layout.Flat, Sq8Layout.Ivf, Sq8Layout.IvfCell))
+      withClue(s"$layout: ") {
+        val dir = Scratch.tempDir("graft_sq8_plan").toString
+        EmbeddingOps.buildSq8Index(spark, tiny, dir, layout)
+        val served = EmbeddingOps.annSq8Indexed(spark, tiny, dir, layout)
+        served.count(): Unit
+        val plan = served.queryExecution.executedPlan.toString
+        if (layout.routed)
+          assert(plan.contains("PartitionFilters: [cell"),
+            s"codes scan must carry PartitionFilters from the probed-cell isin:\n$plan")
+        val a = served.collect().toSeq
+        val b = EmbeddingOps.annSq8(spark, tiny, layout).collect().toSeq
+        assert(a == b, "persisted serve must be bit-identical to the probe")
+      }
   }
 
   test("compressed-domain SQ8 ranking recalls >= 0.9 of exact-L2 neighbors") {
@@ -118,8 +124,7 @@ class Sq8Spec extends SparkSpec {
       .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
     val arrival = col("vec_id") % 10 === 9
     val dir = Scratch.tempDir("graft_sq8_drift").toString
-    EmbeddingOps.buildSq8IndexOn(spark,
-      base.filter(!arrival), base.filter(!arrival), dir)
+    EmbeddingOps.buildSq8IndexOn(spark, base.filter(!arrival), dir)
     // in-distribution arrivals: a coordinate clamps only when it falls
     // outside the 9/10 training slice's range — the distribution's edge
     val inDist = EmbeddingOps.appendSq8Index(spark,
@@ -144,7 +149,8 @@ class Sq8Spec extends SparkSpec {
       .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
     val arrival = col("vec_id") % 10 === 9
     val dir = Scratch.tempDir("graft_cellmm_drift").toString
-    EmbeddingOps.buildIvfSq8CellIndexOn(spark, base.filter(!arrival), dir)
+    EmbeddingOps.buildSq8IndexOn(spark, base.filter(!arrival), dir,
+      Sq8Layout.IvfCell)
     // a MIXED batch: one drifted vector among ~49 in-distribution
     // arrivals — the regime where a single global clamp average stays
     // under the trigger while the drifted population's own cell
@@ -153,9 +159,10 @@ class Sq8Spec extends SparkSpec {
       when(col("vec_id") === 9,
         expr("transform(embedding, x -> CAST(CAST(x AS DOUBLE) + 2.0 AS FLOAT))"))
         .otherwise(col("embedding")))
-    val worst = EmbeddingOps.appendIvfSq8CellIndex(spark, mixed, dir, 0L)
+    val worst = EmbeddingOps.appendSq8Index(spark, mixed, dir, 0L,
+      Sq8Layout.IvfCell)
     // the equivalent GLOBAL average over the same batch and rows
-    val mm = spark.read.parquet(s"$dir/cellmm")
+    val mm = spark.read.parquet(s"$dir/minmax")
     val cents = spark.read.parquet(s"$dir/centroids")
     val clamped = "aggregate(transform(sequence(1, 64), i -> " +
       "CASE WHEN CAST(element_at(embedding, i) AS DOUBLE) < element_at(mns, i) " +
